@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vectordb_from_scratch_spark.operators import ann, knn
+from vectordb_from_scratch_spark.operators import ann, knn, vecblock
 
 N_PROBES = 20
 K = 10
@@ -120,23 +120,19 @@ def test_srp_multiprobe_boosts_recall(embeddings, probes):
     assert r_multi >= r_base + 0.10, f"multiprobe {r_multi:.3f} vs base {r_base:.3f}"
 
 
-def test_srp_bucket_kernel_equals_expression(embeddings, probes):
+def test_srp_bucket_kernel_equals_expression(embeddings, probes, monkeypatch):
     """The numpy bucket-assignment kernel must agree with the expression
     path end-to-end (force each path via the SRP kernel threshold)."""
-    orig = ann.SRP_KERNEL_THRESHOLD
-    try:
-        ann.SRP_KERNEL_THRESHOLD = 1  # force kernel even on tiny data
-        a = ann.ann_knn_srp(embeddings, probes, k=10, dim=64, nbits=4, n_tables=2).collect()
-        ann.SRP_KERNEL_THRESHOLD = 10**12  # force expression path
-        b = ann.ann_knn_srp(embeddings, probes, k=10, dim=64, nbits=4, n_tables=2).collect()
-    finally:
-        ann.SRP_KERNEL_THRESHOLD = orig
+    monkeypatch.setattr(vecblock, "SRP_KERNEL_THRESHOLD", 1)  # force kernel even on tiny data
+    a = ann.ann_knn_srp(embeddings, probes, k=10, dim=64, nbits=4, n_tables=2).collect()
+    monkeypatch.setattr(vecblock, "SRP_KERNEL_THRESHOLD", 10**12)  # force expression path
+    b = ann.ann_knn_srp(embeddings, probes, k=10, dim=64, nbits=4, n_tables=2).collect()
     assert sorted((r.query_id, r.id, r.rank) for r in a) == sorted(
         (r.query_id, r.id, r.rank) for r in b
     )
 
 
-def test_srp_kernel_threshold_policy(spark):
+def test_srp_kernel_threshold_policy(spark, monkeypatch):
     """The oracle-checked scale (sf0.01 = 500 rows) must stay on the
     bitwise-exact expression path; a table past SRP_KERNEL_THRESHOLD
     must flip to the matmul kernel. estimated_rows is exact for small
@@ -144,28 +140,23 @@ def test_srp_kernel_threshold_policy(spark):
     not by a size heuristic that could drift past the boundary."""
     from tests.conftest import SF_CORRECT
 
-    from vectordb_from_scratch_spark.operators.knn import estimated_rows
     from vectordb_from_scratch_spark.sources import load_table
 
     e = load_table(spark, SF_CORRECT, "embeddings")
-    assert estimated_rows(e) == 500  # exact, from parquet footers — no job
-    assert estimated_rows(e) < ann.SRP_KERNEL_THRESHOLD
+    assert vecblock.estimated_rows(e) == 500  # exact, from parquet footers — no job
+    assert vecblock.estimated_rows(e) < vecblock.SRP_KERNEL_THRESHOLD
 
     probes = e.limit(3).selectExpr(
         "vec_id AS query_id", "embedding AS query_embedding"
     )
 
     def plan_of(threshold):
-        orig = ann.SRP_KERNEL_THRESHOLD
-        try:
-            ann.SRP_KERNEL_THRESHOLD = threshold
-            df = ann.ann_knn_srp(e, probes, k=5, dim=64, nbits=4, n_tables=2)
-            return df._jdf.queryExecution().executedPlan().toString()
-        finally:
-            ann.SRP_KERNEL_THRESHOLD = orig
+        monkeypatch.setattr(vecblock, "SRP_KERNEL_THRESHOLD", threshold)
+        df = ann.ann_knn_srp(e, probes, k=5, dim=64, nbits=4, n_tables=2)
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    assert "mapinpandas" not in plan_of(10**12).lower()  # expression path
-    assert "mapinpandas" in plan_of(100).lower()  # kernel path
+    assert "mapinarrow" not in plan_of(10**12).lower()  # expression path
+    assert "mapinarrow" in plan_of(100).lower()  # kernel path
 
 
 def test_recall_curve_query_monotone(spark):

@@ -58,9 +58,9 @@ def test_radius_and_maxsim_empty(spark):
 
 
 def test_radius_and_maxsim_empty_probes_numpy_strategy(spark):
-    """Zero probes with the BLAS kernel selected: np.array([]) is shape
-    (0,), so an unguarded kernel raises AxisError before any Spark job —
-    the guard must fall back to the window path and return empty."""
+    """Zero probes with the kernel selected: the probe collect yields a
+    (0, d) matrix and every kernel must return empty with the right
+    schema, as the window path does."""
     from vectordb_from_scratch_spark.operators import knn
 
     no_probes = spark.createDataFrame(
@@ -69,6 +69,16 @@ def test_radius_and_maxsim_empty_probes_numpy_strategy(spark):
     out = knn.radius_search(_one_emb(spark), no_probes, radius=9.0, strategy="numpy")
     assert out.count() == 0
     assert out.columns == ["query_id", "id", "distance", "rank"]
+
+    top = knn.knn(_one_emb(spark), no_probes, k=5, strategy="numpy")
+    assert top.count() == 0
+    assert top.columns == ["query_id", "id", "distance", "rank"]
+
+    words = spark.createDataFrame([(7, 1, 2)], "vec_id long, w0 long, w1 long")
+    no_word_probes = spark.createDataFrame([], "query_id long, qw0 long, qw1 long")
+    ham = knn.knn_hamming(words, no_word_probes, k=5, strategy="numpy")
+    assert ham.count() == 0
+    assert ham.columns == ["query_id", "id", "hamming", "rank"]
 
     qv = spark.createDataFrame([], "query_id long, qidx int, qv array<float>")
     dv = spark.createDataFrame([(1, [1.0, 0.0])], "doc_id long, v array<float>")

@@ -64,18 +64,6 @@ def test_filtered_knn_prefilter_exact_k(embeddings):
     assert labels == {2}
 
 
-def test_local_strategy_equivalent(embeddings):
-    probes = embeddings.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    a = knn.knn(embeddings, probes, k=8, strategy="window").collect()
-    b = knn.knn(embeddings, probes, k=8, strategy="local").collect()
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted([(r.query_id, r.id, r.rank) for r in a]) == sorted(
-        [(r.query_id, r.id, r.rank) for r in b]
-    )
-
-
 def test_numpy_strategy_equivalent(embeddings):
     """The BLAS kernel path must return the same (query_id, id, rank) sets
     as the exact fold path; distances agree to ~1e-7 (matmul-trick

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vectordb_from_scratch_spark.operators import dedup, knn
+from vectordb_from_scratch_spark.operators import dedup, knn, vecblock
 from vectordb_from_scratch_spark.plans import relational as rel
 from vectordb_from_scratch_spark.sources import load_table
 
@@ -157,11 +157,11 @@ def test_knn_auto_strategy_launches_no_job(embeddings, monkeypatch):
 
 
 def test_estimated_rows_metadata_only(embeddings):
-    est = knn.estimated_rows(embeddings)
+    est = vecblock.estimated_rows(embeddings)
     actual = embeddings.count()
     # file-size / 64B deliberately over-estimates rows (repo parquet runs
     # ~107-390 B/row) so the kernel kicks in early, but stays within the
-    # order of magnitude the 50k strategy threshold cares about
+    # order of magnitude the 5,000-row strategy threshold cares about
     assert actual <= est <= actual * 8
 
 
@@ -170,7 +170,7 @@ def test_estimated_rows_unknown_stats_returns_zero(spark):
     # that must read as "unknown" (exact path), not "huge" (kernel path) —
     # the facade store's small in-memory tables need the bitwise-exact fold
     df = spark.createDataFrame([(1, [1.0, 2.0])], "vec_id long, embedding array<double>")
-    assert knn.estimated_rows(df.filter(F.col("vec_id") >= 0)) == 0
+    assert vecblock.estimated_rows(df.filter(F.col("vec_id") >= 0)) == 0
 
 
 def test_tpch_q2_shape_plan(spark):

@@ -1,8 +1,8 @@
 """Kernel-vs-expression crossover sweep (VERDICT r9 #2).
 
-The auto-strategy thresholds — knn.AUTO_NUMPY_THRESHOLD (50k, set r5),
-ann.SRP_KERNEL_THRESHOLD (1k), and the PQ ADC auto crossover (ties to
-AUTO_NUMPY_THRESHOLD) — predate the r9 ListArray.flatten discovery that
+The auto-strategy thresholds — vecblock.AUTO_NUMPY_THRESHOLD (50k, set
+r5), vecblock.SRP_KERNEL_THRESHOLD (1k), and the PQ ADC auto crossover
+(ties to AUTO_NUMPY_THRESHOLD) — predate the r9 ListArray.flatten discovery that
 erased the Arrow kernels' export cost. This tool re-measures each
 kernel/expr pair on IN-PLAN synthetic embeddings across row decades and
 prints one JSON line per (pair, size, strategy) with wall seconds AND
@@ -51,7 +51,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from vectordb_from_scratch_spark.operators import ann, knn
+    from vectordb_from_scratch_spark.operators import ann, knn, vecblock
     from vectordb_from_scratch_spark.operators import pq as pqm
 
     spark = (
@@ -116,14 +116,14 @@ def main() -> int:
 
     # ---- SRP bucket assignment: expr bit-build vs matmul kernel ------
     if want("srp"):
-        saved = ann.SRP_KERNEL_THRESHOLD
+        saved = vecblock.SRP_KERNEL_THRESHOLD
         try:
             for n in (500, 2_000, 10_000, 50_000, 200_000, 1_000_000):
                 emb = synth_emb(n)
                 emb.persist().count()
                 p = probes_of(emb)
                 for strat, thresh in (("expr", n + 1), ("kernel", 1)):
-                    ann.SRP_KERNEL_THRESHOLD = thresh
+                    vecblock.SRP_KERNEL_THRESHOLD = thresh
                     sec = _time(
                         lambda: sink(ann.ann_knn_srp(
                             emb, p, k=K, dim=64, nbits=8, n_tables=2
@@ -133,7 +133,7 @@ def main() -> int:
                     emit("srp_knn", n, strat, sec)
                 emb.unpersist()
         finally:
-            ann.SRP_KERNEL_THRESHOLD = saved
+            vecblock.SRP_KERNEL_THRESHOLD = saved
 
     # ---- flat ADC: expr LUT fold vs numpy (pandas) kernel ------------
     if want("adc") or want("ivfpq"):

@@ -52,7 +52,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from vectordb_from_scratch_spark.operators import ann, dedup, knn
+    from vectordb_from_scratch_spark.operators import ann, dedup, knn, vecblock
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -98,7 +98,7 @@ def main() -> int:
             {"cell": name, "sec": results[name], "exec": m}
         ), flush=True)
 
-    saved = knn.AUTO_NUMPY_THRESHOLD
+    saved = vecblock.SRP_KERNEL_THRESHOLD
     try:
         # exact knn: interpreted fold+window vs BLAS kernel
         cell("knn_window_100x%d" % n_emb,
@@ -108,14 +108,14 @@ def main() -> int:
 
         # SRP ANN: expression bucketing vs matmul kernel (auto threshold
         # flipped to force each path)
-        knn.AUTO_NUMPY_THRESHOLD = n_emb + 1
+        vecblock.SRP_KERNEL_THRESHOLD = n_emb + 1
         cell("ann_srp_expr_100x%d" % n_emb,
              lambda: sink(ann.ann_knn_srp(emb, probes, k=K, dim=64, nbits=8, n_tables=2)))
-        knn.AUTO_NUMPY_THRESHOLD = 1
+        vecblock.SRP_KERNEL_THRESHOLD = 1
         cell("ann_srp_kernel_100x%d" % n_emb,
              lambda: sink(ann.ann_knn_srp(emb, probes, k=K, dim=64, nbits=8, n_tables=2)))
     finally:
-        knn.AUTO_NUMPY_THRESHOLD = saved
+        vecblock.SRP_KERNEL_THRESHOLD = saved
 
     # radius search: same scan as exact knn, but the ball predicate is
     # applied map-side BEFORE any exchange — only in-ball rows shuffle.

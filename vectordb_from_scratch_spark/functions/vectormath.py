@@ -137,11 +137,14 @@ def euclidean_distance(a: Column | str, b: Column | str) -> Column:
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """dot/(‖a‖‖b‖) clamped to [-1,1] (reference src/distance.rs:47-61);
-    NULL when either vector is zero (reference errors — divergence)."""
+    NULL when either vector is zero (reference errors — divergence) or
+    the lengths differ (the NULL dot would otherwise clamp to -1:
+    greatest/least skip NULLs)."""
     na, nb = norm(a), norm(b)
     sim = dot_product(a, b) / (na * nb)
     clamped = F.least(F.greatest(sim, F.lit(-1.0)), F.lit(1.0))
-    return F.when((na > 0) & (nb > 0), clamped)
+    same_dim = F.size(_col(a)) == F.size(_col(b))
+    return F.when((na > 0) & (nb > 0) & same_dim, clamped)
 
 
 def cosine_distance(a: Column | str, b: Column | str) -> Column:

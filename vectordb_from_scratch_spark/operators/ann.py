@@ -107,25 +107,6 @@ def srp_bucket_cols(vec: Column | str, dim: int, nbits: int = 8, n_tables: int =
     ]
 
 
-# Above this many vector rows, SRP bucket assignment switches from the
-# fold-expression path to the numpy matmul kernel. This threshold is
-# deliberately LOWER than knn.AUTO_NUMPY_THRESHOLD because the failure
-# modes differ: the kNN distance kernel differs from the fold in the
-# last ulp on essentially EVERY pair (summation order), while SRP only
-# consumes the SIGN of each projection — kernel and fold disagree only
-# when a projection lands within float-reordering error (~1e-13
-# relative) of exactly 0, a measure-zero boundary that real embeddings
-# don't hit (kernel ≡ expression bucket-for-bucket on every test table;
-# asserted in tests/test_ann_recall.py). Re-swept r10
-# (tools/kernel_crossover_bench.py): the kernel wins at every measured
-# size down to 500 rows (0.83 vs 2.17 s; 200k: 3.65 vs 4.73; converges
-# ~1× at 1M where the scan dominates), so 1,000 is not a performance
-# crossover either — it only keeps the oracle-checked scale
-# (sf0.01 = 500 rows) on the DuckDB-twinned bitwise path, at a
-# measured cost of ~1.3 s on sub-1k tables.
-SRP_KERNEL_THRESHOLD = 1_000
-
-
 def ann_knn_srp(
     vectors: DataFrame,
     queries: DataFrame,
@@ -170,7 +151,7 @@ def ann_knn_srp(
     from pyspark.sql import Window
 
     from ..sources.tables import spread
-    from .knn import estimated_rows
+    from .vecblock import choose_strategy
 
     # Single-scan explode form: each row emits one (table_idx, bucket_key)
     # per hash table and the probe join keys on BOTH — so the vector table
@@ -179,43 +160,36 @@ def ann_knn_srp(
     all_planes = [srp_planes(dim, nbits, table=l, seed=seed) for l in range(n_tables)]
 
     def kernel_buckets(df, id_name, vcol, out_vec):
-        """numpy bucket assignment: one BLAS matmul against the stacked
+        """vecblock bucket assignment: one BLAS matmul against the stacked
         plane matrix replaces n_tables×nbits interpreted dot-folds per row
         (measured 75s → ~8s at 1M rows). Sign flips vs the fold are
         possible only when a projection is within float error of exactly
         0 — which is why the oracle-checked scale keeps the expression
-        path (same auto threshold as knn)."""
+        path. A NULL or ragged row is decoded as zeros, so every sign test
+        fails and it lands in bucket 0 — as the fold's NULL dot does."""
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+
+        from .vecblock import map_blocks
 
         P = np.array([p for planes in all_planes for p in planes], dtype=np.float64)
-        weights = np.array(
-            [1 << t for _ in range(n_tables) for t in range(nbits)], dtype=np.int64
-        )
-        tbl_of = np.repeat(np.arange(n_tables, dtype=np.int64), nbits)
+        weights = 1 << np.arange(nbits, dtype=np.int64)
 
-        def run(batches):
-            for pdf in batches:
-                V = np.array([list(v) for v in pdf[vcol]], dtype=np.float64)
-                signs = (V @ P.T) > 0  # (b, n_tables*nbits)
-                ids, vecs, tbls, buckets = [], [], [], []
-                for l in range(n_tables):
-                    mask = tbl_of == l
-                    bk = (signs[:, mask] * weights[mask]).sum(axis=1)
-                    ids.append(pdf[id_name].to_numpy())
-                    vecs.append(pdf[vcol])
-                    tbls.append(np.full(len(pdf), l, dtype=np.int64))
-                    buckets.append(bk)
-                yield pd.DataFrame(
-                    {
-                        id_name: np.concatenate(ids),
-                        out_vec: pd.concat([pd.Series(v) for v in vecs], ignore_index=True),
-                        "tbl": np.concatenate(tbls),
-                        "bucket": np.concatenate(buckets),
-                    }
+        def buckets(blocks):
+            for batch, V, _ in blocks:
+                n = batch.num_rows
+                signs = ((V @ P.T) > 0).reshape(n, n_tables, nbits)
+                rows = np.tile(np.arange(n), n_tables)  # table-major
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(id_name).take(rows), batch.column(vcol).take(rows),
+                     pa.array(np.repeat(np.arange(n_tables, dtype=np.int64), n)),
+                     pa.array((signs * weights).sum(axis=2).T.ravel())],
+                    names=[id_name, out_vec, "tbl", "bucket"],
                 )
 
-        return run
+        id_t = df.schema[id_name].dataType.simpleString()
+        return map_blocks(df, vcol, dim, buckets,
+                          f"{id_name} {id_t}, {out_vec} array<double>, tbl long, bucket long")
 
     def tagged_buckets(df, vcol, out_vec):
         buckets = srp_bucket_cols(vcol, dim, nbits, n_tables, seed)
@@ -231,26 +205,17 @@ def ann_knn_srp(
 
     if predicate is not None:
         vectors = vectors.filter(predicate)
-    # Metadata-only estimate (no job) — see knn.estimated_rows.
-    use_kernel = estimated_rows(vectors) >= SRP_KERNEL_THRESHOLD
     v_in = spread(vectors).select(F.col(id_col).alias("id"), vm.as_double(vec_col).alias("__v"))
     q_in = queries.select(
         F.col(query_id_col).alias("query_id"), vm.as_double(query_vec_col).alias("__q")
     )
-    if use_kernel:
+    # metadata-only estimate (no job) — see vecblock.estimated_rows
+    if choose_strategy("auto", vectors, "kernel", "expr", srp=True) == "kernel":
         # probe side uses the SAME kernel so sign decisions can't disagree
         # between the two join sides; id dtypes derived from the inputs
         # (the store facade uses string ids — hardcoding long broke it)
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        v = v_in.mapInPandas(
-            kernel_buckets(v_in, "id", "__v", "__vvec"),
-            schema=f"id {id_t}, __vvec array<double>, tbl long, bucket long",
-        )
-        q = q_in.mapInPandas(
-            kernel_buckets(q_in, "query_id", "__q", "__qvec"),
-            schema=f"query_id {qid_t}, __qvec array<double>, tbl long, bucket long",
-        )
+        v = kernel_buckets(v_in, "id", "__v", "__vvec")
+        q = kernel_buckets(q_in, "query_id", "__q", "__qvec")
     else:
         v = tagged_buckets(v_in, "__v", "__vvec").select("id", "__vvec", "tbl", "bucket")
         q = tagged_buckets(q_in, "__q", "__qvec").select("query_id", "__qvec", "tbl", "bucket")

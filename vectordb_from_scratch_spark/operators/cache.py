@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 __all__ = [
     "track",
     "checkpoint",
-    "checkpoint_tracked",
     "release_caches",
     "sweep_persistent_rdds",
 ]
@@ -59,10 +58,6 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     _CHECKPOINT_RDD_IDS.update(_persistent_ids(spark) - before)
     _CACHE_HANDLES.append(out)
     return out
-
-
-# historical alias (round-5 name)
-checkpoint_tracked = checkpoint
 
 
 def release_caches() -> None:

@@ -15,13 +15,13 @@ Physical-plan reasoning for 100 TB:
 - Distance math is built-in higher-order functions → whole-stage codegen.
 - Before any shuffle we project down to three narrow columns (~24 B/row);
   the embedding arrays never move.
-- Per-query top-k has two strategies:
-    * "window": row_number over (query_id) — simple, one shuffle of the
-      narrow rows. Fine when n_queries × n_vectors stays modest.
-    * "local": per-partition top-k reduce first (mapInPandas, zero
-      shuffle), then the same window over ≤ n_partitions × n_queries × k
-      survivors. At 1000 executors × 100 TB this is the plan that holds:
-      the shuffle input shrinks from n×q rows to p×q×k.
+- Per-query top-k has two strategies, chosen by vecblock.choose_strategy:
+    * "window": fold-expression distance + row_number over (query_id) —
+      bitwise-exact vs the DuckDB oracle, one shuffle of the narrow rows.
+    * "numpy": the vecblock kernel — BLAS distances per Arrow batch and a
+      per-partition partial top-k, so the shuffle input shrinks from n×q
+      rows to p×q×k. At 1000 executors × 100 TB this is the plan that
+      holds. NULL/ragged semantics match the fold (vecblock docstring).
 - Ties broken by (distance, id) ascending for deterministic output
   (reference heaps tie-break on id too: src/hnsw/neighbor_queue.rs:36-43).
 
@@ -34,197 +34,19 @@ divergence documented.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectormath as vm
 from . import cache
+from .vecblock import choose_strategy, collect_probes, map_blocks, pairwise, topk_scan
 from ..sources.tables import spread
 
 __all__ = ["knn", "knn_filtered", "knn_filtered_overfetch", "self_knn",
            "knn_hamming", "radius_search", "maxsim_search", "mmr_diversify",
            "ranking_metrics"]
-
-
-def _local_topk(k: int) -> callable:
-    """Per-partition top-k reducer over (query_id, id, distance) batches.
-
-    Runs inside mapInPandas: the iterator spans one whole partition, so we
-    fold batches into a running per-query top-k and emit once — a map-side
-    combine for top-k that Spark SQL lacks natively.
-    """
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-            both.sort_values(["distance", "id"], inplace=True, kind="stable")
-            acc = both.groupby("query_id", sort=False).head(k)
-        if acc is not None:
-            yield acc
-
-    return reduce
-
-
-# Above this many vector rows, strategy="auto" switches from the fold
-# expression path (bitwise-exact vs the DuckDB oracle, but interpreted —
-# Spark does not codegen higher-order lambdas, ~tens of µs per pair) to
-# the numpy kernel (BLAS matmul, float64 results that can differ from
-# the fold in the last ulp). Re-swept r10 (VERDICT r9 #2,
-# tools/kernel_crossover_bench.py) after ListArray.flatten erased the
-# kernels' export cost: the kernel now wins at EVERY measured decade
-# (2k: 0.67 vs 0.95 s; 30k: 0.60 vs 1.62; 100k: 0.63 vs 4.0; 300k:
-# 0.91 vs 12.5; flat-ADC numpy 13× at 1M), so the old 50k crossover —
-# set from the r5 measurements where the kernel LOST below 50k — was
-# leaving 2-14× on the table in the mid decades. The floor is no longer
-# a performance crossover at all: it only keeps tables at or below the
-# oracle-checked scales (sf0.1 = 2,000 rows, exact-counted from parquet
-# footers) on the bitwise-exact path, at a measured cost of ≤0.3 s.
-AUTO_NUMPY_THRESHOLD = 5_000
-
-# Divisor turning Catalyst's sizeInBytes into a row estimate. Measured
-# parquet footprints for 64-dim float embedding rows in this repo run
-# ~107-390 B/row depending on column mix and encoder; 64 deliberately
-# OVER-estimates rows so "auto" flips to the fast kernel early rather
-# than late (a late flip costs 57x — SCALE.md; an early one only trades
-# last-ulp exactness the oracle scale never reaches).
-EST_ROW_BYTES = 64
-
-# Catalyst reports defaultSizeInBytes (a Long.MaxValue-scale sentinel)
-# for sources with no real statistics — LogicalRDD, in-memory stores.
-# Anything this large is "unknown", not "huge".
-_STATS_UNKNOWN = 1 << 60
-
-
-# Footer reads are driver-side (~ms each); past this many files the
-# table is big enough that the size-based over-estimate already answers
-# "kernel", so we skip the exact count rather than serialize the driver.
-_FOOTER_COUNT_MAX_FILES = 64
-
-
-def _parquet_footer_rows(df: DataFrame, max_files: int = _FOOTER_COUNT_MAX_FILES) -> int | None:
-    """EXACT row count for small file-backed scans, from parquet footer
-    metadata only — no Spark job, no data pages read. Returns None for
-    non-file sources, remote filesystems, or tables with more than
-    `max_files` files (at that size the caller's over-estimate is the
-    right answer anyway)."""
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file-backed plans (RDD, in-memory, streams)
-        return None
-    if not files or len(files) > max_files:
-        return None
-    total = 0
-    try:
-        import pyarrow.parquet as pq
-
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):  # s3/hdfs: footer read would
-                return None  # need a remote FS client — not worth it here
-            total += pq.ParquetFile(p.path or f).metadata.num_rows
-    except Exception:
-        return None
-    return total
-
-
-def estimated_rows(df: DataFrame) -> int:
-    """Metadata-only row estimate for strategy selection.
-
-    Three tiers, all jobless — the r1 implementation called df.count()
-    here, a needless driver-blocking scan of the full vector table
-    before every search at 100 TB:
-      1. Catalyst's optimized-plan rowCount, when CBO stats exist.
-      2. EXACT parquet footer counts for small local file scans
-         (≤ 64 files) — footers are already in the driver's page cache
-         after planning, and exactness is what lets the kernel
-         thresholds sit close to the oracle-checked scales without
-         the size-based over-estimate flipping them.
-      3. sizeInBytes // EST_ROW_BYTES, a deliberate over-estimate so
-         big tables flip to the fast kernel early rather than late.
-
-    Returns 0 (→ callers keep the exact expression path) when the plan
-    has no real statistics (in-memory/RDD-backed sources report a
-    Long.MaxValue-scale default): small facade stores must stay on the
-    bitwise-exact path, and tables big enough for the kernel to matter
-    come from files, where stats exist."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
-    if rc.isDefined():
-        return int(str(rc.get()))
-    size = int(stats.sizeInBytes())
-    if size >= _STATS_UNKNOWN:
-        return 0
-    exact = _parquet_footer_rows(df)
-    if exact is not None:
-        return exact
-    return size // EST_ROW_BYTES
-
-
-def _numpy_topk_kernel(probe_rows: list, k: int, metric: str) -> callable:
-    """mapInPandas kernel: per-partition batched distance matrix via numpy
-    + per-query partial top-k. Emits ≤ n_queries × k rows per partition —
-    the shuffle input shrinks from n×q rows to p×q×k, and the distance
-    math runs in BLAS instead of interpreted expression trees."""
-    import numpy as np
-
-    # ids pass through untyped (np.array infers int64/str/...): the store
-    # facade uses STRING ids (reference parity) while the parquet tables
-    # use longs — the kernel must serve both, with the output schema
-    # derived from the inputs in knn() below.
-    qids = np.array([r[0] for r in probe_rows])
-    Q = np.array([list(r[1]) for r in probe_rows], dtype=np.float64)  # (nq, d)
-    qn2 = (Q * Q).sum(axis=1)  # (nq,)
-    qnorm = np.sqrt(qn2)
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array([list(v) for v in pdf["__vvec"]], dtype=np.float64)  # (b, d)
-            ids = pdf["id"].to_numpy()
-            G = V @ Q.T  # (b, nq)
-            if metric == "euclidean":
-                vn2 = (V * V).sum(axis=1)
-                D = np.sqrt(np.maximum(vn2[:, None] + qn2[None, :] - 2.0 * G, 0.0))
-            elif metric == "cosine":
-                vnorm = np.sqrt((V * V).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - np.clip(G / (vnorm[:, None] * qnorm[None, :]), -1.0, 1.0)
-                # zero vectors → NaN → sorts last (Spark treats NaN as the
-                # largest double; fold path yields NULL — divergence noted)
-            elif metric == "dot":
-                D = -G
-            else:  # pragma: no cover
-                raise ValueError(metric)
-            take = min(k, len(ids))
-            out_q, out_id, out_d = [], [], []
-            for j in range(len(qids)):
-                order = np.lexsort((ids, D[:, j]))[:take]  # (distance, id) asc
-                out_q.append(np.repeat(qids[j], take))
-                out_id.append(ids[order])
-                out_d.append(D[order, j])
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "id": np.concatenate(out_id),
-                        "distance": np.concatenate(out_d),
-                    }
-                )
-            )
-        if parts:
-            both = pd.concat(parts, ignore_index=True)
-            both.sort_values(["distance", "id"], inplace=True, kind="stable")
-            yield both.groupby("query_id", sort=False).head(k)
-
-    return reduce
 
 
 def knn(
@@ -250,12 +72,12 @@ def knn(
       "window" — fold-expression distance + WindowGroupLimit top-k.
                  Bitwise-identical to the DuckDB oracle; interpreted
                  per-pair math (HOF lambdas aren't codegen'd).
-      "numpy"  — Arrow-batched BLAS kernel with per-partition top-k;
+      "numpy"  — the vecblock BLAS kernel with per-partition top-k;
                  ~100× the throughput, float64 results may differ from
                  the fold in the last ulp (rank flips only on exact ties).
-      "local"  — fold distance + mapInPandas top-k reduce (legacy).
-      "auto"   — numpy above AUTO_NUMPY_THRESHOLD rows, else window: the
-                 oracle-checked scale stays exact, big tables go fast.
+      "auto"   — numpy above vecblock.AUTO_NUMPY_THRESHOLD rows, else
+                 window: the oracle-checked scale stays exact, big tables
+                 go fast.
     """
     # Pre-cast to array<double> in the PROJECTIONS, not the distance
     # expression: the cast then runs once per input row instead of once
@@ -263,53 +85,25 @@ def knn(
     # big side. Catalyst removes the now-redundant cast inside distance().
     # spread(): a small single-file scan arrives as 1-3 partitions, which
     # would serialize the O(n_probes × n) distance stage onto 3 cores.
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            vm.as_double(query_vec_col).alias("__qvec"),
-        )
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        vm.as_double(query_vec_col).alias("__qvec"),
     )
     v = spread(vectors).select(
         F.col(id_col).alias("id"),
         vm.as_double(vec_col).alias("__vvec"),
     )
-    if strategy == "auto":
-        strategy = "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qvec"])
-            for r in queries.select(
-                F.col(query_id_col).alias("query_id"), vm.as_double(query_vec_col).alias("__qvec")
-            ).collect()
-        ]
-        cand = v
-        if exclude_self:
-            # self rows are excluded post-kernel; keep k+1 margin
-            kernel = _numpy_topk_kernel(probe_rows, k + 1, metric)
-        else:
-            kernel = _numpy_topk_kernel(probe_rows, k, metric)
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        narrow = cand.mapInPandas(
-            kernel, schema=f"query_id {qid_t}, id {id_t}, distance double"
-        )
+    if choose_strategy(strategy, vectors) == "numpy":
+        # self rows are excluded post-kernel; keep a k+1 margin
+        narrow = topk_scan(v, q, metric, k + 1 if exclude_self else k, vec_col="__vvec")
         if exclude_self:
             narrow = narrow.filter(F.col("id") != F.col("query_id"))
     else:
-        joined = v.crossJoin(q)
+        joined = v.crossJoin(F.broadcast(q))
         if exclude_self:
             joined = joined.filter(F.col("id") != F.col("query_id"))
         dist = vm.distance(metric, "__qvec", "__vvec")
         narrow = joined.select("query_id", "id", dist.alias("distance"))
-        if strategy == "local":
-            narrow = narrow.mapInPandas(
-                _local_topk(k),
-                schema=(
-                    f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-                    f"id {vectors.schema[id_col].dataType.simpleString()}, distance double"
-                ),
-            )
     # asc_nulls_last: NULL distances (zero-vector cosine) rank LAST —
     # matches DuckDB's default and sane semantics (Spark defaults to
     # nulls-first on asc, which would rank undefined distances top-1).
@@ -369,49 +163,6 @@ def knn_filtered_overfetch(
     )
 
 
-def _numpy_radius_kernel(probe_rows: list, radius: float, metric: str) -> callable:
-    """mapInPandas kernel for radius search: BLAS distance matrix per
-    Arrow batch, emit ONLY in-ball (query_id, id, distance) rows — the
-    same map-side ball filter as the expression path, ~20× the
-    throughput (measured: 31 s → 1.7 s for 100 probes × 1M rows)."""
-    import numpy as np
-
-    qids = np.array([r[0] for r in probe_rows])
-    Q = np.array([list(r[1]) for r in probe_rows], dtype=np.float64)
-    qn2 = (Q * Q).sum(axis=1)
-    qnorm = np.sqrt(qn2)
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array([list(v) for v in pdf["__vvec"]], dtype=np.float64)
-            ids = pdf["id"].to_numpy()
-            G = V @ Q.T
-            if metric == "euclidean":
-                vn2 = (V * V).sum(axis=1)
-                D = np.sqrt(np.maximum(vn2[:, None] + qn2[None, :] - 2.0 * G, 0.0))
-            elif metric == "cosine":
-                vnorm = np.sqrt((V * V).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - np.clip(G / (vnorm[:, None] * qnorm[None, :]), -1.0, 1.0)
-            elif metric == "dot":
-                D = -G
-            else:  # pragma: no cover
-                raise ValueError(metric)
-            rows_i, cols_j = np.nonzero(D <= radius)  # NaN never matches
-            if len(rows_i):
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[cols_j],
-                        "id": ids[rows_i],
-                        "distance": D[rows_i, cols_j],
-                    }
-                )
-
-    return reduce
-
-
 def radius_search(
     vectors: DataFrame,
     queries: DataFrame,
@@ -440,45 +191,41 @@ def radius_search(
     Returns (query_id, id, distance, rank).
 
     strategy mirrors knn(): "window" = fold-expression distances
-    (bitwise-exact vs the DuckDB oracle), "numpy" = Arrow-batched BLAS
-    kernel (last-ulp distance drift possible at the ball boundary),
-    "auto" = numpy above AUTO_NUMPY_THRESHOLD rows.
+    (bitwise-exact vs the DuckDB oracle), "numpy" = the vecblock BLAS
+    kernel with the same map-side ball filter, ~20× the throughput
+    (31 s → 1.7 s for 100 probes × 1M rows; last-ulp distance drift
+    possible at the ball boundary), "auto" = numpy above
+    vecblock.AUTO_NUMPY_THRESHOLD rows.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            vm.as_double(query_vec_col).alias("__qvec"),
-        )
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        vm.as_double(query_vec_col).alias("__qvec"),
     )
     v = spread(vectors).select(
         F.col(id_col).alias("id"), vm.as_double(vec_col).alias("__vvec")
     )
-    if strategy == "auto":
-        strategy = "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qvec"])
-            for r in queries.select(
-                F.col(query_id_col).alias("query_id"),
-                vm.as_double(query_vec_col).alias("__qvec"),
-            ).collect()
-        ]
-        if not probe_rows:
-            # np.array([]) is shape (0,): the kernel's (Q*Q).sum(axis=1)
-            # would raise AxisError — the window path returns the same
-            # (empty) result without building a kernel
-            strategy = "window"
-    if strategy == "numpy":
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        narrow = v.mapInPandas(
-            _numpy_radius_kernel(probe_rows, float(radius), metric),
-            schema=f"query_id {qid_t}, id {id_t}, distance double",
-        )
+    if choose_strategy(strategy, vectors) == "numpy":
+        keys, Q, qvalid = collect_probes(q)
+        qids = keys.column(0).combine_chunks()
+
+        def ball(blocks):
+            for batch, V, valid in blocks:
+                D, null = pairwise(metric, V, Q, valid, qvalid)
+                r, c = np.nonzero(~null & (D <= radius))  # NaN never matches
+                if len(r):
+                    yield pa.RecordBatch.from_arrays(
+                        [qids.take(c), batch.column("id").take(r), pa.array(D[r, c])],
+                        names=["query_id", "id", "distance"],
+                    )
+
+        qid_t = q.schema["query_id"].dataType.simpleString()
+        id_t = v.schema["id"].dataType.simpleString()
+        narrow = map_blocks(v, "__vvec", Q.shape[1], ball,
+                            f"query_id {qid_t}, id {id_t}, distance double")
     else:
         dist = vm.distance(metric, "__qvec", "__vvec")
         narrow = (
-            v.crossJoin(q)
+            v.crossJoin(F.broadcast(q))
             .select("query_id", "id", dist.alias("distance"))
             # NULL distances (zero-vector cosine) are "undefined", never a
             # match — filter keeps only defined distances inside the ball
@@ -491,45 +238,6 @@ def radius_search(
     if limit is not None:
         ranked = ranked.filter(F.col("rank") <= limit)
     return ranked.select("query_id", "id", "distance", "rank")
-
-
-def _numpy_maxsim_kernel(probe_rows: list) -> callable:
-    """mapInPandas kernel for MaxSim: BLAS cosine-sim matrix per Arrow
-    batch, reduced to PER-PARTITION partial maxima per (query vector,
-    doc) — a map-side combine for max that shrinks the kernel's output
-    to |docs in partition| × |query vectors| rows. Downstream exact
-    max/sum aggregation is unchanged (max is associative and order-
-    independent, so partials are lossless)."""
-    import numpy as np
-
-    qids = np.array([r[0] for r in probe_rows])
-    qidxs = np.array([r[1] for r in probe_rows])
-    Q = np.array([list(r[2]) for r in probe_rows], dtype=np.float64)
-    qnorm = np.sqrt((Q * Q).sum(axis=1))
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array([list(v) for v in pdf["__vvec"]], dtype=np.float64)
-            ids = pdf["id"].to_numpy()
-            vnorm = np.sqrt((V * V).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.clip((V @ Q.T) / (vnorm[:, None] * qnorm[None, :]), -1.0, 1.0)
-            sim = pd.DataFrame(S)
-            sim["id"] = ids
-            part = sim.groupby("id", sort=False).max()  # skips NaN (zero vecs)
-            n_docs, n_q = len(part), len(qids)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qids, n_docs),
-                    "__qidx": np.tile(qidxs, n_docs),
-                    "id": np.repeat(part.index.to_numpy(), n_q),
-                    "__m": part.to_numpy().ravel(),
-                }
-            ).dropna(subset=["__m"])
-
-    return reduce
 
 
 def maxsim_search(
@@ -571,46 +279,47 @@ def maxsim_search(
     v = spread(doc_vecs).select(
         F.col(id_col).alias("id"), vm.as_double(vec_col).alias("__vvec")
     )
-    if strategy == "auto":
-        strategy = (
-            "numpy" if estimated_rows(doc_vecs) >= AUTO_NUMPY_THRESHOLD else "window"
-        )
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qidx"], r["__qvec"])
-            for r in query_vecs.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_idx_col).alias("__qidx"),
-                vm.as_double(query_vec_col).alias("__qvec"),
-            ).collect()
-        ]
-        if not probe_rows:
-            # empty probe set would give the kernel a shape-(0,) Q matrix
-            # (AxisError in (Q*Q).sum(axis=1)); the window path yields the
-            # same empty result safely
-            strategy = "window"
-    if strategy == "numpy":
-        qid_t = query_vecs.schema[query_id_col].dataType.simpleString()
-        qidx_t = query_vecs.schema[query_idx_col].dataType.simpleString()
-        id_t = doc_vecs.schema[id_col].dataType.simpleString()
-        partials = v.mapInPandas(
-            _numpy_maxsim_kernel(probe_rows),
-            schema=f"query_id {qid_t}, __qidx {qidx_t}, id {id_t}, __m double",
-        )
+    q = query_vecs.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_idx_col).alias("__qidx"),
+        vm.as_double(query_vec_col).alias("__qvec"),
+    )
+    if choose_strategy(strategy, doc_vecs) == "numpy":
+        # the vecblock kernel reduces each batch to PARTIAL maxima per
+        # (query vector, doc) — a map-side combine for max (associative,
+        # order-independent, so lossless) that shrinks the kernel's output
+        # to |docs in batch| × |query vectors| rows
+        keys, Q, qvalid = collect_probes(q)
+        qids, qidxs = (c.combine_chunks() for c in keys.columns)
+        nq = len(Q)
+
+        def max_per_doc(blocks):
+            for batch, V, valid in blocks:
+                D, null = pairwise("cosine", V, Q, valid, qvalid)
+                S = np.where(null, -np.inf, 1.0 - D)  # the fold's 1 - cos_dist
+                ids = batch.column("id")
+                _, first, inv = np.unique(ids.to_numpy(zero_copy_only=False),
+                                          return_index=True, return_inverse=True)
+                order = np.argsort(inv, kind="stable")
+                M = np.maximum.reduceat(S[order], np.r_[0, np.flatnonzero(np.diff(inv[order])) + 1])
+                qi = np.tile(np.arange(nq), len(first))
+                yield pa.RecordBatch.from_arrays(
+                    [qids.take(qi), qidxs.take(qi), ids.take(np.repeat(first, nq)),
+                     pa.array(M.ravel(), mask=np.isneginf(M.ravel()))],  # all-NULL → NULL
+                    names=["query_id", "__qidx", "id", "__m"],
+                )
+
+        qid_t, qidx_t = (f.dataType.simpleString() for f in q.schema.fields[:2])
+        id_t = v.schema["id"].dataType.simpleString()
+        partials = map_blocks(v, "__vvec", Q.shape[1], max_per_doc,
+                              f"query_id {qid_t}, __qidx {qidx_t}, id {id_t}, __m double")
         per_qvec = partials.groupBy("query_id", "id", "__qidx").agg(
             F.max("__m").alias("__m")
         )
     else:
-        q = F.broadcast(
-            query_vecs.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_idx_col).alias("__qidx"),
-                vm.as_double(query_vec_col).alias("__qvec"),
-            )
-        )
         sim = F.lit(1.0) - vm.cosine_distance("__qvec", "__vvec")
         per_qvec = (
-            v.crossJoin(q)
+            v.crossJoin(F.broadcast(q))
             .select("query_id", "__qidx", "id", sim.alias("__sim"))
             .groupBy("query_id", "id", "__qidx")
             .agg(F.max("__sim").alias("__m"))
@@ -626,55 +335,6 @@ def maxsim_search(
         .filter(F.col("rank") <= k)
         .select("query_id", "id", "score", "rank")
     )
-
-
-def _numpy_hamming_kernel(probe_rows: list, k: int) -> callable:
-    """mapInPandas kernel: per-partition Hamming top-k over sign-bit
-    packed words. XOR in uint64 + a 16-bit LUT popcount (numpy < 2 has
-    no bitwise_count); emits ≤ n_queries × k rows per partition — same
-    shuffle-shrink shape as _numpy_topk_kernel, integer math instead of
-    BLAS."""
-    import numpy as np
-
-    qids = np.array([r[0] for r in probe_rows])
-    QW = np.array([list(r[1]) for r in probe_rows], dtype=np.uint64)  # (nq, W)
-    lut = np.array(
-        [bin(x).count("1") for x in range(1 << 16)], dtype=np.uint8
-    )
-
-    def popcount(a: "np.ndarray") -> "np.ndarray":
-        # view each uint64 as four uint16 halfwords and LUT-sum them
-        h = lut[a.view(np.uint16).reshape(*a.shape, 4)]
-        return h.sum(axis=-1, dtype=np.int64)
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            W = np.array(
-                [list(w) for w in pdf["__words"]], dtype=np.int64
-            ).astype(np.uint64)  # (b, W); signed longs reinterpret as bits
-            ids = pdf["id"].to_numpy()
-            take = min(k, len(ids))
-            out_q, out_id, out_h = [], [], []
-            for j in range(len(qids)):
-                ham = popcount(W ^ QW[j][None, :]).sum(axis=1)  # (b,)
-                order = np.lexsort((ids, ham))[:take]  # (hamming, id) asc
-                out_q.append(np.repeat(qids[j], take))
-                out_id.append(ids[order])
-                out_h.append(ham[order])
-            parts.append(pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "id": np.concatenate(out_id),
-                "hamming": np.concatenate(out_h),
-            }))
-        if parts:
-            both = pd.concat(parts, ignore_index=True)
-            both.sort_values(["hamming", "id"], inplace=True, kind="stable")
-            yield both.groupby("query_id", sort=False).head(k)
-
-    return reduce
 
 
 def knn_hamming(
@@ -708,33 +368,26 @@ def knn_hamming(
 
     strategy mirrors knn(): "window" = vm.hamming_words expression fold
     (bitwise-exact vs the DuckDB oracle) + WindowGroupLimit; "numpy" =
-    Arrow-batched XOR/popcount kernel with per-partition top-k (integer
+    the vecblock XOR/popcount kernel with per-partition top-k (integer
     math — kernel and fold agree EXACTLY, unlike the float kernels);
-    "auto" flips on AUTO_NUMPY_THRESHOLD. At 100 TB the kernel path
-    scans the packed words once, in place — 16 B/row for 64 dims — and
-    shuffles only p × q × k candidate rows."""
+    "auto" flips on vecblock.AUTO_NUMPY_THRESHOLD. At 100 TB the kernel
+    path scans the packed words once, in place — 16 B/row for 64 dims —
+    and shuffles only p × q × k candidate rows. A NULL word makes the
+    row's (or probe's) Hamming distance NULL, ranked last."""
     fetch = rerank if rerank is not None else k
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         *[F.col(c).alias(f"__qw{i}") for i, c in enumerate(query_word_cols)],
     )
-    if strategy == "auto":
-        strategy = (
-            "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-        )
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], [r[f"__qw{i}"] for i in range(len(query_word_cols))])
-            for r in q.collect()
-        ]
-        kernel = _numpy_hamming_kernel(probe_rows, fetch)
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        narrow = spread(vectors).select(
-            F.col(id_col).alias("id"),
-            F.array(*[F.col(c) for c in word_cols]).alias("__words"),
-        ).mapInPandas(
-            kernel, schema=f"query_id {qid_t}, id {id_t}, hamming long"
+    if choose_strategy(strategy, vectors) == "numpy":
+        narrow = topk_scan(
+            spread(vectors).select(
+                F.col(id_col).alias("id"),
+                F.array(*[F.col(c) for c in word_cols]).alias("__words"),
+            ),
+            q.select("query_id", F.array(*q.columns[1:]).alias("__qwords")),
+            "hamming", fetch, vec_col="__words", dist="hamming", dist_type="long",
+            d=len(word_cols), dtype=np.int64,
         )
     else:
         ham = vm.hamming_words(
@@ -748,7 +401,7 @@ def knn_hamming(
             .select("query_id", "id", ham.cast("long").alias("hamming"))
         )
     wham = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("id").asc()
+        F.col("hamming").asc_nulls_last(), F.col("id").asc()
     )
     cands = (
         narrow.withColumn("rank", F.row_number().over(wham))

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectormath as vm
+from .vecblock import choose_strategy
 
 __all__ = [
     "pq_codebook", "pq_encode", "pq_encode_kernel", "pq_adc_topk", "subvectors",
@@ -175,9 +176,9 @@ def pq_codebook(
     # explode the Lloyd rounds actually iterate over: subvectors() is
     # narrow, so sv inherits this partitioning for every round with no
     # per-round probe or exchange (VERDICT r11 #2; no-op at real scale)
-    from ..sources.tables import _footer_rows
+    from ..sources.tables import footer_rows
 
-    n_rows = _footer_rows(vectors)
+    n_rows = footer_rows(vectors)
     v = spread(
         vectors, rows=None if n_rows is None else n_rows * m
     ).select(
@@ -528,20 +529,6 @@ def _arrow_adc_routed_kernel(
     return scan
 
 
-def _resolve_adc_strategy(strategy: str, candidates: DataFrame) -> str:
-    from . import knn as knn_mod
-
-    if strategy == "auto":
-        return (
-            "numpy"
-            if knn_mod.estimated_rows(candidates) >= knn_mod.AUTO_NUMPY_THRESHOLD
-            else "expr"
-        )
-    if strategy not in ("expr", "numpy"):
-        raise ValueError(f"strategy must be auto|expr|numpy, got {strategy!r}")
-    return strategy
-
-
 def pq_adc_topk(
     codes: DataFrame,
     codebook: DataFrame,
@@ -578,7 +565,7 @@ def pq_adc_topk(
     exact vs the DuckDB oracle — the sf0.01 correctness spec); "numpy" =
     the Arrow-batched gather kernel (last-ulp adist drift possible, so
     pair it with rerank for exact final distances); "auto" = numpy above
-    knn.AUTO_NUMPY_THRESHOLD rows, matching every other kernel flip.
+    vecblock.AUTO_NUMPY_THRESHOLD rows, matching every other kernel flip.
 
     Returns (query_id, id, distance, rank); `distance` is the ADC
     approximation unless re-ranked."""
@@ -607,7 +594,7 @@ def pq_adc_topk(
         if attrs is None:
             raise ValueError("filtered search needs BOTH predicate and attrs")
         qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    strategy = _resolve_adc_strategy(strategy, codes)
+    strategy = choose_strategy(strategy, codes, "numpy", "expr")
     lut_rows = (
         lut.select("query_id", "__lut").collect() if strategy == "numpy" else []
     )
@@ -741,7 +728,7 @@ def ann_knn_ivf_pq(
     record; "arrow" is the mapInArrow LUT-slab kernel (r9) — codes via
     ListArray.flatten, one slab row per QUERY with a pair→query row_map
     (no LUT duplication per probed list), one numpy gather + row-sum
-    per batch. "auto" resolves to ARROW above knn.AUTO_NUMPY_THRESHOLD
+    per batch. "auto" resolves to ARROW above vecblock.AUTO_NUMPY_THRESHOLD
     index rows and expr below (the sf-scale oracle spec), superseding
     the round-5 always-expr choice — the cost that made the pandas
     kernel lose is gone (same-session A/B in SCALE.md r9). adist may
@@ -784,18 +771,7 @@ def ann_knn_ivf_pq(
         if attrs is None:
             raise ValueError("filtered search needs BOTH predicate and attrs")
         qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    if strategy == "auto":
-        from . import knn as knn_mod
-
-        strategy = (
-            "arrow"
-            if knn_mod.estimated_rows(index) >= knn_mod.AUTO_NUMPY_THRESHOLD
-            else "expr"
-        )
-    elif strategy not in ("expr", "numpy", "arrow"):
-        raise ValueError(
-            f"strategy must be auto|expr|numpy|arrow, got {strategy!r}"
-        )
+    strategy = choose_strategy(strategy, index, "arrow", "expr", others=("numpy",))
     if strategy == "arrow":
         import numpy as np
 
@@ -995,7 +971,7 @@ def ann_knn_ivf_pq_residual(
     the ListArray.flatten path does not — measured at the 10M decade,
     SCALE.md r9). adist may drift in the last ulp vs the fold, so pair
     it with rerank (exact euclidean final ranking) when exact ordering
-    matters. "auto" = kernel above knn.AUTO_NUMPY_THRESHOLD index rows,
+    matters. "auto" = kernel above vecblock.AUTO_NUMPY_THRESHOLD index rows,
     matching every other kernel flip; requires integral query ids and
     list ids (composite-key routing), which every index built here has.
     """
@@ -1033,16 +1009,7 @@ def ann_knn_ivf_pq_residual(
         if attrs is None:
             raise ValueError("filtered search needs BOTH predicate and attrs")
         qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    if strategy == "auto":
-        from . import knn as knn_mod
-
-        strategy = (
-            "kernel"
-            if knn_mod.estimated_rows(index) >= knn_mod.AUTO_NUMPY_THRESHOLD
-            else "expr"
-        )
-    elif strategy not in ("expr", "kernel"):
-        raise ValueError(f"strategy must be auto|expr|kernel, got {strategy!r}")
+    strategy = choose_strategy(strategy, index, "kernel", "expr")
     if strategy == "kernel":
         import numpy as np
 

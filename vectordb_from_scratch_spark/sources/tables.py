@@ -98,22 +98,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # the ~0.1-1 ms/row these fixtures exhibit.
 SPREAD_ROWS_PER_TASK = 640
 
-_SPREAD_FOOTER_MAX_FILES = 64
+# Footer reads are driver-side (~ms each); past this many files every
+# caller's fallback is the right answer anyway: more splits than any
+# spread target, and vecblock.estimated_rows' size-based over-estimate.
+_FOOTER_MAX_FILES = 64
 
 
-def _footer_rows(df: DataFrame) -> int | None:
+def footer_rows(df: DataFrame) -> int | None:
     """EXACT row count for small local file-backed scans, from parquet
     footer metadata only — no Spark job, no physical planning. Returns
     None for non-file plans, remote filesystems, or tables with more
-    than _SPREAD_FOOTER_MAX_FILES files (that many splits already beats
-    any spread target, so the caller's no-op answer is right anyway).
-    Filters on the scan don't shrink the estimate — an over-count only
-    errs toward a few more (cheap) tasks."""
+    than _FOOTER_MAX_FILES files. Filters on the scan don't shrink the
+    count — an over-count only errs toward a few more (cheap) spread
+    tasks, or toward the kernel path."""
     try:
         files = df.inputFiles()
     except Exception:  # RDD/in-memory-backed plans
         return None
-    if not files or len(files) > _SPREAD_FOOTER_MAX_FILES:
+    if not files or len(files) > _FOOTER_MAX_FILES:
         return None
     total = 0
     try:
@@ -160,7 +162,7 @@ def spread(df: DataFrame, rows: int | None = None) -> DataFrame:
     if conf_rpt is not None:
         rpt = max(1, int(conf_rpt))
     if rows is None:
-        rows = _footer_rows(df)
+        rows = footer_rows(df)
     target = dp if rows is None else min(dp, -(-rows // rpt))
     if target <= 1:
         return df
