@@ -220,6 +220,34 @@ def test_persisted_store_survives_writes(spark, tmp_path):
         httpd.server_close()
 
 
+def test_in_memory_publish_keeps_one_leaf(spark):
+    """Without a data_dir, publish materializes the new snapshot: the
+    served plan stays one relation however many writes came before
+    (upsert's lazy plan stacks an anti-join and a union per write)."""
+    state = AppState(VectorStore.empty(spark))
+    for i in range(6):
+        state.publish(state.store.insert(f"v{i}", [float(i), 1.0]))
+    plan = state.store.df._jdf.queryExecution().optimizedPlan()
+    assert plan.collectLeaves().size() == 1
+    assert sorted(state.store.list_ids()) == [f"v{i}" for i in range(6)]
+    assert state.store.get("v4") == [4.0, 1.0]
+
+
+def test_in_memory_store_strategy_stays_fold(spark):
+    """An in-memory store reads 0 estimated rows, so knn's auto strategy
+    stays on the exact fold at any size, before and after publish."""
+    from vectordb_from_scratch_spark.operators.vecblock import choose_strategy
+
+    items = [(f"v{i}", [float(i % 7), float(i % 11)], {}) for i in range(6000)]
+    store = VectorStore.empty(spark).insert_batch(items)
+    assert choose_strategy("auto", store.df) == "window"
+    state = AppState(store)
+    state.publish(store)
+    assert choose_strategy("auto", state.store.df) == "window"
+    state.publish(state.store.insert("extra", [0.5, 0.5]))
+    assert choose_strategy("auto", state.store.df) == "window"
+
+
 def test_wire_filter_to_spec_nested():
     wire = {"op": "and", "filters": [
         {"op": "eq", "field": "lang", "value": "en"},

@@ -3,6 +3,8 @@ surface) and persistence semantics (snapshot/recover/compact, P4-P6)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,6 +68,62 @@ def test_search_batch_per_query_k(store):
     res = store.search_batch([([1.0, 0.0, 0.0], 1), ([0.0, 1.0, 0.0], 3)])
     assert [r[0] for r in res[0]] == ["sunset"]
     assert len(res[1]) == 3 and res[1][0][0] == "ocean"
+
+    # k=0 and a negative k give [], a k above the store size every row;
+    # ties (ocean/sunset at sqrt(0.5)) order by id
+    queries = [([0.0, 0.0, 1.0], 0), ([0.5, 0.5, 0.0], 10), ([0.2, 0.9, 0.1], -1)]
+    res = store.search_batch(queries)
+    assert [[i for i, _ in r] for r in res] == [[], ["fire-truck", "ocean", "sunset"], []]
+    assert [d for _, d in res[1]] == pytest.approx([0.32 ** 0.5, 0.5 ** 0.5, 0.5 ** 0.5])
+
+    # approximate modes may return fewer than k rows; each query keeps
+    # its own rows, in rank order, cut at its own k
+    queries = [([1.0, 0.0, 0.0], 1), ([0.0, 1.0, 0.0], 3), ([0.0, 0.0, 1.0], 0),
+               ([0.5, 0.5, 0.0], 10)]
+    srp = store.with_ann(nbits=4, n_tables=1, seed=7, multiprobe=0)
+    assert [[i for i, _ in r] for r in srp.search_batch(queries)] == [
+        ["sunset"], ["ocean"], [], []]
+    ivf = store.with_ivf_sq8(n_lists=2, n_probe=1, rerank=30)
+    assert [[i for i, _ in r] for r in ivf.search_batch(queries)] == [
+        ["sunset"], ["ocean"], [], ["fire-truck", "sunset"]]
+
+
+def _jobs(spark, fn):
+    """fn's result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"store-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_persisted_search_job_count(spark, tmp_path):
+    """A search on a persisted store runs the kNN plan and nothing else:
+    per-query k and the order are finished on the driver, and the probe
+    is a local relation (no Python task to read it back)."""
+    import numpy as np
+
+    from vectordb_from_scratch_spark.cli import _load, _save
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((2000, 64))
+    items = [(f"v{i}", v.tolist(), {"label": str(i % 10)}) for i, v in enumerate(vecs)]
+    _save(VectorStore.empty(spark).insert_batch(items), str(tmp_path))
+    store = _load(spark, str(tmp_path), "euclidean")
+    q = rng.standard_normal(64)
+    d = np.sqrt(((vecs - q) ** 2).sum(axis=1))
+    order = np.argsort(d, kind="stable")
+    want = [f"v{i}" for i in order[:10]]
+    want_f = [f"v{i}" for i in order[order % 10 == 3][:10]]
+    spec = {"eq": {"field": "label", "value": "3"}}
+    for _ in range(2):
+        res, n = _jobs(spark, lambda: store.search(q.tolist(), 10))
+        assert [i for i, _ in res] == want and n <= 4, n
+        res, n = _jobs(spark, lambda: store.search_with_filter(q.tolist(), 10, spec))
+        assert [i for i, _ in res] == want_f and n <= 4, n
 
 
 def test_search_with_filter(store):

@@ -10,9 +10,14 @@ the DataFrame-native translation of the reference's &mut self methods.
 Dimension is enforced on first insert exactly like the reference
 (dimension inferred then checked, src/storage.rs:93-94, 145-154).
 
-Scale: the facade adds nothing to the plans — a 100 TB deployment calls
-the operators directly on partitioned tables; this class exists for
-API-parity tests and small interactive use.
+Scale: a search runs the kNN/ANN operator's plan over the store and
+the probe table and nothing else — per-query k and the final order are
+applied on the driver to the at most n_queries × k_max collected rows,
+so the facade adds no join, sort or exchange to the plans. Driver-side
+rows (probes, upserts, delete ids) enter Spark as Arrow-built local
+relations (`_local_df`). A 100 TB deployment calls the operators directly
+on partitioned tables; this class exists for API-parity tests and small
+interactive use.
 """
 
 from __future__ import annotations
@@ -20,14 +25,29 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions import vectormath as vm
 from . import crud, knn
 from .filters import compile_filter
 
 STORE_SCHEMA = "id string, embedding array<double>, metadata map<string,string>"
+
+
+def _local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as a DataFrame over a LocalRelation, built from a
+    pyarrow.Table. ``spark.createDataFrame(rows)`` would give a LogicalRDD
+    of pickled rows, which runs a Python task every time a plan containing
+    it executes; the values and types are the same either way."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 class DimensionMismatch(ValueError):
@@ -56,6 +76,9 @@ class VectorStore:
 
     @classmethod
     def empty(cls, spark: SparkSession, metric: str = "euclidean") -> "VectorStore":
+        # NOT _local_df: a LocalRelation root would give in-memory stores
+        # exact row statistics and flip knn's auto strategy off the fold
+        # (vecblock.estimated_rows reads 0 for this RDD-backed root)
         return cls(spark, spark.createDataFrame([], STORE_SCHEMA), None, metric)
 
     def with_ann(
@@ -133,7 +156,7 @@ class VectorStore:
         if not items3:
             return self
         dim = self._check_dim(items3)
-        updates = self.spark.createDataFrame(items3, STORE_SCHEMA)
+        updates = _local_df(self.spark, items3, STORE_SCHEMA)
         return replace(self, df=crud.upsert(self.df, updates), dimension=dim)
 
     def delete(self, id: str) -> "VectorStore":
@@ -141,18 +164,20 @@ class VectorStore:
         src/storage.rs:175-192)."""
         if self.df.filter(F.col("id") == id).isEmpty():
             raise VectorNotFound(id)
-        ids = self.spark.createDataFrame([(id,)], "id string")
+        ids = _local_df(self.spark, [(id,)], "id string")
         return replace(self, df=crud.delete_ids(self.df, ids))
 
     # -- reads --------------------------------------------------------------
 
+    # collect(), not first(): one job per lookup, where first() scans one
+    # partition and launches a second job when the id is not in it
     def get(self, id: str) -> Optional[list[float]]:
-        row = self.df.filter(F.col("id") == id).select("embedding").first()
-        return list(row.embedding) if row else None
+        rows = self.df.filter(F.col("id") == id).select("embedding").collect()
+        return list(rows[0].embedding) if rows else None
 
     def get_metadata(self, id: str) -> Optional[dict]:
-        row = self.df.filter(F.col("id") == id).select("metadata").first()
-        return dict(row.metadata) if row else None
+        rows = self.df.filter(F.col("id") == id).select("metadata").collect()
+        return dict(rows[0].metadata) if rows else None
 
     def list_ids(self) -> list[str]:
         return [r.id for r in self.df.select("id").collect()]
@@ -169,10 +194,8 @@ class VectorStore:
                 raise DimensionMismatch(
                     f"query dim {len(bad[0])} != store dim {self.dimension}"
                 )
-        rows = [(i, list(map(float, q)), int(k)) for i, (q, k) in enumerate(queries)]
-        return self.spark.createDataFrame(
-            rows, "query_id long, query_embedding array<double>, k int"
-        )
+        rows = [(i, list(map(float, q))) for i, (q, _) in enumerate(queries)]
+        return _local_df(self.spark, rows, "query_id long, query_embedding array<double>")
 
     def search(self, query: list[float], k: int = 10) -> list[tuple[str, float]]:
         """Exact k-NN (reference src/storage.rs:217-245)."""
@@ -188,7 +211,6 @@ class VectorStore:
         qdf = self._query_df(queries)
         kind = (self.ann_params or {}).get("kind")
         if kind == "ivf_sq8" and not self.df.isEmpty():
-            from ..functions import vectormath as vm
             from . import ann
 
             params = {k_: v for k_, v in self.ann_params.items() if k_ != "kind"}
@@ -197,13 +219,14 @@ class VectorStore:
                 self.df, n_lists=n_lists, id_col="id", vec_col="embedding",
                 seed=params["seed"],
             )
-            centers_df = self.spark.createDataFrame(
+            centers_df = _local_df(
+                self.spark,
                 [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
                 "list_id int, cvec array<double>",
             )
             idx = ann.ivf_sq8_index(assigned, id_col="id", vec_col="embedding")
             res = ann.ann_knn_ivf_sq8(
-                idx, centers_df, qdf.drop("k"), k=kmax,
+                idx, centers_df, qdf, k=kmax,
                 n_probe=params["n_probe"], rerank=params["rerank"],
                 raw=assigned.select(
                     "id", vm.as_double("embedding").alias("vec")
@@ -214,24 +237,23 @@ class VectorStore:
 
             params = {k_: v for k_, v in self.ann_params.items() if k_ != "kind"}
             res = ann.ann_knn_srp(
-                self.df, qdf.drop("k"), k=kmax, metric=self.metric,
+                self.df, qdf, k=kmax, metric=self.metric,
                 dim=self.dimension, id_col="id", vec_col="embedding",
                 **params,
             )
         else:
             res = knn.knn(
-                self.df, qdf.drop("k"), k=kmax, metric=self.metric,
+                self.df, qdf, k=kmax, metric=self.metric,
                 id_col="id", vec_col="embedding",
             )
-        res = (
-            res.join(F.broadcast(qdf.select("query_id", "k")), "query_id")
-            .filter(F.col("rank") <= F.col("k"))
-            .orderBy("query_id", "rank")
-            .collect()
-        )
+        # per-query k and the order on the driver: the operator returned at
+        # most len(queries) * kmax rows, and a join back to the probes plus
+        # a global sort would cost a broadcast, a sample and a shuffle
+        ks = [int(k) for _, k in queries]
         out: list[list[tuple[str, float]]] = [[] for _ in queries]
-        for r in res:
-            out[r.query_id].append((r.id, r.distance))
+        for r in sorted(res.collect(), key=lambda r: (r.query_id, r.rank)):
+            if r.rank <= ks[r.query_id]:
+                out[r.query_id].append((r.id, r.distance))
         return out
 
     def search_with_filter(

@@ -27,9 +27,12 @@ Architecture (Spark-first, NOT a translation):
 - Handlers delegate to the same set-oriented operators the batch engine
   uses (`operators/crud.py`, `operators/knn.py`, `operators/filters.py`)
   — the server adds routing and JSON, no second query path. On a real
-  cluster this process is a driver app: Spark distributes each search;
-  at local test scale `knn`'s auto strategy picks the in-process numpy
-  kernel, which is the low-latency serve path.
+  cluster this process is a driver app: Spark distributes each search.
+  `knn`'s auto strategy (`vecblock.choose_strategy`) decides from the
+  store's row estimate: in-memory stores estimate 0 rows and persisted
+  stores under `vecblock.AUTO_NUMPY_THRESHOLD` (5,000) rows both take
+  the exact expression fold; only larger persisted stores run the
+  numpy kernel.
 - `/metrics` mirrors the reference's driver-side ``MetricsCollector``
   (nearest-rank percentile over recorded query latencies,
   `src/metrics.rs:62-72`); the distributed analog over a latency table
@@ -52,7 +55,7 @@ from __future__ import annotations
 
 import json
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from time import monotonic
 from urllib.parse import unquote
@@ -154,6 +157,10 @@ class AppState:
             # rename-overwrite just deleted — serving it would throw
             # FileNotFoundException on the next evaluation
             new_store = _load(new_store.spark, self.data_dir, new_store.metric)
+        else:
+            # materialize, like the re-read above: serving upsert's lazy
+            # plan would stack one more anti-join and union per write
+            new_store = replace(new_store, df=new_store.df.localCheckpoint())
         self.store = new_store
 
 
