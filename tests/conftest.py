@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -51,3 +52,29 @@ def documents(spark):
     from vectordb_from_scratch_spark.sources import load_table
 
     return load_table(spark, SF_SMOKE, "documents")
+
+
+@pytest.fixture
+def rename_crash(monkeypatch):
+    """Inject a crash between a state swap's two renames: inside
+    `with rename_crash():` the first os.rename runs and every later one
+    raises OSError."""
+    real = os.rename
+
+    @contextlib.contextmanager
+    def armed():
+        calls = []
+
+        def rename(src, dst, *args, **kwargs):
+            calls.append(src)
+            if len(calls) > 1:
+                raise OSError(f"injected crash before renaming {src}")
+            real(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(os, "rename", rename)
+        try:
+            yield
+        finally:
+            monkeypatch.setattr(os, "rename", real)
+
+    return armed

@@ -23,8 +23,9 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from .operators.store import STORE_SCHEMA, VectorStore, VectorNotFound
+from .operators.store import VectorStore, VectorNotFound
 from .session import build_session
+from .sources.persistence import read_snapshot, write_snapshot
 
 
 def _session() -> SparkSession:
@@ -39,36 +40,17 @@ def _session() -> SparkSession:
 
 
 def _load(spark: SparkSession, data_dir: str, metric: str) -> VectorStore:
-    path = os.path.join(data_dir, "data")
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    df = read_snapshot(spark, data_dir)
+    if df is None:
         return VectorStore.empty(spark, metric=metric)
     dim_row = df.selectExpr("size(embedding) AS d").first()
     return VectorStore(spark, df, dim_row.d if dim_row else None, metric)
 
 
 def _save(store: VectorStore, data_dir: str) -> None:
-    import json
-
-    from .sources.persistence import MANIFEST, overwrite_via_rename
-
-    # store.df's lazy plan still scans data_dir/data — the path this
-    # overwrites. Temp-write + rename never overlaps source and
-    # destination (cache()+count() is not durable: an evicted block
-    # would recompute from the half-deleted source).
-    data_path = os.path.join(data_dir, "data")
-    overwrite_via_rename(store.df, data_path)
-    spark = store.df.sparkSession
-    written = spark.read.parquet(data_path)
-    dim_row = written.select("embedding").selectExpr("size(embedding) AS d").first()
-    manifest = {
-        "vector_count": written.count(),
-        "dimension": (dim_row.d if dim_row else None),
-        "format": "parquet",
-    }
-    with open(os.path.join(data_dir, MANIFEST), "w") as f:
-        json.dump(manifest, f)
+    # store.df's lazy plan may scan data_dir/data — the path this
+    # overwrites; write_snapshot swaps it in (sources/persistence.py)
+    write_snapshot(store.df, data_dir)
 
 
 def _parse_vec(s: str) -> list[float]:

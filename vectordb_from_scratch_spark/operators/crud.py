@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "latest_per_id",
     "fold_insert_log",
     "time_travel",
     "upsert",
@@ -37,20 +38,27 @@ __all__ = [
 LOG_SCHEMA = "seq long, op string, id string, embedding array<float>, metadata map<string,string>"
 
 
-def fold_insert_log(log: DataFrame, *, id_col: str = "id", seq_col: str = "seq") -> DataFrame:
-    """Fold an insert/delete log into current state: last writer wins per id,
-    'delete' entries are tombstones (reference WalEntry::Delete,
-    src/persistence/wal.rs:21-23; replay order engine.rs:57-61).
-
-    'checkpoint' marker entries (engine.rs:187-204) are ignored — they don't
-    carry data.
-    """
+def latest_per_id(log: DataFrame, *, id_col: str = "id", seq_col: str = "seq") -> DataFrame:
+    """The last entry per id of an insert/delete log, tombstones included
+    (the log's own columns). 'checkpoint' marker entries
+    (engine.rs:187-204) are dropped — they don't carry data."""
     w = Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
     return (
         log.filter(F.col("op") != F.lit("checkpoint"))
         .withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") == F.lit("insert")))
-        .drop("__rn", "op", seq_col)
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def fold_insert_log(log: DataFrame, *, id_col: str = "id", seq_col: str = "seq") -> DataFrame:
+    """Fold an insert/delete log into current state: last writer wins per id,
+    'delete' entries are tombstones (reference WalEntry::Delete,
+    src/persistence/wal.rs:21-23; replay order engine.rs:57-61)."""
+    return (
+        latest_per_id(log, id_col=id_col, seq_col=seq_col)
+        .filter(F.col("op") == F.lit("insert"))
+        .drop("op", seq_col)
     )
 
 

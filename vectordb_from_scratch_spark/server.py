@@ -148,20 +148,21 @@ class AppState:
     data_dir: Optional[str] = None  # if set, writes persist a snapshot here
 
     def publish(self, new_store: VectorStore) -> None:
-        if self.data_dir is not None:
-            from .cli import _load, _save
-
-            _save(new_store, self.data_dir)
-            # re-load from the snapshot just written: new_store's lazy plan
-            # still scans the PREVIOUS snapshot's part files, which _save's
-            # rename-overwrite just deleted — serving it would throw
-            # FileNotFoundException on the next evaluation
-            new_store = _load(new_store.spark, self.data_dir, new_store.metric)
-        else:
-            # materialize, like the re-read above: serving upsert's lazy
+        if self.data_dir is None:
+            # materialize, like the re-read below: serving upsert's lazy
             # plan would stack one more anti-join and union per write
-            new_store = replace(new_store, df=new_store.df.localCheckpoint())
-        self.store = new_store
+            self.store = replace(new_store, df=new_store.df.localCheckpoint())
+            return
+        from .cli import _load, _save
+
+        try:
+            _save(new_store, self.data_dir)
+        finally:
+            # serve what the directory now resolves to, after a failed
+            # save too: the lazy plans of new_store and of the served
+            # store scan part files the swap moved or deleted — serving
+            # either would throw FileNotFoundException
+            self.store = _load(new_store.spark, self.data_dir, new_store.metric)
 
 
 class _Handler(BaseHTTPRequestHandler):

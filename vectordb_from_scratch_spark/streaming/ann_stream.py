@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ann import srp_index
+from ..operators.crud import latest_per_id
+from ..sources.persistence import append_state, overwrite_via_rename, read_state
 
 __all__ = [
     "srp_index_stream_foreach_batch",
@@ -74,21 +76,11 @@ def srp_index_stream_foreach_batch(
     """
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        rows = batch.filter(F.col("op") != "checkpoint")
         # Within-batch last-writer-wins FIRST: two inserts of one id in
         # the same micro-batch would otherwise cross-join below (bucket
         # rows of every version x every seq) and the stale version would
         # survive read-time resolution forever.
-        latest = (
-            rows.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(id_col).orderBy(F.col("seq").desc())
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_per_id(batch, id_col=id_col)
         inserts = latest.filter(F.col("op") == _INSERT)
         deletes = latest.filter(F.col("op") == _DELETE)
         indexed = srp_index(
@@ -105,7 +97,7 @@ def srp_index_stream_foreach_batch(
             "seq",
             F.lit(_DELETE).alias("op"),
         )
-        indexed.unionByName(tombs).write.mode("append").parquet(index_dir)
+        append_state(indexed.unionByName(tombs), index_dir)
 
     return (
         log_stream.writeStream.foreachBatch(fold)
@@ -113,22 +105,31 @@ def srp_index_stream_foreach_batch(
     )
 
 
+def _read_live(
+    spark: SparkSession, index_dir: str, keys: list[str], cols: list[str]
+) -> DataFrame:
+    """Resolve an append-only index dir to its live rows: per id, the
+    max-seq entry wins; tombstones drop the id. The final dropDuplicates
+    on (id, *keys) also erases byte-identical rows left by at-least-once
+    batch retries, so the resolved index is exactly-once even though the
+    appends aren't. The dir itself resolves through persistence's
+    recovery ladder (a crashed compaction leaves no target)."""
+    raw = read_state(spark, index_dir)
+    if raw is None:
+        raise FileNotFoundError(f"no index at {index_dir}")
+    return (
+        raw.withColumn("__mx", F.max("seq").over(Window.partitionBy("id")))
+        .filter((F.col("seq") == F.col("__mx")) & (F.col("op") == _INSERT))
+        .dropDuplicates(["id", *keys])
+        .select("id", *cols)
+    )
+
+
 def read_srp_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Resolve the append-only index dir to the live index table
-    (id, vec, tbl, bucket): per id, the max-seq entry wins; tombstones
-    drop the id. The final dropDuplicates also erases byte-identical
-    rows left by at-least-once batch retries, so the resolved index is
-    exactly-once even though the appends aren't. The shuffles carry
+    """The live SRP index table (id, vec, tbl, bucket). The shuffles carry
     only (id, seq, tbl, bucket) — the vec column rides along but is
     never compared."""
-    raw = spark.read.parquet(index_dir)
-    w = Window.partitionBy("id")
-    return (
-        raw.withColumn("__mx", F.max("seq").over(w))
-        .filter((F.col("seq") == F.col("__mx")) & (F.col("op") == _INSERT))
-        .dropDuplicates(["id", "tbl", "bucket"])
-        .select("id", "vec", "tbl", "bucket")
-    )
+    return _read_live(spark, index_dir, ["tbl", "bucket"], ["vec", "tbl", "bucket"])
 
 
 def ivf_index_stream_foreach_batch(
@@ -167,17 +168,7 @@ def ivf_index_stream_foreach_batch(
     cent = centroids.select("list_id", "cvec")
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        rows = batch.filter(F.col("op") != "checkpoint")
-        latest = (
-            rows.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(id_col).orderBy(F.col("seq").desc())
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_per_id(batch, id_col=id_col)
         inserts = latest.filter(F.col("op") == _INSERT)
         deletes = latest.filter(F.col("op") == _DELETE)
         v = inserts.select(
@@ -195,7 +186,7 @@ def ivf_index_stream_foreach_batch(
             "seq",
             F.lit(_DELETE).alias("op"),
         )
-        assigned.unionByName(tombs).write.mode("append").parquet(index_dir)
+        append_state(assigned.unionByName(tombs), index_dir)
 
     return (
         log_stream.writeStream.foreachBatch(fold)
@@ -204,17 +195,8 @@ def ivf_index_stream_foreach_batch(
 
 
 def read_ivf_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Resolve the append-only IVF dir to the live assigned table
-    (id, vec, list_id): per id, max-seq wins; tombstones drop the id;
-    byte-identical at-least-once retries collapse in the final dedup."""
-    raw = spark.read.parquet(index_dir)
-    w = Window.partitionBy("id")
-    return (
-        raw.withColumn("__mx", F.max("seq").over(w))
-        .filter((F.col("seq") == F.col("__mx")) & (F.col("op") == _INSERT))
-        .dropDuplicates(["id", "list_id"])
-        .select("id", "vec", "list_id")
-    )
+    """The live IVF assigned table (id, vec, list_id)."""
+    return _read_live(spark, index_dir, ["list_id"], ["vec", "list_id"])
 
 
 def ivf_drift(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -296,17 +278,7 @@ def ivf_pq_index_stream_foreach_batch(
     cent = centroids.select("list_id", "cvec")
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        rows = batch.filter(F.col("op") != "checkpoint")
-        latest = (
-            rows.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(id_col).orderBy(F.col("seq").desc())
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_per_id(batch, id_col=id_col)
         inserts = latest.filter(F.col("op") == _INSERT)
         deletes = latest.filter(F.col("op") == _DELETE)
         v = inserts.select(
@@ -328,7 +300,7 @@ def ivf_pq_index_stream_foreach_batch(
             "seq",
             F.lit(_DELETE).alias("op"),
         )
-        idx.unionByName(tombs).write.mode("append").parquet(index_dir)
+        append_state(idx.unionByName(tombs), index_dir)
 
     return (
         log_stream.writeStream.foreachBatch(fold)
@@ -337,18 +309,9 @@ def ivf_pq_index_stream_foreach_batch(
 
 
 def read_ivf_pq_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Resolve the append-only IVF-PQ dir to the live code table
-    (id, codes, list_id): per id, max-seq wins; tombstones drop the id;
-    byte-identical at-least-once retries collapse in the final dedup
-    (codes are deterministic, so retries ARE byte-identical)."""
-    raw = spark.read.parquet(index_dir)
-    w = Window.partitionBy("id")
-    return (
-        raw.withColumn("__mx", F.max("seq").over(w))
-        .filter((F.col("seq") == F.col("__mx")) & (F.col("op") == _INSERT))
-        .dropDuplicates(["id", "list_id"])
-        .select("id", "codes", "list_id")
-    )
+    """The live IVF-PQ code table (id, codes, list_id); codes are
+    deterministic, so at-least-once retries ARE byte-identical."""
+    return _read_live(spark, index_dir, ["list_id"], ["codes", "list_id"])
 
 
 def pq_distortion(
@@ -388,8 +351,6 @@ def compact_srp_index(spark: SparkSession, index_dir: str) -> None:
     analog): temp-write + rename so the rewrite never reads its own
     half-deleted output; seq reset to 0 so future appends keep
     winning."""
-    from ..sources.persistence import overwrite_via_rename
-
     live = read_srp_index(spark, index_dir).select(
         "id", "vec", "tbl", "bucket",
         F.lit(0).cast("long").alias("seq"), F.lit(_INSERT).alias("op"),

@@ -17,10 +17,11 @@ parquet overwrite keeps this container-friendly while the plan shape
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.crud import fold_insert_log
+from ..operators.crud import latest_per_id
+from ..sources.persistence import overwrite_via_rename, read_state
 
 __all__ = ["fold_stream_foreach_batch", "windowed_event_counts"]
 
@@ -40,32 +41,15 @@ def fold_stream_foreach_batch(
     """
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        # last entry per id within the batch (insert OR tombstone)
-        latest = (
-            batch.filter(F.col("op") != "checkpoint")
-            .withColumn(
-                "__rn",
-                F.row_number().over(Window.partitionBy("id").orderBy(F.col("seq").desc())),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        try:
-            state = s.read.parquet(state_dir)
-        except Exception:  # first batch — no state yet
-            state = None
+        latest = latest_per_id(batch)  # last entry per id: insert OR tombstone
+        state = read_state(batch.sparkSession, state_dir)
         inserts = latest.filter(F.col("op") == "insert").drop("op")
         if state is not None:
             survivors = state.join(latest.select("id"), "id", "left_anti")
             new_state = survivors.unionByName(inserts)
         else:
             new_state = inserts
-        # temp-write + rename: the plan reads state_dir, so an in-place
-        # overwrite would race its own source (cache retention is not a
-        # durable guard — evicted blocks recompute from the source)
-        from ..sources.persistence import overwrite_via_rename
-
+        # the plan reads state_dir: swap, never overwrite in place
         overwrite_via_rename(new_state, state_dir)
 
     return (

@@ -24,14 +24,10 @@ near-dup stream got in r9, applied to the rename-swap):
   REPLAY of that same (checkpoint, batch) recognizes its own marker
   and proceeds; any other writer stays blocked until that replay runs
   or the operator clears the marker.
-- CRASH-RECOVERY LADDER in the dimension read: the swap's crash window
-  (between rename(target→old) and rename(tmp→target)) leaves NO target
-  dir, which the old code's bare except silently treated as "first
-  batch — bootstrap empty": a mid-swap crash would have REBUILT THE
-  DIMENSION FROM NOTHING. Now: target missing + a complete tmp
-  (_SUCCESS present) → finish the swap; else target missing + an old
-  generation present → restore it; only a state with NO generation at
-  all bootstraps.
+- CRASH RECOVERY: the swap, the recovery ladder of the dimension read
+  and the "no state" vs "unreadable" distinction are
+  sources/persistence.py's (module docstring there); `read_dim` adds
+  the rule that `recover=True` (recovery renames) needs this lease.
 
 At 100 TB the stored dimension becomes a Delta/Iceberg MERGE target and
 the per-batch collect of the effective date disappears into the batch
@@ -42,7 +38,6 @@ lease becomes the table format's optimistic-commit protocol).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 from typing import Sequence
@@ -51,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_merge
+from ..sources.persistence import overwrite_via_rename, read_state
 
 __all__ = ["scd2_stream_foreach_batch", "read_dim"]
 
@@ -96,54 +92,21 @@ def _clear_intent(dim_dir: str) -> None:
         pass
 
 
-def _newest(paths: list[str]) -> str | None:
-    return max(paths, key=os.path.getmtime) if paths else None
-
-
 def read_dim(spark, dim_dir: str, *, recover: bool = False) -> DataFrame | None:
-    """The current dimension, applying the crash-recovery ladder (module
-    docstring). Returns None only for a genuinely fresh state (no
-    generation exists anywhere) — never silently for a mid-swap crash.
-
-    `recover=False` (the default, for external readers) is PURELY
-    read-only: a mid-swap crash state is served from the newest complete
-    tmp / old generation WITHOUT renaming anything. Recovery renames run
-    only with `recover=True`, which requires holding the merge lease —
-    an unleased reader racing a live writer inside the two-rename swap
-    window could otherwise steal the rename and fail the writer's own
-    swap (ADVICE r10). The merge path passes recover=True under its
-    lease; operators can too, after taking the lease."""
+    """The current dimension by persistence's recovery ladder; None only
+    when no generation exists anywhere. `recover=False` (external
+    readers) never renames; `recover=True` renames the live generation
+    into place and requires holding the merge lease — an unleased reader
+    racing a live writer inside the two-rename swap window could
+    otherwise steal the rename and fail the writer's own swap
+    (ADVICE r10). The merge path passes recover=True under its lease."""
     if recover and _read_intent(dim_dir) is None:
         raise RuntimeError(
             f"read_dim(recover=True) on {dim_dir} without the merge "
             "lease: recovery renames must never race a live writer's "
             "swap — take the .merge_intent lease first"
         )
-    if os.path.exists(dim_dir):
-        return spark.read.parquet(dim_dir)
-    # target missing: a complete tmp (crash BETWEEN the two renames)
-    # finishes the swap — the tmp was fully written, _SUCCESS proves it
-    tmp = _newest([
-        p for p in glob.glob(dim_dir + ".tmp-*")
-        if os.path.exists(os.path.join(p, "_SUCCESS"))
-    ])
-    if tmp is not None:
-        if recover:
-            os.rename(tmp, dim_dir)
-            return spark.read.parquet(dim_dir)
-        return spark.read.parquet(tmp)
-    # else an old generation (crash between rename(target→old) and the
-    # tmp write completing — tmp incomplete or already cleaned)
-    old = _newest(glob.glob(dim_dir + ".old-*"))
-    if old is not None:
-        if recover:
-            os.rename(old, dim_dir)
-            return spark.read.parquet(dim_dir)
-        return spark.read.parquet(old)
-    # no generation anywhere (an incomplete tmp with no old/target means
-    # the FIRST batch crashed mid-write — nothing was ever committed):
-    # genuinely fresh state
-    return None
+    return read_state(spark, dim_dir, recover=recover)
 
 
 def scd2_stream_foreach_batch(
@@ -239,8 +202,6 @@ def scd2_stream_foreach_batch(
             dim, upd, keys=keys, tracked=tracked, effective_date=eff,
             eff_col=eff_col, end_col=end_col,
         )
-        from ..sources.persistence import overwrite_via_rename
-
         # re-check ownership immediately before the swap: a second
         # writer that raced past the first check must not interleave
         # its renames with ours
