@@ -17,8 +17,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from vectordb_from_scratch_spark.operators import cache  # noqa: E402
+from vectordb_from_scratch_spark.plans.registry import QUERIES  # noqa: E402
+from vectordb_from_scratch_spark.session import build_session  # noqa: E402
+from vectordb_from_scratch_spark.sources import TABLES, load_table  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# launch settings of the timed session (tools/qtime.py uses the same)
+LAUNCH = {
+    "spark.ui.enabled": "false",
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+}
 
 # Headline set: one per operator category (kNN exact/ANN, dedup, text,
 # relational joins/aggs/windows, sessionization, fold).
@@ -206,78 +216,71 @@ def _prev_round_reference() -> dict[str, float]:
     return best[1]
 
 
-def main() -> None:
-    from pyspark.sql import SparkSession
+def release(spark) -> None:
+    """Drop everything a query left behind, between runs (even failed
+    ones), so repeats measure the full plan and storage never
+    accumulates. The sweep is what release_caches can't do: checkpoint
+    blocks (graph/CC/MMR/BPE queries) leaked across the r4 session and
+    spiked unrelated queries 2-5× via block-manager pressure. all_rdds:
+    the session is dedicated to the run, so the global sweep is safe and
+    also catches blocks that bypassed the tracked path."""
+    cache.release_caches()
+    cache.sweep_persistent_rdds(spark, all_rdds=True)
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("vectordb_from_scratch_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .getOrCreate()
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm outside timing: JVM/codegen once, and every table's file +
+    footer so cold reads don't land on whichever query runs first."""
+    for t in TABLES:
+        load_table(spark, sf_dir, t).count()
+
+
+def run_once(spark, name: str, sf_dir: str) -> float:
+    """Seconds to run registry query `name` into the noop sink."""
+    spark.sparkContext.setJobDescription(f"bench: {name}")
+    t0 = time.perf_counter()
+    try:
+        QUERIES[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        release(spark)
+        spark.sparkContext.setJobDescription(None)
+    return time.perf_counter() - t0
+
+
+def run_triangles_split(spark, sf_dir: str) -> tuple[float, float]:
+    """graph_triangles timed in two attributable phases (VERDICT r10
+    #4): BUILD = materialize the SRP-bucketed similarity edge table
+    (the fixture that dominated the 8 s entry), COUNT = the
+    degree-oriented wedge join over the materialized edges. A
+    regression in either is now visible on its own."""
+    from vectordb_from_scratch_spark.operators import graph
+    from vectordb_from_scratch_spark.plans.registry import graph_triangle_edges
+
+    edges = None
+    try:
+        t0 = time.perf_counter()
+        edges = graph_triangle_edges(spark, sf_dir).persist()
+        edges.count()
+        t_build = time.perf_counter() - t0
+        t1 = time.perf_counter()
+        graph.triangle_count(edges).write.format("noop").mode("overwrite").save()
+        t_count = time.perf_counter() - t1
+        return t_build, t_count
+    finally:
+        if edges is not None:
+            edges.unpersist()
+        release(spark)
+
+
+def main() -> None:
+    spark = build_session(
+        app_name="vectordb_from_scratch_spark_bench",
+        master=f"local[{CPUS}]",
+        shuffle_partitions=int(CPUS),
+        launch=LAUNCH,
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from vectordb_from_scratch_spark.plans.registry import QUERIES
-    from vectordb_from_scratch_spark.sources import TABLES, load_table
-
-    # Warm outside timing: JVM/codegen once, and every table's file +
-    # footer so cold reads don't land on whichever query runs first.
-    for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
-
-    from vectordb_from_scratch_spark.operators import cache, dedup
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        try:
-            QUERIES[name].spark(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        finally:
-            # composed pipelines persist/localCheckpoint intermediates;
-            # drop BOTH between runs (even failed ones) so repeats measure
-            # the full plan and storage never accumulates. The sweep is
-            # what release_caches can't do: checkpoint blocks (graph/CC/
-            # MMR/BPE queries) leaked across the r4 session and spiked
-            # unrelated queries 2-5× via block-manager pressure.
-            dedup.release_caches()
-            # all_rdds: this session is dedicated to the bench, so the
-            # global sweep is safe here and keeps r5's decontamination
-            # guarantee even for blocks that bypassed the tracked path
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
-        return time.perf_counter() - t0
-
-    def run_triangles_split() -> tuple[float, float]:
-        """graph_triangles timed in two attributable phases (VERDICT r10
-        #4): BUILD = materialize the SRP-bucketed similarity edge table
-        (the fixture that dominated the 8 s entry), COUNT = the
-        degree-oriented wedge join over the materialized edges. A
-        regression in either is now visible on its own."""
-        from vectordb_from_scratch_spark.operators import graph
-        from vectordb_from_scratch_spark.plans.registry import (
-            graph_triangle_edges,
-        )
-
-        edges = None
-        try:
-            t0 = time.perf_counter()
-            edges = graph_triangle_edges(spark, SF_DIR).persist()
-            edges.count()
-            t_build = time.perf_counter() - t0
-            t1 = time.perf_counter()
-            graph.triangle_count(edges).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t_count = time.perf_counter() - t1
-            return t_build, t_count
-        finally:
-            if edges is not None:
-                edges.unpersist()
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+    warm(spark, SF_DIR)
 
     # min of repeated runs per query: single-shot timings on a shared box
     # are noisy (GC, co-tenants — observed 10× spikes on a 1.2 s query);
@@ -295,7 +298,7 @@ def main() -> None:
     for name in BENCH_QUERIES:
         if name == "graph_triangles":
             try:
-                runs3 = [run_triangles_split() for _ in range(3)]
+                runs3 = [run_triangles_split(spark, SF_DIR) for _ in range(3)]
                 samples[name] = [
                     [round(b, 3), round(c, 3)] for b, c in runs3
                 ]
@@ -308,9 +311,9 @@ def main() -> None:
                 print(f"bench: {name} failed: {exc}", file=sys.stderr)
             continue
         try:
-            runs = [run_once(name), run_once(name)]
+            runs = [run_once(spark, name, SF_DIR), run_once(spark, name, SF_DIR)]
             if name in DIAG_QUERIES or abs(runs[0] - runs[1]) > 0.2 * min(runs):
-                runs.append(run_once(name))
+                runs.append(run_once(spark, name, SF_DIR))
             samples[name] = [round(t, 3) for t in runs]
             timings[name] = round(min(runs), 3)
         except Exception as exc:  # noqa: BLE001 — isolate per query
@@ -334,13 +337,13 @@ def main() -> None:
             continue
         try:
             if name == "graph_triangles":
-                b, c = run_triangles_split()
+                b, c = run_triangles_split(spark, SF_DIR)
                 rerun_t = b + c
                 if rerun_t < t:
                     splits[name] = {"build": round(b, 3), "count": round(c, 3)}
                 samples.setdefault(name, []).append([round(b, 3), round(c, 3)])
             else:
-                rerun_t = run_once(name)
+                rerun_t = run_once(spark, name, SF_DIR)
                 samples.setdefault(name, []).append(round(rerun_t, 3))
             reruns[name] = round(rerun_t, 3)
             timings[name] = round(min(t, rerun_t), 3)

@@ -220,6 +220,23 @@ def test_persisted_store_survives_writes(spark, tmp_path):
         httpd.server_close()
 
 
+@pytest.mark.parametrize("mode", ["srp", "ivf_sq8"])
+def test_persisted_publish_keeps_index_mode(spark, tmp_path, mode):
+    """A data_dir-backed publish re-loads the store from the snapshot;
+    the served store must keep its ANN mode, not fall back to exact."""
+    store = VectorStore.empty(spark).insert_batch(
+        [(f"v{i}", [float(i), float(i)], {}) for i in range(1, 9)]
+    )
+    if mode == "srp":
+        store = store.with_ann(nbits=2, n_tables=1)
+    else:
+        store = store.with_ivf_sq8(n_lists=2, n_probe=2, rerank=10)
+    state = AppState(store, data_dir=str(tmp_path))
+    state.publish(state.store.insert("v9", [9.0, 9.0]))
+    assert state.store.ann_params == store.ann_params
+    assert len(state.store.list_ids()) == 9
+
+
 def test_in_memory_publish_keeps_one_leaf(spark):
     """Without a data_dir, publish materializes the new snapshot: the
     served plan stays one relation however many writes came before

@@ -8,7 +8,6 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -78,6 +77,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # A plain session, deliberately not build_session: this tool stands
+    # in locally for the oracle gate, which runs on a plain session, and
+    # the compare above is str-based. With Arrow on, toPandas turns an
+    # array value that prints as [1.0, 2.0] into an ndarray that prints
+    # as [1. 2.], and a struct Row into a dict — both would read as
+    # mismatches the gate never sees.
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .appName("check_oracle")
@@ -90,14 +95,13 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    import bench
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
 
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    from vectordb_from_scratch_spark.operators import dedup as _dedup
 
     n_pass = n_fail = 0
     for name, fn in qs.items():
@@ -110,7 +114,10 @@ def main() -> int:
             n_fail += 1
             continue
         finally:
-            _dedup.release_caches()  # composed pipelines persist intermediates
+            # composed pipelines persist and checkpoint intermediates;
+            # this session is dedicated to the run, so the global sweep
+            # is safe
+            bench.release(spark)
         if name not in oracles:
             print(f"SKIP {name}: rows-only ({len(spark_pdf)} rows)")
             continue

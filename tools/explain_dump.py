@@ -23,22 +23,15 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    import bench
+    from vectordb_from_scratch_spark.plans.registry import QUERIES
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("explain_dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "12g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="explain_dump", master="local[8]", shuffle_partitions=8,
+        launch={"spark.ui.enabled": "false", "spark.driver.memory": "12g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from vectordb_from_scratch_spark.operators import cache, dedup
-    from vectordb_from_scratch_spark.plans.registry import QUERIES
 
     os.makedirs(args.outdir, exist_ok=True)
     for name in args.queries:
@@ -50,8 +43,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — keep dumping the rest
             txt = f"ERROR building plan: {exc!r}\n"
         finally:
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+            bench.release(spark)
         path = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)

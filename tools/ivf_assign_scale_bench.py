@@ -41,25 +41,22 @@ DIM = 64
 def main() -> int:
     only = sys.argv[1] if len(sys.argv) > 1 else None
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    import bench
     import execmetrics as xm
     from vectordb_from_scratch_spark.functions import vectormath as vm
-    from vectordb_from_scratch_spark.operators import ann, cache, dedup
+    from vectordb_from_scratch_spark.operators import ann, cache
+    from vectordb_from_scratch_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ivf_assign_scale_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="ivf_assign_scale_bench",
+        launch={
+            **xm.UI_LAUNCH,
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -127,8 +124,7 @@ def main() -> int:
             b = leg_arraymin(v, cents).select("id", "list_id")
             same = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
             out["identical"] = bool(same)
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+            bench.release(spark)
         for leg in legs:
             fn = leg_window if leg == "window" else leg_arraymin
             cents = centroids_of(v, n_lists)
@@ -138,8 +134,7 @@ def main() -> int:
             el = time.perf_counter() - t0
             d = xm.delta(before, xm.snapshot(spark))
             out["legs"][leg] = {"sec": round(el, 1), **xm.fmt(d)}
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+            bench.release(spark)
         print(json.dumps(out), flush=True)
 
     try:

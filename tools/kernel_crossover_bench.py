@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,25 +47,17 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(s in name for s in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    import execmetrics as xm
     from vectordb_from_scratch_spark.operators import ann, knn, vecblock
     from vectordb_from_scratch_spark.operators import pq as pqm
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("kernel_crossover_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    spark = build_session(
+        app_name="kernel_crossover_bench",
+        shuffle_partitions=32,
+        launch={**xm.UI_LAUNCH, "spark.driver.memory": "48g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -56,29 +56,17 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(sub in name for sub in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    import execmetrics as xm
     from vectordb_from_scratch_spark.operators.dedup import paragraph_dedup
     from vectordb_from_scratch_spark.operators.textops import url_domains
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("pipeline_scale_bench")
-        .config("spark.sql.shuffle.partitions", "64")
-        # UI on for the status REST endpoint (execmetrics); retention
-        # sized so no measured stage is evicted before the AFTER
-        # snapshot. Task retention stays tiny — stage-level sums are
-        # aggregated independently of per-task rows.
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    spark = build_session(
+        app_name="pipeline_scale_bench",
+        shuffle_partitions=64,
+        launch={**xm.UI_LAUNCH, "spark.driver.memory": "48g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -1702,43 +1690,28 @@ def containment_cell(n: int, runs: int) -> None:
             F.concat_ws(" ", short, tail).alias("text"),
         )
     )
-    # A/B both prefix materializations (VERDICT r8 #4): "window" is the
-    # r8 shape whose 10M cell spilled ~64 GB through the per-doc rank
-    # window; "agg" replaces it with a hash aggregate (collect+sort+slice
-    # per doc) and deletes the size join. Identical output asserted on
-    # both.
-    # CONTAINMENT_STRATS=agg|window runs one leg per process — at the
-    # 10M spill decade a single leg can exceed an invoker's timeout, and
-    # separate processes are also the cleanest cache/page-cache hygiene
-    strats = tuple(
-        os.environ.get("CONTAINMENT_STRATS", "agg,window").split(",")
-    )
-    for strat in strats:
-        # drop the persisted shingle table between strategies: Spark's
-        # cache manager matches by logical subtree, so without this the
-        # second leg silently reuses the first leg's build and the A/B
-        # times two different amounts of work (measured: 111 s vs 434 s
-        # for the SAME window plan, warm vs cold — r9)
-        release_caches()
-        out = containment_pairs(docs, threshold=0.9, prefix_strategy=strat)
-        t = _time(lambda out=out: out.agg(F.count(F.lit(1))).collect(), runs)
-        row = out.agg(
-            F.count(F.lit(1)).alias("pairs"),
-            F.min("containment").alias("cmin"),
-            F.max("containment").alias("cmax"),
-        ).collect()[0]
-        print(json.dumps({
-            "cell": "containment_pairs_" + strat,
-            "n_docs": n,
-            "universal_footer_df": n,
-            "sec": t,
-            "exec": LAST_EXEC,
-            "pairs": int(row["pairs"]),
-            "expected_pairs": half,
-            "exact": bool(
-                row["pairs"] == half and row["cmin"] == 1.0 and row["cmax"] == 1.0
-            ),
-        }), flush=True)
+    # drop earlier cells' persisted tables: Spark's cache manager matches
+    # by logical subtree, so a cached build could stand in for this one
+    release_caches()
+    out = containment_pairs(docs, threshold=0.9)
+    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    row = out.agg(
+        F.count(F.lit(1)).alias("pairs"),
+        F.min("containment").alias("cmin"),
+        F.max("containment").alias("cmax"),
+    ).collect()[0]
+    print(json.dumps({
+        "cell": "containment_pairs_agg",
+        "n_docs": n,
+        "universal_footer_df": n,
+        "sec": t,
+        "exec": LAST_EXEC,
+        "pairs": int(row["pairs"]),
+        "expected_pairs": half,
+        "exact": bool(
+            row["pairs"] == half and row["cmin"] == 1.0 and row["cmax"] == 1.0
+        ),
+    }), flush=True)
 
 
 def persisted_cell(n_corpus: int, n_delivery: int, runs: int) -> None:

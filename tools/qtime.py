@@ -1,6 +1,7 @@
 """Ad-hoc per-query timer for optimization work: times the named
-registry queries exactly the way bench.py does (noop sink, between-run
-cache sweeps, min-of-N), without running the whole headline set.
+registry queries with bench.py's own session and timer (noop sink,
+between-run cache sweeps, min-of-N), without running the whole
+headline set.
 
 Usage: python tools/qtime.py [--sf DIR] [--cpus N] [--reps N] q1 q2 ...
 Prints one JSON line: {"queries": {name: min_sec}, "samples": {...}}.
@@ -12,9 +13,11 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
+from vectordb_from_scratch_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
@@ -25,43 +28,19 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("qtime")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="qtime",
+        master=f"local[{args.cpus}]",
+        shuffle_partitions=int(args.cpus),
+        launch=bench.LAUNCH,
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from vectordb_from_scratch_spark.operators import cache, dedup
-    from vectordb_from_scratch_spark.plans.registry import QUERIES
-    from vectordb_from_scratch_spark.sources import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, args.sf, t).count()
-
-    def run_once(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"qtime: {name}")
-        t0 = time.perf_counter()
-        try:
-            QUERIES[name].spark(spark, args.sf).write.format("noop").mode("overwrite").save()
-        finally:
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
-            spark.sparkContext.setJobDescription(None)
-        return time.perf_counter() - t0
+    bench.warm(spark, args.sf)
 
     samples: dict[str, list[float]] = {}
     mins: dict[str, float] = {}
     for name in args.queries:
-        runs = [run_once(name) for _ in range(args.reps)]
+        runs = [bench.run_once(spark, name, args.sf) for _ in range(args.reps)]
         samples[name] = [round(t, 3) for t in runs]
         mins[name] = round(min(runs), 3)
         print(f"{name}: min {mins[name]} s  {samples[name]}", file=sys.stderr)

@@ -49,25 +49,19 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(s in name for s in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    import execmetrics as xm
     from vectordb_from_scratch_spark.operators import ann, dedup, knn, vecblock
+    from vectordb_from_scratch_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        # UI on for the execmetrics REST snapshots (see tools/execmetrics)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="stress_bench",
+        launch={
+            **xm.UI_LAUNCH,
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

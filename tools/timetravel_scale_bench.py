@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -62,23 +61,19 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    import execmetrics as xm
     from vectordb_from_scratch_spark.operators import crud
+    from vectordb_from_scratch_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("timetravel_scale")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="timetravel_scale",
+        launch={
+            **xm.UI_LAUNCH,
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

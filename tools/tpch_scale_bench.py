@@ -54,25 +54,19 @@ def main() -> int:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     only = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    import bench
+    import execmetrics as xm
+    from vectordb_from_scratch_spark.session import build_session
 
     def mk_session():
-        s = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("tpch_scale_bench")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.retainedStages", "100000")
-            .config("spark.ui.retainedJobs", "100000")
-            .config("spark.ui.retainedTasks", "100")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .getOrCreate()
+        s = build_session(
+            app_name="tpch_scale_bench",
+            launch={
+                **xm.UI_LAUNCH,
+                "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+            },
         )
         s.sparkContext.setLogLevel("ERROR")
         return s
@@ -122,7 +116,6 @@ def main() -> int:
         spark.stop()
         spark = mk_session()
 
-    from vectordb_from_scratch_spark.operators import cache, dedup
     from vectordb_from_scratch_spark.plans.registry import QUERIES
     from vectordb_from_scratch_spark.sources import TABLES
 
@@ -149,7 +142,6 @@ def main() -> int:
     if only:  # comma-separated substrings, any-match
         subs = only.split(",")
         names = [n for n in names if any(sub in n for sub in subs)]
-    import execmetrics as xm
 
     timings: dict[str, float | str] = {}
     execs: dict[str, dict] = {}
@@ -165,8 +157,7 @@ def main() -> int:
                 best = min(best, time.perf_counter() - t0)
                 if before is not None:  # bytes captured on the first run
                     execs[name] = xm.fmt(xm.delta(before, xm.snapshot(spark)))
-                dedup.release_caches()
-                cache.sweep_persistent_rdds(spark, all_rdds=True)
+                bench.release(spark)
             timings[name] = round(best, 3)
         except Exception as exc:  # noqa: BLE001 — isolate per query
             timings[name] = f"ERR:{type(exc).__name__}"

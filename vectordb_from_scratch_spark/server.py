@@ -161,8 +161,12 @@ class AppState:
             # serve what the directory now resolves to, after a failed
             # save too: the lazy plans of new_store and of the served
             # store scan part files the swap moved or deleted — serving
-            # either would throw FileNotFoundException
-            self.store = _load(new_store.spark, self.data_dir, new_store.metric)
+            # either would throw FileNotFoundException. The snapshot
+            # holds rows only, so the index mode carries over here.
+            self.store = replace(
+                _load(new_store.spark, self.data_dir, new_store.metric),
+                ann_params=new_store.ann_params,
+            )
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -1,14 +1,23 @@
 """Session factory with the engine's recommended configuration.
 
-The driver/tests may build their own session; this is the reference
-configuration for running the engine standalone, with the knobs that
-matter at each scale annotated. Nothing here is required for
+The reference configuration for running the engine standalone, with the
+knobs that matter at each scale annotated. Nothing here is required for
 correctness — every operator works on a vanilla session.
+
+Users: the CLI and server (`cli._session`), `perfbench/run.py`,
+`bench.py` and every tool under `tools/`. Each passes its app name,
+master and shuffle partitions, plus its launch settings (driver memory,
+status UI, UI retention) in `launch`. Two sessions stay deliberately
+plain, like the session the oracle gate runs `__spark_entry__` on:
+`tests/conftest.py` and `tools/check_oracle.py`. Arrow changes what
+`toPandas` returns (arrays become ndarrays, struct Rows become dicts),
+and the oracle compare must see the values the gate sees.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -19,6 +28,7 @@ def build_session(
     app_name: str = "vectordb_from_scratch_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    launch: Mapping[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -47,5 +57,8 @@ def build_session(
         # this yields ~800k input splits — fine; never raise it to "reduce
         # task count", that starves executors.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # the caller's launch settings: driver memory, status UI on/off
+        # and its retention — never a conf that changes a plan
+        .config(map=dict(launch or {}))
         .getOrCreate()
     )
