@@ -1,6 +1,8 @@
 """The benchmark harness and the tools: bench.py's shared timer runs a
 query and releases everything it left behind, every tool compiles, and
-every harness builds its session through session.build_session."""
+every harness builds its session through session.build_session. Plus
+the one payload skeleton: every multimodal stage and every in-plan
+payload synthesis runs on multimodal.map_payloads."""
 
 from __future__ import annotations
 
@@ -41,3 +43,11 @@ def test_only_check_oracle_builds_its_own_session():
         if "SparkSession.builder" in open(path).read()
     ]
     assert builders == ["tools/check_oracle.py"]
+
+
+def test_one_payload_skeleton():
+    pkg = os.path.join(ROOT, "vectordb_from_scratch_spark")
+    multimodal = open(os.path.join(pkg, "operators", "multimodal.py")).read()
+    registry = open(os.path.join(pkg, "plans", "registry.py")).read()
+    assert multimodal.count("mapInPandas(") == 1
+    assert "def synth(batches" not in registry

@@ -59,6 +59,13 @@ def _wav():
     return mm.encode_wav(samples, sample_rate=8000, channels=2, bits=16)
 
 
+def _wav_long():
+    # mono, 200 frames: long enough for audio_fingerprint's 65 windows
+    rng = np.random.default_rng(41)
+    samples = rng.integers(-3000, 3000, size=200).tolist()
+    return mm.encode_wav(samples, sample_rate=8000, channels=1, bits=16)
+
+
 def _wav_ulaw():
     rng = np.random.default_rng(31)
     return mm.encode_wav_g711(
@@ -243,6 +250,13 @@ _ID_COL_STAGES = [
     ("avi_frame_stats", lambda df: mm.avi_frame_stats(df, id_col="img_id"), _avi),
     ("wav_audio_stats", lambda df: mm.wav_audio_stats(df, id_col="img_id"), _wav),
     ("wav_zcr_stats", lambda df: mm.wav_zcr_stats(df, id_col="img_id"), _wav),
+    ("wav_resample_stats",
+     lambda df: mm.wav_resample_stats(df, id_col="img_id"), _wav),
+    ("wav_vad_segments",
+     lambda df: mm.wav_vad_segments(df, frame_len=10, id_col="img_id"), _wav),
+    ("image_dhash", lambda df: mm.image_dhash(df, id_col="img_id"), _png),
+    ("audio_fingerprint",
+     lambda df: mm.audio_fingerprint(df, id_col="img_id"), _wav_long),
     ("payload_features", lambda df: mm.payload_features(df, id_col="img_id"), _png),
     ("decode_metadata",
      lambda df: mm.decode_metadata(df, id_col="img_id", decoder="header"), _png),
@@ -266,3 +280,29 @@ def test_stats_stages_honor_renamed_id_col(spark, name, stage, factory):
     rows = out.collect()
     assert rows, f"{name}: no output rows for a valid payload"
     assert {r["img_id"] for r in rows} == {77, 78}
+
+
+# stages that never decode: they keep a row for every payload, garbage
+# included (decode_metadata with a NULL media struct)
+_KEEPS_EVERY_ROW = {"payload_features", "decode_metadata", "sample_frames"}
+
+
+@pytest.mark.parametrize("name,stage,factory", _ID_COL_STAGES,
+                         ids=[s[0] for s in _ID_COL_STAGES])
+def test_stage_drops_only_undecodable_rows(spark, name, stage, factory):
+    """A payload its decoder rejects drops its own row and nothing else:
+    next to a valid payload, random garbage and a truncated copy of the
+    valid one produce no rows, and the task does not fail."""
+    valid = factory()
+    garbage = np.random.default_rng(101).integers(
+        0, 256, size=len(valid), dtype=np.uint8
+    ).tobytes()
+    df = spark.createDataFrame(
+        [(1, valid), (2, garbage), (3, valid[: len(valid) // 2])],
+        "img_id long, payload binary",
+    )
+    rows = stage(df).collect()
+    expected = {1, 2, 3} if name in _KEEPS_EVERY_ROW else {1}
+    assert {r["img_id"] for r in rows} == expected
+    if name == "decode_metadata":
+        assert {r["img_id"] for r in rows if r["media"] is None} == {2}

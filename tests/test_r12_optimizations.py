@@ -160,3 +160,15 @@ def test_pq_codebook_checkpointed_loop_bitwise(embeddings):
     for _ in range(iters):
         ref = pq._update_codebook(pq._assign_codes(sv, ref), ref, block)
     _assert_same(cb, ref)
+
+
+def test_builders_return_a_checkpointed_leaf(embeddings):
+    # the registry consumes both builders without an outer checkpoint:
+    # at iters >= 1 each already returns an eager localCheckpoint, whose
+    # logical plan is one LogicalRDD leaf with no build lineage under it
+    cent = ann.build_ivf_det(embeddings, n_lists=4, iters=1, block=64)
+    cb = pq.pq_codebook(embeddings, m=8, ks=8, dim=64, iters=1, block=64)
+    for df in (cent, cb):
+        plan = df._jdf.queryExecution().logical()
+        assert plan.nodeName() == "LogicalRDD"
+        assert plan.children().isEmpty()

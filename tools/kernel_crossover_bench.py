@@ -26,18 +26,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-LAST_EXEC: dict | None = None
 
 N_PROBES = 100
 K = 10
-
-
-def _time(fn, runs: int) -> float:
-    global LAST_EXEC
-    import execmetrics as xm
-
-    sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
-    return sec
 
 
 def main() -> int:
@@ -77,10 +68,10 @@ def main() -> int:
     def sink(df):
         df.write.format("noop").mode("overwrite").save()
 
-    def emit(pair, n, strategy, sec):
+    def emit(pair, n, strategy, sec, exec_):
         print(json.dumps({
             "pair": pair, "n_rows": n, "strategy": strategy,
-            "sec": sec, "exec": LAST_EXEC,
+            "sec": sec, "exec": exec_,
         }), flush=True)
 
     def probes_of(emb):
@@ -98,11 +89,11 @@ def main() -> int:
             for strat in ("window", "numpy"):
                 if strat == "window" and n > 300_000:
                     continue  # interpreted fold: minutes/leg, verdict clear
-                sec = _time(
+                sec, exec_ = xm.timed_with_metrics(
                     lambda s=strat: sink(knn.knn(emb, p, k=K, strategy=s)),
                     runs,
                 )
-                emit("knn_exact", n, strat, sec)
+                emit("knn_exact", n, strat, sec, exec_)
             emb.unpersist()
 
     # ---- SRP bucket assignment: expr bit-build vs matmul kernel ------
@@ -115,13 +106,13 @@ def main() -> int:
                 p = probes_of(emb)
                 for strat, thresh in (("expr", n + 1), ("kernel", 1)):
                     vecblock.SRP_KERNEL_THRESHOLD = thresh
-                    sec = _time(
+                    sec, exec_ = xm.timed_with_metrics(
                         lambda: sink(ann.ann_knn_srp(
                             emb, p, k=K, dim=64, nbits=8, n_tables=2
                         )),
                         runs,
                     )
-                    emit("srp_knn", n, strat, sec)
+                    emit("srp_knn", n, strat, sec, exec_)
                 emb.unpersist()
         finally:
             vecblock.SRP_KERNEL_THRESHOLD = saved
@@ -139,13 +130,13 @@ def main() -> int:
             codes.persist().count()
             p = probes_of(emb)
             for strat in ("expr", "numpy"):
-                sec = _time(
+                sec, exec_ = xm.timed_with_metrics(
                     lambda s=strat: sink(pqm.pq_adc_topk(
                         codes, cb, p, k=K, ks=ks_, d_sub=d_sub_, strategy=s
                     )),
                     runs,
                 )
-                emit("pq_adc_flat", n, strat, sec)
+                emit("pq_adc_flat", n, strat, sec, exec_)
             codes.unpersist()
             cb.unpersist()
 
@@ -178,14 +169,14 @@ def main() -> int:
             idx.persist().count()
             p = probes_of(emb)
             for strat in ("expr", "arrow"):
-                sec = _time(
+                sec, exec_ = xm.timed_with_metrics(
                     lambda s=strat: sink(pqm.ann_knn_ivf_pq(
                         idx, cent, cb, p, k=K, n_probe=8,
                         ks=ks_big, d_sub=d_sub_, strategy=s,
                     )),
                     runs,
                 )
-                emit("ivf_pq_routed_ks256", n, strat, sec)
+                emit("ivf_pq_routed_ks256", n, strat, sec, exec_)
             for h in (idx, cb, assigned, cent):
                 h.unpersist()
 

@@ -29,22 +29,9 @@ import os
 import sys
 import time
 
+import execmetrics as xm
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-# metrics delta of the most recent _time() call's FIRST run — a
-# deterministic plan moves identical bytes every run, so one capture
-# suffices while wall clock keeps best-of-N (VERDICT r9 #1: bytes, not
-# wall clock, adjudicate plan A/Bs at the spill decade on this box)
-LAST_EXEC: dict | None = None
-
-
-def _time(fn, runs: int) -> float:
-    global LAST_EXEC
-    import execmetrics as xm
-
-    sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
-    return sec
 
 
 def main() -> int:
@@ -58,7 +45,6 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    import execmetrics as xm
     from vectordb_from_scratch_spark.operators.dedup import paragraph_dedup
     from vectordb_from_scratch_spark.operators.textops import url_domains
     from vectordb_from_scratch_spark.session import build_session
@@ -96,7 +82,9 @@ def main() -> int:
         if not want(cell_key):
             continue
         out = paragraph_dedup(docs, **kwargs)
-        t = _time(lambda: out.agg(F.sum("n_kept")).collect(), runs)
+        t, exec_ = xm.timed_with_metrics(
+            lambda: out.agg(F.sum("n_kept")).collect(), runs
+        )
         kept = out.agg(F.sum("n_kept")).collect()[0][0]
         expected = 2 * n + n_variants + 1
         print(json.dumps({
@@ -106,7 +94,7 @@ def main() -> int:
             "hot_group_members": n,
             **kwargs,
             "sec": t,
-            "exec": LAST_EXEC,
+            "exec": exec_,
             "sum_n_kept": int(kept),
             "expected": expected,
             "exact": bool(kept == expected),
@@ -126,7 +114,9 @@ def main() -> int:
             ).alias("text"),
         )
         dom = url_domains(url_docs)
-        t2 = _time(lambda: dom.agg(F.sum("n_urls"), F.count(F.lit(1))).collect(), runs)
+        t2, exec_ = xm.timed_with_metrics(
+            lambda: dom.agg(F.sum("n_urls"), F.count(F.lit(1))).collect(), runs
+        )
         row = dom.agg(F.sum("n_urls").alias("u"), F.count(F.lit(1)).alias("d")).collect()[0]
         print(json.dumps({
             "cell": "url_domains",
@@ -134,7 +124,7 @@ def main() -> int:
             "n_urls": int(row["u"]),
             "n_domains": int(row["d"]),
             "sec": t2,
-            "exec": LAST_EXEC,
+            "exec": exec_,
             "exact": bool(row["u"] == 2 * n and row["d"] == 2 * min(n, 50_000)),
         }))
 
@@ -282,7 +272,7 @@ def exact_dedup_cell(n: int, runs: int) -> None:
         .otherwise(F.concat(F.lit("  "), body, F.lit("   "))).alias("text"),
     )
     out = exact_dedup(docs)
-    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
     row = out.agg(
         F.count(F.lit(1)).alias("groups"),
         F.sum("n_dups").alias("total"),
@@ -296,7 +286,7 @@ def exact_dedup_cell(n: int, runs: int) -> None:
         "n_docs": n,
         "n_families": k,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "groups": int(row["groups"]),
         "exact": bool(
             row["groups"] == k
@@ -334,7 +324,7 @@ def novelty_cell(n: int, runs: int) -> None:
     out = novelty_stats(docs, n=4)
     # time the n_novel histogram, not a bare count — a count-only sink
     # lets Catalyst prune the novelty columns out of the rollup
-    t = _time(
+    t, exec_ = xm.timed_with_metrics(
         lambda: out.groupBy("n_novel").agg(F.count(F.lit(1))).collect(), runs
     )
     hist = {
@@ -346,7 +336,7 @@ def novelty_cell(n: int, runs: int) -> None:
         "n_docs": n,
         "n_gram_rows": 10 * n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "exact": bool(hist == {10: 1, 5: k - 1, 0: n - k}),
     }))
 
@@ -387,7 +377,7 @@ def decontam_cell(n: int, runs: int) -> None:
         ).otherwise(uniq).alias("text"),
     )
     out = decontamination_report(docs, n=4, eval_mod=97)
-    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
     row = out.agg(
         F.count(F.lit(1)).alias("rows"),
         F.min("n_shared_grams").alias("gmin"),
@@ -402,7 +392,7 @@ def decontam_cell(n: int, runs: int) -> None:
         "n_train_docs": n - (n + 96) // 97,
         "n_eval_docs": (n + 96) // 97,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "contaminated": int(row["rows"]),
         "exact": bool(
             row["rows"] == expected_rows
@@ -448,7 +438,9 @@ def decontam_bloom_cell(n: int, runs: int) -> None:
             docs, n=4, eval_mod=97, attribution=False)),
     ):
         out = mk()
-        t = _time(lambda o=out: o.agg(F.count(F.lit(1))).collect(), runs)
+        t, exec_ = xm.timed_with_metrics(
+            lambda o=out: o.agg(F.count(F.lit(1))).collect(), runs
+        )
         row = out.agg(
             F.count(F.lit(1)).alias("rows"),
             F.min("n_shared_grams").alias("gmin"),
@@ -458,7 +450,7 @@ def decontam_bloom_cell(n: int, runs: int) -> None:
             "cell": leg,
             "n_docs": n,
             "sec": t,
-            "exec": LAST_EXEC,
+            "exec": exec_,
             "contaminated": int(row["rows"]),
             "exact": bool(
                 row["rows"] == expected_rows
@@ -551,8 +543,9 @@ def corpus_prep_cell(n: int, runs: int) -> None:
     train = _track(
         docs.filter(F.col("doc_id") % 97 != 0).join(flags, "doc_id", "left_anti")
     )
-    stages["decontaminate_sec"] = _time(lambda: train.count(), 1)
-    stages["decontaminate_exec"] = LAST_EXEC
+    stages["decontaminate_sec"], stages["decontaminate_exec"] = xm.timed_with_metrics(
+        lambda: train.count(), 1
+    )
     n_train = train.count()
 
     # stage 2: repetition filter over the persisted train corpus
@@ -564,15 +557,17 @@ def corpus_prep_cell(n: int, runs: int) -> None:
         )
         .select("doc_id")
     )
-    stages["repetition_sec"] = _time(lambda: keep_rep.count(), 1)
-    stages["repetition_exec"] = LAST_EXEC
+    stages["repetition_sec"], stages["repetition_exec"] = xm.timed_with_metrics(
+        lambda: keep_rep.count(), 1
+    )
     n_rep = keep_rep.count()
 
     # stage 3: exact-dedup keeper set + final intersection
     keep_dup = exact_dedup(train).select(F.col("keep_id").alias("doc_id"))
     final = keep_rep.join(keep_dup, "doc_id")
-    stages["dedup_final_sec"] = _time(lambda: final.count(), 1)
-    stages["dedup_final_exec"] = LAST_EXEC
+    stages["dedup_final_sec"], stages["dedup_final_exec"] = xm.timed_with_metrics(
+        lambda: final.count(), 1
+    )
     survivors = final.count()
 
     print(json.dumps({
@@ -645,7 +640,9 @@ def decontam_adversarial_cell(n: int, runs: int) -> None:
         out = decontamination_report(
             docs, n=4, eval_mod=97, max_eval_df=2, **kw
         )
-        t = _time(lambda out=out: out.agg(F.count(F.lit(1))).collect(), runs)
+        t, exec_ = xm.timed_with_metrics(
+            lambda out=out: out.agg(F.count(F.lit(1))).collect(), runs
+        )
         aggs = [
             F.count(F.lit(1)).alias("rows"),
             F.min("n_shared_grams").alias("gmin"),
@@ -665,7 +662,7 @@ def decontam_adversarial_cell(n: int, runs: int) -> None:
             "n_train_docs": n - n_eval,
             "n_eval_docs": n_eval,
             "sec": t,
-            "exec": LAST_EXEC,
+            "exec": exec_,
             "contaminated": int(row["rows"]),
             "exact": bool(exact),
         }), flush=True)
@@ -715,7 +712,7 @@ def media_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = media_resize_stats(payloads, out_w=out_w, out_h=out_h)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"), F.count(F.lit(1)).alias("rows")
     ).collect()[0]
@@ -738,7 +735,7 @@ def media_cell(n: int, runs: int) -> None:
         "n_payloads": n,
         "out_grid": f"{out_w}x{out_h}",
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(row["s"] == expected and row["rows"] == 3 * n),
@@ -796,7 +793,7 @@ def media_video_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = media_resize_stats(payloads, out_w=out_w, out_h=out_h)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"),
         F.count(F.lit(1)).alias("rows"),
@@ -828,7 +825,7 @@ def media_video_cell(n: int, runs: int) -> None:
         "n_payloads": n,
         "out_grid": f"{out_w}x{out_h}",
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(
@@ -878,7 +875,7 @@ def media_jpeg_progressive_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = jpeg_pixel_stats(payloads)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"), F.count(F.lit(1)).alias("rows"),
         F.sum("n_pixels").alias("npx"),
@@ -898,7 +895,7 @@ def media_jpeg_progressive_cell(n: int, runs: int) -> None:
         "cell": "media_jpeg_progressive",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(
@@ -944,7 +941,7 @@ def media_png_interlaced_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = png_pixel_stats(payloads)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"), F.count(F.lit(1)).alias("rows")
     ).collect()[0]
@@ -962,7 +959,7 @@ def media_png_interlaced_cell(n: int, runs: int) -> None:
         "cell": "media_png_interlaced",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(row["s"] == expected and row["rows"] == exp_rows),
@@ -1006,7 +1003,7 @@ def media_png16_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = png_pixel_stats(payloads)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"), F.count(F.lit(1)).alias("rows")
     ).collect()[0]
@@ -1025,7 +1022,7 @@ def media_png16_cell(n: int, runs: int) -> None:
         "cell": "media_png_16bit",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(row["s"] == expected and row["rows"] == exp_rows),
@@ -1071,7 +1068,7 @@ def media_rawdib_cell(n: int, runs: int) -> None:
         synth, schema="doc_id long, payload binary"
     )
     out = avi_frame_stats(payloads)
-    t = _time(lambda: out.agg(F.sum("px_sum")).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.sum("px_sum")).collect(), runs)
     row = out.agg(
         F.sum("px_sum").alias("s"), F.count(F.lit(1)).alias("rows"),
         F.sum(F.lit(1)).alias("_"),
@@ -1096,7 +1093,7 @@ def media_rawdib_cell(n: int, runs: int) -> None:
         "n_payloads": n,
         "n_frames": n_frames,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "sum_px": int(row["s"]),
         "rows": int(row["rows"]),
         "exact": bool(row["s"] == expected and row["rows"] == exp_rows),
@@ -1143,7 +1140,7 @@ def media_wav24_cell(n: int, runs: int) -> None:
     # decimal keeps the exactness assert integer-exact at every decade
     sq_dec = F.sum(F.col("sq_sum").cast("decimal(38,0)"))
     amp_dec = F.sum(F.col("amp_sum").cast("decimal(38,0)"))
-    t = _time(lambda: out.agg(sq_dec).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(sq_dec).collect(), runs)
     row = out.agg(
         amp_dec.alias("s"), sq_dec.alias("sq"),
         F.count(F.lit(1)).alias("rows"),
@@ -1166,7 +1163,7 @@ def media_wav24_cell(n: int, runs: int) -> None:
         "cell": "media_wav24",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "rows": int(row["rows"]),
         "exact": bool(
             int(row["s"]) == exp_s and int(row["sq"]) == exp_sq
@@ -1226,7 +1223,7 @@ def media_wav_adpcm_cell(n: int, runs: int) -> None:
     # decimal keeps the exactness assert integer-exact at every decade
     sq_dec = F.sum(F.col("sq_sum").cast("decimal(38,0)"))
     amp_dec = F.sum(F.col("amp_sum").cast("decimal(38,0)"))
-    t = _time(lambda: out.agg(sq_dec).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(sq_dec).collect(), runs)
     row = out.agg(
         amp_dec.alias("s"), sq_dec.alias("sq"),
         F.count(F.lit(1)).alias("rows"),
@@ -1268,7 +1265,7 @@ def media_wav_adpcm_cell(n: int, runs: int) -> None:
         "cell": "media_wav_adpcm",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "rows": int(row["rows"]),
         "exact": bool(
             int(row["s"]) == exp_s and int(row["sq"]) == exp_sq
@@ -1335,7 +1332,7 @@ def audio_normalize_cell(n: int, runs: int) -> None:
     out = wav_resample_stats(payloads, target_rate=16000)
     sq_dec = F.sum(F.col("sq_sum").cast("decimal(38,0)"))
     amp_dec = F.sum(F.col("amp_sum").cast("decimal(38,0)"))
-    t = _time(lambda: out.agg(sq_dec).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(sq_dec).collect(), runs)
     row = out.agg(
         amp_dec.alias("s"), sq_dec.alias("sq"),
         F.count(F.lit(1)).alias("rows"), F.sum("n_out").alias("nout"),
@@ -1372,7 +1369,7 @@ def audio_normalize_cell(n: int, runs: int) -> None:
         "cell": "media_audio_normalize",
         "n_payloads": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "rows": int(row["rows"]),
         "exact": bool(
             int(row["s"]) == exp_s and int(row["sq"]) == exp_sq
@@ -1452,7 +1449,9 @@ def image_neardup_cell(n: int, runs: int) -> None:
             mk_synth(diverse), schema="doc_id long, payload binary"
         )
         pairs = image_neardup_pairs(payloads, max_hamming=3, max_bucket=cap)
-        t = _time(lambda p=pairs: p.groupBy().count().collect(), runs)
+        t, exec_ = xm.timed_with_metrics(
+            lambda p=pairs: p.groupBy().count().collect(), runs
+        )
         row = pairs.agg(
             F.count(F.lit(1)).alias("total"),
             F.sum(
@@ -1466,7 +1465,7 @@ def image_neardup_cell(n: int, runs: int) -> None:
             "n_images": n,
             "max_bucket": cap,
             "sec": t,
-            "exec": LAST_EXEC,
+            "exec": exec_,
             "pairs_total": int(row["total"]),
             "pairs_intra_family": intra,
             "pairs_cross_family": int(row["total"]) - intra,
@@ -1509,7 +1508,7 @@ def heavy_hitters_cell(n: int, runs: int) -> None:
     true_hot = n // 500  # occurrences of each of the 50 hot items
 
     hh = heavy_hitters(items, "item", capacity=4096, min_est=true_hot // 2)
-    t = _time(lambda: hh.groupBy().count().collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: hh.groupBy().count().collect(), runs)
     rows = {r["item"]: (int(r["est_count"]), int(r["err_bound"]))
             for r in hh.collect()}
     hot_ok = all(
@@ -1517,7 +1516,7 @@ def heavy_hitters_cell(n: int, runs: int) -> None:
         and rows[f"hot{i}"][0] <= true_hot <= sum(rows[f"hot{i}"])
         for i in range(50)
     )
-    sketch_exec = LAST_EXEC
+    sketch_exec = exec_
     print(json.dumps({
         "cell": "heavy_hitters_sketch",
         "n_rows": n,
@@ -1534,12 +1533,12 @@ def heavy_hitters_cell(n: int, runs: int) -> None:
         items.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= n // 1000)
     )
-    t2 = _time(lambda: exact.groupBy().count().collect(), runs)
+    t2, exec_ = xm.timed_with_metrics(lambda: exact.groupBy().count().collect(), runs)
     print(json.dumps({
         "cell": "heavy_hitters_exact_baseline",
         "n_rows": n,
         "sec": t2,
-        "exec": LAST_EXEC,
+        "exec": exec_,
     }), flush=True)
 
 
@@ -1579,7 +1578,7 @@ def entropy_cell(n: int, runs: int) -> None:
         ).alias("text"),
     )
     out = char_entropy(docs)
-    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
     got = (
         out.groupBy("entropy").agg(F.count(F.lit(1)).alias("c"))
         .orderBy("entropy").collect()
@@ -1590,7 +1589,7 @@ def entropy_cell(n: int, runs: int) -> None:
         "cell": "char_entropy",
         "n_docs": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "distinct_entropies": len(got),
         "exact": bool(
             total == n
@@ -1619,7 +1618,7 @@ def pmi_cell(n: int, runs: int) -> None:
         F.col("id").alias("doc_id"), F.lit("a b a b c d").alias("text")
     )
     out = collocations_pmi(docs, min_count=5, top=10)
-    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
     rows = {(r["w1"], r["w2"]): r for r in out.collect()}
     nu, nb = 6.0 * n, 5.0 * n
 
@@ -1637,7 +1636,7 @@ def pmi_cell(n: int, runs: int) -> None:
         "n_docs": n,
         "n_tokens": 6 * n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "exact": bool(
             set(rows) == set(want)
             and all(rows[k]["pmi"] == want[k] for k in want)
@@ -1694,7 +1693,7 @@ def containment_cell(n: int, runs: int) -> None:
     # by logical subtree, so a cached build could stand in for this one
     release_caches()
     out = containment_pairs(docs, threshold=0.9)
-    t = _time(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
+    t, exec_ = xm.timed_with_metrics(lambda: out.agg(F.count(F.lit(1))).collect(), runs)
     row = out.agg(
         F.count(F.lit(1)).alias("pairs"),
         F.min("containment").alias("cmin"),
@@ -1705,7 +1704,7 @@ def containment_cell(n: int, runs: int) -> None:
         "n_docs": n,
         "universal_footer_df": n,
         "sec": t,
-        "exec": LAST_EXEC,
+        "exec": exec_,
         "pairs": int(row["pairs"]),
         "expected_pairs": half,
         "exact": bool(
@@ -1759,7 +1758,7 @@ def persisted_cell(n_corpus: int, n_delivery: int, runs: int) -> None:
         return got
 
     warm_counts = counts()
-    warm = _time(counts, runs)
+    warm, exec_ = xm.timed_with_metrics(counts, runs)
     du = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(path) for f in fs
@@ -1771,7 +1770,7 @@ def persisted_cell(n_corpus: int, n_delivery: int, runs: int) -> None:
         "index_save_sec": save_sec,
         "index_bytes_on_disk": du,
         "warm_sec": warm,
-        "warm_exec": LAST_EXEC,
+        "warm_exec": exec_,
         "counts": warm_counts,
         "exact_verdicts_analytic": bool(
             warm_counts.get("exact", 0) == n_exact_expected
@@ -1857,13 +1856,13 @@ def incremental_cells(n_corpus: int, n_delivery: int, runs: int) -> None:
         idx[k].count()  # materialize: the once-per-corpus cost
     build = round(time.monotonic() - t0, 3)
 
-    warm = _time(lambda: counts(idx), runs)
+    warm, exec_ = xm.timed_with_metrics(lambda: counts(idx), runs)
     warm_counts = counts(idx)
     print(json.dumps({
         "cell": "dedup_incremental",
         "n_corpus": n_corpus, "n_delivery": n_delivery,
         "cold_sec": cold, "index_build_sec": build, "warm_sec": warm,
-        "warm_exec": LAST_EXEC,
+        "warm_exec": exec_,
         "counts": warm_counts,
         "consistent": bool(cold_counts == warm_counts),
     }))

@@ -28,20 +28,6 @@ N_PROBES = 100
 K = 10
 
 
-# metrics delta of the most recent _time() call's FIRST run (VERDICT r9
-# #1): bytes moved by a deterministic plan are run-order-independent, so
-# they adjudicate plan A/Bs where wall clock on this box cannot.
-LAST_EXEC: dict | None = None
-
-
-def _time(fn, runs: int) -> float:
-    global LAST_EXEC
-    import execmetrics as xm
-
-    sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
-    return sec
-
-
 def main() -> int:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
@@ -84,8 +70,7 @@ def main() -> int:
             return
         m = None
         try:
-            results[name] = _time(fn, runs)
-            m = LAST_EXEC  # only a completed first run has valid metrics
+            results[name], m = xm.timed_with_metrics(fn, runs)
         except Exception as e:  # record the failure, keep later cells alive
             results[name] = f"ERR:{type(e).__name__}"
         print(json.dumps(
@@ -890,11 +875,13 @@ def main() -> int:
             # one timed serve (latency: min over `runs`) + one recall pass
             if not want(name):
                 return
-            results[name + "_sec"] = _time(lambda: sink(mk()), runs)
+            results[name + "_sec"], exec_ = xm.timed_with_metrics(
+                lambda: sink(mk()), runs
+            )
             results[name + "_recall"] = crecall(mk())
             print(json.dumps({
                 "cell": name, "sec": results[name + "_sec"],
-                "exec": LAST_EXEC,
+                "exec": exec_,
                 "recall_at_%d" % K: results[name + "_recall"],
                 "per_probe_sec": round(results[name + "_sec"] / N_PROBES, 4),
             }), flush=True)

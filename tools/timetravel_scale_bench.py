@@ -24,17 +24,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-LAST_EXEC: dict | None = None  # exec-bytes of the last _time first run
-
-
-def _time(fn, runs: int) -> float:
-    global LAST_EXEC
-    import execmetrics as xm
-
-    sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
-    return sec
-
-
 def make_log(spark, path: str, n: int) -> None:
     """Deterministic synthetic WAL: n entries over n//5 distinct ids
     (~5 touches/id), ~10% tombstones, seq = entry index."""
@@ -83,9 +72,9 @@ def main() -> int:
     results = {}
 
     def cell(name, fn):
-        results[name] = _time(fn, runs)
+        results[name], exec_ = xm.timed_with_metrics(fn, runs)
         print(json.dumps(
-            {"cell": name, "sec": results[name], "exec": LAST_EXEC}
+            {"cell": name, "sec": results[name], "exec": exec_}
         ), flush=True)
 
     # -- exactness gate at 1M: one-pass must equal per-version folds -----

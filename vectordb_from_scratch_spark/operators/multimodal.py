@@ -2,18 +2,36 @@
 with typed metadata, processed by Arrow-batched Python stages.
 
 The reference has no multimodal surface; this is north-star pipeline
-infrastructure (BASELINE.json). Decode is REAL, stdlib-only, for every
-container the header parser recognizes: PNG (zlib + all five filters +
-palette), JPEG (baseline sequential, grayscale AND YCbCr color at any
-1..4 sampling factors, restart markers), GIF (full variable-width LZW +
-interlace), BMP (24-bit/palette), WAV PCM audio (8/16-bit), and
-AVI-MJPEG video (RIFF walk + per-frame JPEG). Out-of-profile formats
-(progressive JPEG, RLE BMP, compressed audio, non-MJPEG video codecs)
-fall to the PIL try-import ladder or an explicit NotImplementedError —
-never a silent wrong answer.
+infrastructure (BASELINE.json). Decode is REAL, stdlib + numpy only, for
+every container the header parser recognizes:
 
-At scale: payloads ride in parquet binary columns; every Python stage is
-a narrow map (no shuffle), parallel per input split; batch size bounded
+- PNG: zlib + all five scanline filters, color types 0/2/3/4/6 (palette
+  expanded), 8- and 16-bit samples (16-bit reduced to the high byte),
+  non-interlaced and Adam7;
+- JPEG: sequential baseline and progressive (SOF2), grayscale and YCbCr
+  color at any 1..4 sampling factors, restart markers;
+- GIF: variable-width LZW + interlace, first frame;
+- BMP: 24-bit and 8-bit palette;
+- WAV: PCM 8/16/24-bit, IMA-ADPCM, G.711 mu-law and A-law;
+- AVI: MJPEG frames and raw 24-bit DIB frames.
+
+Out-of-profile payloads (RLE BMP, 12-bit or arithmetic-coded JPEG,
+perceptual audio codecs, other video codecs) decode to None, never to
+a silent wrong answer; `decode_image` ladders them to PIL when it is
+installed.
+
+Every stage runs on one skeleton, `map_payloads`: one mapInPandas call
+that walks the Arrow batches, hands each payload to the stage's
+per-value function (its decoder and its reducer) and prepends the row's
+id to the 0..N rows that function returns. The decoding stages wrap
+their decoder in `_decode_or_none`, so a payload the decoder rejects,
+or one that makes it raise, drops its own row and never fails the task;
+an error in a reducer still raises. `decode_metadata`,
+`payload_features` and `sample_frames` do not decode pixels and keep a
+row for every payload.
+
+At scale: payloads ride in parquet binary columns; every stage is a
+narrow map (no shuffle), parallel per input split; batch size bounded
 by spark.sql.execution.arrow.maxRecordsPerBatch so executor memory
 holds. Measured throughput cells live in SCALE.md.
 """
@@ -85,27 +103,51 @@ __all__ = [
     "HAS_PIL",
 ]
 
-# Default-id forms of the per-call schemas below (kept for callers that
-# reference the constants); the stages themselves parametrize on id_col
-# so a renamed id is honored end-to-end (VERDICT r9 #5 family).
-def _feature_schema(id_col: str) -> str:
-    return f"{id_col} long, n_bytes long, payload_md5 string"
+
+def _ddl_names(ddl: str) -> list[str]:
+    """Top-level field names of a DDL schema string; commas inside
+    ``<...>`` belong to a nested type."""
+    names, depth, field = [], 0, ""
+    for ch in ddl + ",":
+        if ch == "," and depth == 0:
+            names.append(field.split()[0])
+            field = ""
+            continue
+        depth += (ch == "<") - (ch == ">")
+        field += ch
+    return names
 
 
-def _decode_schema(id_col: str) -> str:
-    return (
-        f"{id_col} long, media struct<width:int, height:int, "
-        "channels:int, codec:string>, n_bytes long"
-    )
+def map_payloads(
+    payloads: DataFrame,
+    schema: str,
+    per_value,
+    id_col: str = "doc_id",
+    value_col: str = "payload",
+) -> DataFrame:
+    """The one Arrow-batch skeleton of every payload stage (and of the
+    registry's in-plan payload synthesis): `per_value(value)` returns
+    0..N row tuples for each value of `value_col`, each row gets its
+    input row's id prepended, and each batch becomes one pandas frame
+    whose columns are the names of ``{id_col} long, {schema}`` — the
+    output schema of the single mapInPandas call. Output rows keep input
+    order. The skeleton isolates nothing: whatever `per_value` raises
+    fails the task, so a decoding stage wraps its decoder in
+    `_decode_or_none` itself."""
+    out_schema = f"{id_col} long, {schema}"
+    columns = _ddl_names(out_schema)
 
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (row_id, *row)
+                for row_id, value in zip(pdf[id_col], pdf[value_col])
+                for row in per_value(value)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
 
-def _frame_schema(id_col: str) -> str:
-    return f"{id_col} long, frame_idx int, frame_md5 string, frame_bytes long"
+    return payloads.mapInPandas(run, schema=out_schema)
 
-
-FEATURE_SCHEMA = _feature_schema("doc_id")
-DECODE_SCHEMA = _decode_schema("doc_id")
-FRAME_SCHEMA = _frame_schema("doc_id")
 
 # Decompression-bomb guard: a corrupt or adversarial header that declares
 # more samples (width × height × channels) than this is out of profile —
@@ -579,37 +621,79 @@ def decode_png_pixels(payload: bytes) -> dict | None:
             "pixels": bytes(out)}
 
 
-# Stats columns AFTER the id column; every mapInPandas stats stage below
-# builds its pandas frame as [id_col] + these and its Spark schema via
-# _pixel_stats_schema(id_col), so a non-default id_col is honored
-# end-to-end (Arrow assignment is name-based — a hardcoded "doc_id"
-# against a caller's renamed id would mislabel; ADVICE r8 / VERDICT r9).
-PIXEL_STATS_COLUMNS = [
-    "channel", "width", "height",
-    "px_sum", "px_min", "px_max", "n_pixels", "px_mean",
-]
-
-
-def _pixel_stats_schema(id_col: str) -> str:
-    return (
-        f"{id_col} long, channel int, width int, height int, "
-        "px_sum long, px_min int, px_max int, n_pixels long, px_mean double"
-    )
-
-
-PIXEL_STATS_SCHEMA = _pixel_stats_schema("doc_id")
+# Output columns after the id of every *_pixel_stats stage (and of
+# bmp_resize_stats): one row per (payload, channel).
+_PIXEL_STATS = (
+    "channel int, width int, height int, px_sum long, px_min int, "
+    "px_max int, n_pixels long, px_mean double"
+)
 
 
 def _decode_or_none(decoder, payload, **kw):
-    """Per-payload isolation for the mapInPandas stats kernels: decoders
-    signal out-of-profile input with None, and any exception a malformed
-    or adversarial payload still manages to raise is demoted to the same
+    """Per-payload isolation for the decoding stages: decoders signal
+    out-of-profile input with None, and any exception a malformed or
+    adversarial payload still manages to raise is demoted to the same
     skip. One bad blob in a 100-TB corpus must drop one row, never kill
     the Spark task (and with it the whole stats query)."""
     try:
         return decoder(payload, **kw)
     except Exception:
         return None
+
+
+def _raster(dec: dict, pixels: bytes):
+    """`pixels` (a decoded image's, or one of its frames', laid out as
+    `dec` says) as a (height, width, channels) uint8 array."""
+    import numpy as np
+
+    return np.frombuffer(pixels, dtype=np.uint8).reshape(
+        dec["height"], dec["width"], dec["channels"]
+    )
+
+
+def _resized(dec: dict, pixels: bytes, out_w: int, out_h: int):
+    """`pixels` (laid out as `dec` says) nearest-resized to an
+    (out_h, out_w, channels) uint8 array."""
+    import numpy as np
+
+    res = resize_nearest(
+        pixels, dec["width"], dec["height"], dec["channels"], out_w, out_h
+    )
+    return np.frombuffer(res, dtype=np.uint8).reshape(
+        out_h, out_w, dec["channels"]
+    )
+
+
+def _channel_stats(arr, width: int, height: int, *prefix) -> list[tuple]:
+    """Integer-exact per-channel statistics of an (..., channels) uint8
+    array: one ``(*prefix, channel, width, height, px_sum, px_min,
+    px_max, n_pixels, px_mean)`` tuple per channel, in channel order."""
+    import numpy as np
+
+    rows = []
+    for ch in range(arr.shape[-1]):
+        plane = arr[..., ch].astype(np.int64)
+        s, n = int(plane.sum()), int(plane.size)
+        rows.append(
+            (*prefix, ch, width, height, s, int(plane.min()),
+             int(plane.max()), n, round(s / n, 6))
+        )
+    return rows
+
+
+def _pixel_stats(decoder, payloads: DataFrame, id_col: str,
+                 payload_col: str) -> DataFrame:
+    """The body of every *_pixel_stats stage: decode with `decoder`,
+    one stats row per channel; a rejected payload drops its row."""
+
+    def rows(payload):
+        dec = _decode_or_none(decoder, payload)
+        if dec is None:
+            return ()
+        arr = _raster(dec, dec["pixels"])
+        return _channel_stats(arr, dec["width"], dec["height"])
+
+    return map_payloads(payloads, _PIXEL_STATS, rows, id_col, payload_col)
 
 
 def png_pixel_stats(
@@ -620,29 +704,7 @@ def png_pixel_stats(
     derived mean. Payloads `decode_png_pixels` rejects produce no rows
     (the unsupported-profile filter a 100-TB sweep needs anyway).
     Arrow-batched narrow map — no shuffle, parallel per input split."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_png_pixels, payload)
-                if dec is None:
-                    continue
-                arr = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(
-                    dec["height"], dec["width"], dec["channels"]
-                )
-                for ch in range(dec["channels"]):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), ch, dec["width"], dec["height"],
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + PIXEL_STATS_COLUMNS)
-
-    return payloads.mapInPandas(stats, schema=_pixel_stats_schema(id_col))
+    return _pixel_stats(decode_png_pixels, payloads, id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -659,8 +721,9 @@ def png_pixel_stats(
 # stream (0xFF00 unstuffing, DRI/RSTn restart handling) → dequantize →
 # float64 IDCT → level shift, round, clamp — grayscale AND 3-component
 # YCbCr color at any 1..4 sampling factors (4:4:4/4:2:2/4:2:0, chroma
-# upsampled by replication). Progressive/multi-scan/CMYK files still
-# fall to the PIL ladder — profile honesty over coverage claims.
+# upsampled by replication). Progressive (SOF2) files decode through
+# the Annex-G path further below; CMYK and other multi-component files
+# still fall to the PIL ladder — profile honesty over coverage claims.
 #
 # Exactness lever for the oracle: with DC quant = 8, a flat 8×8 block's
 # only nonzero coefficient is DC = 8·(v−128), which quantizes and
@@ -1901,29 +1964,7 @@ def jpeg_pixel_stats(
     Progressive files decode through the delegated SOF2 path (r10);
     genuinely out-of-profile payloads (12-bit, arithmetic-coded)
     produce no rows. Arrow-batched narrow map, no shuffle."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_jpeg_pixels, payload)
-                if dec is None:
-                    continue
-                arr = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(
-                    dec["height"], dec["width"], dec["channels"]
-                )
-                for ch in range(dec["channels"]):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), ch, dec["width"], dec["height"],
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + PIXEL_STATS_COLUMNS)
-
-    return payloads.mapInPandas(stats, schema=_pixel_stats_schema(id_col))
+    return _pixel_stats(decode_jpeg_pixels, payloads, id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -2119,29 +2160,7 @@ def gif_pixel_stats(
     """Per-channel pixel statistics from REAL GIF decode (LZW is
     lossless, so every in-profile payload is exact). Same schema and
     plan shape as png_pixel_stats."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_gif_pixels, payload)
-                if dec is None:
-                    continue
-                arr = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(
-                    dec["height"], dec["width"], 3
-                )
-                for ch in range(3):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), ch, dec["width"], dec["height"],
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + PIXEL_STATS_COLUMNS)
-
-    return payloads.mapInPandas(stats, schema=_pixel_stats_schema(id_col))
+    return _pixel_stats(decode_gif_pixels, payloads, id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -2230,29 +2249,7 @@ def bmp_pixel_stats(
     """Per-channel pixel statistics from REAL BMP decode (raw layout
     transform, lossless). Same schema and plan shape as
     png_pixel_stats."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_bmp_pixels, payload)
-                if dec is None:
-                    continue
-                arr = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(
-                    dec["height"], dec["width"], 3
-                )
-                for ch in range(3):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), ch, dec["width"], dec["height"],
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + PIXEL_STATS_COLUMNS)
-
-    return payloads.mapInPandas(stats, schema=_pixel_stats_schema(id_col))
+    return _pixel_stats(decode_bmp_pixels, payloads, id_col, payload_col)
 
 
 def resize_nearest(
@@ -2298,48 +2295,38 @@ def bmp_resize_stats(
     bmp_pixel_stats; `width`/`height` in the output are the RESIZED
     dims, so every row reports the same grid regardless of source
     size."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_bmp_pixels, payload)
-                if dec is None:
-                    continue
-                res = resize_nearest(
-                    dec["pixels"], dec["width"], dec["height"], 3, out_w, out_h
-                )
-                arr = np.frombuffer(res, dtype=np.uint8).reshape(out_h, out_w, 3)
-                for ch in range(3):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), ch, out_w, out_h,
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + PIXEL_STATS_COLUMNS)
+    def rows(payload):
+        dec = _decode_or_none(decode_bmp_pixels, payload)
+        if dec is None:
+            return ()
+        return _channel_stats(
+            _resized(dec, dec["pixels"], out_w, out_h), out_w, out_h
+        )
 
-    return payloads.mapInPandas(stats, schema=_pixel_stats_schema(id_col))
+    return map_payloads(payloads, _PIXEL_STATS, rows, id_col, payload_col)
 
 
-MEDIA_RESIZE_COLUMNS = [
-    "fmt", "channel", "width", "height",
-    "px_sum", "px_min", "px_max", "n_pixels", "px_mean",
-]
-
-# magic-byte dispatch table: (fmt, magic, pixel decoder, fixed channel
-# count or None = read it from the decode dict). Order matters only for
-# readability — the magics are mutually exclusive. AVI-MJPEG video is
+# magic-byte dispatch of every still-image pixel decoder: (fmt, magic,
+# decoder); the magics are mutually exclusive. AVI-MJPEG video is
 # dispatched separately inside media_resize_stats (its magic needs two
 # probes, RIFF at 0 and 'AVI ' at 8, and its decode is per-frame).
 _MEDIA_DECODERS = (
-    ("png", b"\x89PNG\r\n\x1a\n", decode_png_pixels, None),
-    ("jpeg", b"\xff\xd8\xff", decode_jpeg_pixels, None),
-    ("gif", b"GIF8", decode_gif_pixels, 3),
-    ("bmp", b"BM", decode_bmp_pixels, 3),
+    ("png", b"\x89PNG\r\n\x1a\n", decode_png_pixels),
+    ("jpeg", b"\xff\xd8\xff", decode_jpeg_pixels),
+    ("gif", b"GIF8", decode_gif_pixels),
+    ("bmp", b"BM", decode_bmp_pixels),
 )
+
+
+def _decode_any_image(b: bytes) -> tuple[str | None, dict | None]:
+    """(fmt, decoded image) through the decoder whose magic `b` starts
+    with; (None, None) when no magic matches, (fmt, None) when the
+    decoder rejects the payload."""
+    for fmt, magic, decoder in _MEDIA_DECODERS:
+        if b.startswith(magic):
+            return fmt, _decode_or_none(decoder, b)
+    return None, None
 
 
 def media_resize_stats(
@@ -2368,69 +2355,26 @@ def media_resize_stats(
     never the task. Arrow-batched narrow map, no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    dec = _decode_or_none(
-                        decode_avi_frames, b, max_frames=max_frames
-                    )
-                    if dec is None:
-                        continue
-                    ch_n = int(dec["channels"])
-                    arr = np.stack([
-                        np.frombuffer(
-                            resize_nearest(
-                                px, dec["width"], dec["height"],
-                                ch_n, out_w, out_h,
-                            ),
-                            dtype=np.uint8,
-                        ).reshape(out_h, out_w, ch_n)
-                        for px in dec["frames"]
-                    ])  # (frames, out_h, out_w, ch)
-                    for ch in range(ch_n):
-                        plane = arr[..., ch].astype(np.int64)
-                        s, n = int(plane.sum()), int(plane.size)
-                        rows.append(
-                            (int(doc_id), "avi", ch, out_w, out_h,
-                             s, int(plane.min()), int(plane.max()), n,
-                             round(s / n, 6))
-                        )
-                    continue
-                dec, fmt, fixed_ch = None, None, None
-                for name, magic, decoder, fixed in _MEDIA_DECODERS:
-                    if b.startswith(magic):
-                        dec, fmt, fixed_ch = _decode_or_none(decoder, b), name, fixed
-                        break
-                if dec is None:
-                    continue
-                channels = fixed_ch if fixed_ch is not None else int(dec["channels"])
-                res = resize_nearest(
-                    dec["pixels"], dec["width"], dec["height"],
-                    channels, out_w, out_h,
-                )
-                arr = np.frombuffer(res, dtype=np.uint8).reshape(
-                    out_h, out_w, channels
-                )
-                for ch in range(channels):
-                    plane = arr[:, :, ch].astype(np.int64)
-                    s, n = int(plane.sum()), int(plane.size)
-                    rows.append(
-                        (int(doc_id), fmt, ch, out_w, out_h,
-                         s, int(plane.min()), int(plane.max()), n,
-                         round(s / n, 6))
-                    )
-            yield pd.DataFrame(rows, columns=[id_col] + MEDIA_RESIZE_COLUMNS)
+    def rows(payload):
+        b = bytes(payload)
+        if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            dec = _decode_or_none(decode_avi_frames, b, max_frames=max_frames)
+            if dec is None:
+                return ()
+            # (frames, out_h, out_w, channels): stats pool over frames
+            arr = np.stack(
+                [_resized(dec, px, out_w, out_h) for px in dec["frames"]]
+            )
+            return _channel_stats(arr, out_w, out_h, "avi")
+        fmt, dec = _decode_any_image(b)
+        if dec is None:
+            return ()
+        return _channel_stats(
+            _resized(dec, dec["pixels"], out_w, out_h), out_w, out_h, fmt
+        )
 
-    return payloads.mapInPandas(
-        stats,
-        schema=(
-            f"{id_col} long, fmt string, channel int, width int, "
-            "height int, px_sum long, px_min int, px_max int, "
-            "n_pixels long, px_mean double"
-        ),
+    return map_payloads(
+        payloads, "fmt string, " + _PIXEL_STATS, rows, id_col, payload_col
     )
 
 
@@ -2659,37 +2603,21 @@ def avi_frame_stats(
     decode — the video member of the *_pixel_stats family. One row per
     (payload, frame, channel); undecodable payloads produce no rows.
     Arrow-batched narrow map, no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_avi_frames, payload, max_frames=max_frames)
-                if dec is None:
-                    continue
-                for fi, px in enumerate(dec["frames"]):
-                    arr = np.frombuffer(px, dtype=np.uint8).reshape(
-                        dec["height"], dec["width"], dec["channels"]
-                    )
-                    for ch in range(dec["channels"]):
-                        plane = arr[:, :, ch].astype(np.int64)
-                        s, n = int(plane.sum()), int(plane.size)
-                        rows.append(
-                            (int(doc_id), fi, ch, dec["width"], dec["height"],
-                             s, int(plane.min()), int(plane.max()), n,
-                             round(s / n, 6))
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx"] + PIXEL_STATS_COLUMNS,
+    def rows(payload):
+        dec = _decode_or_none(decode_avi_frames, payload, max_frames=max_frames)
+        if dec is None:
+            return ()
+        return [
+            row
+            for fi, px in enumerate(dec["frames"])
+            for row in _channel_stats(
+                _raster(dec, px), dec["width"], dec["height"], fi
             )
+        ]
 
-    return payloads.mapInPandas(
-        stats,
-        schema=(f"{id_col} long, frame_idx int, channel int, width int, "
-                "height int, px_sum long, px_min int, px_max int, "
-                "n_pixels long, px_mean double"),
+    return map_payloads(
+        payloads, "frame_idx int, " + _PIXEL_STATS, rows, id_col, payload_col
     )
 
 
@@ -3027,12 +2955,6 @@ def decode_wav_samples(payload: bytes) -> dict | None:
     return {**hdr, "samples": arr}
 
 
-AUDIO_STATS_SCHEMA = (
-    "doc_id long, channel int, sample_rate int, n_frames long, "
-    "amp_sum long, amp_min int, amp_max int, sq_sum long, rms double"
-)
-
-
 def wav_audio_stats(
     payloads: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -3041,35 +2963,26 @@ def wav_audio_stats(
     the derived RMS (IEEE sqrt of exact integers — cross-engine
     bit-stable). Unsupported payloads produce no rows. Arrow-batched
     narrow map, no shuffle — the same shape as png_pixel_stats."""
-    import math
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_wav_samples, payload)
-                if dec is None or dec["n_frames"] == 0:
-                    continue
-                arr = dec["samples"].astype("int64")
-                for ch in range(dec["channels"]):
-                    col = arr[:, ch]
-                    s, sq, n = int(col.sum()), int((col * col).sum()), len(col)
-                    rows.append(
-                        (int(doc_id), ch, dec["sample_rate"], n,
-                         s, int(col.min()), int(col.max()), sq,
-                         round(math.sqrt(sq / n), 6))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "channel", "sample_rate", "n_frames",
-                         "amp_sum", "amp_min", "amp_max", "sq_sum", "rms"],
+    def rows(payload):
+        dec = _decode_or_none(decode_wav_samples, payload)
+        if dec is None or dec["n_frames"] == 0:
+            return ()
+        arr = dec["samples"].astype("int64")
+        out = []
+        for ch in range(dec["channels"]):
+            col = arr[:, ch]
+            s, sq, n = int(col.sum()), int((col * col).sum()), len(col)
+            out.append(
+                (ch, dec["sample_rate"], n, s, int(col.min()), int(col.max()),
+                 sq, round(math.sqrt(sq / n), 6))
             )
+        return out
 
-    return payloads.mapInPandas(
-        stats,
-        schema=(f"{id_col} long, channel int, sample_rate int, "
-                "n_frames long, amp_sum long, amp_min int, amp_max int, "
-                "sq_sum long, rms double"),
+    return map_payloads(
+        payloads,
+        "channel int, sample_rate int, n_frames long, amp_sum long, "
+        "amp_min int, amp_max int, sq_sum long, rms double",
+        rows, id_col, payload_col,
     )
 
 
@@ -3087,35 +3000,22 @@ def wav_zcr_stats(
     no rows (no transition exists). Same Arrow-batched, shuffle-free,
     malformed-payload-drops-row contract as the other decoders."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(payload):
+        dec = _decode_or_none(decode_wav_samples, payload)
+        if dec is None or dec["n_frames"] < 2:
+            return ()
+        arr = dec["samples"].astype("int64")
+        out = []
+        for ch in range(dec["channels"]):
+            nonneg = arr[:, ch] >= 0
+            crossings = int((nonneg[1:] != nonneg[:-1]).sum())
+            n = len(nonneg)
+            out.append((ch, n, crossings, round(crossings / (n - 1), 6)))
+        return out
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_wav_samples, payload)
-                if dec is None or dec["n_frames"] < 2:
-                    continue
-                arr = dec["samples"].astype("int64")
-                for ch in range(dec["channels"]):
-                    nonneg = arr[:, ch] >= 0
-                    crossings = int((nonneg[1:] != nonneg[:-1]).sum())
-                    n = len(nonneg)
-                    rows.append(
-                        (int(doc_id), ch, n, crossings,
-                         round(crossings / (n - 1), 6))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "channel", "n_frames", "n_crossings", "zcr"],
-            )
-
-    return payloads.mapInPandas(
-        stats,
-        schema=(
-            f"{id_col} long, channel int, n_frames long, "
-            "n_crossings long, zcr double"
-        ),
+    return map_payloads(
+        payloads, "channel int, n_frames long, n_crossings long, zcr double",
+        rows, id_col, payload_col,
     )
 
 
@@ -3137,41 +3037,27 @@ def wav_resample_stats(
     m = max(1, (n_frames * target_rate) // src_rate); output sample t
     reads source index (t * n_frames) // m. Unsupported payloads
     produce no rows. Arrow-batched narrow map, no shuffle."""
-    import math
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(payload):
+        dec = _decode_or_none(decode_wav_samples, payload)
+        if dec is None or dec["n_frames"] == 0 or not dec["sample_rate"]:
+            return ()
+        arr = dec["samples"].astype(np.int64)
+        n, nch = arr.shape
+        mono = np.floor_divide(arr.sum(axis=1), nch)
+        m = max(1, (n * target_rate) // dec["sample_rate"])
+        out = mono[(np.arange(m, dtype=np.int64) * n) // m]
+        sq = int((out * out).sum())
+        return [(dec["codec"], dec["sample_rate"], n, m, int(out.sum()),
+                 int(out.min()), int(out.max()), sq,
+                 round(math.sqrt(sq / m), 6))]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_wav_samples, payload)
-                if dec is None or dec["n_frames"] == 0 or not dec["sample_rate"]:
-                    continue
-                arr = dec["samples"].astype(np.int64)
-                n, nch = arr.shape
-                mono = np.floor_divide(arr.sum(axis=1), nch)
-                m = max(1, (n * target_rate) // dec["sample_rate"])
-                idx = (np.arange(m, dtype=np.int64) * n) // m
-                out = mono[idx]
-                sq = int((out * out).sum())
-                rows.append(
-                    (int(doc_id), dec["codec"], dec["sample_rate"], n,
-                     m, int(out.sum()), int(out.min()), int(out.max()), sq,
-                     round(math.sqrt(sq / m), 6))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "src_codec", "src_rate", "src_frames",
-                         "n_out", "amp_sum", "amp_min", "amp_max",
-                         "sq_sum", "rms"],
-            )
-
-    return payloads.mapInPandas(
-        stats,
-        schema=(f"{id_col} long, src_codec string, src_rate int, "
-                "src_frames long, n_out long, amp_sum long, amp_min long, "
-                "amp_max long, sq_sum long, rms double"),
+    return map_payloads(
+        payloads,
+        "src_codec string, src_rate int, src_frames long, n_out long, "
+        "amp_sum long, amp_min long, amp_max long, sq_sum long, rms double",
+        rows, id_col, payload_col,
     )
 
 
@@ -3194,45 +3080,35 @@ def wav_vad_segments(
     (f - row_number() grouping) over the same closed-form energies.
     Payloads with no active frame produce no rows. Narrow Arrow map,
     no shuffle."""
+    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(payload):
+        dec = _decode_or_none(decode_wav_samples, payload)
+        if dec is None or dec["n_frames"] < frame_len:
+            return ()
+        arr = dec["samples"].astype(np.int64)
+        n, nch = arr.shape
+        mono = np.floor_divide(arr.sum(axis=1), nch)
+        nf = n // frame_len
+        frames = mono[: nf * frame_len].reshape(nf, frame_len)
+        energy = (frames * frames).sum(axis=1)
+        active = energy >= threshold
+        # run boundaries via flag diff on a 0-padded sequence
+        padded = np.concatenate(([False], active, [False]))
+        d = np.diff(padded.astype(np.int8))
+        starts = np.nonzero(d == 1)[0]
+        ends = np.nonzero(d == -1)[0] - 1  # inclusive
+        return [
+            (seg_idx, int(s), int(e), int(e - s + 1),
+             int(energy[s : e + 1].sum()))
+            for seg_idx, (s, e) in enumerate(zip(starts, ends))
+        ]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_wav_samples, payload)
-                if dec is None or dec["n_frames"] < frame_len:
-                    continue
-                arr = dec["samples"].astype(np.int64)
-                n, nch = arr.shape
-                mono = np.floor_divide(arr.sum(axis=1), nch)
-                nf = n // frame_len
-                frames = mono[: nf * frame_len].reshape(nf, frame_len)
-                energy = (frames * frames).sum(axis=1)
-                active = energy >= threshold
-                if not active.any():
-                    continue
-                # run boundaries via flag diff on a 0-padded sequence
-                padded = np.concatenate(([False], active, [False]))
-                d = np.diff(padded.astype(np.int8))
-                starts = np.nonzero(d == 1)[0]
-                ends = np.nonzero(d == -1)[0] - 1  # inclusive
-                for seg_idx, (s, e) in enumerate(zip(starts, ends)):
-                    rows.append(
-                        (int(doc_id), seg_idx, int(s), int(e),
-                         int(e - s + 1), int(energy[s : e + 1].sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "seg_idx", "start_frame", "end_frame",
-                         "n_frames", "energy_sum"],
-            )
-
-    return payloads.mapInPandas(
-        stats,
-        schema=(f"{id_col} long, seg_idx int, start_frame int, "
-                "end_frame int, n_frames int, energy_sum long"),
+    return map_payloads(
+        payloads,
+        "seg_idx int, start_frame int, end_frame int, n_frames int, "
+        "energy_sum long",
+        rows, id_col, payload_col,
     )
 
 
@@ -3254,43 +3130,25 @@ def image_dhash(
     banded pair join below. Every step is integer arithmetic the oracle
     reproduces in SQL. Unsupported payloads drop the row. Narrow Arrow
     map, no shuffle."""
+    import numpy as np
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(payload):
+        _fmt, dec = _decode_any_image(bytes(payload))
+        if dec is None:
+            return ()
+        h, w = int(dec["height"]), int(dec["width"])
+        arr = _raster(dec, dec["pixels"]).astype(np.int64)
+        if dec["channels"] >= 3:
+            gray = np.floor_divide(arr[:, :, :3].sum(axis=2), 3)
+        else:
+            gray = arr[:, :, 0]
+        g = gray[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
+        bits = (g[:, :8] > g[:, 1:]).astype(np.int64)  # (8, 8)
+        weights = 1 << (np.arange(4)[:, None] * 8 + np.arange(8)[None, :])
+        return [(int((bits[:4] * weights).sum()),
+                 int((bits[4:] * weights).sum()))]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                dec, fixed_ch = None, None
-                for _name, magic, decoder, fixed in _MEDIA_DECODERS:
-                    if b.startswith(magic):
-                        dec, fixed_ch = _decode_or_none(decoder, b), fixed
-                        break
-                if dec is None:
-                    continue
-                ch = fixed_ch if fixed_ch is not None else int(dec["channels"])
-                w, h = int(dec["width"]), int(dec["height"])
-                arr = np.frombuffer(dec["pixels"], dtype=np.uint8).reshape(
-                    h, w, ch
-                ).astype(np.int64)
-                if ch >= 3:
-                    gray = np.floor_divide(arr[:, :, :3].sum(axis=2), 3)
-                else:
-                    gray = arr[:, :, 0]
-                rr = (np.arange(8) * h) // 8
-                cc = (np.arange(9) * w) // 9
-                g = gray[np.ix_(rr, cc)]  # (8, 9)
-                bits = (g[:, :8] > g[:, 1:]).astype(np.int64)  # (8, 8)
-                weights = 1 << (np.arange(4)[:, None] * 8 + np.arange(8)[None, :])
-                dh0 = int((bits[:4] * weights).sum())
-                dh1 = int((bits[4:] * weights).sum())
-                rows.append((int(doc_id), dh0, dh1))
-            yield pd.DataFrame(rows, columns=[id_col, "dh0", "dh1"])
-
-    return payloads.mapInPandas(
-        hashes, schema=f"{id_col} long, dh0 long, dh1 long"
-    )
+    return map_payloads(payloads, "dh0 long, dh1 long", rows, id_col, payload_col)
 
 
 def image_neardup_pairs(
@@ -3413,32 +3271,24 @@ def audio_fingerprint(
     fingerprints feed the shared banded pair join and knn_hamming.
     Payloads shorter than 65 samples drop. Narrow Arrow map, no
     shuffle."""
+    import numpy as np
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(payload):
+        dec = _decode_or_none(decode_wav_samples, payload)
+        if dec is None or dec["n_frames"] < 65:
+            return ()
+        arr = dec["samples"].astype(np.int64)
+        n, nch = arr.shape
+        mono = np.floor_divide(arr.sum(axis=1), nch)
+        bounds = (np.arange(66) * n + 64) // 65  # ceil(t*n/65)
+        sq = np.concatenate(([0], np.cumsum(mono * mono)))
+        energy = sq[bounds[1:]] - sq[bounds[:-1]]  # (65,)
+        bits = (energy[:64] > energy[1:]).astype(np.int64)
+        weights = 1 << np.arange(32, dtype=np.int64)
+        return [(int((bits[:32] * weights).sum()),
+                 int((bits[32:] * weights).sum()))]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _decode_or_none(decode_wav_samples, payload)
-                if dec is None or dec["n_frames"] < 65:
-                    continue
-                arr = dec["samples"].astype(np.int64)
-                n, nch = arr.shape
-                mono = np.floor_divide(arr.sum(axis=1), nch)
-                bounds = (np.arange(66) * n + 64) // 65  # ceil(t*n/65)
-                sq = np.concatenate(([0], np.cumsum(mono * mono)))
-                energy = sq[bounds[1:]] - sq[bounds[:-1]]  # (65,)
-                bits = (energy[:64] > energy[1:]).astype(np.int64)
-                weights = 1 << np.arange(32, dtype=np.int64)
-                dh0 = int((bits[:32] * weights).sum())
-                dh1 = int((bits[32:] * weights).sum())
-                rows.append((int(doc_id), dh0, dh1))
-            yield pd.DataFrame(rows, columns=[id_col, "dh0", "dh1"])
-
-    return payloads.mapInPandas(
-        fp, schema=f"{id_col} long, dh0 long, dh1 long"
-    )
+    return map_payloads(payloads, "dh0 long, dh1 long", rows, id_col, payload_col)
 
 
 def audio_neardup_pairs(
@@ -3506,18 +3356,13 @@ def decode_metadata(
     else:
         raise ValueError(f"decoder must be fake|header|auto, got {decoder!r}")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = pdf[payload_col].map(fn)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media": metas,
-                    "n_bytes": pdf[payload_col].map(len).astype("int64"),
-                }
-            )
-
-    return payloads.mapInPandas(decode, schema=_decode_schema(id_col))
+    return map_payloads(
+        payloads,
+        "media struct<width:int, height:int, channels:int, codec:string>, "
+        "n_bytes long",
+        lambda b: [(fn(b), len(b))],
+        id_col, payload_col,
+    )
 
 
 def sample_frames(
@@ -3531,23 +3376,18 @@ def sample_frames(
     decode_avi_frames/avi_frame_stats, which plug a true frame iterator
     into the same 1:N shape."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, md5s, sizes = [], [], [], []
-            for _, row in pdf.iterrows():
-                raw = bytes(row[payload_col])
-                for i in range(min(max_frames, max(1, len(raw) // every_n_bytes))):
-                    chunk = raw[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    ids.append(row[id_col])
-                    idxs.append(i)
-                    md5s.append(hashlib.md5(chunk).hexdigest())
-                    sizes.append(len(chunk))
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "frame_md5": md5s,
-                 "frame_bytes": sizes}
-            )
+    def frames(payload):
+        raw = bytes(payload)
+        out = []
+        for i in range(min(max_frames, max(1, len(raw) // every_n_bytes))):
+            chunk = raw[i * every_n_bytes : (i + 1) * every_n_bytes]
+            out.append((i, hashlib.md5(chunk).hexdigest(), len(chunk)))
+        return out
 
-    return payloads.mapInPandas(sample, schema=_frame_schema(id_col))
+    return map_payloads(
+        payloads, "frame_idx int, frame_md5 string, frame_bytes long",
+        frames, id_col, payload_col,
+    )
 
 
 def payload_features(payloads: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
@@ -3555,16 +3395,8 @@ def payload_features(payloads: DataFrame, id_col: str = "doc_id", payload_col: s
     md5 digest of the raw bytes. This is the exact plumbing a real decoder
     uses (iterator of Arrow batches in, feature frame out) with the codec
     swapped for hashlib so it is testable and oracle-comparable."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raw = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": raw.map(len).astype("int64"),
-                    "payload_md5": raw.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                }
-            )
-
-    return payloads.mapInPandas(extract, schema=_feature_schema(id_col))
+    return map_payloads(
+        payloads, "n_bytes long, payload_md5 string",
+        lambda b: [(len(b), hashlib.md5(bytes(b)).hexdigest())],
+        id_col, payload_col,
+    )

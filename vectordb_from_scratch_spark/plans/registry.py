@@ -2126,9 +2126,9 @@ def _q_ivf_det_centroids(spark, sf_dir):
 )
 def _q_ivf_det_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2180,9 +2180,9 @@ def _q_ivf_det_knn(spark, sf_dir):
 )
 def _q_ivf_filtered_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2262,17 +2262,15 @@ def _q_ivf_sq8_knn(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # cent feeds the assignment AND the probe-routing broadcast; assigned
-    # feeds BOTH the code index and the raw re-rank side. Without the
-    # persists the unrolled det-IVF build would re-execute once per
-    # consuming branch in one plan (in production index+centroids are
-    # written tables — this is the session-local stand-in, released per
-    # query by release_caches)
-    # tiny (n_lists rows) and multiply-consumed: checkpoint truncates the
-    # Lloyd-build lineage out of every consumer plan (r12)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    # cent feeds the assignment AND the probe-routing broadcast; it comes
+    # back from build_ivf_det already checkpointed (n_lists rows).
+    # assigned feeds BOTH the code index and the raw re-rank side: the
+    # persist keeps the assignment from re-executing once per consuming
+    # branch (in production index+centroids are written tables — this is
+    # the session-local stand-in, released per query by release_caches)
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2437,12 +2435,13 @@ def _q_pq_adc_knn(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # codebook feeds encode AND the per-query LUT; codes feed the scan —
-    # persist both so the det-Lloyd build runs once per query, not once
-    # per consuming branch (released per query by release_caches)
-    cb = cache.checkpoint(pq.pq_codebook(
+    # codebook feeds encode AND the per-query LUT and comes back from
+    # pq_codebook already checkpointed; codes feed the scan — persisted so
+    # the encode runs once per query, not once per consuming branch
+    # (released per query by release_caches)
+    cb = pq.pq_codebook(
         e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"], block=_PQ["block"],
-    ))
+    )
     codes = track(pq.pq_encode(e, cb, _PQ["m"], _PQ["d_sub"]))
     probes = _probes(spark, sf_dir, F.col("vec_id") < 5)
     res = pq.pq_adc_topk(codes, cb, probes, k=_PQ["k"], ks=_PQ["ks"], d_sub=_PQ["d_sub"])
@@ -2505,9 +2504,9 @@ def _q_knn_pq_recall(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    cb = cache.checkpoint(pq.pq_codebook(
+    cb = pq.pq_codebook(
         e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"], block=_PQ["block"],
-    ))
+    )
     codes = track(pq.pq_encode(e, cb, _PQ["m"], _PQ["d_sub"]))
     probes = _probes(spark, sf_dir, F.col("vec_id") < 20)
     k = _PQ["k"]
@@ -2601,20 +2600,18 @@ def _q_ivf_pq_knn(spark, sf_dir):
     # 8/512-group aggregations leave idle (guide §2.6 "overlap
     # independent jobs"). Results are unchanged: each chain is the
     # identical deterministic build, just scheduled concurrently.
-    # Each table is tiny (n_lists / m·ks rows) and multiply-consumed:
-    # the checkpoint truncates the build lineage out of every consumer.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_cent = pool.submit(
-            lambda: cache.checkpoint(ann.build_ivf_det(
+            lambda: ann.build_ivf_det(
                 e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"],
                 block=_IVF_DET["block"],
-            ))
+            )
         )
         f_cb = pool.submit(
-            lambda: cache.checkpoint(pq.pq_codebook(
+            lambda: pq.pq_codebook(
                 e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
                 block=_PQ["block"],
-            ))
+            )
         )
         cent, cb = f_cent.result(), f_cb.result()
     # spread the shallow source once; assign_ivf_det no longer spreads
@@ -2718,14 +2715,15 @@ def _q_ivf_pq_res_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     # The three build artifacts (centroids, assignment, residual
     # codebook) each feed 2-3 consumers AND nest (codebook ⊃ residuals
-    # ⊃ assignment ⊃ centroids) — localCheckpoint materializes each
-    # once and truncates the nested lineage (the tracked-persist form
-    # printed the unrolled Lloyd build 500+ exchanges deep). In
-    # production these are written index tables; the checkpoint is the
-    # session-local stand-in.
+    # ⊃ assignment ⊃ centroids) — each is materialized once by a
+    # localCheckpoint that truncates the nested lineage (the
+    # tracked-persist form printed the unrolled Lloyd build 500+
+    # exchanges deep): the two builders end in one themselves, the
+    # assignment takes one here. In production these are written index
+    # tables; the checkpoint is the session-local stand-in.
     cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ).transform(cache.checkpoint)
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2737,7 +2735,7 @@ def _q_ivf_pq_res_knn(spark, sf_dir):
     cb = pq.pq_codebook(
         res, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
         block=_PQ["block"], id_col="id", vec_col="rvec",
-    ).transform(cache.checkpoint)
+    )
     idx = pq.ivf_pq_residual_index(
         assigned, cent, cb, _PQ["m"], _PQ["d_sub"], id_col="id", vec_col="vec"
     )
@@ -2791,14 +2789,13 @@ def _q_dedup_semantic(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # checkpoint (not persist): the 8-row centroid table is referenced by
-    # the assignment, the pair join's BOTH sides and the join-back — the
-    # persisted form reprinted (and re-planned) the whole Lloyd build
-    # under each consumer; the checkpoint truncates it to an 8-row
-    # LogicalRDD (r12, same device as ann_ivf_pq_res_knn)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    # the 8-row centroid table is referenced by the assignment, the pair
+    # join's BOTH sides and the join-back; build_ivf_det returns it
+    # checkpointed, so every consumer reads an 8-row LogicalRDD, never
+    # the Lloyd build
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     res = dedup.semantic_dedup(e, cent, min_sim=_SEMDEDUP_MIN_SIM)
     return res.select(
         F.col("id").alias("vec_id"), "component", "cluster_size", "is_kept"
@@ -2986,9 +2983,9 @@ def _q_ivf_recall_curve(spark, sf_dir):
         "query_id", "id"
     )
     np_df = probes.agg(F.count(F.lit(1)).alias("__np"))
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -4339,11 +4336,9 @@ def _q_eval_ann_ndcg(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # tiny (n_lists rows) and multiply-consumed: checkpoint truncates the
-    # Lloyd-build lineage out of every consumer plan (r12)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -5651,9 +5646,9 @@ def _q_tpch_q22(spark, sf_dir):
 )
 def _q_pipeline_cluster_sample(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"]
-    ))
+    )
     v = spread(e).select(F.col("vec_id").cast("long").alias("id"), vm.as_double("embedding").alias("vec"))
     assigned = ann.assign_ivf_det(v, cent)
     picked = sampling.cluster_sample(
@@ -7224,26 +7219,20 @@ def _q_multimodal_header(spark, sf_dir):
     "natively too (r10)",
 )
 def _q_multimodal_png_pixels(spark, sf_dir):
-    from ..operators.multimodal import encode_png, png_pixel_stats
+    from ..operators.multimodal import encode_png, map_payloads, png_pixel_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = bytes(
+            (i * 31 + r * 7 + c * 13 + k * 97) % 256
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return [(encode_png(px, w, h, ch),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = bytes(
-                    (i * 31 + r * 7 + c * 13 + k * 97) % 256
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return png_pixel_stats(payloads)
 
 
@@ -7283,26 +7272,20 @@ def _q_multimodal_png_pixels(spark, sf_dir):
     "media ladder (previously PIL-stubbed). Value-exact",
 )
 def _q_multimodal_png_interlaced(spark, sf_dir):
-    from ..operators.multimodal import encode_png, png_pixel_stats
+    from ..operators.multimodal import encode_png, map_payloads, png_pixel_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = bytes(
+            (i * 43 + r * 11 + c * 17 + k * 89) % 256
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return [(encode_png(px, w, h, ch, interlace=True),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = bytes(
-                    (i * 43 + r * 11 + c * 17 + k * 89) % 256
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch, interlace=True))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return png_pixel_stats(payloads)
 
 
@@ -7345,27 +7328,21 @@ def _q_multimodal_png_interlaced(spark, sf_dir):
     "Value-exact",
 )
 def _q_multimodal_png_16bit(spark, sf_dir):
-    from ..operators.multimodal import encode_png, png_pixel_stats
+    from ..operators.multimodal import encode_png, map_payloads, png_pixel_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 37 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = b"".join(
+            int((i * 53 + r * 7 + c * 13 + k * 97) % 65536)
+            .to_bytes(2, "big")
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return [(encode_png(px, w, h, ch, bit_depth=16),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = b"".join(
-                    int((i * 53 + r * 7 + c * 13 + k * 97) % 65536)
-                    .to_bytes(2, "big")
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch, bit_depth=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return png_pixel_stats(payloads)
 
 
@@ -7671,12 +7648,11 @@ def _q_outlier_scores(spark, sf_dir):
     p = _IVF_DET
     e = _t(spark, sf_dir, "embeddings")
     # the n_lists-row centroid frame feeds both the assignment and the
-    # distance join; checkpoint it so the Lloyd build runs once and its
-    # per-iteration exchanges drop out of the serving plan
-    cent = cache.checkpoint(
-        ann.build_ivf_det(
-            e, n_lists=p["n_lists"], iters=p["iters"], block=p["block"]
-        )
+    # distance join; build_ivf_det returns it checkpointed, so the Lloyd
+    # build runs once and its per-iteration exchanges stay out of the
+    # serving plan
+    cent = ann.build_ivf_det(
+        e, n_lists=p["n_lists"], iters=p["iters"], block=p["block"]
     )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
@@ -7784,27 +7760,21 @@ def _q_knn_facets(spark, sf_dir):
     "images. Value-exact",
 )
 def _q_multimodal_wav_stats(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_audio_stats
+    from ..operators.multimodal import encode_wav, map_payloads, wav_audio_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        rate = [8000, 16000, 44100][i % 3]
+        samples = [
+            ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
+            for f in range(nframes) for ch in range(nch)
+        ]
+        return [(encode_wav(samples, rate, nch, bits=16),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                samples = [
-                    ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_audio_stats(payloads)
 
 
@@ -7847,27 +7817,21 @@ def _q_multimodal_wav_stats(spark, sf_dir):
     "Value-exact",
 )
 def _q_multimodal_wav_zcr(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_zcr_stats
+    from ..operators.multimodal import encode_wav, map_payloads, wav_zcr_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        rate = [8000, 16000, 44100][i % 3]
+        samples = [
+            ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
+            for f in range(nframes) for ch in range(nch)
+        ]
+        return [(encode_wav(samples, rate, nch, bits=16),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                samples = [
-                    ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_zcr_stats(payloads)
 
 
@@ -7906,27 +7870,21 @@ def _q_multimodal_wav_zcr(spark, sf_dir):
     "±2^23 range; the oracle recomputes it analytically. Value-exact",
 )
 def _q_multimodal_wav24_stats(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_audio_stats
+    from ..operators.multimodal import encode_wav, map_payloads, wav_audio_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        rate = [8000, 22050, 48000][i % 3]
+        samples = [
+            ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
+            for f in range(nframes) for ch in range(nch)
+        ]
+        return [(encode_wav(samples, rate, nch, bits=24),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 22050, 48000][i % 3]
-                samples = [
-                    ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=24))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_audio_stats(payloads)
 
 
@@ -8000,33 +7958,31 @@ def _q_multimodal_wav24_stats(spark, sf_dir):
     "must agree sample-exactly. Value-exact",
 )
 def _q_multimodal_wav_adpcm_stats(spark, sf_dir):
-    from ..operators.multimodal import encode_wav_ima_adpcm, wav_audio_stats
+    from ..operators.multimodal import (
+        encode_wav_ima_adpcm,
+        map_payloads,
+        wav_audio_stats,
+    )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nch = 1 + i % 2
+        nnib = 8 * (3 + i % 5)
+        rate = [8000, 16000, 44100][i % 3]
+        blk = {
+            "pred": [((i * 131 + ch * 59) % 65536) - 32768
+                     for ch in range(nch)],
+            "idx": [(i * 7 + ch * 13) % 89 for ch in range(nch)],
+            "nibbles": [
+                [(i * 13 + ch * 5 + p * 11) % 16 for p in range(nnib)]
+                for ch in range(nch)
+            ],
+        }
+        return [(encode_wav_ima_adpcm([blk], rate, nch),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch = 1 + i % 2
-                nnib = 8 * (3 + i % 5)
-                rate = [8000, 16000, 44100][i % 3]
-                blk = {
-                    "pred": [((i * 131 + ch * 59) % 65536) - 32768
-                             for ch in range(nch)],
-                    "idx": [(i * 7 + ch * 13) % 89 for ch in range(nch)],
-                    "nibbles": [
-                        [(i * 13 + ch * 5 + p * 11) % 16 for p in range(nnib)]
-                        for ch in range(nch)
-                    ],
-                }
-                payloads.append(encode_wav_ima_adpcm([blk], rate, nch))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_audio_stats(payloads)
 
 
@@ -8080,7 +8036,11 @@ def _g711_sql(law: str) -> str:
 
 def _q_g711(law: str):
     def q(spark, sf_dir):
-        from ..operators.multimodal import encode_wav_g711, wav_audio_stats
+        from ..operators.multimodal import (
+            encode_wav_g711,
+            map_payloads,
+            wav_audio_stats,
+        )
 
         d = (
             _t(spark, sf_dir, "documents")
@@ -8088,23 +8048,17 @@ def _q_g711(law: str):
             .select("doc_id")
         )
 
-        def synth(batches):
-            import pandas as pd
+        def synth(doc_id):
+            i = int(doc_id)
+            nch, nframes = 1 + i % 2, 50 + i % 37
+            rate = [8000, 16000, 11025][i % 3]
+            codes = [
+                (i * 7 + f * 13 + ch * 29) % 256
+                for f in range(nframes) for ch in range(nch)
+            ]
+            return [(encode_wav_g711(codes, rate, nch, law=law),)]
 
-            for pdf in batches:
-                payloads = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    nch, nframes = 1 + i % 2, 50 + i % 37
-                    rate = [8000, 16000, 11025][i % 3]
-                    codes = [
-                        (i * 7 + f * 13 + ch * 29) % 256
-                        for f in range(nframes) for ch in range(nch)
-                    ]
-                    payloads.append(encode_wav_g711(codes, rate, nch, law=law))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-        payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+        payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
         return wav_audio_stats(payloads)
 
     return q
@@ -8219,45 +8173,37 @@ def _q_multimodal_audio_normalize(spark, sf_dir):
     from ..operators.multimodal import (
         encode_wav,
         encode_wav_g711,
+        map_payloads,
         wav_resample_stats,
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        rate = [8000, 16000, 44100][i % 3]
+        fam = i % 4
+        if fam == 0:
+            samples = [
+                ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
+                for f in range(nframes) for ch in range(nch)
+            ]
+            return [(encode_wav(samples, rate, nch, bits=16),)]
+        if fam == 2:
+            samples = [
+                ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
+                for f in range(nframes) for ch in range(nch)
+            ]
+            return [(encode_wav(samples, rate, nch, bits=24),)]
+        codes = [
+            (i * 7 + f * 13 + ch * 29) % 256
+            for f in range(nframes) for ch in range(nch)
+        ]
+        law = "ulaw" if fam == 1 else "alaw"
+        return [(encode_wav_g711(codes, rate, nch, law=law),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                fam = i % 4
-                if fam in (0, 2):
-                    if fam == 0:
-                        samples = [
-                            ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                            for f in range(nframes) for ch in range(nch)
-                        ]
-                        payloads.append(encode_wav(samples, rate, nch, bits=16))
-                    else:
-                        samples = [
-                            ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
-                            for f in range(nframes) for ch in range(nch)
-                        ]
-                        payloads.append(encode_wav(samples, rate, nch, bits=24))
-                else:
-                    codes = [
-                        (i * 7 + f * 13 + ch * 29) % 256
-                        for f in range(nframes) for ch in range(nch)
-                    ]
-                    payloads.append(encode_wav_g711(
-                        codes, rate, nch, law="ulaw" if fam == 1 else "alaw"
-                    ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_resample_stats(payloads, target_rate=16000)
 
 
@@ -8312,27 +8258,21 @@ def _q_multimodal_audio_normalize(spark, sf_dir):
     "algorithms that must agree row-exactly. No shuffle. Value-exact",
 )
 def _q_multimodal_audio_vad(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_vad_segments
+    from ..operators.multimodal import encode_wav, map_payloads, wav_vad_segments
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nf, blk = 20 + i % 7, 3 + i % 3
+        samples = [
+            (((i * 131 + s * 17) % 256) - 128)
+            * (40 if ((s // 10) // blk) % 2 == 0 else 0)
+            for s in range(nf * 10)
+        ]
+        return [(encode_wav(samples, 16000, 1, bits=16),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf, blk = 20 + i % 7, 3 + i % 3
-                samples = [
-                    (((i * 131 + s * 17) % 256) - 128)
-                    * (40 if ((s // 10) // blk) % 2 == 0 else 0)
-                    for s in range(nf * 10)
-                ]
-                payloads.append(encode_wav(samples, 16000, 1, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return wav_vad_segments(payloads, frame_len=10, threshold=1)
 
 
@@ -8404,35 +8344,30 @@ def _q_multimodal_audio_vad(spark, sf_dir):
     "training pipeline runs before embedding-based dedup. Value-exact",
 )
 def _q_multimodal_image_neardup(spark, sf_dir):
-    from ..operators.multimodal import encode_bmp, image_neardup_pairs
+    from ..operators.multimodal import encode_bmp, image_neardup_pairs, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
+    def synth(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                j = i // 5
-                fam, v = j // 4, j % 4
-                w, h = 12 + fam % 7, 10 + (fam * 3) % 5
-                rr, cc = np.ogrid[0:h, 0:w]
-                p = (fam * 37 + rr * 11 + cc * 17) % 250
-                p = np.broadcast_to(p, (h, w)).copy()
-                pc = (8 * w) // 9  # the one pixel grid cell (0,8) samples
-                p[0, pc] = min(249, int(p[0, pc]) + 50 * v)
-                px = np.stack([p, p + 3, p + 6], axis=2).astype(np.uint8)
-                payloads.append(encode_bmp(px.tobytes(), w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+        i = int(doc_id)
+        j = i // 5
+        fam, v = j // 4, j % 4
+        w, h = 12 + fam % 7, 10 + (fam * 3) % 5
+        rr, cc = np.ogrid[0:h, 0:w]
+        p = (fam * 37 + rr * 11 + cc * 17) % 250
+        p = np.broadcast_to(p, (h, w)).copy()
+        pc = (8 * w) // 9  # the one pixel grid cell (0,8) samples
+        p[0, pc] = min(249, int(p[0, pc]) + 50 * v)
+        px = np.stack([p, p + 3, p + 6], axis=2).astype(np.uint8)
+        return [(encode_bmp(px.tobytes(), w, h),)]
 
     # NOT spread (r11 A/B): these tiny fixtures feed a banded self-join
     # that duplicates the Python synth+fingerprint subtree on both sides;
     # 32-way spread turned ~1k cheap payloads into 64 task launches and
     # LOST 0.9->4.5s. At scale the scan arrives pre-split either way.
-    payloads = d.mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(d, "payload binary", synth, value_col="doc_id")
     return image_neardup_pairs(payloads, max_hamming=3).select(
         F.col("id_a"), F.col("id_b"), F.col("hamming")
     )
@@ -8498,30 +8433,24 @@ def _q_multimodal_image_neardup(spark, sf_dir):
     "exhaustive pairs. Value-exact",
 )
 def _q_multimodal_audio_neardup(spark, sf_dir):
-    from ..operators.multimodal import audio_neardup_pairs, encode_wav
+    from ..operators.multimodal import audio_neardup_pairs, encode_wav, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                j = i // 5
-                fam, v = j // 4, j % 4
-                n = 130 + (fam % 7) * 13
-                samples = [
-                    (((fam * 131 + s * 17) % 256) - 128)
-                    * ((1 + v) if (s * 65) // n == 64 else 1)
-                    for s in range(n)
-                ]
-                payloads.append(encode_wav(samples, 16000, 1, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def synth(doc_id):
+        i = int(doc_id)
+        j = i // 5
+        fam, v = j // 4, j % 4
+        n = 130 + (fam % 7) * 13
+        samples = [
+            (((fam * 131 + s * 17) % 256) - 128)
+            * ((1 + v) if (s * 65) // n == 64 else 1)
+            for s in range(n)
+        ]
+        return [(encode_wav(samples, 16000, 1, bits=16),)]
 
     # NOT spread — same banded-self-join A/B as image_neardup above (r11)
-    payloads = d.mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(d, "payload binary", synth, value_col="doc_id")
     return audio_neardup_pairs(payloads, max_hamming=3).select(
         "id_a", "id_b", "hamming"
     )
@@ -8568,27 +8497,21 @@ def _q_multimodal_audio_neardup(spark, sf_dir):
     "Value-exact",
 )
 def _q_multimodal_jpeg_pixels(spark, sf_dir):
-    from ..operators.multimodal import encode_jpeg_gray, jpeg_pixel_stats
+    from ..operators.multimodal import encode_jpeg_gray, jpeg_pixel_stats, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        bw, bh = 1 + i % 3, 1 + (i * 2) % 3
+        w, h = 8 * bw, 8 * bh
+        px = bytes(
+            (i * 37 + (y // 8) * 11 + (x // 8) * 23) % 256
+            for y in range(h) for x in range(w)
+        )
+        return [(encode_jpeg_gray(px, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + (i * 2) % 3
-                w, h = 8 * bw, 8 * bh
-                px = bytes(
-                    (i * 37 + (y // 8) * 11 + (x // 8) * 23) % 256
-                    for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_jpeg_gray(px, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return jpeg_pixel_stats(payloads)
 
 
@@ -8632,27 +8555,25 @@ def _q_multimodal_jpeg_pixels(spark, sf_dir):
     "shapes (tests/test_jpeg_progressive.py). Value-exact",
 )
 def _q_multimodal_jpeg_progressive(spark, sf_dir):
-    from ..operators.multimodal import encode_jpeg_progressive, jpeg_pixel_stats
+    from ..operators.multimodal import (
+        encode_jpeg_progressive,
+        jpeg_pixel_stats,
+        map_payloads,
+    )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        bw, bh = 1 + i % 3, 1 + (i * 2) % 3
+        w, h = 8 * bw, 8 * bh
+        px = bytes(
+            (i * 41 + (y // 8) * 19 + (x // 8) * 29) % 256
+            for y in range(h) for x in range(w)
+        )
+        return [(encode_jpeg_progressive(px, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + (i * 2) % 3
-                w, h = 8 * bw, 8 * bh
-                px = bytes(
-                    (i * 41 + (y // 8) * 19 + (x // 8) * 29) % 256
-                    for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_jpeg_progressive(px, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return jpeg_pixel_stats(payloads)
 
 
@@ -8698,31 +8619,23 @@ def _q_multimodal_jpeg_progressive(spark, sf_dir):
     "(tests/test_multimodal_decode.py). Value-exact",
 )
 def _q_multimodal_jpeg_color(spark, sf_dir):
-    from ..operators.multimodal import encode_jpeg, jpeg_pixel_stats
+    from ..operators.multimodal import encode_jpeg, jpeg_pixel_stats, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        mw, mh = 1 + i % 2, 1 + (i * 3) % 2
+        w, h = 16 * mw, 16 * mh
+        rgb = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in ((i * 53 + (y // 16) * 19 + (x // 16) * 29) % 256,) * 3
+        )
+        return [(encode_jpeg(rgb, w, h, channels=3, sampling=(2, 2)),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                mw, mh = 1 + i % 2, 1 + (i * 3) % 2
-                w, h = 16 * mw, 16 * mh
-                rgb = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in ((i * 53 + (y // 16) * 19 + (x // 16) * 29) % 256,) * 3
-                )
-                payloads.append(
-                    encode_jpeg(rgb, w, h, channels=3, sampling=(2, 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return jpeg_pixel_stats(payloads)
 
 
@@ -8766,30 +8679,24 @@ def _q_multimodal_jpeg_color(spark, sf_dir):
     "construction. Value-exact",
 )
 def _q_multimodal_gif_pixels(spark, sf_dir):
-    from ..operators.multimodal import encode_gif, gif_pixel_stats
+    from ..operators.multimodal import encode_gif, gif_pixel_stats, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 13 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h = 5 + i % 9, 4 + (i * 3) % 7
+        pal = [
+            ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
+             (53 * k + 3 * i) % 256)
+            for k in range(8)
+        ]
+        idx = bytes(
+            (i + 5 * y + 7 * x) % 8 for y in range(h) for x in range(w)
+        )
+        return [(encode_gif(idx, w, h, pal),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 5 + i % 9, 4 + (i * 3) % 7
-                pal = [
-                    ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
-                     (53 * k + 3 * i) % 256)
-                    for k in range(8)
-                ]
-                idx = bytes(
-                    (i + 5 * y + 7 * x) % 8 for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_gif(idx, w, h, pal))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return gif_pixel_stats(payloads)
 
 
@@ -8825,26 +8732,20 @@ def _q_multimodal_gif_pixels(spark, sf_dir):
     "parse_image_header recognizes. Value-exact",
 )
 def _q_multimodal_bmp_pixels(spark, sf_dir):
-    from ..operators.multimodal import bmp_pixel_stats, encode_bmp
+    from ..operators.multimodal import bmp_pixel_stats, encode_bmp, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h = 3 + i % 8, 2 + (i * 5) % 6
+        rgb = bytes(
+            (i * 13 + y * 7 + x * 3 + ch * 101) % 256
+            for y in range(h) for x in range(w) for ch in range(3)
+        )
+        return [(encode_bmp(rgb, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                rgb = bytes(
-                    (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                    for y in range(h) for x in range(w) for ch in range(3)
-                )
-                payloads.append(encode_bmp(rgb, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return bmp_pixel_stats(payloads)
 
 
@@ -8879,26 +8780,20 @@ def _q_multimodal_bmp_pixels(spark, sf_dir):
     "(operators/multimodal.py:resize_nearest). Value-exact",
 )
 def _q_multimodal_resize(spark, sf_dir):
-    from ..operators.multimodal import bmp_resize_stats, encode_bmp
+    from ..operators.multimodal import bmp_resize_stats, encode_bmp, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h = 3 + i % 8, 2 + (i * 5) % 6
+        rgb = bytes(
+            (i * 13 + y * 7 + x * 3 + ch * 101) % 256
+            for y in range(h) for x in range(w) for ch in range(3)
+        )
+        return [(encode_bmp(rgb, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                rgb = bytes(
-                    (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                    for y in range(h) for x in range(w) for ch in range(3)
-                )
-                payloads.append(encode_bmp(rgb, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return bmp_resize_stats(payloads, out_w=8, out_h=6)
 
 
@@ -8955,45 +8850,39 @@ def _q_multimodal_media_resize(spark, sf_dir):
         encode_bmp,
         encode_gif,
         encode_png,
+        map_payloads,
         media_resize_stats,
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 23 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h = 3 + i % 8, 2 + (i * 5) % 6
+        if i % 3 == 0:
+            rgb = bytes(
+                (i * 13 + y * 7 + x * 3 + ch * 101) % 256
+                for y in range(h) for x in range(w) for ch in range(3)
+            )
+            return [(encode_bmp(rgb, w, h),)]
+        if i % 3 == 1:
+            pal = [
+                ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
+                 (53 * k + 3 * i) % 256)
+                for k in range(8)
+            ]
+            idx = bytes(
+                (i + 5 * y + 7 * x) % 8
+                for y in range(h) for x in range(w)
+            )
+            return [(encode_gif(idx, w, h, pal),)]
+        rgb = bytes(
+            (i * 11 + y * 5 + x * 2 + ch * 97) % 256
+            for y in range(h) for x in range(w) for ch in range(3)
+        )
+        return [(encode_png(rgb, w, h, 3),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                if i % 3 == 0:
-                    rgb = bytes(
-                        (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                        for y in range(h) for x in range(w) for ch in range(3)
-                    )
-                    payloads.append(encode_bmp(rgb, w, h))
-                elif i % 3 == 1:
-                    pal = [
-                        ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
-                         (53 * k + 3 * i) % 256)
-                        for k in range(8)
-                    ]
-                    idx = bytes(
-                        (i + 5 * y + 7 * x) % 8
-                        for y in range(h) for x in range(w)
-                    )
-                    payloads.append(encode_gif(idx, w, h, pal))
-                else:
-                    rgb = bytes(
-                        (i * 11 + y * 5 + x * 2 + ch * 97) % 256
-                        for y in range(h) for x in range(w) for ch in range(3)
-                    )
-                    payloads.append(encode_png(rgb, w, h, 3))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return media_resize_stats(payloads, out_w=8, out_h=6)
 
 
@@ -9095,30 +8984,25 @@ def _q_multimodal_video_frames(spark, sf_dir):
         avi_frame_stats,
         encode_avi_mjpeg,
         encode_jpeg_gray,
+        map_payloads,
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nf = 2 + i % 3
+        w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
+        frames = []
+        for f in range(nf):
+            px = bytes(
+                (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
+                for y in range(h) for x in range(w)
+            )
+            frames.append(encode_jpeg_gray(px, w, h))
+        return [(encode_avi_mjpeg(frames, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 2 + i % 3
-                w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
-                frames = []
-                for f in range(nf):
-                    px = bytes(
-                        (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
-                        for y in range(h) for x in range(w)
-                    )
-                    frames.append(encode_jpeg_gray(px, w, h))
-                payloads.append(encode_avi_mjpeg(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return avi_frame_stats(payloads)
 
 
@@ -9164,28 +9048,22 @@ def _q_multimodal_video_frames(spark, sf_dir):
     "Value-exact",
 )
 def _q_multimodal_video_rawdib(spark, sf_dir):
-    from ..operators.multimodal import avi_frame_stats, encode_avi_rawdib
+    from ..operators.multimodal import avi_frame_stats, encode_avi_rawdib, map_payloads
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 41 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        w, h, nf = 3 + i % 5, 2 + (i * 7) % 4, 1 + i % 3
+        frames = []
+        for f in range(nf):
+            frames.append(bytes(
+                (i * 29 + f * 37 + y * 11 + x * 5 + k * 71) % 256
+                for y in range(h) for x in range(w) for k in range(3)
+            ))
+        return [(encode_avi_rawdib(frames, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, nf = 3 + i % 5, 2 + (i * 7) % 4, 1 + i % 3
-                frames = []
-                for f in range(nf):
-                    frames.append(bytes(
-                        (i * 29 + f * 37 + y * 11 + x * 5 + k * 71) % 256
-                        for y in range(h) for x in range(w) for k in range(3)
-                    ))
-                payloads.append(encode_avi_rawdib(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return avi_frame_stats(payloads)
 
 
@@ -9233,31 +9111,26 @@ def _q_multimodal_video_resize(spark, sf_dir):
     from ..operators.multimodal import (
         encode_avi_mjpeg,
         encode_jpeg_gray,
+        map_payloads,
         media_resize_stats,
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def synth(doc_id):
+        i = int(doc_id)
+        nf = 2 + i % 3
+        w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
+        frames = []
+        for f in range(nf):
+            px = bytes(
+                (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
+                for y in range(h) for x in range(w)
+            )
+            frames.append(encode_jpeg_gray(px, w, h))
+        return [(encode_avi_mjpeg(frames, w, h),)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 2 + i % 3
-                w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
-                frames = []
-                for f in range(nf):
-                    px = bytes(
-                        (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
-                        for y in range(h) for x in range(w)
-                    )
-                    frames.append(encode_jpeg_gray(px, w, h))
-                payloads.append(encode_avi_mjpeg(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = map_payloads(spread(d), "payload binary", synth, value_col="doc_id")
     return media_resize_stats(payloads, out_w=8, out_h=6)
 
 
