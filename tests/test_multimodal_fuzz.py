@@ -291,18 +291,23 @@ _KEEPS_EVERY_ROW = {"payload_features", "decode_metadata", "sample_frames"}
                          ids=[s[0] for s in _ID_COL_STAGES])
 def test_stage_drops_only_undecodable_rows(spark, name, stage, factory):
     """A payload its decoder rejects drops its own row and nothing else:
-    next to a valid payload, random garbage and a truncated copy of the
-    valid one produce no rows, and the task does not fail."""
+    next to a valid payload, random garbage, a truncated copy of the
+    valid one and a NULL payload produce no rows, and the task does not
+    fail. The stages that keep every row keep the NULL one with NULL
+    outputs."""
     valid = factory()
     garbage = np.random.default_rng(101).integers(
         0, 256, size=len(valid), dtype=np.uint8
     ).tobytes()
     df = spark.createDataFrame(
-        [(1, valid), (2, garbage), (3, valid[: len(valid) // 2])],
+        [(1, valid), (2, garbage), (3, valid[: len(valid) // 2]), (4, None)],
         "img_id long, payload binary",
     )
     rows = stage(df).collect()
-    expected = {1, 2, 3} if name in _KEEPS_EVERY_ROW else {1}
+    expected = {1, 2, 3, 4} if name in _KEEPS_EVERY_ROW else {1}
     assert {r["img_id"] for r in rows} == expected
+    if name in _KEEPS_EVERY_ROW:
+        assert [r for r in rows if r["img_id"] == 4] == [
+            tuple([4] + [None] * (len(rows[0]) - 1))]
     if name == "decode_metadata":
-        assert {r["img_id"] for r in rows if r["media"] is None} == {2}
+        assert {r["img_id"] for r in rows if r["media"] is None} == {2, 4}

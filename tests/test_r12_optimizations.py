@@ -172,3 +172,24 @@ def test_builders_return_a_checkpointed_leaf(embeddings):
         plan = df._jdf.queryExecution().logical()
         assert plan.nodeName() == "LogicalRDD"
         assert plan.children().isEmpty()
+
+
+def test_ivf_pq_build_threads_stay_in_the_callers_job_group(spark):
+    # ann_ivf_pq_knn runs its two Lloyd chains on pool threads; every job
+    # they launch must carry the caller's job group, or job-group counts
+    # of the query (bench descriptions, per-query build jobs) miss them
+    import uuid
+
+    from vectordb_from_scratch_spark.plans.registry import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"ivf-pq-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES["ann_ivf_pq_knn"].spark(spark, "/root/testdata/sf0.001").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

@@ -192,12 +192,11 @@ def test_persisted_store_survives_writes(spark, tmp_path):
     published store is re-loaded from the NEW snapshot (the old plan's
     part files are deleted by the rename-overwrite)."""
     from vectordb_from_scratch_spark.cli import _load
+    from vectordb_from_scratch_spark.sources.persistence import write_snapshot
 
     # pre-existing snapshot -> the loaded store's lineage scans data_dir
     seed = VectorStore.empty(spark).insert("seed", [1.0, 2.0])
-    from vectordb_from_scratch_spark.cli import _save
-
-    _save(seed, str(tmp_path))
+    write_snapshot(seed.df, str(tmp_path))
     state = AppState(_load(spark, str(tmp_path), "euclidean"), data_dir=str(tmp_path))
     httpd = make_server(state)
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
@@ -222,17 +221,22 @@ def test_persisted_store_survives_writes(spark, tmp_path):
 
 @pytest.mark.parametrize("mode", ["srp", "ivf_sq8"])
 def test_persisted_publish_keeps_index_mode(spark, tmp_path, mode):
-    """A data_dir-backed publish re-loads the store from the snapshot;
-    the served store must keep its ANN mode, not fall back to exact."""
-    store = VectorStore.empty(spark).insert_batch(
+    """A data_dir-backed publish rebuilds the served rows from the
+    directory; the served store must keep its ANN mode, not fall back to
+    exact."""
+    from vectordb_from_scratch_spark.cli import _load
+    from vectordb_from_scratch_spark.sources.persistence import write_snapshot
+
+    write_snapshot(VectorStore.empty(spark).insert_batch(
         [(f"v{i}", [float(i), float(i)], {}) for i in range(1, 9)]
-    )
+    ).df, str(tmp_path))
+    store = _load(spark, str(tmp_path), "euclidean")
     if mode == "srp":
         store = store.with_ann(nbits=2, n_tables=1)
     else:
         store = store.with_ivf_sq8(n_lists=2, n_probe=2, rerank=10)
     state = AppState(store, data_dir=str(tmp_path))
-    state.publish(state.store.insert("v9", [9.0, 9.0]))
+    state.publish(state.store.upsert_entries([("v9", [9.0, 9.0])]))
     assert state.store.ann_params == store.ann_params
     assert len(state.store.list_ids()) == 9
 
@@ -243,7 +247,7 @@ def test_in_memory_publish_keeps_one_leaf(spark):
     (upsert's lazy plan stacks an anti-join and a union per write)."""
     state = AppState(VectorStore.empty(spark))
     for i in range(6):
-        state.publish(state.store.insert(f"v{i}", [float(i), 1.0]))
+        state.publish(state.store.upsert_entries([(f"v{i}", [float(i), 1.0])]))
     plan = state.store.df._jdf.queryExecution().optimizedPlan()
     assert plan.collectLeaves().size() == 1
     assert sorted(state.store.list_ids()) == [f"v{i}" for i in range(6)]
@@ -259,9 +263,9 @@ def test_in_memory_store_strategy_stays_fold(spark):
     store = VectorStore.empty(spark).insert_batch(items)
     assert choose_strategy("auto", store.df) == "window"
     state = AppState(store)
-    state.publish(store)
+    state.publish([])
     assert choose_strategy("auto", state.store.df) == "window"
-    state.publish(state.store.insert("extra", [0.5, 0.5]))
+    state.publish(state.store.upsert_entries([("extra", [0.5, 0.5])]))
     assert choose_strategy("auto", state.store.df) == "window"
 
 

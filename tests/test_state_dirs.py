@@ -6,7 +6,11 @@ fail, not overwrite, when the state exists but cannot be read."""
 from __future__ import annotations
 
 import glob
+import http.client
+import json
 import os
+import threading
+from contextlib import nullcontext
 
 import pytest
 
@@ -30,26 +34,34 @@ def _insert_abc(spark, capsys, data_dir: str) -> None:
         _cli(spark, capsys, data_dir, "insert", vid, vec)
 
 
-def test_cli_insert_recovers_a_crashed_swap(spark, tmp_path, capsys, rename_crash):
+def test_cli_insert_recovers_a_crashed_swap(spark, tmp_path, capsys, rename_crash, monkeypatch):
+    monkeypatch.setattr(P, "COMPACT_EVERY", 2)  # every second insert compacts
     d = str(tmp_path)
     data = os.path.join(d, "data")
-    _insert_abc(spark, capsys, d)
+    _insert_abc(spark, capsys, d)  # a, b compact; c is in the log
     # the state a crash between the two renames leaves, made by hand
     os.rename(data, data + ".old-0badc0de")
-    _cli(spark, capsys, d, "insert", "d", "2,2")
+    _cli(spark, capsys, d, "insert", "d", "2,2")  # compacts over it
     assert _cli(spark, capsys, d, "count") == "4"
-    assert sorted(os.listdir(d)) == ["data", "manifest.json"]
-    # the same crash, injected: the crashed write's tmp is complete, so
-    # it is the newest generation
-    with rename_crash(), pytest.raises(OSError, match="injected crash"):
-        cli.run(["--data-dir", d, "insert", "e", "3,3"], spark=spark)
-    assert _cli(spark, capsys, d, "count") == "5"
-    _cli(spark, capsys, d, "insert", "f", "4,4")
-    assert _cli(spark, capsys, d, "list").split() == list("abcdef")
-    assert sorted(os.listdir(d)) == ["data", "manifest.json"]
+    assert sorted(os.listdir(d)) == ["data", "log"]
+    _cli(spark, capsys, d, "insert", "e", "3,3")
+    # the same crash, injected into the compaction of the next insert:
+    # its log entry has committed, so the insert succeeds, and the
+    # crashed swap's tmp is complete, so it is the newest generation
+    with rename_crash():
+        _cli(spark, capsys, d, "insert", "f", "4,4")
+    assert not os.path.exists(data) and _siblings(data)
+    assert _cli(spark, capsys, d, "count") == "6"
+    _cli(spark, capsys, d, "insert", "g", "5,5")
+    _cli(spark, capsys, d, "insert", "h", "6,6")  # compacts over it
+    assert _cli(spark, capsys, d, "list").split() == list("abcdefgh")
+    assert sorted(os.listdir(d)) == ["data", "log"]
 
 
-def test_cli_insert_on_unreadable_store_fails_and_writes_nothing(spark, tmp_path, capsys):
+def test_cli_insert_on_unreadable_store_fails_and_writes_nothing(
+    spark, tmp_path, capsys, monkeypatch
+):
+    monkeypatch.setattr(P, "COMPACT_EVERY", 3)  # a, b, c fold into data/
     d = str(tmp_path)
     _insert_abc(spark, capsys, d)
     for part in glob.glob(os.path.join(d, "data", "part-*")):
@@ -123,20 +135,147 @@ def test_srp_append_after_crashed_compaction(spark, tmp_path, rename_crash):
     assert _siblings(index) == []
 
 
-def test_server_publish_recovers_a_crashed_save(spark, tmp_path, rename_crash):
+def test_server_publish_recovers_a_crashed_save(spark, tmp_path, rename_crash, monkeypatch):
     from vectordb_from_scratch_spark.server import AppState
 
+    monkeypatch.setattr(P, "COMPACT_EVERY", 2)
     d = str(tmp_path)
-    cli._save(VectorStore.empty(spark).insert("seed", [1.0, 2.0]), d)
-    state = AppState(cli._load(spark, d, "euclidean"), data_dir=d)
-    state.publish(state.store.insert("n1", [3.0, 4.0]))
+    state = AppState(VectorStore.empty(spark), data_dir=d)
+    state.publish([("insert", "seed", [1.0, 2.0], {})])
+    state.publish([("insert", "n1", [3.0, 4.0], {})])  # compacts
+    with rename_crash():
+        state.publish([("insert", "n2", [5.0, 6.0], {})])
+        state.publish([("insert", "n3", [7.0, 8.0], {})])  # compaction crashes
+    # the write stands, and the served store is what the directory resolves to
+    assert sorted(state.store.list_ids()) == ["n1", "n2", "n3", "seed"]
+    state.publish([("insert", "n4", [9.0, 1.0], {})])
+    state.publish([("insert", "n5", [2.0, 3.0], {})])
+    assert sorted(cli._load(spark, d, "euclidean").list_ids()) == [
+        "n1", "n2", "n3", "n4", "n5", "seed"]
+    assert sorted(os.listdir(d)) == ["data", "log"]
+
+
+def _ids(spark, d: str) -> list[str]:
+    return sorted(cli._load(spark, d, "euclidean").list_ids())
+
+
+def test_torn_last_log_entry_is_skipped(spark, tmp_path):
+    d = str(tmp_path)
+    log = P.open_log(spark, d)
+    for vid in "abc":
+        log = P.append(log, [("insert", vid, [1.0, 2.0], {})])
+    entries = sorted(glob.glob(os.path.join(d, "log", "*.parquet")))
+    with open(entries[-1], "r+b") as f:  # the torn write a power loss leaves
+        f.truncate(os.path.getsize(entries[-1]) // 2)
+    reopened = P.open_log(spark, d)
+    assert (reopened.seq, sorted(reopened.tail)) == (2, ["a", "b"])
+    # the next write takes the torn entry's seq and replaces it
+    P.append(reopened, [("insert", "d", [3.0, 4.0], {})])
+    assert _ids(spark, d) == ["a", "b", "d"]
+    # an unreadable entry before readable ones is damage, not a torn write
+    with open(entries[0], "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        P.open_log(spark, d)
+
+
+def test_crash_between_compaction_and_truncation_replays_nothing_twice(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(P, "COMPACT_EVERY", 4)
+    d = str(tmp_path)
+    real_remove = os.remove
+    removed: list[str] = []
+
+    def crash_after_one(path):
+        if removed:
+            raise OSError(f"injected crash before removing {path}")
+        removed.append(path)
+        real_remove(path)
+
+    log = P.open_log(spark, d)
+    log = P.append(log, [("insert", "a", [1.0, 1.0], {})])
+    log = P.append(log, [("insert", "b", [2.0, 2.0], {})])
+    log = P.append(log, [("delete", "a", None, None)])
+    monkeypatch.setattr(os, "remove", crash_after_one)
+    log = P.append(log, [("insert", "c", [3.0, 3.0], {})])  # compacts, then crashes
+    monkeypatch.setattr(os, "remove", real_remove)
+    assert P.read_manifest(d)["log_seq"] == 4
+    assert len(glob.glob(os.path.join(d, "log", "*.parquet"))) == 3
+    # the entries left at or below log_seq are already in data/: none replays
+    reopened = P.open_log(spark, d)
+    assert (reopened.seq, reopened.entries, reopened.tail) == (4, 0, {})
+    assert _ids(spark, d) == ["b", "c"]
+    # the next compaction removes them
+    for vid in "defg":
+        reopened = P.append(reopened, [("insert", vid, [4.0, 4.0], {})])
+    assert os.listdir(os.path.join(d, "log")) == []
+    assert _ids(spark, d) == list("bcdefg")
+
+
+def test_crashed_snapshot_swap_keeps_log_seq_with_its_data(spark, tmp_path, rename_crash):
+    def state(ids):
+        return spark.createDataFrame(
+            [(i, [1.0, 2.0], {}) for i in ids],
+            "id string, embedding array<double>, metadata map<string,string>",
+        )
+
+    path = str(tmp_path)
+    P.write_snapshot(state("a"), path, log_seq=3)
     with rename_crash(), pytest.raises(OSError, match="injected crash"):
-        state.publish(state.store.insert("n2", [5.0, 6.0]))
-    # the served store is what the directory resolves to
-    assert sorted(state.store.list_ids()) == ["n1", "n2", "seed"]
-    state.publish(state.store.insert("n3", [7.0, 8.0]))
-    assert sorted(cli._load(spark, d, "euclidean").list_ids()) == ["n1", "n2", "n3", "seed"]
-    assert sorted(os.listdir(d)) == ["data", "manifest.json"]
+        P.write_snapshot(state("ab"), path, log_seq=4)
+    # data/ is gone; the live generation is the crashed write's tmp, and
+    # the manifest read is the one that committed with it
+    assert not os.path.exists(os.path.join(path, "data"))
+    assert sorted(r.id for r in P.read_snapshot(spark, path).collect()) == ["a", "b"]
+    assert P.read_manifest(path)["log_seq"] == 4
+    assert P.read_manifest(path)["vector_count"] == 2
+
+
+def test_restarted_server_serves_every_acknowledged_insert(
+    spark, tmp_path, rename_crash, monkeypatch
+):
+    from vectordb_from_scratch_spark.server import AppState, make_server
+
+    monkeypatch.setattr(P, "COMPACT_EVERY", 3, raising=False)
+    d = str(tmp_path)
+
+    def call(port, method, path, body=None):
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=120)
+        try:
+            conn.request(method, path, body=None if body is None else json.dumps(body),
+                         headers={"Content-Type": "application/json"})
+            r = conn.getresponse()
+            return r.status, json.loads(r.read() or b"null")
+        finally:
+            conn.close()
+
+    def serving(fn):
+        httpd = make_server(AppState(VectorStore.empty(spark), data_dir=d))
+        t = threading.Thread(target=httpd.serve_forever, daemon=True)
+        t.start()
+        try:
+            return fn(httpd.server_address[1])
+        finally:
+            httpd.shutdown()
+            httpd.server_close()
+
+    def writes(port):
+        acked = []
+        for i in range(7):
+            # the sixth insert's compaction crashes between the swap's renames
+            with rename_crash() if i == 5 else nullcontext():
+                status, _ = call(port, "POST", "/vectors",
+                                 {"id": f"v{i}", "vector": [float(i), 1.0]})
+            if status == 201:
+                acked.append(f"v{i}")
+        assert call(port, "POST", "/vectors", {"id": "bad", "vector": [1.0]})[0] == 400
+        return acked
+
+    acked = serving(writes)
+    assert acked == [f"v{i}" for i in range(7)]
+    got = serving(lambda port: [call(port, "GET", f"/vectors/{v}") for v in acked])
+    assert [(s, b["vector"]) for s, b in got] == [(200, [float(i), 1.0]) for i in range(7)]
 
 
 def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):

@@ -106,12 +106,12 @@ def test_persisted_search_job_count(spark, tmp_path):
     is a local relation (no Python task to read it back)."""
     import numpy as np
 
-    from vectordb_from_scratch_spark.cli import _load, _save
+    from vectordb_from_scratch_spark.cli import _load
 
     rng = np.random.default_rng(3)
     vecs = rng.standard_normal((2000, 64))
     items = [(f"v{i}", v.tolist(), {"label": str(i % 10)}) for i, v in enumerate(vecs)]
-    _save(VectorStore.empty(spark).insert_batch(items), str(tmp_path))
+    P.write_snapshot(VectorStore.empty(spark).insert_batch(items).df, str(tmp_path))
     store = _load(spark, str(tmp_path), "euclidean")
     q = rng.standard_normal(64)
     d = np.sqrt(((vecs - q) ** 2).sum(axis=1))
@@ -124,6 +124,80 @@ def test_persisted_search_job_count(spark, tmp_path):
         assert [i for i, _ in res] == want and n <= 4, n
         res, n = _jobs(spark, lambda: store.search_with_filter(q.tolist(), 10, spec))
         assert [i for i, _ in res] == want_f and n <= 4, n
+
+
+def test_persisted_get_is_one_job(spark, tmp_path):
+    """A get answers vector and metadata from one collect(): one job, on
+    the snapshot and on the log tail alike."""
+    from vectordb_from_scratch_spark.server import AppState
+
+    items = [(f"v{i}", [float(i), 1.0], {"n": str(i)}) for i in range(50)]
+    P.write_snapshot(VectorStore.empty(spark).insert_batch(items).df, str(tmp_path))
+    state = AppState(VectorStore.empty(spark), data_dir=str(tmp_path))
+    state.publish(state.store.upsert_entries([("t", [7.0, 7.0], {"n": "t"})]))
+    assert _jobs(spark, lambda: state.store.lookup("v7")) == (([7.0, 1.0], {"n": "7"}), 1)
+    assert _jobs(spark, lambda: state.store.lookup("t")) == (([7.0, 7.0], {"n": "t"}), 1)
+    assert _jobs(spark, lambda: state.store.lookup("absent")) == (None, 1)
+
+
+def test_persisted_insert_runs_no_job(spark, tmp_path):
+    """A persisted insert or delete is one log entry: no Spark job for
+    the write or for the rebuilt served frame, and the served plan stays
+    one snapshot scan plus one local relation however many writes came
+    before."""
+    from vectordb_from_scratch_spark.server import AppState
+
+    items = [(f"v{i}", [float(i), 1.0], {}) for i in range(20)]
+    P.write_snapshot(VectorStore.empty(spark).insert_batch(items).df, str(tmp_path))
+    state = AppState(VectorStore.empty(spark), data_dir=str(tmp_path))
+    for i in range(5):
+        entries = state.store.upsert_entries([(f"n{i}", [0.5, float(i)])])
+        assert _jobs(spark, lambda: state.publish(entries))[1] == 0
+    state.publish(state.store.delete_entries("v3"))
+    leaves = state.store.df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 2
+    assert len(state.store) == 24 and state.store.get("n4") == [0.5, 4.0]
+
+
+def test_write_snapshot_runs_only_the_write_jobs(spark, tmp_path):
+    """vector_count comes from the written footers and dimension from
+    the caller: a snapshot launches the jobs of its parquet write and no
+    read-back job."""
+    state = spark.createDataFrame(
+        [(f"v{i}", [float(i), 2.0], {}) for i in range(30)],
+        "id string, embedding array<double>, metadata map<string,string>",
+    ).localCheckpoint()
+    _, n_write = _jobs(spark, lambda: state.write.parquet(str(tmp_path / "plain")))
+    for dim in (2, None):
+        path = str(tmp_path / f"snap{dim}")
+        manifest, n = _jobs(spark, lambda: P.write_snapshot(state, path, dimension=dim))
+        assert manifest == {"vector_count": 30, "dimension": 2, "format": "parquet"}
+        assert n == n_write
+
+
+def test_driver_tail_fold_equals_fold_insert_log(spark, tmp_path):
+    """Differential: the log rows folded on the driver (what a store
+    serves) equal crud.fold_insert_log over the same rows, deletes and
+    multi-row entries included."""
+    import random
+
+    rng = random.Random(5)
+    log = P.open_log(spark, str(tmp_path))
+    for _ in range(40):
+        ids = rng.sample([f"v{i}" for i in range(6)], rng.choice([1, 1, 3]))
+        log = P.append(log, [
+            ("delete", vid, None, None) if rng.random() < 0.3
+            else ("insert", vid, [rng.random(), rng.random()], {"n": str(rng.randrange(3))})
+            for vid in ids
+        ])
+    rows = P.read_log(str(tmp_path))
+    assert [r[0] for r in rows] == sorted(r[0] for r in rows) and rows[-1][0] == 40
+    driver = {i: v for i, v in P.fold_log(rows).items() if v is not None}
+    folded = crud.fold_insert_log(spark.createDataFrame(
+        rows, "seq long, op string, id string, embedding array<double>, "
+        "metadata map<string,string>"))
+    assert {r.id: (r.embedding, r.metadata) for r in folded.collect()} == driver
+    assert {r.id: (r.embedding, r.metadata) for r in log.frame().collect()} == driver
 
 
 def test_search_with_filter(store):

@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -117,13 +116,8 @@ def main() -> int:
         spark = mk_session()
 
     from vectordb_from_scratch_spark.plans.registry import QUERIES
-    from vectordb_from_scratch_spark.sources import TABLES
 
-    for t in TABLES:  # warm file/footer cache outside timing
-        try:
-            load_table(spark, DST, t).count()
-        except Exception:  # noqa: BLE001 — non-TPCH tables may be absent
-            pass
+    bench.warm(spark, DST)
 
     # the full 22-query family: rel_tpch_q*_shape plus the five queries
     # registered under capability names (q1=pricing_summary,
@@ -147,18 +141,9 @@ def main() -> int:
     execs: dict[str, dict] = {}
     for name in names:
         try:
-            best = float("inf")
-            for _ in range(runs):
-                before = xm.snapshot(spark) if best == float("inf") else None
-                t0 = time.perf_counter()
-                QUERIES[name].spark(spark, DST).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                if before is not None:  # bytes captured on the first run
-                    execs[name] = xm.fmt(xm.delta(before, xm.snapshot(spark)))
-                bench.release(spark)
-            timings[name] = round(best, 3)
+            timings[name], execs[name] = xm.timed_with_metrics(
+                lambda: bench.run_once(spark, name, DST), runs
+            )
         except Exception as exc:  # noqa: BLE001 — isolate per query
             timings[name] = f"ERR:{type(exc).__name__}"
         print(json.dumps({"query": name, "sec": timings[name],

@@ -7,12 +7,15 @@ from "1.0,2.0,3.0").
     python -m vectordb_from_scratch_spark --data-dir /tmp/store search "1.0,2.1" --k 5
     python -m vectordb_from_scratch_spark --data-dir /tmp/store list
 
-The store directory is a parquet table (id, embedding, metadata) — the
-snapshot format from sources/persistence.py, so the CLI, the batch
-engine, and recovery all read the same bytes. The reference's `serve`
-command maps to the HTTP layer in server.py (same 9 endpoints,
-`--host`/`--port`); the driver contract in __spark_entry__.py remains
-the batch analytics surface.
+The store directory is a parquet snapshot (id, embedding, metadata)
+plus a log of the writes past it — the layout of sources/persistence.py,
+so the CLI, the server, the batch engine and recovery read the same
+bytes. `insert` and `delete` append one fsync'd log entry and launch no
+Spark job for the write (every 1000 entries fold into a new snapshot);
+every command opens the store as the snapshot plus a replay of that
+log. The reference's `serve` command maps to the HTTP layer in
+server.py (same 9 endpoints, `--host`/`--port`); the driver contract in
+__spark_entry__.py remains the batch analytics surface.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from pyspark.sql import SparkSession
 
 from .operators.store import VectorStore, VectorNotFound
 from .session import build_session
-from .sources.persistence import read_snapshot, write_snapshot
+from .sources.persistence import StoreLog, append, open_log
 
 
 def _session() -> SparkSession:
@@ -40,17 +43,16 @@ def _session() -> SparkSession:
 
 
 def _load(spark: SparkSession, data_dir: str, metric: str) -> VectorStore:
-    df = read_snapshot(spark, data_dir)
-    if df is None:
-        return VectorStore.empty(spark, metric=metric)
-    dim_row = df.selectExpr("size(embedding) AS d").first()
-    return VectorStore(spark, df, dim_row.d if dim_row else None, metric)
+    log = open_log(spark, data_dir)
+    return VectorStore(spark, log.frame(), log.dimension, metric)
 
 
-def _save(store: VectorStore, data_dir: str) -> None:
-    # store.df's lazy plan may scan data_dir/data — the path this
-    # overwrites; write_snapshot swaps it in (sources/persistence.py)
-    write_snapshot(store.df, data_dir)
+def _save(log: StoreLog, entries: list[tuple]) -> StoreLog:
+    """The durable write of every store command and server publish:
+    `entries` as the next log entry (persistence.append). Callers look
+    it up on this module at call time, so perfbench's traced serve run
+    can time it as its `cli.save` span."""
+    return append(log, entries)
 
 
 def _parse_vec(s: str) -> list[float]:
@@ -194,21 +196,22 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> int
             serve(spark, data_dir=args.data_dir, host=args.host,
                   port=args.port, metric=args.metric, index=args.index)
             return 0
-        store = _load(spark, args.data_dir, args.metric)
+        log = open_log(spark, args.data_dir)
+        store = VectorStore(spark, log.frame(), log.dimension, args.metric)
         if args.cmd == "insert":
-            store = store.insert(args.id, _parse_vec(args.vector), _parse_meta(args.meta))
-            _save(store, args.data_dir)
+            _save(log, store.upsert_entries(
+                [(args.id, _parse_vec(args.vector), _parse_meta(args.meta))]))
             print(f"inserted {args.id}")
         elif args.cmd == "search":
             for vid, dist in store.search(_parse_vec(args.vector), k=args.k):
                 print(f"{vid} ({dist:.6f})")
         elif args.cmd == "delete":
             try:
-                store = store.delete(args.id)
+                entries = store.delete_entries(args.id)
             except VectorNotFound:
                 print(f"error: vector {args.id!r} not found", file=sys.stderr)
                 return 1
-            _save(store, args.data_dir)
+            _save(log, entries)
             print(f"deleted {args.id}")
         elif args.cmd == "list":
             for vid in sorted(store.list_ids()):

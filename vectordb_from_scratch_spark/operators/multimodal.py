@@ -124,6 +124,7 @@ def map_payloads(
     per_value,
     id_col: str = "doc_id",
     value_col: str = "payload",
+    keep_rows: bool = False,
 ) -> DataFrame:
     """The one Arrow-batch skeleton of every payload stage (and of the
     registry's in-plan payload synthesis): `per_value(value)` returns
@@ -133,16 +134,21 @@ def map_payloads(
     output schema of the single mapInPandas call. Output rows keep input
     order. The skeleton isolates nothing: whatever `per_value` raises
     fails the task, so a decoding stage wraps its decoder in
-    `_decode_or_none` itself."""
+    `_decode_or_none` itself.
+
+    A NULL value never reaches `per_value`; it is handled as the stage
+    handles undecodable bytes: its row is dropped, or — for the stages
+    that keep a row per payload (`keep_rows`) — kept with NULL outputs."""
     out_schema = f"{id_col} long, {schema}"
     columns = _ddl_names(out_schema)
+    null_rows = [(None,) * (len(columns) - 1)] if keep_rows else []
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
                 (row_id, *row)
                 for row_id, value in zip(pdf[id_col], pdf[value_col])
-                for row in per_value(value)
+                for row in (null_rows if value is None else per_value(value))
             ]
             yield pd.DataFrame(rows, columns=columns)
 
@@ -3361,7 +3367,7 @@ def decode_metadata(
         "media struct<width:int, height:int, channels:int, codec:string>, "
         "n_bytes long",
         lambda b: [(fn(b), len(b))],
-        id_col, payload_col,
+        id_col, payload_col, keep_rows=True,
     )
 
 
@@ -3386,7 +3392,7 @@ def sample_frames(
 
     return map_payloads(
         payloads, "frame_idx int, frame_md5 string, frame_bytes long",
-        frames, id_col, payload_col,
+        frames, id_col, payload_col, keep_rows=True,
     )
 
 
@@ -3398,5 +3404,5 @@ def payload_features(payloads: DataFrame, id_col: str = "doc_id", payload_col: s
     return map_payloads(
         payloads, "n_bytes long, payload_md5 string",
         lambda b: [(len(b), hashlib.md5(bytes(b)).hexdigest())],
-        id_col, payload_col,
+        id_col, payload_col, keep_rows=True,
     )

@@ -22,6 +22,7 @@ interactive use.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, replace
 from typing import Optional
 
@@ -148,36 +149,63 @@ class VectorStore:
         """Batch upsert (reference insert_batch, src/storage.rs:293-298 —
         but atomic rather than stop-at-first-error; divergence noted in
         SURVEY §2.2 R9)."""
+        return self.apply(self.upsert_entries(items))
+
+    def delete(self, id: str) -> "VectorStore":
+        """Delete one id; raises VectorNotFound if absent (reference
+        src/storage.rs:175-192)."""
+        return self.apply(self.delete_entries(id))
+
+    def upsert_entries(self, items: list[tuple]) -> list[tuple]:
+        """The log entries ("insert", id, vector, metadata) of a batch
+        upsert of (id, vector[, metadata]) items; raises
+        DimensionMismatch. No Spark job."""
         items3 = [(i, list(map(float, v)), m or {}) for i, v, *rest in items
                   for m in [rest[0] if rest else {}]]
         # reference insert_batch is a HashMap insert loop — last write per
         # id wins within one batch (duplicates must not both survive)
         items3 = list({i: (i, v, m) for i, v, m in items3}.values())
-        if not items3:
-            return self
-        dim = self._check_dim(items3)
-        updates = _local_df(self.spark, items3, STORE_SCHEMA)
-        return replace(self, df=crud.upsert(self.df, updates), dimension=dim)
+        self._check_dim(items3)
+        return [("insert", *it) for it in items3]
 
-    def delete(self, id: str) -> "VectorStore":
-        """Delete one id; raises VectorNotFound if absent (reference
-        src/storage.rs:175-192)."""
+    def delete_entries(self, id: str) -> list[tuple]:
+        """The log entry ("delete", id, None, None); raises VectorNotFound
+        when `id` is absent (one Spark job)."""
         if self.df.filter(F.col("id") == id).isEmpty():
             raise VectorNotFound(id)
-        ids = _local_df(self.spark, [(id,)], "id string")
-        return replace(self, df=crud.delete_ids(self.df, ids))
+        return [("delete", id, None, None)]
+
+    def apply(self, entries: list[tuple]) -> "VectorStore":
+        """This store with log entries (op, id, vector, metadata) applied,
+        in order — a lazy plan; no Spark job."""
+        new = self
+        for op, group in itertools.groupby(entries, key=lambda e: e[0]):
+            rows = [e[1:] for e in group]
+            if op == "insert":
+                updates = _local_df(self.spark, rows, STORE_SCHEMA)
+                new = replace(new, df=crud.upsert(new.df, updates),
+                              dimension=new._check_dim(rows))
+            else:
+                ids = _local_df(self.spark, [r[:1] for r in rows], "id string")
+                new = replace(new, df=crud.delete_ids(new.df, ids))
+        return new
 
     # -- reads --------------------------------------------------------------
 
-    # collect(), not first(): one job per lookup, where first() scans one
-    # partition and launches a second job when the id is not in it
+    def lookup(self, id: str) -> Optional[tuple[list[float], dict]]:
+        """(vector, metadata) of `id`, or None — one Spark job: collect(),
+        not first(), which scans one partition and launches a second job
+        when the id is not in it."""
+        rows = self.df.filter(F.col("id") == id).select("embedding", "metadata").collect()
+        return (list(rows[0].embedding), dict(rows[0].metadata or {})) if rows else None
+
     def get(self, id: str) -> Optional[list[float]]:
-        rows = self.df.filter(F.col("id") == id).select("embedding").collect()
-        return list(rows[0].embedding) if rows else None
+        row = self.lookup(id)
+        return row and row[0]
 
     def get_metadata(self, id: str) -> Optional[dict]:
-        rows = self.df.filter(F.col("id") == id).select("metadata").collect()
-        return dict(rows[0].metadata) if rows else None
+        row = self.lookup(id)
+        return row and row[1]
 
     def list_ids(self) -> list[str]:
         return [r.id for r in self.df.select("id").collect()]

@@ -2590,6 +2590,8 @@ def _q_knn_pq_recall(spark, sf_dir):
 def _q_ivf_pq_knn(spark, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
@@ -2599,20 +2601,23 @@ def _q_ivf_pq_knn(spark, sf_dir):
     # second chain's stages back-fill the cores the first one's tiny
     # 8/512-group aggregations leave idle (guide §2.6 "overlap
     # independent jobs"). Results are unchanged: each chain is the
-    # identical deterministic build, just scheduled concurrently.
+    # identical deterministic build, just scheduled concurrently. Each
+    # chain runs with the caller's local properties (job group and
+    # description), so its jobs count as the query's.
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(
+        f_cent = pool.submit(inherit(
             lambda: ann.build_ivf_det(
                 e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"],
                 block=_IVF_DET["block"],
             )
-        )
-        f_cb = pool.submit(
+        ))
+        f_cb = pool.submit(inherit(
             lambda: pq.pq_codebook(
                 e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
                 block=_PQ["block"],
             )
-        )
+        ))
         cent, cb = f_cent.result(), f_cb.result()
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this

@@ -63,7 +63,9 @@ from typing import Any, Optional
 
 from pyspark.sql import SparkSession
 
+from . import cli
 from .operators.store import DimensionMismatch, VectorNotFound, VectorStore
+from .sources.persistence import StoreLog, open_log
 
 __all__ = ["MetricsCollector", "AppState", "make_server", "serve", "wire_filter_to_spec"]
 
@@ -140,33 +142,38 @@ class AppState:
     """The reference's ``AppState{RwLock<VectorStore>, RwLock<Metrics>}``
     (src/server/mod.rs:13-16) as snapshot-swap: `store` is replaced,
     never mutated, under `write_lock`; readers take the current
-    reference without locking."""
+    reference without locking.
+
+    With a `data_dir` the directory is the store (sources/persistence.py):
+    its rows replace `store`'s, which keeps only its metric and index
+    mode, and every write is appended to its log before it is served."""
 
     store: VectorStore
     metrics: MetricsCollector = field(default_factory=MetricsCollector)
     write_lock: threading.Lock = field(default_factory=threading.Lock)
-    data_dir: Optional[str] = None  # if set, writes persist a snapshot here
+    data_dir: Optional[str] = None
+    log: Optional[StoreLog] = field(default=None, init=False)
 
-    def publish(self, new_store: VectorStore) -> None:
-        if self.data_dir is None:
-            # materialize, like the re-read below: serving upsert's lazy
-            # plan would stack one more anti-join and union per write
-            self.store = replace(new_store, df=new_store.df.localCheckpoint())
+    def __post_init__(self) -> None:
+        if self.data_dir is not None:
+            self._serve(open_log(self.store.spark, self.data_dir))
+
+    def _serve(self, log: StoreLog) -> None:
+        self.log = log
+        self.store = replace(self.store, df=log.frame(), dimension=log.dimension)
+
+    def publish(self, entries: list[tuple]) -> None:
+        """Serve the store with log entries (op, id, vector, metadata)
+        applied. With a data_dir they are durable first: `cli._save`
+        returns once the log entry has committed, and raises — nothing
+        published — when it has not. No Spark job either way."""
+        if self.log is not None:
+            self._serve(cli._save(self.log, entries))
             return
-        from .cli import _load, _save
-
-        try:
-            _save(new_store, self.data_dir)
-        finally:
-            # serve what the directory now resolves to, after a failed
-            # save too: the lazy plans of new_store and of the served
-            # store scan part files the swap moved or deleted — serving
-            # either would throw FileNotFoundException. The snapshot
-            # holds rows only, so the index mode carries over here.
-            self.store = replace(
-                _load(new_store.spark, self.data_dir, new_store.metric),
-                ann_params=new_store.ann_params,
-            )
+        # materialize: serving apply's lazy plan would stack one more
+        # anti-join and union per write
+        new = self.store.apply(entries)
+        self.store = replace(new, df=new.df.localCheckpoint())
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -253,9 +260,8 @@ class _Handler(BaseHTTPRequestHandler):
     def _insert(self) -> None:
         req = self._body()
         with self.state.write_lock:
-            self.state.publish(
-                self.state.store.insert(req["id"], req["vector"], req.get("metadata"))
-            )
+            self.state.publish(self.state.store.upsert_entries(
+                [(req["id"], req["vector"], req.get("metadata"))]))
         self.state.metrics.record_insert()
         self._json(201, {"id": req["id"], "status": "inserted"})
 
@@ -263,24 +269,23 @@ class _Handler(BaseHTTPRequestHandler):
         req = self._body()
         items = [(v["id"], v["vector"], v.get("metadata") or {}) for v in req["vectors"]]
         with self.state.write_lock:
-            self.state.publish(self.state.store.insert_batch(items))
+            self.state.publish(self.state.store.upsert_entries(items))
         self.state.metrics.record_insert(len(items))
         self._json(201, {"inserted": len(items)})
 
     def _get(self, vid: str) -> None:
-        store = self.state.store
-        vec = store.get(vid)
-        if vec is None:
+        row = self.state.store.lookup(vid)
+        if row is None:
             return self._err(404, f"Vector not found: {vid}")
+        vec, meta = row
         out = {"id": vid, "dimension": len(vec), "vector": vec}
-        meta = store.get_metadata(vid)
         if meta:  # serde skip_serializing_if = "HashMap::is_empty"
             out["metadata"] = meta
         self._json(200, out)
 
     def _delete(self, vid: str) -> None:
         with self.state.write_lock:
-            self.state.publish(self.state.store.delete(vid))
+            self.state.publish(self.state.store.delete_entries(vid))
         self.state.metrics.record_delete()
         self._json(200, {"id": vid, "status": "deleted"})
 
@@ -360,12 +365,7 @@ def serve(
     serves through the QUANTIZED coarse index (KMeans routing over int8
     codes + exact re-rank — the FAISS IVF-SQ design); "exact" keeps
     FlatIndex behavior. Filtered search composes with every path."""
-    if data_dir is not None:
-        from .cli import _load
-
-        store = _load(spark, data_dir, metric)
-    else:
-        store = VectorStore.empty(spark, metric=metric)
+    store = VectorStore.empty(spark, metric=metric)
     if index == "srp":
         store = store.with_ann()
     elif index == "ivf_sq8":

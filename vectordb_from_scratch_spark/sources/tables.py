@@ -117,19 +117,23 @@ def footer_rows(df: DataFrame) -> int | None:
         return None
     if not files or len(files) > _FOOTER_MAX_FILES:
         return None
-    total = 0
-    try:
-        import pyarrow.parquet as pq
-        from urllib.parse import urlparse
+    from urllib.parse import urlparse
 
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                return None
-            total += pq.ParquetFile(p.path or f).metadata.num_rows
+    urls = [urlparse(f) for f in files]
+    if any(u.scheme not in ("", "file") for u in urls):
+        return None
+    try:
+        return parquet_rows([u.path or f for u, f in zip(urls, files)])
     except Exception:
         return None
-    return total
+
+
+def parquet_rows(paths: list[str]) -> int:
+    """Row count of local parquet files from their footers alone — no
+    Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
 
 
 def spread(df: DataFrame, rows: int | None = None) -> DataFrame:
