@@ -3,8 +3,6 @@ surface) and persistence semantics (snapshot/recover/compact, P4-P6)."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +13,8 @@ from vectordb_from_scratch_spark.operators.store import (
     VectorStore,
 )
 from vectordb_from_scratch_spark.sources import persistence as P
+
+from conftest import count_jobs
 
 
 @pytest.fixture()
@@ -88,18 +88,6 @@ def test_search_batch_per_query_k(store):
         ["sunset"], ["ocean"], [], ["fire-truck", "sunset"]]
 
 
-def _jobs(spark, fn):
-    """fn's result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"store-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_persisted_search_job_count(spark, tmp_path):
     """A search on a persisted store runs the kNN plan and nothing else:
     per-query k and the order are finished on the driver, and the probe
@@ -120,9 +108,9 @@ def test_persisted_search_job_count(spark, tmp_path):
     want_f = [f"v{i}" for i in order[order % 10 == 3][:10]]
     spec = {"eq": {"field": "label", "value": "3"}}
     for _ in range(2):
-        res, n = _jobs(spark, lambda: store.search(q.tolist(), 10))
+        res, n = count_jobs(spark, lambda: store.search(q.tolist(), 10))
         assert [i for i, _ in res] == want and n <= 4, n
-        res, n = _jobs(spark, lambda: store.search_with_filter(q.tolist(), 10, spec))
+        res, n = count_jobs(spark, lambda: store.search_with_filter(q.tolist(), 10, spec))
         assert [i for i, _ in res] == want_f and n <= 4, n
 
 
@@ -135,9 +123,9 @@ def test_persisted_get_is_one_job(spark, tmp_path):
     P.write_snapshot(VectorStore.empty(spark).insert_batch(items).df, str(tmp_path))
     state = AppState(VectorStore.empty(spark), data_dir=str(tmp_path))
     state.publish(state.store.upsert_entries([("t", [7.0, 7.0], {"n": "t"})]))
-    assert _jobs(spark, lambda: state.store.lookup("v7")) == (([7.0, 1.0], {"n": "7"}), 1)
-    assert _jobs(spark, lambda: state.store.lookup("t")) == (([7.0, 7.0], {"n": "t"}), 1)
-    assert _jobs(spark, lambda: state.store.lookup("absent")) == (None, 1)
+    assert count_jobs(spark, lambda: state.store.lookup("v7")) == (([7.0, 1.0], {"n": "7"}), 1)
+    assert count_jobs(spark, lambda: state.store.lookup("t")) == (([7.0, 7.0], {"n": "t"}), 1)
+    assert count_jobs(spark, lambda: state.store.lookup("absent")) == (None, 1)
 
 
 def test_persisted_insert_runs_no_job(spark, tmp_path):
@@ -152,11 +140,64 @@ def test_persisted_insert_runs_no_job(spark, tmp_path):
     state = AppState(VectorStore.empty(spark), data_dir=str(tmp_path))
     for i in range(5):
         entries = state.store.upsert_entries([(f"n{i}", [0.5, float(i)])])
-        assert _jobs(spark, lambda: state.publish(entries))[1] == 0
+        assert count_jobs(spark, lambda: state.publish(entries))[1] == 0
     state.publish(state.store.delete_entries("v3"))
     leaves = state.store.df._jdf.queryExecution().optimizedPlan().collectLeaves()
     assert leaves.size() == 2
     assert len(state.store) == 24 and state.store.get("n4") == [0.5, 4.0]
+
+
+def test_delete_answers_tail_ids_without_a_job(spark, tmp_path, capsys):
+    """A delete checks the id against the driver-held log tail first: a
+    live tail id is deleted and a tombstoned one is not found, with no
+    Spark job; only an id the tail does not hold scans the snapshot (one
+    job). Over HTTP (the handler thread's jobs are ungrouped) and via
+    the CLI."""
+    import json
+    import threading
+    import urllib.error
+    import urllib.request
+
+    from vectordb_from_scratch_spark.cli import run as cli_run
+    from vectordb_from_scratch_spark.server import AppState, make_server
+
+    items = [(f"v{i}", [float(i), 1.0], {}) for i in range(10)]
+    P.write_snapshot(VectorStore.empty(spark).insert_batch(items).df, str(tmp_path))
+    state = AppState(VectorStore.empty(spark), data_dir=str(tmp_path))
+    state.publish(state.store.upsert_entries([("t1", [1.0, 7.0]), ("t2", [2.0, 7.0])]))
+    httpd = make_server(state)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    tracker = spark.sparkContext.statusTracker()
+
+    def delete(vid):
+        """(HTTP status, ungrouped Spark jobs run) of DELETE /vectors/vid."""
+        before = set(tracker.getJobIdsForGroup(None))
+        r = urllib.request.Request(
+            f"http://127.0.0.1:{httpd.server_address[1]}/vectors/{vid}", method="DELETE")
+        try:
+            with urllib.request.urlopen(r) as resp:
+                status = resp.status
+                json.loads(resp.read())
+        except urllib.error.HTTPError as e:
+            status = e.code
+        return status, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    try:
+        assert delete("t1") == (200, 0)     # live in the tail
+        assert delete("t1") == (404, 0)     # tombstoned in the tail
+        assert delete("v4") == (200, 1)     # snapshot only
+        assert delete("zz") == (404, 1)     # nowhere
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+    d = str(tmp_path)
+    assert count_jobs(spark, lambda: cli_run(["--data-dir", d, "delete", "t2"], spark)) == (0, 0)
+    assert count_jobs(spark, lambda: cli_run(["--data-dir", d, "delete", "t2"], spark)) == (1, 0)
+    assert count_jobs(spark, lambda: cli_run(["--data-dir", d, "delete", "v5"], spark)) == (0, 1)
+    assert "not found" in capsys.readouterr().err
+    assert sorted(P.open_log(spark, d).frame().toPandas()["id"]) == [
+        f"v{i}" for i in (0, 1, 2, 3, 6, 7, 8, 9)]
 
 
 def test_write_snapshot_runs_only_the_write_jobs(spark, tmp_path):
@@ -167,10 +208,10 @@ def test_write_snapshot_runs_only_the_write_jobs(spark, tmp_path):
         [(f"v{i}", [float(i), 2.0], {}) for i in range(30)],
         "id string, embedding array<double>, metadata map<string,string>",
     ).localCheckpoint()
-    _, n_write = _jobs(spark, lambda: state.write.parquet(str(tmp_path / "plain")))
+    _, n_write = count_jobs(spark, lambda: state.write.parquet(str(tmp_path / "plain")))
     for dim in (2, None):
         path = str(tmp_path / f"snap{dim}")
-        manifest, n = _jobs(spark, lambda: P.write_snapshot(state, path, dimension=dim))
+        manifest, n = count_jobs(spark, lambda: P.write_snapshot(state, path, dimension=dim))
         assert manifest == {"vector_count": 30, "dimension": 2, "format": "parquet"}
         assert n == n_write
 

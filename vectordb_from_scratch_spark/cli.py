@@ -207,7 +207,7 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> int
                 print(f"{vid} ({dist:.6f})")
         elif args.cmd == "delete":
             try:
-                entries = store.delete_entries(args.id)
+                entries = store.delete_entries(args.id, log.tail)
             except VectorNotFound:
                 print(f"error: vector {args.id!r} not found", file=sys.stderr)
                 return 1

@@ -42,7 +42,7 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     through here (not raw ``.localCheckpoint()``): checkpoint blocks are
     RDD cache blocks that ``DataFrame.unpersist()`` cannot reach, and
     long sessions that run many checkpoint-using queries (graph
-    iteration, CC, MMR, BPE) otherwise accumulate block-manager pressure
+    iteration, CC, BPE) otherwise accumulate block-manager pressure
     — the round-4 bench recorded 2-5× timing spikes from exactly this
     leak.
 

@@ -21,8 +21,8 @@ Scale: each iteration is one equi-join of (node, pr) against the edge
 list plus one bounded two-level aggregation — the standard distributed
 PageRank shape; edges are the big table and are never re-shuffled if
 pre-partitioned by src. Iterations unroll with a localCheckpoint per
-round (pr feeds both the contribution join and the next round's
-baseline, the same lineage-doubling shape as mmr_diversify)."""
+round: pr feeds both the contribution join and the next round's
+baseline, so without truncation the lineage doubles per round."""
 
 from __future__ import annotations
 
@@ -63,7 +63,7 @@ def triangle_count(
     # upstream subtree in the physical plan (Spark has no automatic
     # common-subplan reuse), multiplying any expensive edge derivation —
     # e.g. a kNN-graph build — by ~500 copies. localCheckpoint runs each
-    # shared stage ONCE, the same device as pagerank/mmr_diversify.
+    # shared stage ONCE, the same device as pagerank.
     canon = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))

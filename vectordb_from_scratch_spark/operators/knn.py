@@ -38,9 +38,9 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..functions import vectormath as vm
-from . import cache
 from .vecblock import choose_strategy, collect_probes, map_blocks, pairwise, topk_scan
 from ..sources.tables import spread
 
@@ -458,6 +458,57 @@ def self_knn(
     return knn(vectors, probes, k=k, metric=metric, id_col=id_col, vec_col=vec_col, **kwargs)
 
 
+def _spark_max(v, s):
+    """Spark's ``max`` of two doubles: NULL ignored, NaN above every number."""
+    if s is None or v is None:
+        return v if s is None else s
+    return s if s != s or (v == v and s > v) else v
+
+
+def _score_desc_id_asc(row):
+    """Sort key of a (score, id) row in Spark's ``score DESC, id ASC``:
+    NaN first, NULL score last, -0.0 == 0.0, NULL id first."""
+    score, i = row
+    return ((2, 0.0) if score is None else (0, 0.0) if score != score else (1, -score),
+            (0,) if i is None else (1, i))
+
+
+def _mmr_greedy(k: int, lam: float):
+    """The cogroup kernel of `mmr_diversify`: one query's k greedy picks
+    from its shortlist (id, rel) and pair sims (id_a, id_b, sim). It keeps
+    the semantics of the joins of the Spark plan it replaced: a NULL id or
+    query_id matches nothing, and from step 2 on a candidate with no pair
+    row against the picks sits the round out."""
+    oneminus = 1.0 - lam
+
+    def greedy(key, cands: pa.Table, pairs: pa.Table) -> pa.Table:
+        qid = key[0].as_py()
+        ids = cands.column("id").to_pylist()
+        lrel = [None if r is None else lam * r for r in cands.column("rel").to_pylist()]
+        by_b: dict = {}
+        for a, b, s in zip(*(pairs.column(c).to_pylist() for c in ("id_a", "id_b", "sim"))):
+            if a is not None and b is not None:
+                by_b.setdefault(b, []).append((a, s))
+        picks, msim = [], {}  # msim: id -> max sim to the picks (a key = has a pair row)
+        rows = list(zip(lrel, ids))
+        while rows and len(picks) < k and (qid is not None or not picks):
+            score, pick = min(rows, key=_score_desc_id_asc)
+            picks.append((pick, score))
+            for a, s in by_b.get(pick, ()):
+                msim[a] = _spark_max(msim[a], s) if a in msim else s
+            chosen = {i for i, _ in picks}
+            rows = [(None if r is None or msim[i] is None else r - oneminus * msim[i], i)
+                    for r, i in zip(lrel, ids) if i in msim and i not in chosen]
+        return pa.table({
+            "query_id": pa.array([qid] * len(picks), cands.schema.field("query_id").type),
+            "id": pa.array([i for i, _ in picks], cands.schema.field("id").type),
+            "mmr_rank": pa.array(range(1, len(picks) + 1), pa.int32()),
+            "score": pa.array([s for _, s in picks], pa.float64()),
+        })
+
+    return greedy
+
+
 def mmr_diversify(
     cands: DataFrame,
     pair_sims: DataFrame,
@@ -473,54 +524,31 @@ def mmr_diversify(
 
     `cands` is (query_id, id, rel) — the retrieval shortlist with its
     relevance score; `pair_sims` is (query_id, id_a, id_b, sim) for every
-    ORDERED candidate pair (both directions) of a query. The greedy loop
-    unrolls into k DataFrame stages — an argmax window + an anti-join +
-    a max-sim aggregate per step, all JVM-side (no Python in the loop),
-    all deterministic (ties on (score desc, id asc), doubles combined in
-    a fixed order) — so the whole re-rank is value-exact
-    oracle-twinnable (plans/registry.py knn_mmr_diversify).
+    ORDERED candidate pair (both directions) of a query. rel and sim come
+    from Spark; one cogroup by query_id hands each query's rows to
+    `_mmr_greedy`, which makes the k picks with the IEEE double
+    operations Spark's expressions perform (step 1 scores lam·rel; ties
+    on score DESC, id ASC), so the re-rank stays value-exact against the
+    unrolled SQL twin (plans/registry.py knn_mmr_diversify).
 
-    Scale: every stage is keyed by query_id; the shortlist per query is
-    small by construction (k' ≲ 100 from any search path), so state per
-    key is bounded and queries shard freely. Step 1's argmax is pure
-    relevance (max over the empty selected set contributes 0). Each
-    round's pick (one row per query) is localCheckpoint'd: the selected
-    set feeds TWO branches of the next round (anti-join + redundancy
-    max), so without truncation the lineage doubles per step — the same
-    reason connected_components checkpoints its labels.
+    Scale: one shuffle of each input by query_id and no job while the
+    plan is built; the shortlist per query is small by construction
+    (k' ≲ 100 from any search path), so a cogroup's state is bounded and
+    queries shard freely.
 
     Returns (query_id, id, mmr_rank 1..k, score)."""
-    q, oneminus = "query_id", 1.0 - lam
-    selected = None
-    for step in range(1, k + 1):
-        if selected is None:
-            scored = cands.select(q, "id", (F.lit(lam) * F.col("rel")).alias("score"))
-        else:
-            maxsim = (
-                pair_sims.join(
-                    selected.select(q, F.col("id").alias("id_b")), [q, "id_b"]
-                )
-                .groupBy(q, F.col("id_a").alias("id"))
-                .agg(F.max("sim").alias("__msim"))
-            )
-            scored = (
-                cands.join(selected.select(q, "id"), [q, "id"], "left_anti")
-                .join(maxsim, [q, "id"])
-                .select(
-                    q, "id",
-                    (F.lit(lam) * F.col("rel") - F.lit(oneminus) * F.col("__msim"))
-                    .alias("score"),
-                )
-            )
-        w = Window.partitionBy(q).orderBy(F.col("score").desc(), F.col("id").asc())
-        pick = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(q, "id", F.lit(step).alias("mmr_rank"), "score")
-            .transform(cache.checkpoint)
-        )
-        selected = pick if selected is None else selected.unionByName(pick)
-    return selected
+    q = "query_id"
+    schema = StructType([
+        StructField(q, cands.schema[q].dataType),
+        StructField("id", cands.schema["id"].dataType),
+        StructField("mmr_rank", IntegerType()),
+        StructField("score", DoubleType()),
+    ])
+    return (
+        cands.select(q, "id", F.col("rel").cast("double")).groupBy(q)
+        .cogroup(pair_sims.select(q, "id_a", "id_b", F.col("sim").cast("double")).groupBy(q))
+        .applyInArrow(_mmr_greedy(k, lam), schema)
+    )
 
 
 def ranking_metrics(

@@ -168,10 +168,17 @@ class VectorStore:
         self._check_dim(items3)
         return [("insert", *it) for it in items3]
 
-    def delete_entries(self, id: str) -> list[tuple]:
+    def delete_entries(self, id: str, tail: dict | None = None) -> list[tuple]:
         """The log entry ("delete", id, None, None); raises VectorNotFound
-        when `id` is absent (one Spark job)."""
-        if self.df.filter(F.col("id") == id).isEmpty():
+        when `id` is absent. `tail` is the store directory's folded log
+        tail (`StoreLog.tail`, id -> row or None for a tombstone): an id
+        it holds is answered from it with no Spark job; any other id
+        costs one job over the store."""
+        if id in (tail or {}):
+            absent = tail[id] is None
+        else:
+            absent = self.df.filter(F.col("id") == id).isEmpty()
+        if absent:
             raise VectorNotFound(id)
         return [("delete", id, None, None)]
 

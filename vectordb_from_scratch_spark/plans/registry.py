@@ -2814,8 +2814,8 @@ def _sql_mmr() -> str:
     """Unrolled DuckDB twin of knn.mmr_diversify: shortlist by cosine
     relevance, pairwise sims among the shortlist, then k greedy argmax
     steps — step i's redundancy term is max sim against the union of the
-    first i-1 picks; the anti-membership LEFT JOIN ... IS NULL mirrors
-    the Spark left_anti. lam = 0.5 keeps both weights exact doubles."""
+    first i-1 picks, and the anti-membership LEFT JOIN ... IS NULL drops
+    them from the pool. lam = 0.5 keeps both weights exact doubles."""
     p = _MMR
     lam = p["lam"]
     ctes = [
@@ -2880,8 +2880,9 @@ def _sql_mmr() -> str:
     doc="Maximal Marginal Relevance diversity re-rank (Carbonell & "
     "Goldstein SIGIR'98, public): top-20 cosine shortlist per query, "
     "then 5 greedy picks maximizing lam·rel − (1−lam)·max-sim-to-"
-    "selected (knn.mmr_diversify — unrolled JVM-side argmax stages, no "
-    "Python in the loop). The diversity tail of a RAG stack; "
+    "selected (knn.mmr_diversify — rel and sims in Spark, the greedy "
+    "picks in one cogrouped Arrow kernel per query). The diversity tail "
+    "of a RAG stack; "
     "value-exact incl. every greedy step",
 )
 def _q_knn_mmr_diversify(spark, sf_dir):
@@ -2905,7 +2906,7 @@ def _q_knn_mmr_diversify(spark, sf_dir):
     )
     from ..operators.cache import track
 
-    cands = track(cands)  # feeds rel scoring, pair sims, and every greedy step
+    cands = track(cands)  # feeds the shortlist side and both sides of the pair sims
     a, b = cands.alias("a"), cands.alias("b")
     pair_sims = a.join(
         b,

@@ -285,7 +285,8 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _delete(self, vid: str) -> None:
         with self.state.write_lock:
-            self.state.publish(self.state.store.delete_entries(vid))
+            log = self.state.log
+            self.state.publish(self.state.store.delete_entries(vid, log and log.tail))
         self.state.metrics.record_delete()
         self._json(200, {"id": vid, "status": "deleted"})
 
