@@ -52,7 +52,7 @@ def test_build_kernel_strategy_matches_fold(embeddings):
             for r in ann.build_ivf_det(
                 embeddings, n_lists=6, iters=2, assign_strategy="kernel"
             ).collect()}
-    # identical assignments ⇒ _det_centroids' fixed tree gives
+    # identical assignments ⇒ ann.fold_tree_mean's fixed tree gives
     # bit-identical doubles — the equality is exact, not approximate
     assert kern == fold
 

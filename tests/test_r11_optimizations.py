@@ -132,7 +132,7 @@ def test_pq_encode_equals_explode_groupby(ivf_parts, embeddings):
         id_col="vec_id", vec_col="embedding",
     )
     old = (
-        pq._assign_codes(sv, cb)
+        ann.nearest_centroid(sv.withColumnRenamed("svec", "vec"), cb, ("sub", "code"))
         .groupBy("id")
         .agg(
             F.transform(

@@ -132,7 +132,7 @@ def test_build_ivf_det_checkpointed_loop_bitwise(embeddings):
         F.col("vec").alias("cvec"),
     )
     for _ in range(iters):
-        ref = ann._det_centroids(ann.assign_ivf_det(v, ref), ref, block)
+        ref = ann.lloyd_round(v, ref, block)
     _assert_same(cent, ref)
 
 
@@ -156,9 +156,9 @@ def test_pq_codebook_checkpointed_loop_bitwise(embeddings):
     ref = pq.subvectors(coded, m, d_sub, id_col="code", vec_col="vec").select(
         "sub", F.col("id").cast("int").alias("code"), F.col("svec").alias("cvec")
     )
-    sv = pq.subvectors(v, m, d_sub)
+    sv = pq.subvectors(v, m, d_sub).select("sub", "id", F.col("svec").alias("vec"))
     for _ in range(iters):
-        ref = pq._update_codebook(pq._assign_codes(sv, ref), ref, block)
+        ref = ann.lloyd_round(sv, ref, block, ("sub", "code"))
     _assert_same(cb, ref)
 
 

@@ -50,8 +50,15 @@ __all__ = [
     "ann_join_mllib",
     "build_ivf",
     "build_ivf_det",
+    "ivf_det_index",
     "assign_ivf_det",
     "assign_ivf_kernel",
+    "spread_vectors",
+    "md5_seeds",
+    "nearest_centroid",
+    "fold_tree_mean",
+    "lloyd_round",
+    "det_lloyd",
     "ann_knn_ivf",
     "ivf_sq8_index",
     "ann_knn_ivf_sq8",
@@ -435,7 +442,8 @@ def assign_ivf_det(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (euclidean, tie-break
     on list_id asc). `vectors` is (id, vec); `centroids` is (list_id,
     cvec) — tiny (n_lists rows), collapsed to ONE array row and
-    broadcast, so the assignment is a zero-shuffle per-row expression.
+    broadcast, so the assignment is a zero-shuffle per-row expression
+    (nearest_centroid with no partitioning key).
 
     Distances use the same left-fold euclidean as exact k-NN, so the
     assignment an external engine computes with the same fold is
@@ -446,53 +454,26 @@ def assign_ivf_det(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     pairs through an Exchange + per-id window sort (the pre-r11 shape:
     at 100M rows × 640 lists that window shuffled 64B vector-carrying
     rows; this is one narrow map over the vectors — guide §2.4).
-    Verified exceptAll-empty against the window form, and the full
-    build_ivf_det centroid chain through it, at sf0.01/sf0.1.
 
-    Parallelism contract (r12, VERDICT r11 #2): this is a pure narrow
-    map — it inherits its input's partitioning and does NOT spread()
-    (the r11 in-function spread probed partition counts of arbitrarily
-    deep plans at DataFrame-build time — a full physical planning pass
-    per Lloyd iteration — and stacked a RoundRobin exchange per engaged
-    call: ann_ivf_pq_knn's plan grew 150→179 Exchanges and the driver
-    measured 7.8→24.1 s). Callers spread the SHALLOW source scan once
-    (build_ivf_det, semantic_dedup, the registry IVF sites do); every
-    iteration re-derives from that source, so the parallelism persists
-    with zero extra shuffles."""
-    cent_arr = centroids.groupBy().agg(
-        F.collect_list(F.struct("list_id", "cvec")).alias("__cents")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(
-                vm.euclidean_distance(F.col("vec"), c["cvec"]).alias("d"),
-                c["list_id"].alias("list_id"),
-            ),
-        )
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cent_arr))
-        .select("id", "vec", best["list_id"].alias("list_id"))
-        # empty-centroids faithfulness: the pre-r11 crossJoin emitted no
-        # rows against an empty centroid table; the global collect_list
-        # agg always emits one (empty-array) row, so drop the NULL argmin
-        .filter(F.col("list_id").isNotNull())
-    )
+    Parallelism contract: a pure narrow map — it inherits its input's
+    partitioning and does NOT spread(). Callers pass a frame from
+    spread_vectors (the shallow source, spread once); spreading here
+    would probe the partition count of an arbitrarily deep plan at
+    DataFrame-build time and stack a RoundRobin exchange per call."""
+    return nearest_centroid(vectors, centroids)
 
 
 def assign_ivf_kernel(
     vectors: DataFrame, centroids: DataFrame, *, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Arrow-batched BLAS twin of assign_ivf_det — the index-BUILD scale
-    path. The fold-exact plan materializes rows × n_lists pairs through a
-    per-id window sort: the right shape for the oracle-twinned builds
-    (bit-identical to DuckDB at sf0.01/0.1), but at 100M rows × 640 lists
-    that is 64 BILLION intermediate rows carrying full vectors into a
-    window shuffle — a multi-TB sort that no disk survives. This kernel
-    broadcasts the (n_lists × dim) centroid matrix in the task closure
-    and turns the assignment into one argmin(−2·X·Cᵀ + ‖c‖²) GEMM per
-    Arrow batch: no join, no shuffle, one narrow pass over the vectors.
+    path. The fold plan evaluates n_lists interpreted euclidean folds per
+    row (one lambda step per dimension per centroid) inside its broadcast
+    array_min: exact and oracle-twinned, but at 100M rows × 640 lists that
+    is 4·10¹² interpreted steps. This kernel broadcasts the (n_lists × dim)
+    centroid matrix in the task closure and turns the assignment into one
+    argmin(−2·X·Cᵀ + ‖c‖²) GEMM per Arrow batch: no join, no shuffle, one
+    narrow pass over the vectors.
 
     Tie-break matches the fold's (distance asc, list_id asc): np.argmin
     returns the FIRST minimum and centroid rows are ordered list_id asc.
@@ -540,36 +521,108 @@ def assign_ivf_kernel(
     )
 
 
-def _det_centroids(assigned: DataFrame, prev: DataFrame, block: int) -> DataFrame:
-    """Recompute centroids as per-dimension means with a FIXED two-level
-    reduction tree keyed on id ranges: within an id-block, values fold in
-    id order; block partial sums fold in block order. The summation tree
-    is a function of the DATA (ids), not of Spark's partitioning, so the
-    double-precision result is identical on any cluster layout — and in
-    any engine that folds the same tree (the DuckDB oracle does).
+# Deterministic Lloyd's k-means: the one implementation behind the IVF
+# coarse quantizer (build_ivf_det, group ("list_id",)) and the PQ
+# codebooks (pq.pq_codebook, group ("sub", "code")). A `group` names the
+# centroid key: its LAST column is the label a point is assigned to, the
+# columns before it (none for IVF, `sub` for PQ) partition the centroids
+# into independent k-means problems trained in one job chain. Points are
+# (*keys, id long, vec array<double>); centroids are (*group, cvec).
+
+
+def spread_vectors(
+    vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    *,
+    fanout: int = 1,
+) -> DataFrame:
+    """The shallow source of every deterministic build: spread the scan
+    ONCE (tables.spread, sized for `fanout` work rows per input row — PQ
+    iterates over m subvectors per vector) and project to (id long, vec
+    array<double>). Every Lloyd round and the final assignment are narrow
+    maps re-derived from this frame, so they inherit its partitioning with
+    no per-round planning probe or exchange. No-op at real scale."""
+    from ..sources.tables import footer_rows, spread
+
+    rows = footer_rows(vectors)
+    return spread(vectors, rows=None if rows is None else rows * fanout).select(
+        F.col(id_col).cast("long").alias("id"), vm.as_double(vec_col).alias("vec")
+    )
+
+
+def md5_seeds(points: DataFrame, n: int, label: str) -> DataFrame:
+    """Lloyd init: the first `n` (id, vec) rows ordered by md5(id), as
+    (label int 0..n-1, cvec) — a cheap engine-portable pseudo-random draw
+    (the reference seeds its RNG in the same spirit, src/hnsw/graph.rs:70).
+    orderBy().limit(n) compiles to TakeOrderedAndProject (per-partition
+    partial top-n, driver merges n-row sets), so no full-table sort or
+    single-partition window exists; the only window runs over the n
+    picked rows."""
+    from pyspark.sql import Window
+
+    order = (F.md5(F.col("id").cast("string")).asc(), F.col("id").asc())
+    return points.orderBy(*order).limit(n).select(
+        (F.row_number().over(Window.orderBy(*order)) - 1).cast("int").alias(label),
+        F.col("vec").alias("cvec"),
+    )
+
+
+def nearest_centroid(
+    points: DataFrame, centroids: DataFrame, group: tuple[str, ...] = ("list_id",)
+) -> DataFrame:
+    """Label every point with its nearest centroid among those sharing
+    its keys: euclidean, tie-break label asc. The centroids collapse to
+    one array row per key (one row in all for IVF) and broadcast; the
+    argmin is a lexicographic array_min over (distance, label) structs
+    evaluated per row — the (distance asc, label asc) winner the oracle's
+    row_number picks, with zero exchange of the point table. Returns
+    (*keys, id, vec, label); a point with no centroids gets no row."""
+    *keys, label = group
+    arr = F.broadcast(
+        centroids.groupBy(*keys).agg(F.collect_list(F.struct(label, "cvec")).alias("__cents"))
+    )
+    best = F.array_min(
+        F.transform(
+            F.col("__cents"),
+            lambda c: F.struct(
+                vm.euclidean_distance(F.col("vec"), c["cvec"]).alias("d"),
+                c[label].alias(label),
+            ),
+        )
+    )
+    joined = points.join(arr, on=keys) if keys else points.crossJoin(arr)
+    return (
+        joined.select(*keys, "id", "vec", best[label].alias(label))
+        # the keyless global collect_list always emits one row, an empty
+        # array against no centroids: drop its NULL argmin
+        .filter(F.col(label).isNotNull())
+    )
+
+
+def fold_tree_mean(assigned: DataFrame, group: tuple[str, ...], block: int) -> DataFrame:
+    """Per-group mean vector (*group, cvec) of (*group, id, vec) rows with
+    a FIXED two-level reduction tree keyed on id ranges: within an
+    id-block of `block` ids, vectors fold in id order; block partial sums
+    fold in block order. The summation tree is a function of the DATA
+    (ids), not of Spark's partitioning, so the double-precision result is
+    identical on any cluster layout — and in any engine that folds the
+    same tree (the DuckDB oracle does).
 
     Plain F.sum would shuffle less state but its accumulation order
     follows the partitioning, making the low bits of the mean
     run-dependent; decimal accumulation is order-independent but
     double→decimal casts themselves disagree across engines (Spark casts
     via the shortest decimal repr, DuckDB via the exact binary value).
-    The per-group collect_list is bounded by `block` (default 4096
-    values), so executor memory stays flat at any table size.
+    The per-group collect_list is bounded by `block`, so executor memory
+    stays flat at any table size.
 
-    Empty clusters keep their previous centroid (left-join + coalesce),
-    the same convention MLlib KMeans uses."""
-    # Fold WHOLE VECTORS element-wise instead of posexploding to
-    # rows×dim before the shuffle: per (list, blk) the rows sort by id
-    # once and their vectors fold via zip_with addition — per dimension
-    # this is the SAME additions in the SAME id-then-blk order as the
-    # original per-(pos) formulation, so the doubles are bit-identical
-    # (oracle unchanged), but the shuffle moves `rows` records instead
-    # of `rows×dim` exploded (list_id, id, blk, pos, val) tuples and
-    # runs one hash aggregation instead of dim of them. At sf0.1 the
-    # bench family is stage-overhead-bound so this measures neutral; the
-    # 64× shuffle-volume cut is the 100-TB effect (a 1B-row × 64-dim
-    # build shuffles 64 GB of keys+values instead of 4 TB of exploded
-    # tuples).
+    Whole vectors fold element-wise (zip_with) rather than posexploding
+    to rows×dim: per dimension the SAME additions run in the SAME
+    id-then-block order, while the shuffle moves `rows` records instead
+    of rows×dim exploded tuples and runs one hash aggregation instead of
+    dim of them."""
+
     def vsum(lst: str, field: str):
         # fold a SORTED list of (key, vector) structs into the element-wise
         # sum, starting from a zero vector shaped like the first entry; the
@@ -581,34 +634,72 @@ def _det_centroids(assigned: DataFrame, prev: DataFrame, block: int) -> DataFram
             col, zero, lambda acc, s: F.zip_with(acc, s[field], lambda a, x: a + x)
         )
 
-    ex = assigned.select(
-        "list_id", "id", F.expr(f"id div {block}").alias("blk"), "vec"
-    )
     l1 = (
-        ex.groupBy("list_id", "blk")
+        assigned.select(*group, "id", F.expr(f"id div {block}").alias("blk"), "vec")
+        .groupBy(*group, "blk")
         .agg(
             F.collect_list(F.struct("id", "vec")).alias("__lst"),
             F.count("*").alias("n1"),
         )
-        .select("list_id", "blk", vsum("__lst", "vec").alias("s1"), "n1")
+        .select(*group, "blk", vsum("__lst", "vec").alias("s1"), "n1")
     )
     l2 = (
-        l1.groupBy("list_id")
+        l1.groupBy(*group)
         .agg(
             F.collect_list(F.struct("blk", "s1")).alias("__lst"),
             F.sum("n1").alias("n"),
         )
-        .select("list_id", vsum("__lst", "s1").alias("s"), "n")
+        .select(*group, vsum("__lst", "s1").alias("s"), "n")
     )
-    newc = l2.select(
-        "list_id",
-        F.transform("s", lambda sv: sv / F.col("n")).alias("cvec"),
+    return l2.select(*group, F.transform("s", lambda sv: sv / F.col("n")).alias("cvec"))
+
+
+def lloyd_round(
+    points: DataFrame,
+    centroids: DataFrame,
+    block: int,
+    group: tuple[str, ...] = ("list_id",),
+    assign=None,
+) -> DataFrame:
+    """One Lloyd round: assign (nearest_centroid, or `assign(points,
+    centroids)` — e.g. assign_ivf_kernel), then fold_tree_mean. Empty
+    clusters keep their previous centroid (left-join + coalesce), the
+    same convention MLlib KMeans uses."""
+    assigned = (
+        nearest_centroid(points, centroids, group)
+        if assign is None else assign(points, centroids)
     )
+    new = fold_tree_mean(assigned, group, block)
     return (
-        prev.alias("p")
-        .join(newc.alias("n"), "list_id", "left")
-        .select("list_id", F.coalesce(F.col("n.cvec"), F.col("p.cvec")).alias("cvec"))
+        centroids.alias("p")
+        .join(new.alias("n"), list(group), "left")
+        .select(*group, F.coalesce(F.col("n.cvec"), F.col("p.cvec")).alias("cvec"))
     )
+
+
+def det_lloyd(
+    points: DataFrame,
+    centroids: DataFrame,
+    iters: int,
+    block: int,
+    group: tuple[str, ...] = ("list_id",),
+    assign=None,
+) -> DataFrame:
+    """`iters` lloyd_rounds from the initial `centroids`. Each round
+    references the incoming centroids TWICE (the assign and the
+    empty-cluster fallback join), so an unmaterialized loop nests the
+    previous round's whole subtree 2× per iteration — 2^iters copies of
+    the seed selection in the final plan, each re-planned and re-executed
+    wherever exchange reuse misses. The centroid table is tiny: an eager
+    localCheckpoint per round linearizes the build into `iters` small
+    sequential jobs (the shape MLlib's own Lloyd runs) and keeps every
+    consumer's plan shallow. Values unchanged — a checkpoint is a pure
+    materialization barrier."""
+    from .cache import checkpoint
+
+    for _ in range(iters):
+        centroids = checkpoint(lloyd_round(points, centroids, block, group, assign))
+    return centroids
 
 
 def build_ivf_det(
@@ -622,25 +713,17 @@ def build_ivf_det(
     train_mod: int = 1,
     assign_strategy: str = "fold",
 ) -> DataFrame:
-    """Deterministic IVF coarse quantizer: Lloyd's k-means with md5-seeded
-    init and a fixed-tree mean (see _det_centroids), yielding centroids
-    that are BIT-IDENTICAL across runs, partitionings, and engines — the
+    """Deterministic IVF coarse quantizer: det_lloyd from md5_seeds
+    over spread_vectors(vectors), yielding centroids that are
+    BIT-IDENTICAL across runs, partitionings, and engines — the
     oracle-twinnable correctness spec for the IVF index that build_ivf
     (MLlib KMeans, RNG-seeded) can only match rows-only.
-
-    Init picks the first `n_lists` vectors ordered by md5(id): a cheap
-    engine-portable pseudo-random draw (the reference seeds its RNG the
-    same spirit, src/hnsw/graph.rs:70). The selection is a global
-    orderBy().limit(n_lists) — Catalyst compiles it to
-    TakeOrderedAndProject (per-partition partial top-k, driver merges
-    n_lists-row sets), so no full-table sort or single-partition window
-    exists anywhere in the build plan; the only window runs over the
-    n_lists selected rows.
 
     Returns the centroids DataFrame (list_id int, cvec array<double>).
     Iteration materializes nothing driver-side (no collect); each round
     is a broadcast-assign plus one bounded-group aggregation, the same
-    shuffle shape MLlib KMeans runs internally.
+    shuffle shape MLlib KMeans runs internally. ivf_det_index also
+    returns the assignment of every vector.
 
     ``train_mod``: Lloyd iterations train on the deterministic 1/train_mod
     subset ``pmod(xxhash64(id), train_mod) == 0`` (the whole table at the
@@ -660,19 +743,13 @@ def build_ivf_det(
     spec. "kernel" routes them through assign_ivf_kernel (BLAS argmin,
     one narrow pass): the scale path for big training sets, at the cost
     of eager per-iteration centroid collection (n_lists rows/round) and
-    last-ulp tie divergence from the fold — not oracle-twinnable."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import spread
-
-    # spread ONCE at the (shallow) source: every Lloyd round's assign is
-    # a narrow map re-derived from `train`, so this single round-robin
-    # covers all iterations — the r11 shape spread inside assign_ivf_det
-    # instead, paying a physical-planning probe plus a RoundRobin
-    # exchange PER ROUND (VERDICT r11 #2). No-op at real scale.
-    v = spread(vectors).select(
-        F.col(id_col).cast("long").alias("id"), vm.as_double(vec_col).alias("vec")
-    )
+    last-ulp tie divergence from the fold — not oracle-twinnable. Any
+    other value raises ValueError."""
+    if assign_strategy not in ("fold", "kernel"):
+        raise ValueError(
+            f"assign_strategy must be 'fold' or 'kernel', got {assign_strategy!r}"
+        )
+    v = spread_vectors(vectors, id_col, vec_col)
     train = (
         v if train_mod <= 1
         else v.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(train_mod)) == 0)
@@ -685,29 +762,30 @@ def build_ivf_det(
         # bounded at n_lists rows per partition.
         if train.limit(n_lists).count() < n_lists:
             train = v  # fall back to full-data training rather than mis-build
-    seed_key = F.md5(F.col("id").cast("string"))
-    seeds = train.orderBy(seed_key.asc(), F.col("id").asc()).limit(n_lists)
-    w = Window.orderBy(seed_key.asc(), F.col("id").asc())  # over n_lists rows only
-    cent = seeds.select(
-        (F.row_number().over(w) - 1).cast("int").alias("list_id"),
-        F.col("vec").alias("cvec"),
-    )
-    assign = assign_ivf_det if assign_strategy == "fold" else assign_ivf_kernel
-    from .cache import checkpoint as _checkpoint
+    assign = assign_ivf_kernel if assign_strategy == "kernel" else None
+    return det_lloyd(train, md5_seeds(train, n_lists, "list_id"), iters, block,
+                     assign=assign)
 
-    for _ in range(iters):
-        # each round references the incoming centroids TWICE (the assign
-        # and the empty-cluster fallback join), so an unmaterialized loop
-        # nests the previous round's whole subtree 2× per iteration —
-        # 2^iters copies of the seed selection in the final plan, each
-        # re-planned and re-executed wherever exchange reuse misses
-        # (r12). The centroid table is n_lists rows: an eager
-        # localCheckpoint per round linearizes the build into `iters`
-        # small sequential jobs (the shape MLlib's own Lloyd runs) and
-        # keeps every consumer's plan shallow. Values unchanged — a
-        # checkpoint is a pure materialization barrier.
-        cent = _checkpoint(_det_centroids(assign(train, cent), cent, block))
-    return cent
+
+def ivf_det_index(
+    vectors: DataFrame,
+    n_lists: int = 8,
+    iters: int = 2,
+    *,
+    block: int = 4096,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic IVF index in one call: (centroids, assigned) —
+    build_ivf_det's centroids (list_id, cvec), returned checkpointed, and
+    the lazy assign_ivf_det of every vector, (id long, vec array<double>,
+    list_id int). Both derive from ONE spread_vectors frame, so the
+    assignment inherits the build's source partitioning. Callers that
+    reuse `assigned` across consumers persist or checkpoint it
+    themselves."""
+    v = spread_vectors(vectors, id_col, vec_col)
+    cent = det_lloyd(v, md5_seeds(v, n_lists, "list_id"), iters, block)
+    return cent, assign_ivf_det(v, cent)
 
 
 def _route_queries(

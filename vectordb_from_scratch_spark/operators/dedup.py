@@ -674,16 +674,11 @@ def semantic_dedup(
     are 0.9+ per the paper."""
     from pyspark.sql import Window
 
-    from ..functions import vectormath as vm
-    from .ann import assign_ivf_det
+    from .ann import assign_ivf_det, spread_vectors
 
-    # spread the shallow source once — assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2); the persisted assignment keeps this
+    # the persisted assignment keeps the shallow source's spread
     # partitioning for every consumer
-    v = spread(embeddings).select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
+    v = spread_vectors(embeddings, id_col, vec_col)
     # the assignment feeds BOTH sides of the pair self-join, the node
     # list, and the singleton join-back — persist it (session cache
     # registry) so it computes once. (A localCheckpoint was tried for

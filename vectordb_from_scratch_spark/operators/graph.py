@@ -5,11 +5,10 @@ iterative graph operator; useful in data curation for link/citation
 centrality weighting.
 
 Deterministic by construction, the repo's oracle contract: the
-per-target contribution sum uses the fixed two-level src-block
-reduction tree (same device as ann._det_centroids) so the double
-result is a function of the DATA, not Spark's partitioning — and any
-engine folding the same tree (the DuckDB twin) reproduces it
-bit-for-bit.
+per-target contribution sum accumulates in DECIMAL(28,18), which is
+exact and order-independent, so the result is a function of the DATA,
+not Spark's partitioning; the DuckDB twin sums the same decimals (see
+pagerank for the cross-engine cast bound).
 
 Simplified formulation (documented divergence from the full random
 surfer): dangling nodes' mass is NOT redistributed — pr'(v) =
@@ -138,7 +137,6 @@ def pagerank(
     iters: int = 3,
     damping: float = 0.85,
     *,
-    block: int = 4096,  # retained for API compat; unused since the decimal rewrite
     src_col: str = "src",
     dst_col: str = "dst",
 ) -> DataFrame:
@@ -153,8 +151,8 @@ def pagerank(
     reproducible within each engine, executed as a plain hash aggregate
     WITH map-side partials: no collect_list, no per-group array sort, no
     interpreted fold lambda. Bench: 7.4 s → ~3.8 s at sf0.1 (600k-edge
-    graph, 3 iterations); the fold-tree device (_det_centroids) costs
-    the difference.
+    graph, 3 iterations); the fold-tree device (ann.fold_tree_mean)
+    costs the difference.
 
     Cross-engine contract (weaker than the fold tree's, deliberately):
     double→decimal casts can disagree between engines in the 18th

@@ -18,11 +18,11 @@ candidates stream through one scan stage; the optional exact re-rank
 touches only the shortlist.
 
 Everything is deterministic and engine-portable, the repo's oracle
-contract: codebook init is the first `ks` vectors ordered by md5(id)
-(the same engine-portable pseudo-random draw as ann.build_ivf_det),
-Lloyd updates use the fixed two-level id-block reduction tree (sums
-independent of Spark's partitioning), assignment ties break on code asc,
-and the ADC sum folds sub-ascending. The DuckDB twin in plans/registry.py
+contract: the codebook trains on the same deterministic Lloyd as
+ann.build_ivf_det (ann.det_lloyd: md5(id)-ordered seeds, the fixed
+two-level id-block reduction tree whose sums are independent of Spark's
+partitioning, assignment ties broken on code asc), and the ADC sum folds
+sub-ascending. The DuckDB twin in plans/registry.py
 reproduces every value bit-for-bit.
 
 Not in the reference (it stores raw f32 and searches flat or via HNSW,
@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectormath as vm
+from .ann import det_lloyd, md5_seeds, spread_vectors
 from .vecblock import choose_strategy
 
 __all__ = [
@@ -65,91 +66,6 @@ def subvectors(vectors: DataFrame, m: int, d_sub: int,
     )
 
 
-def _assign_codes(subvecs: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Nearest-centroid code per (sub, id): euclidean over the subspace,
-    tie-break code asc — the per-subspace twin of ann.assign_ivf_det.
-    The codebook groups to m rows of (code, cvec) arrays and broadcasts;
-    the argmin is a lexicographic array_min over (d, code) structs
-    evaluated PER ROW — it picks exactly the (distance asc, code asc)
-    winner the oracle's row_number does, with ZERO exchange of the
-    subvector table (the pre-r11 struct-min aggregation still shuffled
-    one partial row per (sub, id); at 1M rows × m=16 that is 16M rows of
-    shuffle per Lloyd round this no longer pays — guide §2.4). Verified
-    exceptAll-empty against the aggregation form at sf0.01.
-
-    Parallelism contract (r12, VERDICT r11 #2): pure narrow map, NO
-    spread() here — the r11 in-function spread probed partition counts
-    of the deep Lloyd-loop plan per call (a full physical planning pass
-    each round) and stacked RoundRobin exchanges; pq_codebook spreads
-    its shallow source once and every round's subvector table inherits
-    that partitioning."""
-    cb_arr = codebook.groupBy("sub").agg(
-        F.collect_list(F.struct("code", "cvec")).alias("__cb")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("__cb"),
-            lambda c: F.struct(
-                vm.euclidean_distance(F.col("svec"), c["cvec"]).alias("d"),
-                c["code"].alias("c"),
-            ),
-        )
-    )
-    return subvecs.join(F.broadcast(cb_arr), on="sub").select(
-        "sub", "id", "svec", best["c"].alias("code")
-    )
-
-
-def _update_codebook(assigned: DataFrame, prev: DataFrame, block: int) -> DataFrame:
-    """Lloyd update with the fixed two-level id-block reduction tree of
-    ann._det_centroids, keyed by (sub, code) instead of list_id: within
-    an id-block values fold in id order, block partials fold in block
-    order — the double sums are a function of the data, not the
-    partitioning. Empty cells keep their previous centroid (the MLlib
-    KMeans convention). Per-group collect_list is bounded by `block`."""
-    # Whole-subvector element-wise fold (same restructure as
-    # ann._det_centroids): rows sort by id once per (sub, code, blk) and
-    # svecs fold via zip_with — per dimension the additions run in the
-    # SAME id-then-blk order as the old per-(pos) formulation, so the
-    # doubles are bit-identical and the oracle is unchanged, while the
-    # shuffle carries `rows` records instead of `rows×d_sub` exploded
-    # tuples.
-    def vsum(lst: str, field: str):
-        col = F.array_sort(F.col(lst))
-        zero = F.transform(F.element_at(F.col(lst), 1)[field], lambda _: F.lit(0.0))
-        return F.aggregate(
-            col, zero, lambda acc, s: F.zip_with(acc, s[field], lambda a, x: a + x)
-        )
-
-    ex = assigned.select(
-        "sub", "code", "id", F.expr(f"id div {block}").alias("blk"), "svec"
-    )
-    l1 = (
-        ex.groupBy("sub", "code", "blk")
-        .agg(
-            F.collect_list(F.struct("id", "svec")).alias("__lst"),
-            F.count("*").alias("n1"),
-        )
-        .select("sub", "code", "blk", vsum("__lst", "svec").alias("s1"), "n1")
-    )
-    l2 = (
-        l1.groupBy("sub", "code")
-        .agg(
-            F.collect_list(F.struct("blk", "s1")).alias("__lst"),
-            F.sum("n1").alias("n"),
-        )
-        .select("sub", "code", vsum("__lst", "s1").alias("s"), "n")
-    )
-    newc = l2.select(
-        "sub", "code", F.transform("s", lambda sv: sv / F.col("n")).alias("cvec")
-    )
-    return (
-        prev.alias("p")
-        .join(newc.alias("n"), ["sub", "code"], "left")
-        .select("sub", "code", F.coalesce(F.col("n.cvec"), F.col("p.cvec")).alias("cvec"))
-    )
-
-
 def pq_codebook(
     vectors: DataFrame,
     m: int = 8,
@@ -164,46 +80,20 @@ def pq_codebook(
     """Deterministic PQ codebook: (sub int, code int, cvec array<double>),
     m·ks rows. Init takes the first `ks` vectors ordered by md5(id) and
     slices them — codebook cell (sub, c) starts as seed c's sub-th slice
-    — then runs `iters` det-Lloyd rounds per subspace (all subspaces
-    train in ONE job chain; sub is just a grouping key). No collect
-    anywhere; the result is a tiny DataFrame callers broadcast."""
+    — then runs `iters` ann.det_lloyd rounds per subspace, group (sub,
+    code): all subspaces train in ONE job chain, sub is just a key. No
+    collect anywhere; the result is a tiny DataFrame callers broadcast."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_sub = dim // m
-    from ..sources.tables import spread
-
-    # spread ONCE at the (shallow) source, sized for the ×m subvector
-    # explode the Lloyd rounds actually iterate over: subvectors() is
-    # narrow, so sv inherits this partitioning for every round with no
-    # per-round probe or exchange (VERDICT r11 #2; no-op at real scale)
-    from ..sources.tables import footer_rows
-
-    n_rows = footer_rows(vectors)
-    v = spread(
-        vectors, rows=None if n_rows is None else n_rows * m
-    ).select(
-        F.col(id_col).cast("long").alias("id"), vm.as_double(vec_col).alias("vec")
-    )
-    seed_key = F.md5(F.col("id").cast("string"))
-    seeds = v.orderBy(seed_key.asc(), F.col("id").asc()).limit(ks)
-    w = Window.orderBy(seed_key.asc(), F.col("id").asc())  # over ks rows only
-    coded = seeds.select(
-        (F.row_number().over(w) - 1).cast("int").alias("code"), "vec"
-    )
-    cb = subvectors(coded, m, d_sub, id_col="code", vec_col="vec").select(
+    # spread sized for the ×m subvector explode the Lloyd rounds iterate
+    # over: subvectors() is narrow, so sv inherits this partitioning
+    v = spread_vectors(vectors, id_col, vec_col, fanout=m)
+    cb = subvectors(md5_seeds(v, ks, "code"), m, d_sub, id_col="code", vec_col="cvec").select(
         "sub", F.col("id").cast("int").alias("code"), F.col("svec").alias("cvec")
     )
-    sv = subvectors(v, m, d_sub)
-    from .cache import checkpoint as _checkpoint
-
-    for _ in range(iters):
-        # same loop linearization as ann.build_ivf_det (r12): `cb` feeds
-        # both the assignment and the empty-cell fallback join, so the
-        # unmaterialized loop nests 2^iters copies of the seed slice in
-        # the final plan. The codebook is m·ks rows — checkpoint each
-        # round; values unchanged (pure materialization barrier).
-        cb = _checkpoint(_update_codebook(_assign_codes(sv, cb), cb, block))
-    return cb
+    sv = subvectors(v, m, d_sub).select("sub", "id", F.col("svec").alias("vec"))
+    return det_lloyd(sv, cb, iters, block, group=("sub", "code"))
 
 
 def pq_encode(
@@ -234,8 +124,8 @@ def pq_encode(
 
     NOTE on parallelism: this is a pure narrow map — it inherits its
     input's partitioning. Callers encoding a small single-file scan
-    should spread() the SHALLOW input themselves (assign_ivf_det and
-    _assign_codes already do); probing partition counts here would
+    should spread the SHALLOW input themselves (ann.spread_vectors, as
+    the IVF and PQ builders do); probing partition counts here would
     force a full physical planning pass over arbitrarily deep input
     plans at DataFrame-build time (measured: tens of driver seconds on
     the ivf_pq chain — guide §7.3 'planning is driver-side work')."""
@@ -289,12 +179,13 @@ def pq_encode_kernel(
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Arrow-batched BLAS twin of pq_encode — the index-BUILD scale path.
-    The fold plan explodes rows×m subvectors and shuffles them TWICE
-    (the struct-min agg, then the per-id codes regroup): at 100M rows ×
-    m=16 that is two ~1.6B-row shuffles of vector payloads. This kernel
-    collects the codebook (m·ks rows — tiny) into the task closure and
-    encodes each Arrow batch with m batched argmin GEMMs over the
-    (ks × d_sub) sub-codebooks: no explode, no shuffle, one narrow pass.
+    The fold plan is one narrow map that evaluates m·ks interpreted
+    euclidean folds per row (one lambda step per subspace dimension per
+    code): exact and oracle-twinned, but at 100M rows × m=16 × ks=256 ×
+    d_sub=4 that is 1.6·10¹² interpreted steps. This kernel collects the codebook
+    (m·ks rows — tiny) into the task closure and encodes each Arrow batch
+    with m batched argmin GEMMs over the (ks × d_sub) sub-codebooks: the
+    same narrow pass, with the distances in BLAS.
 
     Tie-break matches the fold's (distance asc, code asc): np.argmin
     returns the first minimum and codes are ordered ascending. Same

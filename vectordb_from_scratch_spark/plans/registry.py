@@ -2013,6 +2013,14 @@ def _q_ivf(spark, sf_dir):
 _IVF_DET = {"n_lists": 8, "iters": 2, "block": 4096, "n_probe": 4, "k": 10}
 
 
+def _ivf_det_index(e):
+    """(centroids, assigned) of the registry's deterministic IVF over the
+    embeddings table `e` (ann.ivf_det_index with the _IVF_DET build)."""
+    return ann.ivf_det_index(
+        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"]
+    )
+
+
 def _sql_ivf_det_ctes() -> str:
     """Unrolled DuckDB twin of ann.build_ivf_det + assign_ivf_det:
     c0 = md5-ordered init, then per iteration an assignment CTE and a
@@ -2126,16 +2134,7 @@ def _q_ivf_det_centroids(spark, sf_dir):
 )
 def _q_ivf_det_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     probes = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
@@ -2180,16 +2179,7 @@ def _q_ivf_det_knn(spark, sf_dir):
 )
 def _q_ivf_filtered_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     probes = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
@@ -2263,21 +2253,13 @@ def _q_ivf_sq8_knn(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     # cent feeds the assignment AND the probe-routing broadcast; it comes
-    # back from build_ivf_det already checkpointed (n_lists rows).
+    # back from ivf_det_index already checkpointed (n_lists rows).
     # assigned feeds BOTH the code index and the raw re-rank side: the
     # persist keeps the assignment from re-executing once per consuming
     # branch (in production index+centroids are written tables — this is
     # the session-local stand-in, released per query by release_caches)
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = track(ann.assign_ivf_det(v, cent))
+    cent, assigned = _ivf_det_index(e)
+    assigned = track(assigned)
     idx = ann.ivf_sq8_index(assigned)
     probes = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
@@ -2606,26 +2588,15 @@ def _q_ivf_pq_knn(spark, sf_dir):
     # description), so its jobs count as the query's.
     inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(inherit(
-            lambda: ann.build_ivf_det(
-                e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"],
-                block=_IVF_DET["block"],
-            )
-        ))
+        f_ivf = pool.submit(inherit(lambda: _ivf_det_index(e)))
         f_cb = pool.submit(inherit(
             lambda: pq.pq_codebook(
                 e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
                 block=_PQ["block"],
             )
         ))
-        cent, cb = f_cent.result(), f_cb.result()
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = track(ann.assign_ivf_det(v, cent))
+        (cent, assigned), cb = f_ivf.result(), f_cb.result()
+    assigned = track(assigned)
     idx = pq.ivf_pq_index(assigned, cb, _PQ["m"], _PQ["d_sub"], id_col="id", vec_col="vec")
     probes = _probes(spark, sf_dir, F.col("vec_id") < 5)
     res = pq.ann_knn_ivf_pq(
@@ -2726,16 +2697,8 @@ def _q_ivf_pq_res_knn(spark, sf_dir):
     # exchanges deep): the two builders end in one themselves, the
     # assignment takes one here. In production these are written index
     # tables; the checkpoint is the session-local stand-in.
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent).transform(cache.checkpoint)
+    cent, assigned = _ivf_det_index(e)
+    assigned = assigned.transform(cache.checkpoint)
     res = pq.ivf_residuals(assigned, cent)
     cb = pq.pq_codebook(
         res, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
@@ -2989,16 +2952,7 @@ def _q_ivf_recall_curve(spark, sf_dir):
         "query_id", "id"
     )
     np_df = probes.agg(F.count(F.lit(1)).alias("__np"))
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     out = None
     for p in _IVF_CURVE_PROBES:
         a = ann.ann_knn_ivf(
@@ -4342,16 +4296,7 @@ def _q_eval_ann_ndcg(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     probes = _probes(spark, sf_dir, F.col("vec_id") < 5)
     approx = ann.ann_knn_ivf(
         assigned, cent, probes, k=_NDCG_K, n_probe=_IVF_DET["n_probe"],
@@ -4420,7 +4365,7 @@ def _q_rel_countmin(spark, sf_dir):
     )
 
 
-_PR = {"iters": 3, "damping": 0.85, "block": 4096, "supp_offset": 1000000}
+_PR = {"iters": 3, "damping": 0.85, "supp_offset": 1000000}
 
 
 def _sql_pagerank() -> str:
@@ -4487,9 +4432,7 @@ def _q_graph_pagerank(spark, sf_dir):
         F.col("o_custkey").cast("long").alias("src"),
         (F.col("l_suppkey").cast("long") + _PR["supp_offset"]).alias("dst"),
     )
-    res = graph.pagerank(
-        edges, iters=_PR["iters"], damping=_PR["damping"], block=_PR["block"]
-    )
+    res = graph.pagerank(edges, iters=_PR["iters"], damping=_PR["damping"])
     return res.withColumn("pr", F.round("pr", 6))
 
 
@@ -5652,11 +5595,7 @@ def _q_tpch_q22(spark, sf_dir):
 )
 def _q_pipeline_cluster_sample(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = ann.build_ivf_det(
-        e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"]
-    )
-    v = spread(e).select(F.col("vec_id").cast("long").alias("id"), vm.as_double("embedding").alias("vec"))
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     picked = sampling.cluster_sample(
         assigned.select("list_id", "id"), per_cluster=25,
         id_col="id", cluster_col="list_id", salt="cluster-sample-v1",
@@ -7080,26 +7019,19 @@ _LC_SQL = f"""
     "vec_label_centroids",
     _LC_SQL,
     doc="Per-label embedding centroids via the bit-exact two-level "
-    "id-block fold (the _det_centroids device, labels as cluster keys) "
+    "id-block fold (ann.fold_tree_mean, labels as cluster keys) "
     "— class-centroid QA for labeled embedding tables (drift checks, "
     "nearest-class-mean baselines). Doubles are a function of the data, "
     "not the partitioning. Value-exact",
 )
 def _q_label_centroids(spark, sf_dir):
-    from ..operators.ann import _det_centroids
-
     e = _t(spark, sf_dir, "embeddings")
     assigned = e.select(
         F.col("label").cast("int").alias("list_id"),
         F.col("vec_id").cast("long").alias("id"),
         vm.as_double("embedding").alias("vec"),
     )
-    # fallback row per label for _det_centroids' empty-cluster join —
-    # deterministic (min-id vector) and unused: no label is empty here
-    prev = assigned.groupBy("list_id").agg(
-        F.min(F.struct("id", "vec"))["vec"].alias("cvec")
-    )
-    cent = _det_centroids(assigned, prev, block=4096)
+    cent = ann.fold_tree_mean(assigned, ("list_id",), block=4096)
     counts = assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_rows"))
     return (
         cent.join(counts, "list_id")
@@ -7651,22 +7583,12 @@ def _q_upsert_time_travel(spark, sf_dir):
     "shuffle at 100 TB. Value-exact",
 )
 def _q_outlier_scores(spark, sf_dir):
-    p = _IVF_DET
     e = _t(spark, sf_dir, "embeddings")
     # the n_lists-row centroid frame feeds both the assignment and the
-    # distance join; build_ivf_det returns it checkpointed, so the Lloyd
+    # distance join; ivf_det_index returns it checkpointed, so the Lloyd
     # build runs once and its per-iteration exchanges stay out of the
     # serving plan
-    cent = ann.build_ivf_det(
-        e, n_lists=p["n_lists"], iters=p["iters"], block=p["block"]
-    )
-    # spread the shallow source once; assign_ivf_det no longer spreads
-    # internally (VERDICT r11 #2) and the whole chain inherits this
-    v = spread(e).select(
-        F.col("vec_id").cast("long").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    assigned = ann.assign_ivf_det(v, cent)
+    cent, assigned = _ivf_det_index(e)
     wfar = Window.partitionBy("list_id").orderBy(
         F.col("dist").desc(), F.col("id").asc()
     )

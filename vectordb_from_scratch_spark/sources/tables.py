@@ -93,9 +93,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # work they parallelized (VERDICT r11 #1). ≤640 rows stays on one
 # partition (the work is under the task-overhead floor). At production
 # scale inputs arrive pre-split wider than any cap and spread is a
-# no-op either way; override per-deployment via the
-# spark.vectordb.spread.rowsPerTask conf when per-row work is far from
-# the ~0.1-1 ms/row these fixtures exhibit.
+# no-op either way.
 SPREAD_ROWS_PER_TASK = 640
 
 # Footer reads are driver-side (~ms each); past this many files every
@@ -159,15 +157,10 @@ def spread(df: DataFrame, rows: int | None = None) -> DataFrame:
     input, which on a deep/iterative plan is driver seconds per call
     (VERDICT r11 #2 — the r11 IVF/PQ Lloyd loops paid it per iteration);
     loop bodies must inherit a spread done once at the source."""
-    sc = df.sparkSession.sparkContext
-    dp = sc.defaultParallelism
-    rpt = SPREAD_ROWS_PER_TASK
-    conf_rpt = sc.getConf().get("spark.vectordb.spread.rowsPerTask", None)
-    if conf_rpt is not None:
-        rpt = max(1, int(conf_rpt))
+    dp = df.sparkSession.sparkContext.defaultParallelism
     if rows is None:
         rows = footer_rows(df)
-    target = dp if rows is None else min(dp, -(-rows // rpt))
+    target = dp if rows is None else min(dp, -(-rows // SPREAD_ROWS_PER_TASK))
     if target <= 1:
         return df
     if df.rdd.getNumPartitions() >= target:

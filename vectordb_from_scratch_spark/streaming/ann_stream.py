@@ -331,14 +331,16 @@ def pq_distortion(
     the maintenance cadence; a rising ratio means the data distribution
     has left the codebook and recall is decaying — the PQ analog of
     ivf_should_rebuild's displacement trigger."""
-    from ..operators.pq import _assign_codes, subvectors
+    from ..functions import vectormath as vm
+    from ..operators.ann import nearest_centroid
+    from ..operators.pq import subvectors
 
     sv = subvectors(vectors, m, d_sub, id_col=id_col, vec_col=vec_col)
-    assigned = _assign_codes(sv, codebook)
-    from ..functions import vectormath as vm
-
+    assigned = nearest_centroid(
+        sv.withColumnRenamed("svec", "vec"), codebook, ("sub", "code")
+    )
     per_sub = assigned.join(F.broadcast(codebook), ["sub", "code"]).select(
-        "id", vm.squared_euclidean("svec", "cvec").alias("e2")
+        "id", vm.squared_euclidean("vec", "cvec").alias("e2")
     )
     per_id = per_sub.groupBy("id").agg(F.sum("e2").alias("se"))
     return per_id.agg(
