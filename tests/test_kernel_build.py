@@ -178,32 +178,6 @@ def test_residual_adc_serve_kernel_matches_expr_adist(embeddings):
         assert abs(d - expr[key]) < 1e-9
 
 
-def test_ivfpq_adc_serve_arrow_matches_expr_reranked(embeddings):
-    """Non-residual routed ADC: the r9 mapInArrow LUT-slab kernel (one
-    slab row per query + pair→query row_map) ≡ the expression fold,
-    pinned through the exact re-rank — exact equality."""
-    m, d_sub = 8, 8
-    v = _prep(embeddings)
-    cent = ann.build_ivf_det(embeddings, n_lists=8, iters=1)
-    assigned = ann.assign_ivf_det(v, cent)
-    cb = pq.pq_codebook(embeddings, m=m, ks=16, dim=64, iters=1)
-    idx = pq.ivf_pq_index(assigned, cb, m, d_sub, id_col="id", vec_col="vec")
-    probes = v.limit(5).select(
-        F.col("id").alias("query_id"), F.col("vec").alias("query_embedding")
-    )
-    kw = dict(k=5, n_probe=3, ks=16, d_sub=d_sub, rerank=20,
-              raw=v.select("id", "vec"))
-    expr = _rows(
-        pq.ann_knn_ivf_pq(idx, cent, cb, probes, strategy="expr", **kw),
-        "query_id", "id", "distance", "rank",
-    )
-    arrow = _rows(
-        pq.ann_knn_ivf_pq(idx, cent, cb, probes, strategy="arrow", **kw),
-        "query_id", "id", "distance", "rank",
-    )
-    assert arrow == expr
-
-
 def test_kernel_plans_have_no_join_or_window(embeddings):
     """The kernels' whole point: one narrow mapInPandas pass — no
     broadcast product, no window sort, no shuffle in the physical plan."""

@@ -244,14 +244,14 @@ def test_ivf_pq_residual_identity_and_rerank(emb, probes):
 
 
 def test_adc_kernel_matches_expr_flat(emb, cb, codes, probes):
-    """The Arrow gather kernel and the in-plan fold agree: identical
+    """The ADC kernel and the in-plan fold agree: identical
     (query_id, id) top-k with rerank (exact distances both ways), and
     near-identical adist without (last-ulp summation drift allowed)."""
     raw = emb.select(F.col("vec_id").alias("id"),
                      vm.as_double("embedding").alias("vec"))
     kw = dict(k=5, ks=KS, d_sub=D_SUB, rerank=15, raw=raw)
     a = pq.pq_adc_topk(codes, cb, probes, strategy="expr", **kw).collect()
-    b = pq.pq_adc_topk(codes, cb, probes, strategy="numpy", **kw).collect()
+    b = pq.pq_adc_topk(codes, cb, probes, strategy="kernel", **kw).collect()
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     assert sorted((r["query_id"], r["rank"], r["id"]) for r in a) == sorted(
         (r["query_id"], r["rank"], r["id"]) for r in b
@@ -263,7 +263,7 @@ def test_adc_kernel_matches_expr_flat(emb, cb, codes, probes):
     na = pq.pq_adc_topk(codes, cb, probes, k=5, ks=KS, d_sub=D_SUB,
                         strategy="expr").collect()
     nb = pq.pq_adc_topk(codes, cb, probes, k=5, ks=KS, d_sub=D_SUB,
-                        strategy="numpy").collect()
+                        strategy="kernel").collect()
     assert {(r["query_id"], r["id"]) for r in na} == {
         (r["query_id"], r["id"]) for r in nb
     }
@@ -273,6 +273,9 @@ def test_adc_kernel_matches_expr_flat(emb, cb, codes, probes):
 
 
 def test_ivf_pq_kernel_matches_expr(emb, cb, probes):
+    """Routed ADC: the kernel (one LUT per query, a pair → query slab row
+    map) ≡ the expression fold, pinned through the exact re-rank —
+    identical (query_id, id, distance, rank) rows."""
     v = emb.select(F.col("vec_id").cast("long").alias("id"),
                    vm.as_double("embedding").alias("vec"))
     cent = ann.build_ivf_det(emb, n_lists=4, iters=1)
@@ -281,10 +284,11 @@ def test_ivf_pq_kernel_matches_expr(emb, cb, probes):
     kw = dict(k=5, n_probe=2, ks=KS, d_sub=D_SUB, rerank=15,
               raw=assigned.select("id", "vec"))
     a = pq.ann_knn_ivf_pq(idx, cent, cb, probes, strategy="expr", **kw).collect()
-    b = pq.ann_knn_ivf_pq(idx, cent, cb, probes, strategy="numpy", **kw).collect()
-    assert sorted((r["query_id"], r["rank"], r["id"]) for r in a) == sorted(
-        (r["query_id"], r["rank"], r["id"]) for r in b
+    b = pq.ann_knn_ivf_pq(idx, cent, cb, probes, strategy="kernel", **kw).collect()
+    rows = lambda res: sorted(  # noqa: E731
+        (r["query_id"], r["id"], r["distance"], r["rank"]) for r in res
     )
+    assert a and rows(a) == rows(b)
 
 
 def test_adc_kernel_filtered_prefilter_semantics(emb, cb, codes, probes):
@@ -293,67 +297,108 @@ def test_adc_kernel_filtered_prefilter_semantics(emb, cb, codes, probes):
     pred = F.col("vec_id") % 2 == 0
     kw = dict(k=5, ks=KS, d_sub=D_SUB, predicate=pred, attrs=emb)
     a = pq.pq_adc_topk(codes, cb, probes, strategy="expr", **kw).collect()
-    b = pq.pq_adc_topk(codes, cb, probes, strategy="numpy", **kw).collect()
+    b = pq.pq_adc_topk(codes, cb, probes, strategy="kernel", **kw).collect()
     assert all(r["id"] % 2 == 0 for r in b) and len(b) == len(a) == 25
     assert {(r["query_id"], r["id"]) for r in a} == {
         (r["query_id"], r["id"]) for r in b
     }
 
 
-def test_ivf_pq_arrow_empty_routing_demotes_to_expr(spark, emb, cb, probes):
-    """strategy='arrow' with EMPTY routing (no centers) must return the
-    (empty) expr result, not die on max() over an empty pair set
-    (ADVICE r9): the composite-key build needs at least one routed
-    (query, list) pair, so the guard demotes to the expression path."""
+@pytest.fixture(scope="module")
+def ivf_pq(emb, cb):
+    """(centroids, assigned vectors, IVF-PQ index, residual IVF-PQ index)
+    over 4 lists."""
     v = emb.select(F.col("vec_id").cast("long").alias("id"),
                    vm.as_double("embedding").alias("vec"))
     cent = ann.build_ivf_det(emb, n_lists=4, iters=1)
     assigned = ann.assign_ivf_det(v, cent)
+    assigned.persist().count()
     idx = pq.ivf_pq_index(assigned, cb, M, D_SUB, id_col="id", vec_col="vec")
-    out = pq.ann_knn_ivf_pq(
-        idx, cent.limit(0), cb, probes, strategy="arrow",
-        k=5, n_probe=2, ks=KS, d_sub=D_SUB,
+    ridx = pq.ivf_pq_residual_index(assigned, cent, cb, M, D_SUB,
+                                    id_col="id", vec_col="vec")
+    yield cent, assigned, idx, ridx
+    assigned.unpersist()
+
+
+def _search(name, ivf_pq, codes, cb, probes, centers=None, **kw):
+    cent, _, idx, ridx = ivf_pq
+    kw = dict(k=5, ks=KS, d_sub=D_SUB, **kw)
+    if name == "flat":
+        return pq.pq_adc_topk(codes, cb, probes, **kw)
+    search = pq.ann_knn_ivf_pq if name == "ivf" else pq.ann_knn_ivf_pq_residual
+    return search(idx if name == "ivf" else ridx,
+                  cent if centers is None else centers, cb, probes,
+                  n_probe=2, **kw)
+
+
+@pytest.mark.parametrize("name", ["flat", "ivf", "residual"])
+def test_adc_strategy_vocabulary(name, ivf_pq, codes, cb, probes):
+    """All three PQ searches take auto|kernel|expr and nothing else."""
+    got = {
+        s: {(r["query_id"], r["id"]) for r in
+            _search(name, ivf_pq, codes, cb, probes, strategy=s).collect()}
+        for s in ("kernel", "expr")
+    }
+    assert got["kernel"] and got["kernel"] == got["expr"]
+    for s in ("numpy", "arrow"):
+        with pytest.raises(ValueError, match="strategy must be auto"):
+            _search(name, ivf_pq, codes, cb, probes, strategy=s)
+
+
+@pytest.mark.parametrize("name,empty", [
+    ("flat", "probes"), ("ivf", "probes"), ("ivf", "centers"),
+    ("residual", "probes"), ("residual", "centers"),
+])
+def test_adc_kernel_empty_routing_demotes_to_expr(name, empty, ivf_pq, codes, cb, probes):
+    """strategy='kernel' with no LUT to score against — empty probes, or
+    empty routing (no centers) — returns the (empty) expr result instead
+    of failing on an empty slab or composite-key set."""
+    out = _search(
+        name, ivf_pq, codes, cb,
+        probes.limit(0) if empty == "probes" else probes,
+        centers=ivf_pq[0].limit(0) if empty == "centers" else None,
+        strategy="kernel",
     )
     assert out.count() == 0
-    # empty PROBES under forced arrow demotes the same way
-    out2 = pq.ann_knn_ivf_pq(
-        idx, cent, cb, probes.limit(0), strategy="arrow",
-        k=5, n_probe=2, ks=KS, d_sub=D_SUB,
-    )
-    assert out2.count() == 0
 
 
-def test_adc_kernel_key_miss_fails_loudly():
+def test_attrs_without_predicate_raises(emb, ivf_pq, codes, cb, probes):
+    """A filtered search needs both predicate and attrs: attrs alone
+    raises instead of searching unfiltered (as the SRP path always did)."""
+    cent, assigned = ivf_pq[:2]
+    with pytest.raises(ValueError, match="BOTH predicate and attrs"):
+        pq.pq_adc_topk(codes, cb, probes, k=5, ks=KS, d_sub=D_SUB, attrs=emb)
+    with pytest.raises(ValueError, match="BOTH predicate and attrs"):
+        ann.ann_knn_ivf_sq8(ann.ivf_sq8_index(assigned), cent, probes, k=5,
+                            n_probe=2, attrs=emb)
+
+
+def test_adc_kernel_key_miss_fails_loudly(spark):
     """A candidate whose (query_id, list_id) composite key is ABSENT
     from the routed key set must raise, not gather a neighboring LUT
-    row and mis-score silently (ADVICE r9)."""
-    import numpy as np
-    import pyarrow as pa
+    row and mis-score silently."""
+    from pyspark.errors import PythonException
 
     m_, ks_ = 2, 4
-    mult = 10
-    # slab rows for pairs (q=0,l=1) and (q=1,l=2) → keys [1, 12]
-    pair_keys = np.array([1, 12], dtype=np.int64)
-    slab = np.arange(2 * m_ * ks_, dtype=np.float64).reshape(2, m_, ks_)
-    kernel = pq._arrow_adc_routed_kernel(pair_keys, slab, mult, m_, ks_, 5)
+    # LUTs routed for pairs (q=0, l=1) and (q=1, l=2): mult 3, keys [1, 5]
+    luts = spark.createDataFrame(
+        [(0, [1], [float(x) for x in range(m_ * ks_)]),
+         (1, [2], [float(x) for x in range(m_ * ks_)])],
+        "query_id long, __lists array<int>, __lut array<double>",
+    )
 
-    def batch(qid, lid):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([qid], type=pa.int64()),
-                pa.array([lid], type=pa.int64()),
-                pa.array([100], type=pa.int64()),
-                pa.array([[0] * m_], type=pa.list_(pa.int8())),
-            ],
-            names=["query_id", "list_id", "id", "codes"],
+    def scan(qid, lid):
+        src = spark.createDataFrame(
+            [(qid, lid, 100, [0] * m_)],
+            "query_id long, list_id int, id long, codes array<int>",
         )
+        return pq._adc_kernel(src, luts, ks_, 5).collect()
 
     # routed pair → scores fine
-    good = list(kernel(iter([batch(1, 2)])))
-    assert len(good) == 1 and good[0].num_rows == 1
+    assert [(r.query_id, r.id, r.adist) for r in scan(1, 2)] == [(1, 100, 2.0)]
     # unrouted pair (q=0, l=2 → key 2, between the two routed keys)
-    with pytest.raises(ValueError, match="absent from"):
-        list(kernel(iter([batch(0, 2)])))
+    with pytest.raises(PythonException, match="absent from"):
+        scan(0, 2)
     # key beyond the last routed key (boundary clamp, not IndexError)
-    with pytest.raises(ValueError, match="absent from"):
-        list(kernel(iter([batch(5, 5)])))
+    with pytest.raises(PythonException, match="absent from"):
+        scan(5, 2)

@@ -117,7 +117,7 @@ def main() -> int:
         finally:
             vecblock.SRP_KERNEL_THRESHOLD = saved
 
-    # ---- flat ADC: expr LUT fold vs numpy (pandas) kernel ------------
+    # ---- flat ADC: expr LUT fold vs the mapInArrow ADC kernel ---------
     if want("adc") or want("ivfpq"):
         m_, ks_, d_sub_ = 16, 32, 4
     if want("adc"):
@@ -129,7 +129,7 @@ def main() -> int:
             codes = pqm.pq_encode(emb, cb, m_, d_sub_)
             codes.persist().count()
             p = probes_of(emb)
-            for strat in ("expr", "numpy"):
+            for strat in ("expr", "kernel"):
                 sec, exec_ = xm.timed_with_metrics(
                     lambda s=strat: sink(pqm.pq_adc_topk(
                         codes, cb, p, k=K, ks=ks_, d_sub=d_sub_, strategy=s
@@ -140,7 +140,7 @@ def main() -> int:
             codes.unpersist()
             cb.unpersist()
 
-    # ---- routed IVF-PQ serve: expr vs arrow LUT-slab kernel ----------
+    # ---- routed IVF-PQ serve: expr vs the ADC kernel ------------------
     # at the SERVE CONFIG OF RECORD (m16/ks256, L64/P8 — the r9 100M
     # layout): a first pass at toy ks=32/L16 had expr WINNING both
     # decades (9.1 vs 9.8 s at 1M) while r9's ks=256 A/B had the kernel
@@ -148,18 +148,10 @@ def main() -> int:
     # drives the expr element_at cost), so the threshold must be judged
     # at the config the serve path actually ships with.
     if want("ivfpq"):
-        from vectordb_from_scratch_spark.functions import vectormath as vm
-
         ks_big = 256
         for n in (100_000, 1_000_000):
             emb = synth_emb(n)
-            v = emb.select(
-                F.col("vec_id").cast("long").alias("id"),
-                vm.as_double("embedding").alias("vec"),
-            )
-            cent = ann.build_ivf_det(emb, n_lists=64, iters=1)
-            cent.persist().count()
-            assigned = ann.assign_ivf_det(v, cent)
+            cent, assigned = ann.ivf_det_index(emb, n_lists=64, iters=1)
             assigned.persist().count()
             sample = emb.filter(F.col("vec_id") % 20 == 0)
             cb = pqm.pq_codebook(sample, m=m_, ks=ks_big, dim=64, iters=1)
@@ -168,7 +160,7 @@ def main() -> int:
                                    id_col="id", vec_col="vec")
             idx.persist().count()
             p = probes_of(emb)
-            for strat in ("expr", "arrow"):
+            for strat in ("expr", "kernel"):
                 sec, exec_ = xm.timed_with_metrics(
                     lambda s=strat: sink(pqm.ann_knn_ivf_pq(
                         idx, cent, cb, p, k=K, n_probe=8,
@@ -177,7 +169,7 @@ def main() -> int:
                     runs,
                 )
                 emit("ivf_pq_routed_ks256", n, strat, sec, exec_)
-            for h in (idx, cb, assigned, cent):
+            for h in (idx, cb, assigned):
                 h.unpersist()
 
     spark.stop()

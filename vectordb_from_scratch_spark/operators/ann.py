@@ -295,6 +295,62 @@ def srp_index(
     ).select("id", "vec", F.col("__t.tbl").alias("tbl"), F.col("__t.bucket").alias("bucket"))
 
 
+def _qualifying_ids(
+    predicate: Column | None, attrs: DataFrame | None, attrs_id_col: str
+) -> DataFrame | None:
+    """The ids a filtered search may return: ``attrs`` rows passing
+    ``predicate``, as one ``id`` column; None for an unfiltered search.
+    Every pre-filtered search (SRP, IVF-SQ8, the three PQ searches)
+    semi-joins its candidates against this frame. Passing only one of
+    ``predicate`` / ``attrs`` raises rather than searching unfiltered."""
+    if (predicate is None) != (attrs is None):
+        raise ValueError("filtered search needs BOTH predicate and attrs")
+    if predicate is None:
+        return None
+    return attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
+
+
+def _shortlist_finish(
+    cands: DataFrame, k: int, rerank: int = 0, raw: DataFrame | None = None,
+    q: DataFrame | None = None,
+) -> DataFrame:
+    """The quantized searches' one tail over (query_id, id, adist)
+    candidates → (query_id, id, distance, rank). Without ``rerank`` (or
+    ``raw``): each query's top k by (adist asc, id asc), adist as the
+    distance. With both: the rerank-deep shortlist broadcasts into one
+    join against ``raw`` (id, vec) and exact euclidean distance ranks the
+    final k. The query vector for the re-rank is the ``__qvec`` the
+    candidates carry, or — for a kernel's narrow output — the probes
+    ``q`` (query_id, __qvec) joined back by query_id."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("id").asc())
+    if not rerank or raw is None:
+        return (
+            cands.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "id", F.col("adist").alias("distance"), "rank")
+        )
+    shortlist = cands.withColumn("__sr", F.row_number().over(w)).filter(
+        F.col("__sr") <= rerank
+    )
+    if q is None:
+        shortlist = shortlist.select("query_id", "__qvec", "id")
+    else:
+        shortlist = shortlist.select("query_id", "id").join(F.broadcast(q), "query_id")
+    exact = raw.join(F.broadcast(shortlist), on="id").select(
+        "query_id", "id", vm.euclidean_distance("__qvec", "vec").alias("distance")
+    )
+    w2 = Window.partitionBy("query_id").orderBy(
+        F.col("distance").asc_nulls_last(), F.col("id").asc()
+    )
+    return (
+        exact.withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "id", "distance", "rank")
+    )
+
+
 def ann_knn_srp_indexed(
     index: DataFrame,
     queries: DataFrame,
@@ -330,8 +386,7 @@ def ann_knn_srp_indexed(
     side is already bucket-pruned."""
     from pyspark.sql import Window
 
-    if (predicate is None) != (attrs is None):
-        raise ValueError("filtered search needs BOTH predicate and attrs")
+    qualifying = _qualifying_ids(predicate, attrs, attrs_id_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"), vm.as_double(query_vec_col).alias("__q")
     )
@@ -358,8 +413,7 @@ def ann_knn_srp_indexed(
     cands = index.join(F.broadcast(q), on=["tbl", "bucket"]).select(
         "query_id", "id", dist.alias("distance")
     )
-    if predicate is not None:
-        qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
+    if qualifying is not None:
         cands = cands.join(qualifying, "id", "left_semi")
     narrow = cands.dropDuplicates(["query_id", "id"])
     w = Window.partitionBy("query_id").orderBy(
@@ -395,8 +449,9 @@ def ann_filtered_overfetch(
     knn.knn_filtered_overfetch, the exact-path twin)."""
     from pyspark.sql import Window
 
-    qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    refiltered = ann_results.join(qualifying, "id", "left_semi")
+    refiltered = ann_results.join(
+        _qualifying_ids(predicate, attrs, attrs_id_col), "id", "left_semi"
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("rank").asc())
     return (
         refiltered.withColumn("rank2", F.row_number().over(w))
@@ -986,8 +1041,7 @@ def ann_knn_ivf_sq8(
     two-stage quantized serving design. Every step is deterministic
     (floor(x+0.5) encode), so the whole pipeline is value-exact
     oracle-twinnable."""
-    from pyspark.sql import Window
-
+    qualifying = _qualifying_ids(predicate, attrs, attrs_id_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         vm.as_double(query_vec_col).alias("__qvec"),
@@ -1002,34 +1056,9 @@ def ann_knn_ivf_sq8(
         "id",
         vm.euclidean_distance("__qvec", decoded).alias("adist"),
     )
-    if predicate is not None:
-        if attrs is None:
-            raise ValueError("filtered search needs BOTH predicate and attrs")
-        qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
+    if qualifying is not None:
         cands = cands.join(qualifying, "id", "left_semi")
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("id").asc())
-    if not rerank or raw is None:
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "id", F.col("adist").alias("distance"), "rank")
-        )
-    shortlist = (
-        cands.withColumn("__sr", F.row_number().over(w))
-        .filter(F.col("__sr") <= rerank)
-        .select("query_id", "__qvec", "id")
-    )
-    exact = raw.join(F.broadcast(shortlist), on="id").select(
-        "query_id", "id", vm.euclidean_distance("__qvec", "vec").alias("distance")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "distance", "rank")
-    )
+    return _shortlist_finish(cands, k, rerank, raw)
 
 
 def build_mllib_lsh(

@@ -17,6 +17,14 @@ of the database side, ever. The LUT (m·ks doubles per query) broadcasts;
 candidates stream through one scan stage; the optional exact re-rank
 touches only the shortlist.
 
+The three searches — flat (pq_adc_topk), IVF-routed (ann_knn_ivf_pq)
+and residual IVF-routed (ann_knn_ivf_pq_residual) — differ only in which
+code rows they scan and which LUT each row meets. They share one LUT
+build (_adc_lut), one in-plan ADC fold (_adc_fold), one mapInArrow ADC
+kernel (_adc_kernel) and one shortlist/re-rank finish
+(ann._shortlist_finish), and take one strategy vocabulary: "expr" (the
+fold), "kernel" or "auto" (vecblock.choose_strategy).
+
 Everything is deterministic and engine-portable, the repo's oracle
 contract: the codebook trains on the same deterministic Lloyd as
 ann.build_ivf_det (ann.det_lloyd: md5(id)-ordered seeds, the fixed
@@ -38,12 +46,22 @@ production (the det path is the correctness spec, as with build_ivf_det).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectormath as vm
-from .ann import det_lloyd, md5_seeds, spread_vectors
-from .vecblock import choose_strategy
+from .ann import (
+    _qualifying_ids, _route_queries, _shortlist_finish, det_lloyd, md5_seeds,
+    spread_vectors,
+)
+from .vecblock import (
+    Block, _first_k, _within_kth, choose_strategy, collect_probes, map_blocks,
+)
 
 __all__ = [
     "pq_codebook", "pq_encode", "pq_encode_kernel", "pq_adc_topk", "subvectors",
@@ -249,175 +267,165 @@ def pq_encode_kernel(
     return v.mapInPandas(run, schema=f"id long, codes array<int>{lid}{extra_schema}")
 
 
-def _numpy_adc_scan_kernel(lut_rows: list, m: int, ks: int, emit_top: int):
-    """mapInPandas kernel for flat ADC: every query's LUT rides in the
-    closure; per Arrow batch the m code lookups become one numpy fancy-
-    gather + row sum, and only each query's per-batch top-`emit_top`
-    partial (by the global (adist, id) tie-break, so the partial is
-    lossless for the final top-emit_top) leaves the executor. Replaces
-    the interpreted per-row transform/aggregate lambda — the one
-    documented hot-path lambda in SCALE.md (flat ADC 27.3 s vs 13.3 s
-    BLAS exact at 1M)."""
-    import numpy as np
-
-    qids = [r[0] for r in lut_rows]
-    LUT = np.array([list(r[1]) for r in lut_rows], dtype=np.float64).reshape(
-        len(lut_rows), m, ks
+def _adc_lut(rows: DataFrame, codebook: DataFrame, d_sub: int,
+             keys: tuple[str, ...]) -> DataFrame:
+    """One m×ks lookup table per ``keys`` group of ``rows``: the squared
+    distance from each d_sub-dim slice of the row's ``__lq`` vector to
+    every codebook cell of that subspace, flattened sub-major (index
+    sub·ks + code) into ``__lut``. ``__qvec`` rides along for the exact
+    re-rank. rows ⨯ codebook — both tiny."""
+    lq = F.slice(F.col("__lq"), F.col("sub") * d_sub + 1, F.lit(d_sub))
+    return (
+        rows.crossJoin(F.broadcast(codebook))
+        .select(
+            *keys, "__qvec", "sub", "code",
+            vm.squared_euclidean(lq, F.col("cvec")).alias("d2"),
+        )
+        .groupBy(*keys)
+        .agg(
+            F.first("__qvec").alias("__qvec"),
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("sub", "code", "d2"))),
+                lambda s: s["d2"],
+            ).alias("__lut"),
+        )
     )
+
+
+def _adc_fold(ks: int) -> Column:
+    """A row's ADC distance against its ``__lut``: sqrt of the m table
+    lookups, folded sub-ascending from 0.0 — the summation order the
+    DuckDB twin reproduces bit for bit (the oracle spec)."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(
+                F.col("codes"),
+                lambda c, i: F.element_at(F.col("__lut"), (i * ks + c + 1).cast("int")),
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+    )
+
+
+# Candidates one flat-search gather scores at once: bounds the (rows, m)
+# index and value temporaries when many queries meet one Arrow batch.
+_ADC_ROWS = 1 << 18
+
+
+def _adc_kernel(src: DataFrame, luts: DataFrame, ks: int,
+                emit_top: int) -> DataFrame | None:
+    """The ADC scan as one vecblock kernel, or None when there is no LUT
+    (no queries, or no routed list) to score against.
+
+    ``luts`` is collected once into a (G, m, ks) slab. Flat search passes
+    (query_id, __lut): every ``src`` row (id, codes) is scored against
+    every LUT. Routed search passes (query_id, __lists, __lut): each
+    ``src`` row (query_id, list_id, id, codes) is scored against the LUT
+    its (query_id, list_id) pair was routed with, found by a binary search
+    over the sorted composite keys query_id·mult + list_id (integral ids).
+
+    Per Arrow batch the codes decode to an (n, m) matrix, each candidate's
+    distance is one gather of its LUT row plus a row sum, and each query's
+    first ``emit_top`` under (adist, id) leave the executor — lossless for
+    the final window. The sum may differ from the fold in the last ulp."""
+    keys, L, lvalid = collect_probes(luts)
+    if not len(L):
+        return None
+    if L.shape[1] % ks:
+        raise ValueError(
+            f"LUT length {L.shape[1]} is not a multiple of ks={ks}: the "
+            "codebook trained fewer than ks codes per subspace (training "
+            "sample smaller than ks?) — the expression path would mis-index "
+            "the same LUT silently; fix the codebook or pass the actual ks"
+        )
+    lut = L.reshape(len(L), -1, ks)
+    m = lut.shape[1]
     subs = np.arange(m)[None, :]
+    qkeys = keys.column("query_id").combine_chunks()
+    # each LUT row's query as a dense group number: _first_k's grouping
+    qgroup = pc.dictionary_encode(qkeys).indices.to_numpy(zero_copy_only=False)
+    routed = "__lists" in keys.column_names
+    if routed:
+        lists = keys.column("__lists").combine_chunks()
+        lids = lists.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+        if not len(lids):
+            return None
+        mult = int(lids.max()) + 1
+        slab_row = pc.list_parent_indices(lists).to_numpy()
+        pair = qkeys.to_numpy(zero_copy_only=False).astype(np.int64)[slab_row] * mult + lids
+        order = np.argsort(pair)
+        pair, slab_row = pair[order], slab_row[order]
 
-    def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # np.stack over the Arrow-materialized arrays — a per-row
-            # list() comprehension here costs more than the math at
-            # millions of candidate rows
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.int64, copy=False)
-            ids = pdf["id"].to_numpy()
-            frames = []
-            for qi, qid in enumerate(qids):
-                d2 = LUT[qi][subs, C].sum(axis=1)
-                order = np.lexsort((ids, d2))[:emit_top]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "id": ids[order],
-                         "adist": np.sqrt(d2[order])}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return scan
-
-
-def _numpy_adc_candidates_kernel(lut_map: dict, m: int, ks: int, emit_top: int):
-    """mapInPandas kernel for routed (IVF-PQ) ADC: input batches are the
-    probed-list candidate rows (query_id, id, codes) — mixed queries per
-    batch, so the batch groups by query and gathers per group. Emits
-    per-(batch, query) top-`emit_top` partials under the (adist, id)
-    tie-break (lossless for the global shortlist)."""
-    import numpy as np
-
-    subs = np.arange(m)[None, :]
-
-    def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C_all = np.stack(pdf["codes"].to_numpy()).astype(np.int64, copy=False)
-            ids_all = pdf["id"].to_numpy()
-            q_all = pdf["query_id"].to_numpy()
-            frames = []
-            for qid in pd.unique(pdf["query_id"]):
-                mask = q_all == qid
-                C, ids = C_all[mask], ids_all[mask]
-                d2 = lut_map[qid][subs, C].sum(axis=1)
-                order = np.lexsort((ids, d2))[:emit_top]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "id": ids[order],
-                         "adist": np.sqrt(d2[order])}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return scan
-
-
-def _arrow_adc_routed_kernel(
-    pair_keys, lut_slab, mult: int, m: int, ks: int, emit_top: int,
-    row_map=None,
-):
-    """mapInArrow kernel for per-(query, probed-list)-LUT ADC — the
-    residual IVF-PQ serve path (VERDICT r8 #3). The LUT volume is
-    n_queries × n_probe × m × ks doubles (a few MB at realistic probe
-    widths), so the whole slab rides in the closure as one
-    (G, m, ks) float64 array; `pair_keys` is the SORTED composite key
-    query_id·mult + list_id for each slab row.
-
-    Per Arrow batch, the entire scan is vectorized numpy:
-      1. codes arrive as a pyarrow ListArray — `.flatten()` exposes the
-         contiguous values buffer, reshaped (n, m) with ZERO per-row
-         Python (the np.stack-over-object-arrays cost that made the r5
-         pandas kernel LOSE to the interpreted fold is gone);
-      2. slab row per candidate via searchsorted on the composite key
-         (one binary search per row, vectorized);
-      3. d2 = slab[g, subs, C].sum(axis=1) — one fancy gather + row sum;
-      4. per-query top-`emit_top` partial under the global (adist, id)
-         tie-break (lossless for the final shortlist), so only
-         queries × emit_top rows per batch cross back into the JVM.
-
-    `row_map` (optional) maps a pair_keys position to its lut_slab row —
-    the non-residual path shares ONE LUT per query across all its probed
-    lists, so the slab holds one row per QUERY and row_map carries the
-    pair→query indirection instead of duplicating LUTs per list.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    subs = np.arange(m)[None, :]
-
-    def scan(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qids_a = batch.column("query_id")
-            ids_a = batch.column("id")
-            qids = qids_a.to_numpy(zero_copy_only=False).astype(np.int64)
-            lids = (
-                batch.column("list_id")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
+    def candidates(batch: pa.RecordBatch, n: int):
+        """(LUT row, scan row) of every candidate in ``batch``."""
+        if not routed:  # row-major: candidate i·w + j is row i × LUT q0 + j
+            step = max(1, _ADC_ROWS // n)
+            for q0 in range(0, len(lut), step):
+                qs = np.arange(q0, min(q0 + step, len(lut)))
+                yield np.tile(qs, n), np.repeat(np.arange(n), len(qs))
+            return
+        comp = (
+            batch.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64) * mult
+            + batch.column("list_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        )
+        # fail loudly on a key miss: a pair absent from the collected
+        # routing (or an int64 overflow of the composite key for
+        # hash-derived query ids) would otherwise gather a neighboring
+        # LUT row and mis-score silently; the clamp keeps the compare
+        # itself in bounds at the array end
+        at = np.minimum(np.searchsorted(pair, comp), len(pair) - 1)
+        if not np.array_equal(pair[at], comp):
+            missing = comp[pair[at] != comp]
+            raise ValueError(
+                "ADC kernel: (query_id, list_id) pair(s) absent from the "
+                f"routed key set (first composite key: {int(missing[0])}) — "
+                "routing out of sync with the candidate scan, or "
+                "composite-key overflow for very large query ids"
             )
-            ids = ids_a.to_numpy(zero_copy_only=False)
-            flat = batch.column("codes").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            C = flat.reshape(n, m).astype(np.int64, copy=False)
-            comp = qids * mult + lids
-            g = np.searchsorted(pair_keys, comp)
-            # fail loudly on a key miss: a (query, list) pair absent from
-            # the collected routing (or an int64 overflow in the composite
-            # key for hash-derived query ids) would otherwise gather a
-            # NEIGHBORING query's LUT row and mis-score silently; the
-            # clamp makes the compare itself safe at the array boundary
-            # (one vectorized compare per batch — cheap) (ADVICE r9)
-            g = np.minimum(g, pair_keys.size - 1)
-            if not np.array_equal(pair_keys[g], comp):
-                missing = comp[pair_keys[g] != comp]
-                raise ValueError(
-                    "ADC kernel: (query_id, list_id) pair(s) absent from "
-                    f"the routed key set (first composite key: "
-                    f"{int(missing[0])}) — routing out of sync with the "
-                    "candidate scan, or composite-key overflow for very "
-                    "large query ids"
-                )
-            if row_map is not None:
-                g = row_map[g]
-            d2 = lut_slab[g[:, None], subs, C].sum(axis=1)
-            order = np.lexsort((ids, d2, qids))
-            qs = qids[order]
-            starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-            counts = np.diff(np.r_[starts, n])
-            pos = np.arange(n) - np.repeat(starts, counts)
-            keep = order[pos < emit_top]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[keep], type=qids_a.type),
-                    pa.array(ids[keep], type=ids_a.type),
-                    pa.array(np.sqrt(d2[keep]), type=pa.float64()),
-                ],
-                names=["query_id", "id", "adist"],
-            )
+        yield slab_row[at], np.arange(n)
 
-    return scan
+    def reduce(blocks: Iterator[Block]) -> Iterator[pa.RecordBatch]:
+        for batch, C, valid in blocks:
+            ids = batch.column("id")
+            idn = ids.to_numpy(zero_copy_only=False)
+            for g, rows in candidates(batch, len(C)):
+                # a (candidates, m) gather summed per row: a (queries,
+                # rows, m) gather summed over its last axis rounds
+                # differently in the last ulp once m ≥ 8
+                d2 = lut[g[:, None], subs, C[rows]].sum(axis=1)
+                null = ~(valid[rows] & lvalid[g])
+                if not routed:  # cut each query to its emit_top-th before the sort
+                    r, c = _within_kth(np.where(null, np.nan, d2).reshape(len(C), -1), emit_top)
+                    sel = r * (len(g) // len(C)) + c
+                    g, rows, d2, null = g[sel], rows[sel], d2[sel], null[sel]
+                keep = _first_k(qgroup[g], d2, null, idn[rows], emit_top)
+                yield pa.RecordBatch.from_arrays(
+                    [qkeys.take(g[keep]), ids.take(rows[keep]),
+                     pa.array(np.sqrt(d2[keep]), mask=null[keep])],
+                    names=["query_id", "id", "adist"],
+                )
+
+    schema = (f"query_id {luts.schema['query_id'].dataType.simpleString()}, "
+              f"id {src.schema['id'].dataType.simpleString()}, adist double")
+    return map_blocks(src, "codes", m, reduce, schema, np.int64)
+
+
+def _adc_search(kernel: bool, src: DataFrame, luts: DataFrame, scan: DataFrame,
+                q: DataFrame, ks: int, k: int, rerank: int,
+                raw: DataFrame | None) -> DataFrame:
+    """The PQ searches' shared tail. ``kernel``: score ``src`` with
+    _adc_kernel against ``luts``; its narrow (query_id, id, adist) output
+    joins the probes ``q`` back for the re-rank. Otherwise — or when there
+    is no LUT to score against — fold ``scan`` (the candidates joined to
+    their LUT row) in the plan, carrying ``__qvec``. Both end in
+    ann._shortlist_finish."""
+    emit_top = rerank if rerank and raw is not None else k
+    cands = _adc_kernel(src, luts, ks, emit_top) if kernel else None
+    if cands is None:
+        cands = scan.select("query_id", "__qvec", "id", _adc_fold(ks).alias("adist"))
+        q = None
+    return _shortlist_finish(cands, k, rerank, raw, q)
 
 
 def pq_adc_topk(
@@ -437,116 +445,40 @@ def pq_adc_topk(
     attrs_id_col: str = "vec_id",
     strategy: str = "auto",
 ) -> DataFrame:
-    """ADC search over PQ codes: build each query's m×ks lookup table of
-    squared subspace distances ONCE (queries ⨯ codebook — both tiny),
-    flatten it to an array indexed [sub·ks + code], broadcast it, and
-    score every candidate as sqrt(Σ_sub lut[sub·ks + codes[sub]]) — m
-    lookups and adds per row, zero decode, folded sub-ascending so the
-    double result is engine-exact.
+    """Flat ADC search over PQ codes: build each query's m×ks lookup table
+    of squared subspace distances ONCE (queries ⨯ codebook — both tiny)
+    and score every code row as sqrt(Σ_sub lut[sub·ks + codes[sub]]) —
+    m lookups and adds per row, zero decode.
 
     ``predicate`` over ``attrs`` composes the metadata filter exactly as
-    on the SQ8/IVF/SRP paths: a qualifying-id semi-join prunes
-    candidates before the top-k window (pre-filter semantics — no
-    starvation). With ``rerank`` ≥ k and ``raw`` (id, vec), the
-    rerank-deep shortlist broadcasts into one join against the raw
-    vectors for an exact euclidean final ranking — the standard
-    two-stage PQ serving design.
+    on the SQ8/IVF/SRP paths: a qualifying-id semi-join prunes the code
+    rows before scoring (pre-filter semantics — no starvation). With
+    ``rerank`` ≥ k and ``raw`` (id, vec), the rerank-deep shortlist
+    broadcasts into one join against the raw vectors for an exact
+    euclidean final ranking — the standard two-stage PQ serving design.
 
-    strategy: "expr" = the in-plan transform/aggregate fold (bitwise-
-    exact vs the DuckDB oracle — the sf0.01 correctness spec); "numpy" =
-    the Arrow-batched gather kernel (last-ulp adist drift possible, so
-    pair it with rerank for exact final distances); "auto" = numpy above
-    vecblock.AUTO_NUMPY_THRESHOLD rows, matching every other kernel flip.
+    strategy (the same three values on all three PQ searches): "expr" =
+    the in-plan sub-ascending element_at fold, bitwise-exact vs the
+    DuckDB oracle (the sf0.01 correctness spec); "kernel" = the
+    mapInArrow ADC kernel (_adc_kernel), whose adist may differ from the
+    fold in the last ulp — pair it with rerank for exact final distances;
+    "auto" = kernel at or above vecblock.AUTO_NUMPY_THRESHOLD code rows,
+    matching every other kernel flip.
 
     Returns (query_id, id, distance, rank); `distance` is the ADC
     approximation unless re-ranked."""
+    qualifying = _qualifying_ids(predicate, attrs, attrs_id_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         vm.as_double(query_vec_col).alias("__qvec"),
     )
-    qslice = F.slice(F.col("__qvec"), F.col("sub") * d_sub + 1, F.lit(d_sub))
-    lut = (
-        q.crossJoin(F.broadcast(codebook))
-        .select(
-            "query_id", "__qvec", "sub", "code",
-            vm.squared_euclidean(qslice, F.col("cvec")).alias("d2"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.first("__qvec").alias("__qvec"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code", "d2"))),
-                lambda s: s["d2"],
-            ).alias("__lut"),
-        )
-    )
-    qualifying = None
-    if predicate is not None:
-        if attrs is None:
-            raise ValueError("filtered search needs BOTH predicate and attrs")
-        qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    strategy = choose_strategy(strategy, codes, "numpy", "expr")
-    lut_rows = (
-        lut.select("query_id", "__lut").collect() if strategy == "numpy" else []
-    )
-    if lut_rows:
-        src = codes if qualifying is None else codes.join(qualifying, "id", "left_semi")
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = codes.schema["id"].dataType.simpleString()
-        emit_top = rerank if (rerank and raw is not None) else k
-        m_ = len(lut_rows[0]["__lut"]) // ks
-        cands = src.select("id", "codes").mapInPandas(
-            _numpy_adc_scan_kernel(lut_rows, m_, ks, emit_top),
-            schema=f"query_id {qid_t}, id {id_t}, adist double",
-        )
-    else:
-        adist = F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.col("codes"),
-                    lambda c, i: F.element_at(F.col("__lut"), (i * ks + c + 1).cast("int")),
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        )
-        cands = codes.crossJoin(F.broadcast(lut)).select(
-            "query_id", "id", adist.alias("adist")
-        )
-        if qualifying is not None:
-            cands = cands.join(qualifying, "id", "left_semi")
-    return _adc_finish(cands, q, raw, k, rerank)
-
-
-def _adc_finish(
-    cands: DataFrame, q: DataFrame, raw: DataFrame | None, k: int, rerank: int
-) -> DataFrame:
-    """Shared ADC tail: global (adist, id) top-k, or rerank-deep
-    shortlist → broadcast join against raw vectors → exact euclidean
-    final ranking."""
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("id").asc())
-    if not rerank or raw is None:
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "id", F.col("adist").alias("distance"), "rank")
-        )
-    shortlist = (
-        cands.withColumn("__sr", F.row_number().over(w))
-        .filter(F.col("__sr") <= rerank)
-        .select("query_id", "id")
-        .join(F.broadcast(q), "query_id")
-    )
-    exact = raw.join(F.broadcast(shortlist), on="id").select(
-        "query_id", "id", vm.euclidean_distance("__qvec", "vec").alias("distance")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "distance", "rank")
+    lut = _adc_lut(q.withColumn("__lq", F.col("__qvec")), codebook, d_sub, ("query_id",))
+    kernel = choose_strategy(strategy, codes, "kernel", "expr") == "kernel"
+    if qualifying is not None:
+        codes = codes.join(qualifying, "id", "left_semi")
+    return _adc_search(
+        kernel, codes.select("id", "codes"), lut.select("query_id", "__lut"),
+        codes.crossJoin(F.broadcast(lut)), q, ks, k, rerank, raw,
     )
 
 
@@ -606,34 +538,23 @@ def ann_knn_ivf_pq(
 ) -> DataFrame:
     """IVF-PQ search: route each query to its n_probe nearest coarse
     centroids (ann.ann_knn_ivf's routing shape), scan ONLY those lists'
-    PQ codes with ADC (broadcast LUT, m lookups/row), then optionally
+    PQ codes with ADC (one LUT per query, m lookups/row), then optionally
     exact-re-rank the shortlist against raw vectors. The distances and
     candidate sets are bit-deterministic, so the whole compose is
     value-exact oracle-twinnable (plans/registry.py ann_ivf_pq_knn).
 
-    strategy: "expr" is the oracle-exact in-plan fold; "numpy" is the
-    legacy pandas gather kernel (grouped per query inside each batch) —
-    it LOST to the fold in round 5 (expr 9.4 s vs kernel 11.7 s at 1M;
-    54.9 vs 84.5 s at 10M) because np.stack over Arrow-materialized
-    object arrays dominated, and is kept only as the measured-loss
-    record; "arrow" is the mapInArrow LUT-slab kernel (r9) — codes via
-    ListArray.flatten, one slab row per QUERY with a pair→query row_map
-    (no LUT duplication per probed list), one numpy gather + row-sum
-    per batch. "auto" resolves to ARROW above vecblock.AUTO_NUMPY_THRESHOLD
-    index rows and expr below (the sf-scale oracle spec), superseding
-    the round-5 always-expr choice — the cost that made the pandas
-    kernel lose is gone (same-session A/B in SCALE.md r9). adist may
-    drift in the last ulp vs the fold on the arrow path; pair with
-    rerank when exact ADC ordering matters.
+    strategy: "auto", "kernel" or "expr", as on pq_adc_topk, with "auto"
+    judged on the index rows. The kernel's one collect carries the
+    routing and the LUTs together, one row per query — not one LUT per
+    probed list.
 
     ``predicate`` over ``attrs`` composes the metadata filter exactly as
     on the SQ8/IVF/SRP paths (reference search_with_filter over any
     Index, src/storage.rs:249-290): a qualifying-id semi-join prunes
-    code candidates BEFORE the shortlist window, so shortlist and top-k
-    fill from qualifying rows only — filter × coarse index × PQ, the
-    full serve composition."""
-    from .ann import _route_queries
-
+    code rows BEFORE the shortlist window, so shortlist and top-k fill
+    from qualifying rows only — filter × coarse index × PQ, the full
+    serve composition."""
+    qualifying = _qualifying_ids(predicate, attrs, attrs_id_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         vm.as_double(query_vec_col).alias("__qvec"),
@@ -641,133 +562,20 @@ def ann_knn_ivf_pq(
     routed = _route_queries(
         q, centers.select("list_id", F.col("cvec").alias("center")), n_probe
     ).select("query_id", "list_id")
-    qslice = F.slice(F.col("__qvec"), F.col("sub") * d_sub + 1, F.lit(d_sub))
-    lut = (
-        q.crossJoin(F.broadcast(codebook))
-        .select(
-            "query_id", "__qvec", "sub", "code",
-            vm.squared_euclidean(qslice, F.col("cvec")).alias("d2"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.first("__qvec").alias("__qvec"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code", "d2"))),
-                lambda s: s["d2"],
-            ).alias("__lut"),
-        )
+    lut = _adc_lut(q.withColumn("__lq", F.col("__qvec")), codebook, d_sub, ("query_id",))
+    kernel = choose_strategy(strategy, index, "kernel", "expr") == "kernel"
+    if qualifying is not None:
+        index = index.join(qualifying, "id", "left_semi")
+    src = index.join(F.broadcast(routed), on="list_id")
+    luts = (
+        routed.groupBy("query_id")
+        .agg(F.collect_list("list_id").alias("__lists"))
+        .join(lut.select("query_id", "__lut"), "query_id")
     )
-    qualifying = None
-    if predicate is not None:
-        if attrs is None:
-            raise ValueError("filtered search needs BOTH predicate and attrs")
-        qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    strategy = choose_strategy(strategy, index, "arrow", "expr", others=("numpy",))
-    if strategy == "arrow":
-        import numpy as np
-
-        # ONE collect for routing AND LUTs (r11): the two separate
-        # collects each ran a driver-blocking job whose shared subtree
-        # (queries × centers, incl. forcing the persisted centroid
-        # build) executed twice at DataFrame-build time. The routed
-        # list_ids aggregate per query BEFORE the LUT join (r12, ADVICE
-        # r11): the flat join shipped each query's m·ks-double LUT once
-        # per probed list — n_probe× the necessary driver transfer and
-        # collect memory; one row per query crosses the wire instead.
-        both = (
-            routed.groupBy("query_id")
-            .agg(F.collect_list("list_id").alias("__lists"))
-            .join(lut.select("query_id", "__lut"), "query_id")
-            .collect()
-        )
-        pair_rows = [
-            {"query_id": r["query_id"], "list_id": l}
-            for r in both
-            for l in r["__lists"]
-        ]
-        qrows = [{"query_id": r["query_id"], "__lut": r["__lut"]} for r in both]
-        # empty queries OR empty routing (e.g. no centers): the kernel's
-        # composite-key build (max over pair_rows) would raise on an empty
-        # sequence — expr returns the same (empty) result (ADVICE r9)
-        if not qrows or not pair_rows:
-            strategy = "expr"
-    if strategy == "arrow":
-        lut_len = len(qrows[0]["__lut"])
-        if lut_len % ks:
-            raise ValueError(
-                f"LUT length {lut_len} is not a multiple of ks={ks}: the "
-                "codebook trained fewer than ks codes per subspace"
-            )
-        m_ = lut_len // ks
-        slab = np.array(
-            [list(r["__lut"]) for r in qrows], dtype=np.float64
-        ).reshape(len(qrows), m_, ks)
-        qrow_of = {r["query_id"]: i for i, r in enumerate(qrows)}
-        mult = max(r["list_id"] for r in pair_rows) + 1
-        keys = np.array(
-            [int(r["query_id"]) * mult + int(r["list_id"]) for r in pair_rows],
-            dtype=np.int64,
-        )
-        row_map = np.array(
-            [qrow_of[r["query_id"]] for r in pair_rows], dtype=np.int64
-        )
-        order = np.argsort(keys)
-        keys, row_map = keys[order], row_map[order]
-        src = index.join(
-            F.broadcast(routed.select("query_id", "list_id")), on="list_id"
-        )
-        if qualifying is not None:
-            src = src.join(qualifying, "id", "left_semi")
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = index.schema["id"].dataType.simpleString()
-        emit_top = rerank if (rerank and raw is not None) else k
-        cands = src.select("query_id", "list_id", "id", "codes").mapInArrow(
-            _arrow_adc_routed_kernel(
-                keys, slab, mult, m_, ks, emit_top, row_map=row_map
-            ),
-            schema=f"query_id {qid_t}, id {id_t}, adist double",
-        )
-        return _adc_finish(cands, q, raw, k, rerank)
-    lut_rows = (
-        lut.select("query_id", "__lut").collect() if strategy == "numpy" else []
+    return _adc_search(
+        kernel, src.select("query_id", "list_id", "id", "codes"), luts,
+        src.join(F.broadcast(lut), on="query_id"), q, ks, k, rerank, raw,
     )
-    if lut_rows:
-        import numpy as np
-
-        m_ = len(lut_rows[0]["__lut"]) // ks
-        lut_map = {
-            r["query_id"]: np.array(list(r["__lut"]), dtype=np.float64).reshape(m_, ks)
-            for r in lut_rows
-        }
-        src = index.join(F.broadcast(routed), on="list_id")
-        if qualifying is not None:
-            src = src.join(qualifying, "id", "left_semi")
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = index.schema["id"].dataType.simpleString()
-        emit_top = rerank if (rerank and raw is not None) else k
-        cands = src.select("query_id", "id", "codes").mapInPandas(
-            _numpy_adc_candidates_kernel(lut_map, m_, ks, emit_top),
-            schema=f"query_id {qid_t}, id {id_t}, adist double",
-        )
-    else:
-        adist = F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.col("codes"),
-                    lambda c, i: F.element_at(F.col("__lut"), (i * ks + c + 1).cast("int")),
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        )
-        cands = (
-            index.join(F.broadcast(routed), on="list_id")
-            .join(F.broadcast(lut), on="query_id")
-            .select("query_id", "id", adist.alias("adist"))
-        )
-        if qualifying is not None:
-            cands = cands.join(qualifying, "id", "left_semi")
-    return _adc_finish(cands, q, raw, k, rerank)
 
 
 def ivf_residuals(
@@ -853,21 +661,10 @@ def ann_knn_ivf_pq_residual(
     metadata-filter semi-join). Deterministic end-to-end — value-exact
     oracle-twinnable (plans/registry.py ann_ivf_pq_res_knn).
 
-    strategy: "expr" = the in-plan element_at fold (bitwise-exact vs
-    the DuckDB oracle — the sf0.01 correctness spec); "kernel" = the
-    mapInArrow LUT-scan kernel (_arrow_adc_routed_kernel): the whole
-    per-(query,list) LUT slab rides in the closure and each batch is
-    one numpy gather + row-sum — the 100M+ serve path (VERDICT r8 #3;
-    the r5 pandas kernel lost to the fold on Arrow-export overhead,
-    the ListArray.flatten path does not — measured at the 10M decade,
-    SCALE.md r9). adist may drift in the last ulp vs the fold, so pair
-    it with rerank (exact euclidean final ranking) when exact ordering
-    matters. "auto" = kernel above vecblock.AUTO_NUMPY_THRESHOLD index rows,
-    matching every other kernel flip; requires integral query ids and
-    list ids (composite-key routing), which every index built here has.
-    """
-    from .ann import _route_queries
-
+    strategy: "auto", "kernel" or "expr", as on pq_adc_topk, with "auto"
+    judged on the index rows. The kernel collects one LUT per (query,
+    probed list) pair."""
+    qualifying = _qualifying_ids(predicate, attrs, attrs_id_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         vm.as_double(query_vec_col).alias("__qvec"),
@@ -875,110 +672,22 @@ def ann_knn_ivf_pq_residual(
     routed = _route_queries(
         q, centers.select("list_id", F.col("cvec").alias("center")), n_probe,
         keep_center=True,
-    ).select(
-        "query_id", "list_id", "__qvec",
-        vm.vec_sub("__qvec", "center").alias("__rq"),
     )
-    rq_slice = F.slice(F.col("__rq"), F.col("sub") * d_sub + 1, F.lit(d_sub))
-    lut = (
-        routed.crossJoin(F.broadcast(codebook))
-        .select(
-            "query_id", "list_id", "__qvec", "sub", "code",
-            vm.squared_euclidean(rq_slice, F.col("cvec")).alias("d2"),
-        )
-        .groupBy("query_id", "list_id")
-        .agg(
-            F.first("__qvec").alias("__qvec"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code", "d2"))),
-                lambda s: s["d2"],
-            ).alias("__lut"),
-        )
+    lut = _adc_lut(
+        routed.select(
+            "query_id", "list_id", "__qvec",
+            vm.vec_sub("__qvec", "center").alias("__lq"),
+        ),
+        codebook, d_sub, ("query_id", "list_id"),
     )
-    qualifying = None
-    if predicate is not None:
-        if attrs is None:
-            raise ValueError("filtered search needs BOTH predicate and attrs")
-        qualifying = attrs.filter(predicate).select(F.col(attrs_id_col).alias("id"))
-    strategy = choose_strategy(strategy, index, "kernel", "expr")
-    if strategy == "kernel":
-        import numpy as np
-
-        rows = lut.select("query_id", "list_id", "__lut").collect()
-        if not rows:  # no queries / empty routing — expr path returns empty
-            strategy = "expr"
-    if strategy == "kernel":
-        lut_len = len(rows[0]["__lut"])
-        if lut_len % ks:
-            raise ValueError(
-                f"LUT length {lut_len} is not a multiple of ks={ks}: the "
-                "codebook trained fewer than ks codes per subspace "
-                "(training sample smaller than ks?) — the expression path "
-                "would mis-index the same LUT silently; fix the codebook "
-                "or pass the actual ks"
-            )
-        m_ = lut_len // ks
-        mult = max(r["list_id"] for r in rows) + 1
-        keys = np.array(
-            [int(r["query_id"]) * mult + int(r["list_id"]) for r in rows],
-            dtype=np.int64,
-        )
-        order = np.argsort(keys)
-        keys = keys[order]
-        slab = np.array(
-            [list(rows[int(i)]["__lut"]) for i in order], dtype=np.float64
-        ).reshape(len(rows), m_, ks)
-        src = index.join(
-            F.broadcast(routed.select("query_id", "list_id")), on="list_id"
-        )
-        if qualifying is not None:
-            src = src.join(qualifying, "id", "left_semi")
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = index.schema["id"].dataType.simpleString()
-        emit_top = rerank if (rerank and raw is not None) else k
-        cands = src.select("query_id", "list_id", "id", "codes").mapInArrow(
-            _arrow_adc_routed_kernel(keys, slab, mult, m_, ks, emit_top),
-            schema=f"query_id {qid_t}, id {id_t}, adist double",
-        )
-        return _adc_finish(cands, q, raw, k, rerank)
-    adist = F.sqrt(
-        F.aggregate(
-            F.transform(
-                F.col("codes"),
-                lambda c, i: F.element_at(F.col("__lut"), (i * ks + c + 1).cast("int")),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
+    kernel = choose_strategy(strategy, index, "kernel", "expr") == "kernel"
+    if qualifying is not None:
+        index = index.join(qualifying, "id", "left_semi")
+    src = index.join(F.broadcast(routed.select("query_id", "list_id")), on="list_id")
     # one lut row per (query, probed list): joining on list_id alone
     # yields exactly the candidates of that query's probed lists
-    cands = (
-        index.join(F.broadcast(lut), on="list_id")
-        .select("query_id", "__qvec", "id", adist.alias("adist"))
-    )
-    if qualifying is not None:
-        cands = cands.join(qualifying, "id", "left_semi")
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("id").asc())
-    if not rerank or raw is None:
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "id", F.col("adist").alias("distance"), "rank")
-        )
-    shortlist = (
-        cands.withColumn("__sr", F.row_number().over(w))
-        .filter(F.col("__sr") <= rerank)
-        .select("query_id", "__qvec", "id")
-    )
-    exact = raw.join(F.broadcast(shortlist), on="id").select(
-        "query_id", "id", vm.euclidean_distance("__qvec", "vec").alias("distance")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "distance", "rank")
+    return _adc_search(
+        kernel, src.select("query_id", "list_id", "id", "codes"),
+        lut.select("query_id", F.array("list_id").alias("__lists"), "__lut"),
+        index.join(F.broadcast(lut), on="list_id"), q, ks, k, rerank, raw,
     )

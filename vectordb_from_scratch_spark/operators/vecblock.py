@@ -133,19 +133,17 @@ def choose_strategy(
     kernel: str = "numpy",
     fold: str = "window",
     *,
-    others: tuple[str, ...] = (),
     srp: bool = False,
 ) -> str:
     """Resolve ``strategy``: "auto" becomes ``kernel`` when ``df`` has at
     least the threshold's rows (SRP_KERNEL_THRESHOLD with ``srp``, else
     AUTO_NUMPY_THRESHOLD), else ``fold``; an explicit strategy must be
-    one of ``kernel``, ``fold`` or ``others``."""
+    ``kernel`` or ``fold``."""
     if strategy == "auto":
         threshold = SRP_KERNEL_THRESHOLD if srp else AUTO_NUMPY_THRESHOLD
         return kernel if estimated_rows(df) >= threshold else fold
-    allowed = (kernel, fold, *others)
-    if strategy not in allowed:
-        raise ValueError(f"strategy must be auto|{'|'.join(allowed)}, got {strategy!r}")
+    if strategy not in (kernel, fold):
+        raise ValueError(f"strategy must be auto|{kernel}|{fold}, got {strategy!r}")
     return strategy
 
 
@@ -246,6 +244,17 @@ def _first_k(qi: np.ndarray, dist: np.ndarray, null: np.ndarray,
     return order[pos < k]
 
 
+def _within_kth(key: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, column) positions of the entries of ``key`` (n, nq) at or
+    under their column's k-th smallest: a lossless cut before each
+    query's first k. NaN stands for NULL and ranks last; a column with
+    fewer than k numbers keeps every entry."""
+    if len(key) <= k:
+        return np.nonzero(np.ones(key.shape, bool))
+    kth = np.partition(key, k - 1, axis=0)[k - 1]
+    return np.nonzero((key <= kth) | np.isnan(kth))
+
+
 def topk_scan(v: DataFrame, probes: DataFrame, metric: str, k: int, *,
               vec_col: str, dist: str = "distance", dist_type: str = "double",
               d: int | None = None, dtype=np.float64) -> DataFrame:
@@ -259,12 +268,7 @@ def topk_scan(v: DataFrame, probes: DataFrame, metric: str, k: int, *,
         cand = []
         for batch, V, valid in blocks:
             D, null = pairwise(metric, V, Q, valid, qvalid)
-            if len(V) > k:  # keep rows at or under each query's k-th key
-                key = np.where(null, np.nan, D)
-                kth = np.partition(key, k - 1, axis=0)[k - 1]
-                r, c = np.nonzero((key <= kth) | np.isnan(kth))
-            else:
-                r, c = np.nonzero(np.ones_like(null))
+            r, c = _within_kth(np.where(null, np.nan, D), k)
             cand.append((c, batch.column("id").take(r), D[r, c], null[r, c]))
         if not cand:
             return
