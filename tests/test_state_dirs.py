@@ -311,3 +311,78 @@ def test_resolve_state_ladder(tmp_path):
     assert P.resolve_state(target, recover=True) == target
     assert os.path.exists(os.path.join(target, "_SUCCESS"))
     assert _siblings(target) == []
+
+
+def test_crash_inside_finish_leaves_no_complete_generation(spark, tmp_path, monkeypatch):
+    """`_SUCCESS` is written after `finish`: a first write killed inside
+    `finish` (its tmp left behind) is not served as a generation missing
+    what `finish` adds, e.g. a counts baseline without its max_folded."""
+    import shutil
+
+    target = str(tmp_path / "state")
+
+    def killed(tmp):
+        raise KeyboardInterrupt("killed inside finish")
+
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)  # no cleanup
+    with pytest.raises(KeyboardInterrupt):
+        P.overwrite_via_rename(spark.range(3), target, finish=killed)
+    monkeypatch.undo()
+    assert glob.glob(target + ".tmp-*")
+    assert P.resolve_state(target) is None
+    manifest = P.write_state(spark.range(3), target, {"gen": 1})
+    assert manifest == {"gen": 1, "rows": 3}
+    assert P.state_manifest(target) == (target, manifest)
+    assert os.path.exists(os.path.join(target, "_SUCCESS"))
+
+
+def test_lease_is_exclusive_and_reentrant_for_its_owner(tmp_path):
+    lease = str(tmp_path / "compaction_intent")
+    assert P.lease_holder(lease) is None
+    P.release_lease(lease)  # absent: a no-op
+    P.take_lease(lease, {"checkpoint": "ck", "batch_id": 3})
+    assert P.lease_holder(lease) == {"checkpoint": "ck", "batch_id": 3}
+    P.take_lease(lease, {"checkpoint": "ck", "batch_id": 3})  # a replay re-enters
+    with pytest.raises(RuntimeError, match="lease.*already held"):
+        P.take_lease(lease, {"checkpoint": "ck", "batch_id": 4})
+    P.release_lease(lease)
+    assert P.lease_holder(lease) is None
+    P.take_lease(lease, "B")
+    assert P.lease_holder(lease) == "B"
+
+
+def test_lease_force_seizes_file_and_directory_markers(tmp_path):
+    lease = str(tmp_path / "compaction_intent")
+    P.take_lease(lease, "A")
+    P.take_lease(lease, "B", force=True)
+    assert P.lease_holder(lease) == "B"
+    P.release_lease(lease)
+    os.makedirs(lease)  # e.g. a marker written as a Spark JSON directory
+    assert P.lease_holder(lease) is not None
+    with pytest.raises(RuntimeError, match="holds the lease"):
+        P.take_lease(lease, "C")
+    P.take_lease(lease, "C", force=True)
+    assert P.lease_holder(lease) == "C"
+
+
+def test_unreadable_lease_marker_is_held(tmp_path):
+    lease = str(tmp_path / "merge_intent")
+    with open(lease, "w") as f:
+        f.write('{"checkpoint": ')  # torn
+    assert P.lease_holder(lease) is not None
+    with pytest.raises(RuntimeError, match="already held"):
+        P.take_lease(lease, "A")
+
+
+def test_layout_check_names_exact_entries(tmp_path):
+    state = str(tmp_path / "state")
+    names = ("data", "fps_base")
+    P.check_layout(state, names)  # no state yet
+    for entry in ("data", "fps_base", "fps_base.tmp-0badc0de", "data.old-1"):
+        os.makedirs(os.path.join(state, entry))
+    P.check_layout(state, names)
+    for stray in ("fps_base_g1", "format"):
+        os.makedirs(os.path.join(state, stray))
+        with pytest.raises(RuntimeError, match="does not name"):
+            P.check_layout(state, names)
+        os.rmdir(os.path.join(state, stray))

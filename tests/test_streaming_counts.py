@@ -73,10 +73,10 @@ def test_compaction_preserves_totals_and_shrinks_state(spark, tmp_path):
     after = {r.key: r.cnt for r in read_counts(spark, state).collect()}
     assert after == before
     # every folded partition deleted; the baseline lives in its own
-    # committed generation dir, outside data/
+    # swapped generation dir, outside data/, its manifest inside it
     assert glob.glob(state + "/data/batch_id=*") == []
-    assert glob.glob(state + "/baseline_g*") == [state + "/baseline_g1"]
-    assert glob.glob(state + "/compaction/gen-*.json") != []
+    assert glob.glob(state + "/baseline*") == [state + "/baseline"]
+    assert glob.glob(state + "/baseline/_manifest.json") != []
     # idempotent re-run: nothing new to fold, totals unchanged
     info2 = compact_counts(spark, state)
     assert info2["folded"] == [] and info2["gen"] == 1
@@ -184,9 +184,9 @@ def test_old_layout_state_fails_loudly(spark, tmp_path):
     spark.createDataFrame([("view", 3)], "key string, cnt long").withColumn(
         "batch_id", SF.lit(0)
     ).coalesce(1).write.partitionBy("batch_id").parquet(state)
-    with pytest.raises(Exception, match="pre-fence layout"):
+    with pytest.raises(Exception, match="does not name"):
         read_counts(spark, state).collect()
-    with pytest.raises(Exception, match="pre-fence layout"):
+    with pytest.raises(Exception, match="does not name"):
         compact_counts(spark, state)
 
 
@@ -346,10 +346,12 @@ def test_crash_between_baseline_and_commit_never_double_counts(spark, tmp_path):
     data/batch_id=-1 — already containing the snapshot batches whose
     partitions (ids > recorded max_folded) were still on disk, so
     read_counts double-counted during the window and the re-run
-    re-folded them permanently. In the generation layout the orphan
-    baseline_g2 is invisible until its commit file exists: reads stay
-    exact and the re-run rebuilds g2 from the same still-on-disk
-    inputs."""
+    re-folded them permanently. In the swapped layout an incomplete
+    baseline.tmp-* (no _SUCCESS) is invisible to the recovery ladder:
+    reads stay exact and the re-run rebuilds gen 2 from the same
+    still-on-disk inputs."""
+    import os
+
     import pyspark.sql.functions as SF
 
     src, _ = _mkdata(spark, tmp_path)
@@ -365,9 +367,11 @@ def test_crash_between_baseline_and_commit_never_double_counts(spark, tmp_path):
     ).parquet(state + "/data")
     want = {r.key: r.cnt for r in read_counts(spark, state).collect()}
     assert want["view"] == 8 + 4 and want["scroll"] == 2
-    # simulate the crashed second compaction: its folded baseline_g2 is
-    # fully written (baseline g1 + batch 5) but the commit file is NOT
-    read_counts(spark, state).coalesce(1).write.parquet(state + "/baseline_g2")
+    # simulate the crashed second compaction: its folded baseline tmp
+    # holds baseline g1 + batch 5, but the write never completed
+    tmp = state + "/baseline.tmp-0badc0de"
+    read_counts(spark, state).coalesce(1).write.parquet(tmp)
+    os.remove(tmp + "/_SUCCESS")
     # the orphan changes nothing for readers — no double count
     assert {r.key: r.cnt for r in read_counts(spark, state).collect()} == want
     # the re-run folds the SAME inputs (all still on disk), overwrites
@@ -384,16 +388,17 @@ def test_second_concurrent_compactor_fails_loudly(spark, tmp_path):
     a stale lease (crashed holder) is explicit via force_takeover."""
     import pytest
 
-    from vectordb_from_scratch_spark.streaming._fence import write_intent
+    from vectordb_from_scratch_spark.sources.persistence import take_lease
 
     src, _ = _mkdata(spark, tmp_path)
     state = _run(spark, src, tmp_path, "twocompact")
     before = {r.key: r.cnt for r in read_counts(spark, state).collect()}
-    write_intent(spark, state)  # compactor A holds the lease
+    lease = state + "/compaction_intent"
+    take_lease(lease, {"compactor": "A"})  # compactor A holds the lease
     with pytest.raises(Exception, match="lease.*already held"):
         compact_counts(spark, state)  # compactor B must not proceed
     with pytest.raises(Exception, match="lease.*already held"):
-        write_intent(spark, state)  # nor re-take it blindly
+        take_lease(lease, {"compactor": "B"})  # nor re-take it blindly
     # operator-verified recovery: seize the stale lease and fold
     info = compact_counts(spark, state, force_takeover=True)
     assert len(info["folded"]) == 2
@@ -415,9 +420,9 @@ def test_r10_baseline_format_fails_loudly(spark, tmp_path):
     spark.createDataFrame([(1,)], "max_folded long").coalesce(1).write.json(
         state + "/compaction"
     )
-    with pytest.raises(Exception, match="r10 in-data baseline"):
+    with pytest.raises(Exception, match="does not name"):
         read_counts(spark, state).collect()
-    with pytest.raises(Exception, match="r10 in-data baseline"):
+    with pytest.raises(Exception, match="does not name"):
         compact_counts(spark, state)
 
 
@@ -449,3 +454,48 @@ def test_crash_between_manifest_and_delete_never_double_counts(spark, tmp_path):
     assert info["folded"] == []  # nothing new to fold
     assert g.glob(state + "/data/batch_id=0") == []
     assert {r.key: r.cnt for r in read_counts(spark, state).collect()} == before
+
+
+def test_crash_inside_baseline_swap_never_double_counts(spark, tmp_path, rename_crash):
+    """A compaction that crashes between its baseline swap's two renames:
+    read_counts stays exact while the baseline is missing (the ladder
+    serves the complete new generation, whose max_folded hides the
+    partials it folds), the stream is fenced by the stale lease, and the
+    forced re-run recovers the swap and folds nothing a second time."""
+    import os
+
+    import pyspark.sql.functions as SF
+    import pytest
+
+    src, _ = _mkdata(spark, tmp_path)
+    state = _run(spark, src, tmp_path, "crashswap")
+    compact_counts(spark, state)  # gen 1
+    spark.createDataFrame(
+        [("view", 4), ("scroll", 2)], "key string, cnt long"
+    ).withColumn("batch_id", SF.lit(5)).coalesce(1).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "batch_id"
+    ).parquet(state + "/data")
+    want = {r.key: r.cnt for r in read_counts(spark, state).collect()}
+    with rename_crash(), pytest.raises(OSError, match="injected crash"):
+        compact_counts(spark, state)
+    assert not os.path.exists(state + "/baseline")
+    assert os.path.exists(state + "/data/batch_id=5")  # not yet deleted
+    assert {r.key: r.cnt for r in read_counts(spark, state).collect()} == want
+    # the crashed compaction's lease fences the stream
+    spark.createDataFrame(
+        [(40, "view")], "event_id long, event_type string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(
+        "event_id long, event_type string"
+    ).option("maxFilesPerTrigger", 1).parquet(src)
+    q = counts_stream_foreach_batch(
+        spark, stream, state, str(tmp_path / "ckpt_crashswap")
+    ).start()
+    with pytest.raises(Exception, match="compaction in progress"):
+        q.awaitTermination(120)
+    info = compact_counts(spark, state, force_takeover=True)
+    assert info == {"folded": [], "gen": 2, "baseline_keys": 0}
+    assert sorted(os.listdir(state)) == ["baseline", "data"]
+    assert {r.key: r.cnt for r in read_counts(spark, state).collect()} == want

@@ -170,7 +170,7 @@ def test_compacted_state_screens_like_delta_state(spark, tmp_path):
     import os
 
     assert not os.path.exists(state + "/fps")    # delta folded away
-    assert os.path.exists(state + "/fps_base_g1")
+    assert os.path.exists(state + "/fps_base")
 
     spark.createDataFrame(
         [(20, BASE + " appended tail words"),    # near dup of 0 — base only
@@ -353,67 +353,6 @@ def test_compaction_snapshot_spares_interleaved_delta(spark, tmp_path, monkeypat
     assert not os.path.exists(state + "/fps")
 
 
-def test_old_format_state_fails_loudly_and_compaction_migrates(spark, tmp_path):
-    """State written before the r9 'x'-guarded pfx partition values has
-    bare-hex pfx partitions the current prefix-pruned probes would
-    SILENTLY miss — re-admitting previously-seen duplicates (ADVICE r9).
-    The format marker must make that fail loudly; running
-    compact_neardup_state once migrates (the fold reads whole batch_id
-    partitions regardless of pfx form, the base carries no pfx) and the
-    screen then drops dups of PRE-upgrade docs again."""
-    import os
-    import shutil
-
-    from vectordb_from_scratch_spark.streaming.neardup_stream import (
-        compact_neardup_state,
-    )
-
-    src = str(tmp_path / "src_mig")
-    out = str(tmp_path / "out_mig")
-    state = str(tmp_path / "state_mig")
-
-    def run(ck):
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = neardup_stream_foreach_batch(
-            spark, stream, out, state, str(tmp_path / ck), threshold=0.4
-        ).start()
-        q.awaitTermination(180)
-
-    spark.createDataFrame(
-        [(0, BASE), (1, OTHER)], "doc_id long, text string"
-    ).coalesce(1).write.parquet(src)
-    run("ck_mig1")
-    assert os.path.exists(state + "/format")
-
-    # downgrade the state to the pre-r9 layout: strip the marker and
-    # rewrite every pfx partition value without the letter guard
-    shutil.rmtree(state + "/format")
-    for sub in ("fps", "bands"):
-        df = spark.read.parquet(f"{state}/{sub}")
-        old = df.withColumn("pfx", F.expr("substring(pfx, 2)"))
-        tmp_out = str(tmp_path / f"mig_old_{sub}")
-        old.write.partitionBy("batch_id", "pfx").parquet(tmp_out)
-        shutil.rmtree(f"{state}/{sub}")
-        shutil.move(tmp_out, f"{state}/{sub}")
-
-    # a new batch against marker-less delta state must fail loudly,
-    # never silently re-admit
-    spark.createDataFrame(
-        [(10, BASE)], "doc_id long, text string"  # exact dup of pre-upgrade 0
-    ).coalesce(1).write.mode("append").parquet(src)
-    with pytest.raises(Exception, match="predates the state-format marker"):
-        run("ck_mig2")
-
-    # migration: one compaction folds the bare-pfx deltas into the
-    # (format-independent) bucketed base and stamps the marker
-    info = compact_neardup_state(spark, state, n_buckets=8)
-    assert info["fps_rows"] == 2 and os.path.exists(state + "/format")
-
-    run("ck_mig3")  # fresh checkpoint replays the dup batch cleanly
-    got = {r.doc_id for r in read_survivors(spark, out).collect()}
-    assert got == {0, 1}  # the pre-upgrade doc's dup was dropped
-
-
 def test_future_format_state_fails_loudly(spark, tmp_path):
     """A marker with a DIFFERENT version than this code expects must
     fail the stream, not probe state it cannot interpret."""
@@ -430,27 +369,28 @@ def test_future_format_state_fails_loudly(spark, tmp_path):
         spark, stream, str(tmp_path / "out_fut"), state,
         str(tmp_path / "ck_fut"), threshold=0.4,
     ).start()
-    with pytest.raises(Exception, match="pfx_format=99"):
+    with pytest.raises(Exception, match="does not name"):
         q.awaitTermination(180)
 
 
-def test_legacy_spark_json_manifest_read_and_superseded(spark, tmp_path):
-    """Pre-r11 states committed their manifest as a delete-then-write
-    Spark-JSON overwrite; _read_manifest must still honor it (the
-    compacted base keeps screening — dropping it would re-admit every
-    dup whose prior occurrence lives only in the base), and the next
-    compaction supersedes it with the atomic gen-file commit."""
-    import glob
+def test_crash_between_base_swaps_keeps_screening(spark, tmp_path, rename_crash):
+    """A compaction that crashes between the fps_base swap's two renames
+    (its new generation complete in the tmp, bands_base still the old
+    one, the two at different n_buckets): the stream is fenced by the
+    stale lease; with the lease gone, a document whose only prior
+    occurrence is in the base is still dropped and the folded deltas are
+    not lost; the forced re-run recovers the swap and it is dropped
+    again."""
     import os
 
     from vectordb_from_scratch_spark.streaming.neardup_stream import (
         compact_neardup_state,
     )
 
-    src = str(tmp_path / "src_legacy")
-    out = str(tmp_path / "out_legacy")
-    state = str(tmp_path / "state_legacy")
-    ckpt = str(tmp_path / "ckpt_legacy")
+    src = str(tmp_path / "src_crash")
+    out = str(tmp_path / "out_crash")
+    state = str(tmp_path / "state_crash")
+    ckpt = str(tmp_path / "ckpt_crash")
 
     def run_once():
         stream = spark.readStream.schema("doc_id long, text string").parquet(src)
@@ -463,30 +403,33 @@ def test_legacy_spark_json_manifest_read_and_superseded(spark, tmp_path):
         [(0, BASE), (1, OTHER)], "doc_id long, text string"
     ).coalesce(1).write.parquet(src)
     run_once()
-    compact_neardup_state(spark, state, n_buckets=8)
-    # rewrite the manifest in the legacy format (what an r10 state has
-    # on disk): Spark-JSON part files, no gen-* marker
-    for p in glob.glob(state + "/compaction/gen-*.json"):
-        os.remove(p)
+    compact_neardup_state(spark, state, n_buckets=8)  # gen 1: base only
     spark.createDataFrame(
-        [(8, 1)], "n_buckets int, gen int"
-    ).coalesce(1).write.mode("overwrite").json(state + "/compaction")
-    assert glob.glob(state + "/compaction/gen-*.json") == []
-
-    # a dup whose prior occurrence lives ONLY in the g1 base must still
-    # be dropped — the legacy manifest is honored
+        [(10, THIRD)], "doc_id long, text string"
+    ).coalesce(1).write.mode("append").parquet(src)
+    run_once()  # THIRD's state lives in the delta
+    with rename_crash(), pytest.raises(OSError, match="injected crash"):
+        compact_neardup_state(spark, state, n_buckets=4)
+    assert not os.path.exists(state + "/fps_base")
+    assert os.path.exists(state + "/fps")  # the folded delta is kept
+    # a dup batch is fenced by the crashed compaction's lease
     spark.createDataFrame(
-        [(21, BASE)], "doc_id long, text string"
+        [(20, BASE + " appended tail words"), (21, BASE), (22, THIRD)],
+        "doc_id long, text string",
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(Exception, match="compaction in progress"):
+        run_once()
+    # once the lease is forced away the window's probes still see every
+    # seen row: the near dup, the exact dup (base only) and the delta dup
+    os.remove(state + "/compaction_intent")
+    run_once()
+    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {0, 1, 10}
+    info = compact_neardup_state(spark, state, n_buckets=4, force_takeover=True)
+    assert (info["gen"], info["fps_rows"], info["bands_rows"]) == (3, 3, 12)
+    assert sorted(os.listdir(state)) == ["bands_base", "fps_base"]
+    spark.createDataFrame(
+        [(30, BASE), (31, THIRD), (32, BASE + " appended tail words")],
+        "doc_id long, text string",
     ).coalesce(1).write.mode("append").parquet(src)
     run_once()
-    got = {r.doc_id for r in read_survivors(spark, out).collect()}
-    assert got == {0, 1}
-
-    # the next compaction commits the atomic gen-file and removes the
-    # legacy part files
-    info = compact_neardup_state(spark, state, n_buckets=8)
-    assert info["gen"] == 2
-    assert glob.glob(state + "/compaction/gen-*.json") != []
-    assert glob.glob(state + "/compaction/part-*") == []
-    run_once()
-    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {0, 1}
+    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {0, 1, 10}

@@ -1,7 +1,7 @@
 """Kernel-vs-expression crossover sweep (VERDICT r9 #2).
 
-The auto-strategy thresholds — vecblock.AUTO_NUMPY_THRESHOLD (50k, set
-r5), vecblock.SRP_KERNEL_THRESHOLD (1k), and the PQ ADC auto crossover
+The auto-strategy thresholds — vecblock.AUTO_NUMPY_THRESHOLD (5,000),
+vecblock.SRP_KERNEL_THRESHOLD (1k), and the PQ ADC auto crossover
 (ties to AUTO_NUMPY_THRESHOLD) — predate the r9 ListArray.flatten discovery that
 erased the Arrow kernels' export cost. This tool re-measures each
 kernel/expr pair on IN-PLAN synthetic embeddings across row decades and
@@ -31,6 +31,14 @@ N_PROBES = 100
 K = 10
 
 
+def _driver_memory() -> str:
+    """Driver heap: two fifths of physical memory, 2g to 48g — the
+    1M-row cells collect large blocks, but a heap sized past the box
+    pushes it into swap or the OOM killer."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(2, min(48, gib * 2 // 5))}g"
+
+
 def main() -> int:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
@@ -48,7 +56,7 @@ def main() -> int:
     spark = build_session(
         app_name="kernel_crossover_bench",
         shuffle_partitions=32,
-        launch={**xm.UI_LAUNCH, "spark.driver.memory": "48g"},
+        launch={**xm.UI_LAUNCH, "spark.driver.memory": _driver_memory()},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -42,13 +42,21 @@ Metadata IS persisted — the reference drops it on checkpoint
 (engine.rs:224, bug P9); we deliberately do not replicate that.
 
 State directories. Every rewritten state directory (the store's data/,
-the log-fold state, the SCD2 dimension, the streaming ANN indexes) is
-swapped, resolved and recovered here and nowhere else:
+the log-fold state, the SCD2 dimension, the streaming ANN indexes, the
+counts baseline and the near-dup bases) is swapped, resolved and
+recovered here and nowhere else:
 
 - swap (`overwrite_via_rename`): write `<dir>.tmp-*` in full, rename
   `<dir>` to `<dir>.old-*`, rename the tmp to `<dir>`, then remove every
   `.old-*`/`.tmp-*` sibling — the generations the commit superseded.
-  Between the two renames `<dir>` does not exist.
+  Between the two renames `<dir>` does not exist. When the caller adds
+  to the generation (`finish`, e.g. a `_manifest.json`), `_SUCCESS` is
+  written last, after it: a tmp with `_SUCCESS` holds everything.
+- manifest (`write_state`, `state_manifest`): a generation may carry a
+  `_manifest.json` — the store's log_seq, the counts baseline's
+  {gen, max_folded}, a near-dup base's {gen, n_buckets} — committed in
+  the same swap as its data, with its row count from the parquet
+  footers (no read-back job).
 - resolve (`resolve_state`/`read_state`), the recovery ladder: `<dir>`
   itself; else the newest COMPLETE `<dir>.tmp-*` (its `_SUCCESS` proves
   the write finished, so the crash came between the renames and the tmp
@@ -61,11 +69,29 @@ swapped, resolved and recovered here and nowhere else:
   read.
 - readers never rename. `recover=True` renames the resolved generation
   into place (and removes the superseded ones); only the directory's
-  one writer may pass it, while it holds the directory's lease (SCD2's
-  `.merge_intent`) or is its only writer by construction (an append
-  stream). A reader racing a live swap could otherwise steal the
-  writer's rename. Appends (`append_state`) recover first, so an append
-  never recreates a missing target beside an orphaned generation.
+  one writer may pass it, while it holds the directory's lease (below)
+  or is its only writer by construction (an append stream). A reader
+  racing a live swap could otherwise steal the writer's rename. Appends
+  (`append_state`) recover first, so an append never recreates a
+  missing target beside an orphaned generation.
+
+Leases (`take_lease`, `lease_holder`, `release_lease`). A writer that
+must exclude every other writer of a state — a compactor of the counts
+or near-dup state (`<state>/compaction_intent`), an SCD2 merge
+(`<dim>.merge_intent`) — holds a marker file created with
+O_CREAT|O_EXCL and holding its owner as JSON. Exactly one of racing
+takers creates it; a taker whose owner equals the recorded one re-enters
+(an SCD2 replay of the same checkpoint and batch). A compactor passes a
+fresh owner per call, so a lease a crashed compaction left yields only
+to `force`, which removes the marker (file or directory) first. A marker
+that is not readable JSON is held by an unknown owner. A stream checks
+`lease_holder` before it writes and fails its batch while a lease is
+held.
+
+Layouts (`check_layout`): a state directory names its top-level
+entries; one that is not a named entry or its `.tmp-*`/`.old-*`
+sibling (state in another layout, e.g. an earlier version's) raises
+instead of being read as absent.
 """
 
 from __future__ import annotations
@@ -74,6 +100,7 @@ import glob
 import json
 import logging
 import os
+import re
 import shutil
 import uuid
 from dataclasses import dataclass, field, replace
@@ -102,10 +129,18 @@ __all__ = [
     "resolve_state",
     "read_state",
     "append_state",
+    "write_state",
+    "state_manifest",
+    "check_layout",
+    "take_lease",
+    "lease_holder",
+    "release_lease",
 ]
 
 MANIFEST = "manifest.json"  # the legacy root manifest
 DATA_MANIFEST = "_manifest.json"
+# the Hadoop committer flag for the writer's own _SUCCESS marker
+_MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 LOG = "log"
 # log entries past the snapshot at which a write folds them into a new
 # snapshot: the reference's checkpoint_interval (engine.rs:22-29)
@@ -189,15 +224,24 @@ def overwrite_via_rename(
 
     `finish(tmp)` runs after the write and before the swap, so what it
     adds to the generation commits with the data; when it raises, the
-    tmp is removed and nothing is swapped."""
+    tmp is removed and nothing is swapped. Spark then writes no
+    `_SUCCESS`; it is written (fsync'd) after `finish`: the recovery
+    ladder serves a tmp with `_SUCCESS`, so a crash inside `finish` must
+    not leave one."""
     tmp = f"{target_dir}.tmp-{uuid.uuid4().hex[:8]}"
     writer = df.write.mode("overwrite")
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
+    if finish is not None:
+        writer = writer.option(_MARK_SUCCESS, "false")
     writer.parquet(tmp)
     if finish is not None:
+        success = os.path.join(tmp, "_SUCCESS")
         try:
             finish(tmp)
+            open(success, "w").close()
+            _fsync(success)
+            _fsync(tmp)
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
@@ -222,6 +266,48 @@ def _first_len(files: list[str], vec_col: str) -> int | None:
                 v = batch.column(0)[0].as_py()
                 return None if v is None else len(v)
     return None
+
+
+def _commit_manifest(tmp: str, manifest: dict) -> None:
+    """`manifest` as the generation `tmp`'s _manifest.json (written
+    whole, then renamed), and every file of `tmp` fsync'd (the directory
+    is fsync'd with the `_SUCCESS` that follows)."""
+    target = os.path.join(tmp, DATA_MANIFEST)
+    with open(target + ".tmp", "w") as f:
+        json.dump(manifest, f)
+    os.replace(target + ".tmp", target)
+    for p in _part_files(tmp) + [target]:
+        _fsync(p)
+
+
+def write_state(
+    df: DataFrame, target_dir: str, manifest: dict,
+    partition_by: str | None = None,
+) -> dict:
+    """Swap `df` in as `target_dir`'s next generation with `manifest`,
+    plus `rows` (the written row count, from the parquet footers),
+    committed inside it (module docstring). The only Spark jobs are the
+    write's. Returns the committed manifest."""
+    manifest = dict(manifest)
+
+    def finish(tmp: str) -> None:
+        manifest["rows"] = parquet_rows(_part_files(tmp))
+        _commit_manifest(tmp, manifest)
+
+    overwrite_via_rename(df, target_dir, partition_by, finish)
+    return manifest
+
+
+def state_manifest(target_dir: str, *, recover: bool = False) -> tuple[str | None, dict]:
+    """The live generation of `target_dir` (`resolve_state`) and the
+    manifest committed inside it; (None, {}) when no generation exists,
+    {} when the generation has no manifest."""
+    path = resolve_state(target_dir, recover=recover)
+    f = None if path is None else os.path.join(path, DATA_MANIFEST)
+    if f is None or not os.path.exists(f):
+        return path, {}
+    with open(f) as fh:
+        return path, json.load(fh)
 
 
 def write_snapshot(
@@ -257,12 +343,7 @@ def write_snapshot(
         if log_seq is not None:
             # high-water log position this snapshot folds up to
             manifest["log_seq"] = int(log_seq)
-        target = os.path.join(tmp, DATA_MANIFEST)
-        with open(target + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(target + ".tmp", target)
-        for p in files + [target, tmp]:
-            _fsync(p)
+        _commit_manifest(tmp, manifest)
 
     overwrite_via_rename(state, os.path.join(path, "data"), partition_by, finish)
     if os.path.exists(os.path.join(path, MANIFEST)):
@@ -279,14 +360,90 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
 def read_manifest(path: str) -> dict:
     """The manifest of the snapshot's live data generation, else a
     legacy root manifest.json, else {} (nothing written yet)."""
-    data = resolve_state(os.path.join(path, "data"))
-    for f in ([os.path.join(data, DATA_MANIFEST)] if data else []) + [
-        os.path.join(path, MANIFEST)
-    ]:
-        if os.path.exists(f):
-            with open(f) as fh:
-                return json.load(fh)
-    return {}
+    _, manifest = state_manifest(os.path.join(path, "data"))
+    if manifest or not os.path.exists(os.path.join(path, MANIFEST)):
+        return manifest
+    with open(os.path.join(path, MANIFEST)) as fh:
+        return json.load(fh)
+
+
+# -- layouts and leases ----------------------------------------------------
+
+
+def check_layout(state_dir: str, names: tuple[str, ...]) -> None:
+    """Raise when `state_dir` holds a top-level entry that is neither one
+    of `names` nor a `<name>.tmp-*`/`<name>.old-*` generation of one."""
+    if not os.path.isdir(state_dir):
+        return
+    alts = "|".join(map(re.escape, names))
+    named = re.compile(rf"(?:{alts})(?:\.(?:tmp|old)-.*)?")
+    for entry in sorted(os.listdir(state_dir)):
+        if not named.fullmatch(entry):
+            raise RuntimeError(
+                f"state at {state_dir} holds {entry!r}, which its layout "
+                f"({', '.join(names)}) does not name: it was written in "
+                "another layout, and reading on could miss or double-count "
+                "it — move it away or reset the state"
+            )
+
+
+_UNKNOWN = "unknown"
+
+
+def lease_holder(path: str):
+    """The owner recorded in the lease marker `path`; None when there is
+    no marker. A marker that is not readable JSON (a directory, a torn
+    file) is held by an unknown owner, "unknown"."""
+    try:
+        with open(path) as f:
+            owner = json.load(f)
+    except FileNotFoundError:
+        return None
+    except (OSError, ValueError):
+        return _UNKNOWN
+    return _UNKNOWN if owner is None else owner
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def take_lease(path: str, owner, *, force: bool = False) -> None:
+    """Take the lease whose marker is `path` for `owner` (JSON, compared
+    by equality): by exclusive create, or by re-entry when the marker
+    already records `owner`. Raises while another owner holds it;
+    `force` removes the marker first — only once no holder is alive."""
+    if force:
+        _remove(path)
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    while True:
+        try:
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            holder = lease_holder(path)
+            if holder is None:  # released since the create failed
+                continue
+            if holder == owner:
+                return
+            raise RuntimeError(
+                f"lease {path} is already held: {holder!r} holds the lease. "
+                "Another writer is running, or one that crashed left it: "
+                "verify that no holder is alive, then take it over (a "
+                "compaction's force_takeover=True) or remove the marker"
+            ) from None
+        with os.fdopen(fd, "w") as f:
+            json.dump(owner, f)
+            f.flush()
+            os.fsync(f.fileno())
+        return
+
+
+def release_lease(path: str) -> None:
+    """Remove the lease marker `path`; absent is fine."""
+    _remove(path)
 
 
 # -- the log ---------------------------------------------------------------

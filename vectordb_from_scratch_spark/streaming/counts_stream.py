@@ -15,69 +15,54 @@ shape flipped into storage.
 Scale: per-batch state grows by |distinct keys in batch| rows, never
 raw row count; the read-side merge is one hash aggregate over
 (keys × batches) partial rows. When history accrues, compact_counts
-folds all partials into a generation-versioned baseline the same way
-the WAL checkpoint folds the insert log (sources/persistence.py) —
-after compaction the read scans |distinct keys| + |keys since
-compaction| rows.
+folds the partials into a baseline the same way the store's log
+compaction folds its log (sources/persistence.py) — after compaction
+the read scans |distinct keys| + |keys since compaction| rows.
 
-Crash/interleave safety (VERDICT r9 #6 fence; r11 atomic commit —
-the r10 layout committed the fold in TWO non-atomic steps, a dynamic
-overwrite of a baseline partition inside `data/` followed by a
-max_folded manifest write, so a crash between them left a baseline
-already containing the snapshot batches alongside their undeleted
-partitions with ids still above the recorded max_folded: read_counts
-double-counted during the window and a re-run compaction re-folded
-them permanently. The generation layout below has no such window):
-- INTENT LEASE: compact_counts atomically creates
-  `<state>/compaction_intent` (exclusive create — a second concurrent
-  compactor fails loudly; _fence.write_intent) before reading any
-  partial and clears it last; the merge checks it at batch start AND
-  immediately before its write, failing the micro-batch loudly (the
-  stream retries off its checkpoint after compaction finishes).
-- BATCH-ID SNAPSHOT: the fold reads only the batch partitions
-  physically present when it starts and deletes ONLY those — a partial
-  landed by a batch that slipped past the intent check survives both
-  the fold and the delete.
-- GENERATION BASELINE + ATOMIC MANIFEST: the fold writes
-  (old baseline ∪ snapshot partials) to a FRESH directory
-  `<state>/baseline_g{g+1}`, then commits by atomically creating ONE
-  empty marker file `<state>/compaction/gen-{g+1}-{max_folded}.json`
-  whose NAME carries the whole manifest (no content-write window;
-  _fence.commit_generation). Readers resolve the highest committed
-  generation. Every crash point is covered:
-    * crash BEFORE the commit file: readers still resolve generation g
-      — old baseline + every partial above g's max_folded — exact; the
-      new baseline_g{g+1} is an orphan no reader references, and the
-      re-run overwrites it from the same inputs (all still on disk);
-    * crash AFTER the commit file, before the deletes: readers resolve
-      g+1 and the stale filter (batch_id > max_folded) excludes the
-      not-yet-deleted folded partitions, so served totals stay exact;
-      the re-run just finishes the deletes without re-folding;
-    * a REPLAYED batch with id ≤ max_folded (partial written,
-      checkpoint commit lost, compaction ran before the replay) skips
-      its write — its counts already live in the baseline.
-  (Re-ingesting a compacted state from a FRESH checkpoint remains out
-  of scope, as for every stream here: batch numbering restarts and no
-  sink bookkeeping can realign it — reset the state.)
+State layout:
+- `<state>/data/batch_id=<b>/`: batch b's partial counts (key, cnt);
+- `<state>/baseline/`: the folded totals, one generation swapped by
+  `persistence.write_state`, its manifest holding {gen, max_folded} —
+  the highest batch id it folds;
+- `<state>/compaction_intent`: the compaction lease.
+The swap, the recovery ladder, the lease and the layout check are
+persistence's (module docstring there). On top of them:
+- the stale filter: readers count only the partials above max_folded,
+  so a partition folded but not yet deleted never counts twice;
+- the batch-id snapshot: a compaction folds and deletes only the
+  partitions present when it starts, so a partial landed by a batch
+  that slipped past the lease check survives both;
+- the replay skip: a replayed batch with id ≤ max_folded (partial
+  written, checkpoint commit lost, compaction ran before the replay)
+  skips its write — its counts already live in the baseline.
+A compaction that crashes before its swap commits leaves the old
+baseline and every partial (exact); between the swap's renames the
+ladder serves the complete new generation, whose max_folded hides the
+partials it folds; after the swap the stale filter covers them until
+the next compaction (`force_takeover=True`, the crashed one's lease
+being stale) deletes them without folding them again.
+(Re-ingesting a compacted state from a FRESH checkpoint remains out of
+scope, as for every stream here: batch numbering restarts and no sink
+bookkeeping can realign it — reset the state.)
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import cache
-from ._fence import (
-    check_intent_fence,
-    clear_intent,
-    commit_generation,
-    fs_for,
-    manifest_has_legacy_json,
-    resolve_generation,
-    write_intent,
+from ..sources.persistence import (
+    check_layout,
+    release_lease,
+    state_manifest,
+    take_lease,
+    write_state,
 )
-from .dedup_stream import _dir_exists
+from .dedup_stream import _fail_while_compacting, _list_batch_ids
 
 __all__ = [
     "counts_stream_foreach_batch",
@@ -86,96 +71,19 @@ __all__ = [
     "compact_counts",
 ]
 
-
-def _manifest_dir(state_dir: str) -> str:
-    return state_dir + "/compaction"
+_LAYOUT = ("data", "baseline", "compaction_intent")
 
 
-def _baseline_dir(state_dir: str, gen: int) -> str:
-    return f"{state_dir}/baseline_g{gen}"
-
-
-def _check_layout(spark: SparkSession, state_dir: str) -> None:
-    """Fail loudly on state formats this code cannot read EXACTLY,
-    instead of silently under/over-counting:
-    - pre-fence (≤ r9): partials directly under state_dir → move the
-      batch_id=* directories under <state>/data;
-    - pre-generation (r10): baseline stored as the data/batch_id=-1
-      partition + a Spark-JSON max_folded manifest → migrate by moving
-      data/batch_id=-1 to <state>/baseline_g1 and creating the empty
-      commit file <state>/compaction/gen-000000000001-<max_folded>.json
-      (then delete the old part-*.json manifest files)."""
-    fs, jpath = fs_for(spark, state_dir)
-    if fs.exists(jpath):
-        for st in fs.listStatus(jpath):
-            if st.isDirectory() and st.getPath().getName().startswith(
-                "batch_id="
-            ):
-                raise RuntimeError(
-                    f"counts state at {state_dir} uses the pre-fence "
-                    "layout (batch_id=* partitions at the state root): "
-                    f"move them under {state_dir}/data and retry — "
-                    "reading on would silently treat every existing "
-                    "count as zero"
-                )
-    if _dir_exists(spark, state_dir + "/data/batch_id=-1") or (
-        resolve_generation(spark, _manifest_dir(state_dir)) is None
-        and manifest_has_legacy_json(spark, _manifest_dir(state_dir))
-    ):
-        raise RuntimeError(
-            f"counts state at {state_dir} uses the r10 in-data baseline "
-            "format (data/batch_id=-1 + Spark-JSON manifest): migrate "
-            "by moving data/batch_id=-1 to baseline_g1 and committing "
-            "gen-000000000001-<max_folded>.json under compaction/ — "
-            "reading on would double- or zero-count the baseline"
-        )
-
-
-def _max_folded(spark: SparkSession, state_dir: str) -> tuple[int, int]:
-    """(gen, max_folded) of the committed baseline; (0, -1) = never
-    compacted. Batch ids are monotone within a checkpoint, so the
-    folded set is exactly {0..max_folded} ∩ {ids that ever existed}."""
-    got = resolve_generation(spark, _manifest_dir(state_dir))
-    return got if got is not None else (0, -1)
-
-
-def _orphan_baselines(
-    spark: SparkSession, state_dir: str, committed_gen: int
-) -> list[str]:
-    """baseline_g* directories below the committed generation — debris a
-    crash between commit and delete leaves behind (plus any orphan
-    half-written generation ABOVE it is overwritten by the next fold, so
-    only the below-committed ones need sweeping)."""
-    fs, jpath = fs_for(spark, state_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("baseline_g"):
-            try:
-                g = int(name[len("baseline_g"):])
-            except ValueError:
-                continue
-            if g < committed_gen:
-                out.append(f"{state_dir}/{name}")
-    return out
-
-
-def _list_batch_ids(spark: SparkSession, data_dir: str) -> list[int]:
-    """batch_id partition values (>= 0) physically present — the fold's
-    snapshot: only these are read and only these are deleted."""
-    fs, jpath = fs_for(spark, data_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            bid = int(name.split("=", 1)[1])
-            if bid >= 0:
-                out.append(bid)
-    return sorted(out)
+def _baseline(state_dir: str, *, recover: bool = False) -> tuple[str | None, int, int]:
+    """(live baseline generation, gen, max_folded) after the layout
+    check; (None, 0, -1) = never compacted. Batch ids are monotone within
+    a checkpoint, so the folded set is {0..max_folded} ∩ {ids that ever
+    existed}."""
+    check_layout(state_dir, _LAYOUT)
+    path, manifest = state_manifest(state_dir + "/baseline", recover=recover)
+    if path is None:
+        return None, 0, -1
+    return path, manifest["gen"], manifest["max_folded"]
 
 
 def counts_stream_foreach_batch(
@@ -189,22 +97,17 @@ def counts_stream_foreach_batch(
     unstarted writeStream (availableNow trigger), same contract as
     dedup_stream_foreach_batch."""
     data_dir = state_dir + "/data"
-    folded_cache: list = []  # per stream instance, like neardup's manifest
+    lease = state_dir + "/compaction_intent"
 
-    def _check_fence(s: SparkSession) -> None:
-        check_intent_fence(s, state_dir, "counts stream", "compact_counts")
+    def _check_fence() -> None:
+        _fail_while_compacting(lease, "counts stream", "compact_counts")
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        _check_fence(s)
-        if not folded_cache:
-            _check_layout(s, state_dir)  # once per stream instance
-            folded_cache.append(_max_folded(s, state_dir)[1])
-        if batch_id <= folded_cache[0]:
+        _check_fence()
+        if batch_id <= _baseline(state_dir)[2]:
             # crash-dangling replay AFTER compaction: this batch's partial
             # was folded into the baseline (and its partition deleted) —
-            # re-writing it would double-count exactly once. Its data is
-            # durably in the baseline; the replay is a no-op.
+            # re-writing it would double-count exactly once
             return
         partial = (
             batch.groupBy(F.col(key_col).alias("key"))
@@ -215,7 +118,7 @@ def counts_stream_foreach_batch(
         )
         # re-check the lease immediately before the write: a compaction
         # that began mid-batch must not race the partial landing below
-        _check_fence(s)
+        _check_fence()
         (
             partial.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -230,36 +133,37 @@ def counts_stream_foreach_batch(
     )
 
 
-def read_counts(
-    spark: SparkSession, state_dir: str, key_type: str = "string"
-) -> DataFrame:
-    """Current total count per key (empty-safe): sum of the committed
-    baseline generation and every batch partial ABOVE its max_folded —
-    the stale filter keeps totals exact even inside the
-    commit-before-delete crash window (module docstring). ``key_type``
-    shapes the empty result before any batch."""
-    _check_layout(spark, state_dir)
+def _totals(spark: SparkSession, state_dir: str, batch_filter, baseline: str | None):
+    """(key, cnt) summed over the partials `batch_filter` keeps and the
+    baseline generation; None when there is neither."""
     data_dir = state_dir + "/data"
-    gen, mf = _max_folded(spark, state_dir)
     parts = []
     if _list_batch_ids(spark, data_dir):
-        partials = spark.read.parquet(data_dir).select("key", "cnt", "batch_id")
-        if mf >= 0:
-            # exclude STALE partitions (folded into the baseline but not
-            # yet deleted — the compaction crash window): counting them
-            # alongside the baseline would double-count exactly those
-            partials = partials.filter(F.col("batch_id") > mf)
-        parts.append(partials.select("key", "cnt"))
-    if gen >= 1:
         parts.append(
-            spark.read.parquet(_baseline_dir(state_dir, gen)).select("key", "cnt")
+            spark.read.parquet(data_dir).filter(batch_filter).select("key", "cnt")
         )
+    if baseline is not None:
+        parts.append(spark.read.parquet(baseline).select("key", "cnt"))
     if not parts:
-        return spark.createDataFrame([], f"key {key_type}, cnt long")
+        return None
     df = parts[0]
     for extra in parts[1:]:
         df = df.unionByName(extra)
     return df.groupBy("key").agg(F.sum("cnt").alias("cnt"))
+
+
+def read_counts(
+    spark: SparkSession, state_dir: str, key_type: str = "string"
+) -> DataFrame:
+    """Current total count per key (empty-safe): the live baseline plus
+    every batch partial ABOVE its max_folded — the stale filter keeps
+    totals exact inside every compaction crash window (module
+    docstring). ``key_type`` shapes the empty result before any batch."""
+    baseline, _, max_folded = _baseline(state_dir)
+    df = _totals(spark, state_dir, F.col("batch_id") > max_folded, baseline)
+    if df is None:
+        return spark.createDataFrame([], f"key {key_type}, cnt long")
+    return df
 
 
 def read_top_hitters(
@@ -278,74 +182,39 @@ def read_top_hitters(
 def compact_counts(
     spark: SparkSession, state_dir: str, *, force_takeover: bool = False
 ) -> dict:
-    """Fold the SNAPSHOTTED batch partials + current baseline into a
-    FRESH baseline generation, commit it atomically, and drop exactly
-    the folded partitions. Run while the stream is stopped; that rule is
-    ENFORCED by the exclusive intent lease (a concurrent micro-batch OR
-    a second concurrent compaction fails loudly; a stale lease from a
-    crashed compaction is seized with ``force_takeover=True`` after
-    verifying no compactor is alive). A batch that slips past the fence
-    check is protected by the snapshot (its partition is neither folded
-    nor deleted — the next compaction picks it up). Every crash window
-    is covered by the generation commit — see the module docstring.
+    """Fold the SNAPSHOTTED batch partials + current baseline into the
+    next baseline generation and drop exactly the folded partitions (and
+    any stale ones a crashed compaction left). Run while the stream is
+    stopped; the compaction lease enforces it (a concurrent micro-batch
+    OR a second compaction fails loudly; a lease a crashed compaction
+    left is seized with ``force_takeover=True`` after verifying no
+    compactor is alive). Crash windows: module docstring.
 
     Returns {'folded': [batch ids folded this run], 'gen': committed
-    generation, 'baseline_keys': n}. The fold is materialized via
-    localCheckpoint before any delete — never drop a path a lazy plan
-    still scans."""
+    generation, 'baseline_keys': n} — n from the written footers, 0 when
+    nothing was folded."""
     data_dir = state_dir + "/data"
-    _check_layout(spark, state_dir)
+    lease = state_dir + "/compaction_intent"
+    check_layout(state_dir, _LAYOUT)
     # lease FIRST — every partial read below is covered by it
-    write_intent(spark, state_dir, force=force_takeover)
-    gen, prev_max = _max_folded(spark, state_dir)
+    take_lease(lease, {"compactor": uuid.uuid4().hex}, force=force_takeover)
+    baseline, gen, prev_max = _baseline(state_dir, recover=True)
     present = _list_batch_ids(spark, data_dir)
-    # STALE = folded by a previous compaction that crashed before its
-    # delete: already in the committed baseline, so it must NOT fold
-    # again (that would double-count it permanently) — finish the delete
+    # STALE = folded by a compaction that crashed before its delete:
+    # already in the baseline, so only the delete is left to finish
     stale = [b for b in present if b <= prev_max]
     snapshot = [b for b in present if b > prev_max]
-    if not snapshot:
-        doomed = [f"{data_dir}/batch_id={b}" for b in stale]
-        doomed += _orphan_baselines(spark, state_dir, gen)
-        for path in doomed:
-            fs, jpath = fs_for(spark, path)
-            if fs.exists(jpath):
-                fs.delete(jpath, True)
-        clear_intent(spark, state_dir)
-        return {"folded": [], "gen": gen, "baseline_keys": 0}
-    parts = [
-        spark.read.parquet(data_dir)
-        .filter(F.col("batch_id").isin(snapshot))
-        .select("key", "cnt")
-    ]
-    if gen >= 1:
-        parts.append(
-            spark.read.parquet(_baseline_dir(state_dir, gen)).select("key", "cnt")
+    info = {"folded": snapshot, "gen": gen, "baseline_keys": 0}
+    if snapshot:
+        totals = _totals(
+            spark, state_dir, F.col("batch_id").isin(snapshot), baseline
+        ).coalesce(1)
+        manifest = write_state(
+            totals, state_dir + "/baseline",
+            {"gen": gen + 1, "max_folded": max(snapshot)},
         )
-    merged = parts[0]
-    for extra in parts[1:]:
-        merged = merged.unionByName(extra)
-    totals = (
-        merged.groupBy("key")
-        .agg(F.sum("cnt").alias("cnt"))
-        .coalesce(1)
-        .transform(cache.checkpoint)
-    )
-    n_keys = totals.count()
-    # the new baseline is written to a FRESH generation dir — an orphan
-    # until the commit file below lands, so a crash here changes nothing
-    # for readers, and the re-run overwrites it from the same inputs
-    totals.write.mode("overwrite").parquet(_baseline_dir(state_dir, gen + 1))
-    # THE commit point: one atomic empty-file create whose name carries
-    # {generation, max_folded} — before it readers resolve gen (old
-    # baseline + all partials, complete); after it gen+1 (new baseline,
-    # folded partials excluded by the stale filter until deleted)
-    commit_generation(spark, _manifest_dir(state_dir), gen + 1, max(snapshot))
-    doomed = [f"{data_dir}/batch_id={b}" for b in snapshot + stale]
-    doomed += _orphan_baselines(spark, state_dir, gen + 1)
-    for path in doomed:
-        fs, jpath = fs_for(spark, path)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-    clear_intent(spark, state_dir)
-    return {"folded": snapshot, "gen": gen + 1, "baseline_keys": int(n_keys)}
+        info.update(gen=gen + 1, baseline_keys=manifest["rows"])
+    for b in snapshot + stale:
+        shutil.rmtree(os.path.join(data_dir, f"batch_id={b}"), ignore_errors=True)
+    release_lease(lease)
+    return info

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as X
+from ..sources.persistence import lease_holder
 
 __all__ = ["dedup_stream_foreach_batch", "read_deduped", "state_probe"]
 
@@ -53,6 +54,34 @@ def _dir_exists(spark: SparkSession, path: str) -> bool:
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return bool(fs.exists(jpath))
+
+
+def _list_batch_ids(spark: SparkSession, path: str) -> list[int]:
+    """The batch_id partition values physically present under `path` —
+    a compaction's snapshot: only these are folded and only these are
+    deleted, so a partition a batch lands mid-fold survives."""
+    if not _dir_exists(spark, path):
+        return []
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return sorted(
+        int(name.split("=", 1)[1])
+        for name in (st.getPath().getName() for st in fs.listStatus(jpath))
+        if name.startswith("batch_id=")
+    )
+
+
+def _fail_while_compacting(lease: str, stream_name: str, compactor: str) -> None:
+    """Fail a micro-batch loudly while the compaction lease `lease` is
+    held (sources/persistence.py: leases)."""
+    holder = lease_holder(lease)
+    if holder is not None:
+        raise RuntimeError(
+            f"compaction in progress ({lease} held by {holder!r}) — the "
+            f"{stream_name} must not write state while {compactor} runs; "
+            "retry after it finishes (a lease a crashed compaction left is "
+            f"cleared by {compactor}(force_takeover=True))"
+        )
 
 
 def state_probe(

@@ -33,18 +33,21 @@ Compacted base (the warehouse-scale form, `compact_neardup_state`):
 the per-batch delta partitions above accumulate H×256 directories over
 H batches — file listing and per-partition open overhead, not data,
 dominated the measured r7 probe growth. A maintenance compaction
-(run while the stream is stopped) folds all delta partitions into
-generation-versioned base tables `<state>/fps_base_g{g}` /
-`<state>/bands_base_g{g}`, hash-bucketed into a FIXED number of
-`bkt = pmod(xxhash64(key), n_buckets)` partitions (key = fp /
-band_key), one sorted file per bucket. Per-batch probes then read
-(base pruned to the batch's bkt set) ∪ (post-compaction delta pruned
-by pfx) — a fixed file count regardless of history depth. The
-generation dance makes compaction crash-safe: new base is written to a
-fresh g+1 directory, the manifest flips afterward, and old base +
-folded deltas are deleted last, so every crash window leaves a
-readable (possibly overlapping) probe set — overlap is harmless, the
-probes feed anti-joins and distinct'd candidate sets.
+(run while the stream is stopped) folds all delta partitions into the
+base tables `<state>/fps_base` / `<state>/bands_base`, hash-bucketed
+into a FIXED number of `bkt = pmod(xxhash64(key), n_buckets)`
+partitions (key = fp / band_key), one sorted file per bucket. Per-batch
+probes then read (base pruned to the batch's bkt set) ∪
+(post-compaction delta pruned by pfx) — a fixed file count regardless
+of history depth. Each base is one generation swapped by
+`persistence.write_state` with {gen, n_buckets} in its manifest, and
+each probe takes its bucket set from its own table's n_buckets; the
+swap, the recovery ladder, the compaction lease
+(`<state>/compaction_intent`) and the layout check are persistence's
+(module docstring there). The folded deltas are deleted only after both
+swaps commit, so every crash window leaves probes that see every seen
+row, possibly twice — overlap is harmless, the probes feed anti-joins
+and distinct'd candidate sets.
 
 Exactly-once: all three sinks (survivors, fps, bands) are dynamic
 partition overwrites keyed by batch_id; a replayed batch excludes its
@@ -56,6 +59,9 @@ the next compaction's distinct() folds the duplicates.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,18 +69,14 @@ from pyspark.sql.window import Window
 
 from ..functions import text as X
 from ..operators.dedup import _banded_keys, _cap_buckets, _jaccard_verify_kernel
-from ._fence import (
-    check_intent_fence,
-    clear_intent,
-    commit_generation,
-    drop_legacy_manifest_json,
-    fs_for,
-    intent_dir,
-    manifest_has_legacy_json,
-    resolve_generation,
-    write_intent,
+from ..sources.persistence import (
+    check_layout,
+    release_lease,
+    state_manifest,
+    take_lease,
+    write_state,
 )
-from .dedup_stream import _dir_exists
+from .dedup_stream import _dir_exists, _fail_while_compacting, _list_batch_ids
 
 __all__ = [
     "compact_neardup_state",
@@ -84,14 +86,7 @@ __all__ = [
 
 _PFX_LEN = 2
 
-# On-disk state format version. v2 = the 'x'-guarded pfx partition values
-# introduced in r9 (see _pfx). v1 state (bare hex pfx, pre-r9) is NOT
-# probe-compatible: the isin([...]) filters would silently miss every
-# old-format delta row and re-admit previously-seen duplicates (ADVICE
-# r9). The marker makes the mismatch fail loudly; migration = run
-# compact_neardup_state once (the fold reads whole batch_id partitions
-# regardless of pfx value, and the compacted base carries no pfx).
-_PFX_FORMAT = 2
+_LAYOUT = ("fps", "bands", "fps_base", "bands_base", "compaction_intent")
 
 
 def _pfx(col: str):
@@ -105,94 +100,13 @@ def _pfx(col: str):
     return F.concat(F.lit("x"), F.substring(col, 1, _PFX_LEN))
 
 
-def _read_manifest(spark: SparkSession, state_dir: str) -> tuple[int, int] | None:
-    """(n_buckets, generation) of the compacted base, or None if the state
-    has never been compacted. A corrupt manifest raises — the batch fails
-    loudly and retries off the checkpoint, never silently probes less.
-
-    r11 format: the manifest is the NAME of an atomically-created empty
-    marker `gen-<g>-<n_buckets>.json` (_fence.commit_generation) — the
-    pre-r11 delete-then-write Spark-JSON overwrite had a mid-flip crash
-    window that left NO manifest, making readers drop the whole
-    compacted base from their scans. Legacy Spark-JSON manifests are
-    still read (and superseded on the next compaction)."""
-    mdir = state_dir + "/compaction"
-    got = resolve_generation(spark, mdir)
-    if got is not None:
-        gen, n_buckets = got
-        return n_buckets, gen
-    if not manifest_has_legacy_json(spark, mdir):
-        return None
-    row = spark.read.json(mdir).first()
-    return int(row["n_buckets"]), int(row["gen"])
-
-
-def _base_dirs(state_dir: str, gen: int) -> tuple[str, str]:
-    return (
-        f"{state_dir}/fps_base_g{gen}",
-        f"{state_dir}/bands_base_g{gen}",
-    )
-
-
-def _format_dir(state_dir: str) -> str:
-    return state_dir + "/format"
-
-
-def _stamp_format(spark: SparkSession, state_dir: str) -> None:
-    spark.createDataFrame(
-        [(_PFX_FORMAT,)], "pfx_format int"
-    ).coalesce(1).write.mode("overwrite").json(_format_dir(state_dir))
-
-
-def _check_or_stamp_format(spark: SparkSession, state_dir: str) -> None:
-    """Enforce the state-format version before any probe/write. Marker
-    present: must match _PFX_FORMAT. Marker absent with existing delta
-    state: pre-marker state whose pfx values the current probes cannot
-    be trusted to see — fail loudly and direct the operator to
-    compact_neardup_state (which folds ANY pfx format and stamps the
-    marker). Marker absent with no delta state: fresh (or fully
-    compacted pre-marker) state — stamp and proceed, the compacted base
-    is bkt-partitioned and format-independent."""
-    fdir = _format_dir(state_dir)
-    if _dir_exists(spark, fdir):
-        ver = int(spark.read.json(fdir).first()["pfx_format"])
-        if ver != _PFX_FORMAT:
-            raise RuntimeError(
-                f"near-dup state at {state_dir} has pfx_format={ver}, this "
-                f"code expects {_PFX_FORMAT}: run compact_neardup_state "
-                "once to fold the old-format deltas into the (format-"
-                "independent) bucketed base, then restart the stream"
-            )
-        return
-    if any(
-        _dir_exists(spark, state_dir + suffix) for suffix in ("/fps", "/bands")
-    ):
-        raise RuntimeError(
-            f"near-dup state at {state_dir} predates the state-format "
-            "marker: its pfx partition values may use the old bare-hex "
-            "form, which the current prefix-pruned probes would silently "
-            "miss (re-admitting previously-seen duplicates). Run "
-            "compact_neardup_state once to migrate (the fold reads whole "
-            "batch_id partitions regardless of pfx format and stamps the "
-            "marker), then restart the stream."
-        )
-    _stamp_format(spark, state_dir)
-
-
-def _list_batch_ids(spark: SparkSession, delta_dir: str) -> list[int]:
-    """batch_id partition values physically present under a delta dir —
-    the compaction fold's SNAPSHOT: only these partitions are read and
-    only these are deleted, so a delta a concurrent batch lands mid-fold
-    (a new batch_id directory) survives untouched."""
-    fs, jpath = fs_for(spark, delta_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+def _base(state_dir: str, table: str, *, recover: bool = False):
+    """(live generation, n_buckets, gen) of the compacted base `table`
+    ("fps" or "bands"); (None, None, 0) before its first compaction."""
+    path, manifest = state_manifest(f"{state_dir}/{table}_base", recover=recover)
+    if path is None:
+        return None, None, 0
+    return path, manifest["n_buckets"], manifest["gen"]
 
 
 def compact_neardup_state(
@@ -201,65 +115,49 @@ def compact_neardup_state(
 ) -> dict:
     """Fold the per-batch (batch_id, pfx) delta partitions into fixed
     hash-bucketed base tables — the maintenance job that keeps per-batch
-    probe cost flat as history deepens (see module docstring for the
-    layout and the crash-safety argument). Run while the stream is
-    STOPPED (between availableNow triggers, or on a pause of a
-    continuous stream); that rule is now ENFORCED, not just documented
-    (VERDICT r8 #6), by a two-level fence:
+    probe cost flat as history deepens (module docstring: layout and
+    crash windows). Run while the stream is STOPPED; the compaction
+    lease enforces it (VERDICT r8 #6): a micro-batch checks it at batch
+    start and again immediately before its state writes and fails
+    loudly while it is held (the stream retries off its checkpoint), and
+    a second compaction fails loudly too. A lease a crashed compaction
+    left is seized with `force_takeover=True` after verifying no
+    compactor is alive.
 
-    - INTENT LEASE: an intent marker is ATOMICALLY created (exclusive —
-      a SECOND concurrent compaction fails loudly; the r10 overwrite
-      form let both believe they held it, VERDICT r10 #1) BEFORE any
-      delta is read and cleared after the delete;
-      `neardup_stream_foreach_batch` checks it at batch start AND again
-      immediately before its state writes, failing the micro-batch
-      loudly (fail-stop — the stream retries off its checkpoint after
-      compaction finishes). A stale intent from a crashed compaction
-      blocks the stream and new compactions the same way — safe by
-      construction; re-run with `force_takeover=True` after verifying
-      no compactor is alive.
-    - BATCH-ID SNAPSHOT: the fold reads only the batch_id partitions
-      physically present when it starts, and the delete removes ONLY
-      those partition directories — a delta written by a batch that
-      slipped past the intent check survives both the fold and the
-      delete, and is simply picked up by the next compaction. The one
-      residual window is a REPLAYED batch overwriting a snapshot
-      batch_id partition between its own fence check and write
-      completion — closable only with a distributed lock, out of scope
-      for this filesystem protocol; the fence check directly before the
-      writes makes it practically unhittable.
+    The fold reads only the batch_id partitions physically present when
+    it starts and deletes ONLY those, so a delta written by a batch that
+    slipped past the lease check survives and is folded by the next
+    compaction. The one residual window is a REPLAYED batch overwriting
+    a snapshot partition between its own lease check and write
+    completion — closable only with a distributed lock; the check
+    directly before the writes makes it practically unhittable.
 
     Returns {'gen', 'n_buckets', 'fps_rows', 'bands_rows'} of the new
-    base. Re-running is idempotent (distinct fold); changing n_buckets
-    re-buckets the whole base on the next run."""
+    base (row counts from the written footers). Re-running is idempotent
+    (distinct fold); changing n_buckets re-buckets the whole base on the
+    next run."""
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
+    lease = state_dir + "/compaction_intent"
+    check_layout(state_dir, _LAYOUT)
     # lease FIRST — every delta row read below is covered by it
-    write_intent(spark, state_dir, force=force_takeover)
-    manifest = _read_manifest(spark, state_dir)
-    old_gen = manifest[1] if manifest else 0
-    gen = old_gen + 1
-    old_bases = _base_dirs(state_dir, old_gen) if manifest else (None, None)
-    new_bases = _base_dirs(state_dir, gen)
-    deltas = (state_dir + "/fps", state_dir + "/bands")
-    keys = ("fp", "band_key")
-    snapshots = [_list_batch_ids(spark, d) for d in deltas]
-    counts = []
-    wrote_any = False
-    for delta_dir, snapshot, old_base, new_base, key in zip(
-        deltas, snapshots, old_bases, new_bases, keys
-    ):
+    take_lease(lease, {"compactor": uuid.uuid4().hex}, force=force_takeover)
+    tables = (("fps", "fp"), ("bands", "band_key"))
+    bases = [_base(state_dir, table, recover=True) for table, _ in tables]
+    gen = max(g for _, _, g in bases) + 1
+    snapshots = [_list_batch_ids(spark, f"{state_dir}/{t}") for t, _ in tables]
+    rows = {}
+    for (table, key), (base, _, _), snapshot in zip(tables, bases, snapshots):
         parts = []
         if snapshot:
             parts.append(
-                spark.read.parquet(delta_dir)
+                spark.read.parquet(f"{state_dir}/{table}")
                 .filter(F.col("batch_id").isin(snapshot))
                 .drop("pfx")
             )
-        if old_base is not None and _dir_exists(spark, old_base):
-            parts.append(spark.read.parquet(old_base).drop("bkt"))
+        if base is not None:
+            parts.append(spark.read.parquet(base).drop("bkt"))
         if not parts:
-            counts.append(0)
             continue
         df = parts[0]
         for extra in parts[1:]:
@@ -275,83 +173,34 @@ def compact_neardup_state(
             .repartition(n_buckets, F.col("bkt"))
             .sortWithinPartitions("bkt", key)
         )
-        # overwrite: a prior compaction that crashed between base write
-        # and manifest flip leaves a half-written g+1 dir; the manifest
-        # still points at g, so clobbering g+1 is safe (never an input)
-        folded.write.mode("overwrite").partitionBy("bkt").parquet(new_base)
-        counts.append(spark.read.parquet(new_base).count())
-        wrote_any = True
-    if not wrote_any:
-        _stamp_format(spark, state_dir)  # empty state is trivially current
-        clear_intent(spark, state_dir)
-        return {"gen": old_gen, "n_buckets": n_buckets, "fps_rows": 0, "bands_rows": 0}
-    # commit the manifest ONLY after both bases are fully written —
-    # ONE atomic empty-file create whose name carries (gen, n_buckets);
-    # readers that race a crash before it still see (old base ∪ delta),
-    # complete, and the pre-r11 delete-then-write overwrite's
-    # no-manifest crash window is gone (_fence.commit_generation)
-    commit_generation(spark, state_dir + "/compaction", gen, n_buckets)
-    drop_legacy_manifest_json(spark, state_dir + "/compaction")
-    # delete the folded inputs LAST — a crash before this point only
-    # leaves overlap (harmless for anti-join / distinct'd probes).
-    # Deltas are removed PER SNAPSHOTTED batch_id partition, never as a
-    # whole directory: partitions a concurrent batch added after the
-    # snapshot were not folded, so they must survive the delete.
-    doomed = [
-        f"{delta_dir}/batch_id={bid}"
-        for delta_dir, snapshot in zip(deltas, snapshots)
-        for bid in snapshot
-    ]
-    # every base generation below the one just committed — the previous
-    # gen plus any debris a crash between commit and delete left behind
-    fs_root, jroot = fs_for(spark, state_dir)
-    for st in fs_root.listStatus(jroot):
-        name = st.getPath().getName()
-        for prefix in ("fps_base_g", "bands_base_g"):
-            if st.isDirectory() and name.startswith(prefix):
-                try:
-                    g = int(name[len(prefix):])
-                except ValueError:
-                    continue
-                if g < gen:
-                    doomed.append(f"{state_dir}/{name}")
-    for path in doomed:
-        fs, jpath = fs_for(spark, path)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-    # a delta dir with no batch_id partitions left would fail schema
-    # inference on the next read — remove it, but ONLY via an empty-dir
-    # (non-recursive) delete so a partition a concurrent batch created
-    # after the snapshot can never be swept up
-    for delta_dir in deltas:
-        fs, jdir = fs_for(spark, delta_dir)
-        if not fs.exists(jdir):
-            continue
-        entries = list(fs.listStatus(jdir))
-        if any(
-            st.isDirectory()
-            and st.getPath().getName().startswith("batch_id=")
-            for st in entries
+        rows[table] = write_state(
+            folded, f"{state_dir}/{table}_base",
+            {"gen": gen, "n_buckets": n_buckets}, partition_by="bkt",
+        )["rows"]
+    # delete the folded inputs LAST, per snapshotted batch_id partition:
+    # partitions a batch added after the snapshot were not folded
+    for (table, _), snapshot in zip(tables, snapshots):
+        delta = f"{state_dir}/{table}"
+        for bid in snapshot:
+            shutil.rmtree(f"{delta}/batch_id={bid}", ignore_errors=True)
+        # a delta dir with no partitions left would fail schema inference
+        # on the next read: drop its files, then the dir only if empty
+        if os.path.isdir(delta) and not any(
+            e.startswith("batch_id=") for e in os.listdir(delta)
         ):
-            continue  # post-snapshot delta present — keep the dir intact
-        for st in entries:
-            if not st.isDirectory():  # _SUCCESS and friends
-                fs.delete(st.getPath(), False)
-        try:
-            fs.delete(jdir, False)  # only succeeds if (still) empty
-        except Exception:  # noqa: BLE001 — a concurrent batch landed; keep it
-            pass
-    # the fold consumed every snapshotted delta partition regardless of
-    # its pfx format and the base carries no pfx — the state is current:
-    # stamp (this IS the v1→v2 migration path, see _check_or_stamp_format)
-    _stamp_format(spark, state_dir)
-    # lease released last — the state is consistent from here on
-    clear_intent(spark, state_dir)
+            for e in os.listdir(delta):
+                if os.path.isfile(os.path.join(delta, e)):
+                    os.remove(os.path.join(delta, e))
+            try:
+                os.rmdir(delta)
+            except OSError:  # a batch landed meanwhile; keep it
+                pass
+    release_lease(lease)
     return {
-        "gen": gen,
+        "gen": gen if rows else gen - 1,
         "n_buckets": n_buckets,
-        "fps_rows": counts[0],
-        "bands_rows": counts[1],
+        "fps_rows": rows.get("fps", 0),
+        "bands_rows": rows.get("bands", 0),
     }
 
 
@@ -389,30 +238,19 @@ def neardup_stream_foreach_batch(
     members still hit the exact screen."""
     fps_dir = state_dir + "/fps"
     bands_dir = state_dir + "/bands"
-    # manifest cached per stream instance: compaction requires the stream
-    # to be stopped, so within one run the generation cannot move
-    manifest_cache: list = []
+    lease = state_dir + "/compaction_intent"
 
-    def _check_fence(s: SparkSession) -> None:
-        # compaction intent lease (VERDICT r8 #6): fail the micro-batch
-        # loudly rather than write deltas a concurrent fold could lose.
-        check_intent_fence(
-            s, state_dir, "near-dup stream", "compact_neardup_state"
-        )
+    def _check_fence() -> None:
+        # the compaction lease (VERDICT r8 #6): fail the micro-batch
+        # loudly rather than write deltas a concurrent fold could lose
+        _fail_while_compacting(lease, "near-dup stream", "compact_neardup_state")
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        _check_fence(s)
-        if not manifest_cache:
-            # once per stream instance, like the manifest: the format
-            # cannot change while the stream runs (compaction is fenced)
-            _check_or_stamp_format(s, state_dir)
-            manifest_cache.append(_read_manifest(s, state_dir))
-        manifest = manifest_cache[0]
-        nb = manifest[0] if manifest else None
-        fps_base, bands_base = (
-            _base_dirs(state_dir, manifest[1]) if manifest else (None, None)
-        )
+        _check_fence()
+        check_layout(state_dir, _LAYOUT)
+        fps_base, fps_nb, _ = _base(state_dir, "fps")
+        bands_base, bands_nb, _ = _base(state_dir, "bands")
         # bound BEFORE the try: the finally references all three, and an
         # empty batch (early return) or a failure before their persist
         # (the prefix collect, _dir_exists, the exact-probe build) must
@@ -429,13 +267,13 @@ def neardup_stream_foreach_batch(
         firsts.persist()
         try:
             pre_cols = [F.col("__pfx")]
-            if nb:
+            if fps_nb:
                 pre_cols.append(
-                    F.pmod(F.xxhash64("__fp"), F.lit(nb)).alias("__bkt")
+                    F.pmod(F.xxhash64("__fp"), F.lit(fps_nb)).alias("__bkt")
                 )
             pre = firsts.select(*pre_cols).distinct().collect()
             prefixes = sorted({r["__pfx"] for r in pre})
-            fp_bkts = sorted({r["__bkt"] for r in pre}) if nb else []
+            fp_bkts = sorted({r["__bkt"] for r in pre}) if fps_nb else []
             if not prefixes:
                 return
             # -- exact screen vs prior state: post-compaction delta
@@ -450,7 +288,7 @@ def neardup_stream_foreach_batch(
                     )
                     .select("fp")
                 )
-            if fps_base is not None and _dir_exists(s, fps_base):
+            if fps_base is not None:
                 probe_parts.append(
                     s.read.parquet(fps_base)
                     .filter(
@@ -482,13 +320,13 @@ def neardup_stream_foreach_batch(
                 text_col=text_col, id_col=id_col,
             ).persist()
             bkey_cols = [_pfx("band_key").alias("p")]
-            if nb:
+            if bands_nb:
                 bkey_cols.append(
-                    F.pmod(F.xxhash64("band_key"), F.lit(nb)).alias("__bkt")
+                    F.pmod(F.xxhash64("band_key"), F.lit(bands_nb)).alias("__bkt")
                 )
             bkeys = bb.select(*bkey_cols).distinct().collect()
             band_pfxs = sorted({r["p"] for r in bkeys})
-            band_bkts = sorted({r["__bkt"] for r in bkeys}) if nb else []
+            band_bkts = sorted({r["__bkt"] for r in bkeys}) if bands_nb else []
             state_parts = []
             if _dir_exists(s, bands_dir) and band_pfxs:
                 state_parts.append(
@@ -499,7 +337,7 @@ def neardup_stream_foreach_batch(
                     )
                     .select("corpus_id", "band_idx", "band_key")
                 )
-            if bands_base is not None and _dir_exists(s, bands_base) and band_bkts:
+            if bands_base is not None and band_bkts:
                 state_parts.append(
                     s.read.parquet(bands_base)
                     .filter(
@@ -590,7 +428,7 @@ def neardup_stream_foreach_batch(
             # re-check the lease immediately before the state writes: a
             # compaction that began mid-batch must not race the delta
             # appends below (the batch fails here and replays instead)
-            _check_fence(s)
+            _check_fence()
             (
                 survivors.drop("__fp", "__pfx")
                 .withColumn("batch_id", F.lit(batch_id))
